@@ -39,8 +39,8 @@ object Tables {
     // Schema-affecting session conf folded into the key: events.ts
     // infers as LongType only under nanosAsLong, so a cache shared
     // between sessions with different flag values must not cross-serve
-    // (benign today because events() always sets the flag first, but
-    // the cache must not depend on caller ordering).
+    // (events() sets the flag before its read when the file needs it,
+    // but the cache must not depend on caller ordering).
     val nanosFlag = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     val key = s"$path:${f.length}:${f.lastModified}:$nanosFlag"
     var schema = schemaCache.get(key)
@@ -69,8 +69,14 @@ object Tables {
     * naive TIMESTAMP reading of the same file.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, dir, "events")
+    nanosAsLongIfNeeded(spark, dir)
+    canonicalTs(table(spark, dir, "events"))
+  }
+
+  /** `ts` as a µs TimestampType whichever encoding it was read in
+    * (shared with `StreamingOps.eventsStream`).
+    */
+  private[graft] def canonicalTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       // `div`, not `/`: ns epochs (~1.7e18) exceed a double's 53-bit
       // mantissa, so float division truncates off-by-1µs on some rows —
@@ -80,6 +86,28 @@ object Tables {
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
+
+  /** Set `spark.sql.legacy.parquet.nanosAsLong=true` only when the footer
+    * of `dir/events.parquet` declares `ts` as TIMESTAMP(NANOS), the one
+    * encoding Spark cannot read without it (a footer read, no Spark
+    * job). Deliberately session-wide and NOT restored when it fires:
+    * the flag must still be set when the returned lazy frames plan (a
+    * stream plans every batch later), and [[canonicalTs]] converts `ts`
+    * at once, so no other read observes it.
+    */
+  private[graft] def nanosAsLongIfNeeded(spark: SparkSession, dir: String): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), spark.sparkContext.hadoopConfiguration))
+    val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    val nanos = schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      })
+    if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
@@ -112,7 +140,7 @@ object Tables {
 
   /** Register every table as a temp view (used by SQL-entry queries and
     * tests). `events` goes through its ns→µs loader — a plain read
-    * throws on the TIMESTAMP(NANOS) column unless the legacy conf is
+    * throws on a TIMESTAMP(NANOS) column unless the legacy conf is
     * already set.
     *
     * MEMOIZED per (session, dir, file signature): 19 SQL-entry rows call

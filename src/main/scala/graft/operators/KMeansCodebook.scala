@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionConf
 import graft.functions.CosineSim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,13 +50,6 @@ object KMeansCodebook {
           .otherwise(acc)
       }).getField("cid")
 
-  /** Train a k-centroid codebook over `e(idCol, vecCol)`. Returns a
-    * ONE-ROW DataFrame `cents: array<struct<cid: bigint, cvec:
-    * array<float>>>`, cid-sorted for deterministic array order (ties in
-    * the argmax then break identically run-to-run). Seeds are the k
-    * lowest-id vectors — deterministic, and exactly the previous sampled
-    * codebook, so iters = 0 reproduces the old behavior.
-    */
   /** Run `body` (the training loop — its per-round localCheckpoints
     * execute eagerly inside this window) with AQE off and a small fixed
     * shuffle width, both restored after. Why this is right at ANY
@@ -70,20 +64,25 @@ object KMeansCodebook {
     * unchanged: assignment is per-row, and the update's partial-merge
     * structure is set by the INPUT partitioning (untouched), not the
     * reduce width.
+    *
+    * The confs are set on the CALLER's session (`e` is bound to it), so
+    * for the length of training every other query on that session runs
+    * with AQE off and the narrow shuffle too: training is NOT safe to
+    * run concurrently with other work on the same session.
     */
-  private def withTrainingConfs[T](spark: SparkSession)(body: => T): T = {
-    val pairs = Seq(
+  private def withTrainingConfs[T](spark: SparkSession)(body: => T): T =
+    SessionConf.withConfs(spark)(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" ->
-        spark.conf.get("spark.graft.annTrain.shufflePartitions", "4"))
-    val saved = pairs.map { case (key, _) => key -> spark.conf.getOption(key) }
-    pairs.foreach { case (key, v) => spark.conf.set(key, v) }
-    try body finally saved.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
+        spark.conf.get("spark.graft.annTrain.shufflePartitions", "4"))(body)
 
+  /** Train a k-centroid codebook over `e(idCol, vecCol)`. Returns a
+    * ONE-ROW DataFrame `cents: array<struct<cid: bigint, cvec:
+    * array<float>>>`, cid-sorted for deterministic array order (ties in
+    * the argmax then break identically run-to-run). Seeds are the k
+    * lowest-id vectors — deterministic, and exactly the previous sampled
+    * codebook, so iters = 0 reproduces the old behavior.
+    */
   def train(
       e: DataFrame,
       k: Int,

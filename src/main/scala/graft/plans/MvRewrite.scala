@@ -12,9 +12,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Joi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{DayTimeIntervalType, DecimalType, DoubleType, YearMonthIntervalType}
+import org.apache.spark.sql.types.{DayTimeIntervalType, DecimalType, YearMonthIntervalType}
 
 import graft.sources.{GraftCatalog, GraftMvOps}
+
+/** Session conf switches of [[MvRewriteRule]]; both default to true. */
+object MvRewrite {
+  val EnabledKey = "spark.graft.mvRewrite.enabled"
+  val StaleEnabledKey = "spark.graft.mvRewrite.stale.enabled"
+}
 
 /** TRANSPARENT MATERIALIZED-VIEW REWRITE — the aggregate-navigator
   * move (Calcite/BigQuery/Snowflake shape): a query that aggregates a
@@ -92,9 +98,7 @@ import graft.sources.{GraftCatalog, GraftMvOps}
   * with `spark.graft.mvRewrite.enabled=false`.
   */
 case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
-
-  val EnabledKey = "spark.graft.mvRewrite.enabled"
-  val StaleEnabledKey = "spark.graft.mvRewrite.stale.enabled"
+  import MvRewrite.{EnabledKey, StaleEnabledKey}
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString(EnabledKey, "true").toBoolean) return plan
@@ -468,17 +472,6 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val newExpand = org.apache.spark.sql.catalyst.plans.logical.Expand(
       newProjections, aggAttrs ++ groupAttrs ++ metaAttrs, mvChild)
     Some(Aggregate(agg.groupingExpressions, outputs, newExpand))
-  }
-
-  /** A bare graft relation under pass-through wrappers, or None. */
-  private def bareRel(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
-    case s: SubqueryAlias => bareRel(s.child)
-    case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      bareRel(pr.child)
-    case r: DataSourceV2Relation
-        if r.catalog.exists(_.isInstanceOf[GraftCatalog]) && r.identifier.isDefined =>
-      Some(r)
-    case _ => None
   }
 
   /** The aggregate's child as (optional WHERE above the joins, the
@@ -1284,7 +1277,6 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val mvRelation = DataSourceV2Relation.create(mvTable, relation.catalog, Some(mvIdent))
     def mvAttr(col: String): Option[Attribute] =
       mvRelation.output.find(a => resolver(a.name, col))
-    def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
     val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
       .getOrElse(return None)
     val mvPart = Project(unionCols.map(c => mvAttr(c).getOrElse(return None)), mvChild)
@@ -1561,7 +1553,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       unionCols: Seq[String], specByKey: Map[String, String],
       combined: LogicalPlan,
       resolver: (String, String) => Boolean,
-      guardDeadSums: Boolean = false): Option[LogicalPlan] = {
+      guardDeadSums: Boolean): Option[LogicalPlan] = {
     def unionAttr(col: String): Attribute = combined.output(unionCols.indexOf(col))
     def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
     val outputs: Seq[NamedExpression] = agg.aggregateExpressions.map {
@@ -1661,19 +1653,13 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
           .reduceOption(org.apache.spark.sql.catalyst.expressions.And))
     }
 
-  /** Minimal spec binder: column references resolve against the source
-    * relation's output, functions through the session registry
-    * (aggregates wrapped exactly as the analyzer would), `count(*)` →
-    * `count(1)`, timezone-needing casts stamped with the session zone.
-    * Anything it cannot bind returns None — the rewrite then simply
-    * does not fire.
-    */
-  private def resolveSpec(spec: String, relation: DataSourceV2Relation): Option[Expression] =
-    resolveSpecAgainst(spec, relation.output)
-
-  /** Same binder against an explicit attribute set — the join-MV path
-    * binds specs and ON conditions against the UNION of both sides'
-    * outputs.
+  /** Minimal spec binder against an explicit attribute set (a source
+    * relation's output, or on the join-MV path the UNION of both sides'
+    * outputs): column references resolve against `output`, functions
+    * through the session registry (aggregates wrapped exactly as the
+    * analyzer would), `count(*)` → `count(1)`, timezone-needing casts
+    * stamped with the session zone. Anything it cannot bind returns
+    * None — the rewrite then simply does not fire.
     */
   private def resolveSpecAgainst(spec: String, output: Seq[Attribute]): Option[Expression] = {
     val parsed =

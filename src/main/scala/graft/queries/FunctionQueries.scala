@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Q, SessionConf, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
@@ -285,7 +285,7 @@ object FunctionQueries {
       |FROM events
       |GROUP BY 1
       |ORDER BY k_bucket""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     ensureShredded(spark, dir)
     spark.table("graft.demo.ev_shred")
       .select(col("k"))

@@ -39,6 +39,11 @@ object PipelineQueries {
     * single-row-group scan runs it on one core (guide §2.5). At 100 TB
     * the persisted token stage is the tokenizer checkpoint table a
     * decontamination pipeline materializes anyway.
+    *
+    * CACHE LIFECYCLE: the returned plan references the persisted token
+    * stage, so it cannot be unpersisted here; release is the caller's
+    * `spark.catalog.clearCache()` after the terminal action — the
+    * contract `SimilarityQueries` documents for its persisted stages.
     */
   private def gramRows(spark: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {

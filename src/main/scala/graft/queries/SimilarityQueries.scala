@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Q, SessionConf, Tables}
 import graft.functions.{CosineSim, MinHash32, SimHash64, SrpBucket, SrpBucketProbes, VectorOps}
 import graft.operators.KMeansCodebook
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -754,7 +754,7 @@ object SimilarityQueries {
   val l3AnnIvfSaved: Q = Q(
     "l3_ann_ivf_saved",
     annOracleSql) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val tbl = "codebook_" + java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
     val full = s"graft.ann.$tbl"
     val e = Tables.embeddings(spark, dir).persist()
@@ -789,7 +789,7 @@ object SimilarityQueries {
   val l3AnnIvfIndexed: Q = Q(
     "l3_ann_ivf_indexed",
     annOracleSql) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val suffix = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
     val corpus = s"graft.ann.corpus_$suffix"
     val idx = s"graft.ann.ivfidx_$suffix"
@@ -965,7 +965,7 @@ object SimilarityQueries {
   val l3AnnIvfPqIndexed: Q = Q(
     "l3_ann_ivfpq_indexed",
     annOracleSql) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val suffix = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
     val corpus = s"graft.ann.pqcorpus_$suffix"
     val idx = s"graft.ann.pqidx_$suffix"
@@ -1012,7 +1012,7 @@ object SimilarityQueries {
   val st18StreamingAnnIndex: Q = Q(
     "st18_streaming_ann_index",
     annOracleSql) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val e = Tables.embeddings(spark, dir)
     spark.sql("DROP TABLE IF EXISTS graft.ann.scorpus PURGE")
     spark.sql("DROP TABLE IF EXISTS graft.ann.sidx PURGE")
@@ -1188,7 +1188,7 @@ object SimilarityQueries {
   val l3AnnIvfPqSaved: Q = Q(
     "l3_ann_ivfpq_saved",
     annOracleSql) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val (m, sub, ks) = (4, 16, 16)
     val suffix = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
     val coarse = s"graft.ann.codebook_pqc_$suffix"
@@ -1427,7 +1427,7 @@ object SimilarityQueries {
       |FROM inter JOIN sz si ON si.doc_id = i JOIN sz sj ON sj.doc_id = j
       |WHERE ninter * 1.0 / (si.sz + sj.sz - ninter) >= 0.8
       |ORDER BY i, j""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     ensureL9Index(spark, dir)
     val sh = shingleHashesOf(Tables.documents(spark, dir)).filter(size(col("sh")) > 0)
     l9ProbeIndex(
@@ -1536,7 +1536,7 @@ object SimilarityQueries {
       |WHERE list_dot_product(b.v, c.v) /
       |      (sqrt(list_dot_product(b.v, b.v)) * sqrt(list_dot_product(c.v, c.v))) >= 0.9
       |ORDER BY i, j""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     // ONE scheme: srpBuckets builds the index; srpProbeBuckets (same
     // seeds/bits, margin-ranked extra flips) probes it — drift between
     // stored and probed banding is impossible by construction.

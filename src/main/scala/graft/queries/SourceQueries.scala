@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Q, SessionConf, Tables}
+import graft.plans.MvRewrite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -259,7 +260,7 @@ object SourceQueries {
       |FROM nation
       |GROUP BY n_regionkey
       |ORDER BY n_regionkey""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.nation(spark, dir).createOrReplaceTempView("x5_nation_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.nation_copy")
     spark.sql(
@@ -294,7 +295,7 @@ object SourceQueries {
       |SELECT 'v1' AS snap, count(*) AS n, min(r_name) AS first_name
       |FROM region
       |ORDER BY snap""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.region(spark, dir).createOrReplaceTempView("x5b_region_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.region_hist")
     spark.sql(
@@ -334,7 +335,7 @@ object SourceQueries {
       |FROM customer JOIN nation ON c_nationkey = n_nationkey
       |GROUP BY n_name
       |ORDER BY n_name""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     Tables.customer(spark, dir).createOrReplaceTempView("x5c_customer_src")
     Tables.nation(spark, dir).createOrReplaceTempView("x5c_nation_src")
@@ -379,7 +380,7 @@ object SourceQueries {
       |GROUP BY o_orderpriority
       |HAVING count(*) > 10
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x5d_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.prio_summary")
     spark.sql(
@@ -435,7 +436,7 @@ object SourceQueries {
       |FROM merged WHERE c_acctbal >= 0
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x5e_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_dml")
     spark.sql(
@@ -489,7 +490,7 @@ object SourceQueries {
       |      GROUP BY r_name)
       |WHERE n_nations >= 5
       |ORDER BY r_name""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.nation(spark, dir).createOrReplaceTempView("x7_nation_src")
     Tables.region(spark, dir).createOrReplaceTempView("x7_region_src")
     spark.sql("DROP VIEW IF EXISTS graft.demo.region_counts")
@@ -530,7 +531,7 @@ object SourceQueries {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.lineitem(spark, dir).createOrReplaceTempView("x6_lineitem_src")
     spark.sql(
       """SELECT l_returnflag,
@@ -560,7 +561,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 1000 AND o_totalprice >= 50000
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x8_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.mv_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.mv_pri")
@@ -624,7 +625,7 @@ object SourceQueries {
       |FROM final
       |GROUP BY pri
       |ORDER BY pri""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x8b_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.up_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.up_pri")
@@ -682,7 +683,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.rw_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.rw_pri")
@@ -736,7 +737,7 @@ object SourceQueries {
       |  AND o_orderpriority <> '1-URGENT'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9d_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.fw_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.fw_pri")
@@ -791,7 +792,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9e_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9e_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.jm_orders")
@@ -856,7 +857,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9f_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9f_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.jr_orders")
@@ -931,7 +932,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 1200
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9n_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9n_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.tm_orders")
@@ -999,7 +1000,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 1200
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9g_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9g_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.sg_orders")
@@ -1073,7 +1074,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY n_name
       |ORDER BY n_name""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9h_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9h_customer_src")
     Tables.nation(spark, dir).createOrReplaceTempView("x9h_nation_src")
@@ -1157,7 +1158,7 @@ object SourceQueries {
       |  AND c_mktsegment <> 'BUILDING'
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9i_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9i_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.fj_orders")
@@ -1223,7 +1224,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9j_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x9j_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.sj_orders")
@@ -1300,7 +1301,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
       |ORDER BY pri NULLS FIRST, st NULLS FIRST""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9k_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.rk_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.rk_pri")
@@ -1370,7 +1371,7 @@ object SourceQueries {
       |FROM final
       |GROUP BY pri
       |ORDER BY pri""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9l_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.su_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.su_pri")
@@ -1442,7 +1443,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x28_orders_src")
     Tables.customer(spark, dir).createOrReplaceTempView("x28_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.re_orders")
@@ -1517,7 +1518,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 900
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9m_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.av_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.av_pri")
@@ -1578,7 +1579,7 @@ object SourceQueries {
       |WHERE o_orderkey <= 1200
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x9b_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.sd_orders")
     spark.sql("DROP TABLE IF EXISTS graft.demo.sd_pri")
@@ -1623,7 +1624,7 @@ object SourceQueries {
     */
   private val mvBenchReady = new java.util.concurrent.atomic.AtomicReference[String]()
   private def ensureMvRewriteBench(spark: SparkSession, dir: String): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     if (mvBenchReady.get() == dir) return
     mvBenchReady.synchronized {
       if (mvBenchReady.get() == dir) return
@@ -1678,7 +1679,6 @@ object SourceQueries {
     */
   val x9cMvRewriteOff: Q = Q("x9c_mv_rewrite_off", x9cOracle) { (spark, dir) =>
     ensureMvRewriteBench(spark, dir)
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
     // EXECUTE (localCheckpoint), don't just analyze, under the disabled
     // conf: the bench's later `.count()` wraps the returned Dataset in
     // a new plan and RE-RUNS the analyzer — by then the conf is back on
@@ -1687,8 +1687,9 @@ object SourceQueries {
     // pair's numbers were identical; probed via optimizedPlan of the
     // count wrapper). Checkpointing pins the BASE aggregation's
     // execution inside the timed fn; the count above it is 3 rows.
-    try x9cQuery(spark).localCheckpoint()
-    finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    SessionConf.withConfs(spark)(MvRewrite.EnabledKey -> "false") {
+      x9cQuery(spark).localCheckpoint()
+    }
   }
 
   val x9cMvRewriteOn: Q = Q("x9c_mv_rewrite_on", x9cOracle) { (spark, dir) =>
@@ -1722,7 +1723,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x5f_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_profile")
     spark.sql(
@@ -1757,7 +1758,7 @@ object SourceQueries {
       |JOIN supplier s ON c.c_nationkey = s.s_nationkey
       |GROUP BY c.c_nationkey
       |ORDER BY nk""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x5g_customer_src")
     Tables.supplier(spark, dir).createOrReplaceTempView("x5g_supplier_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_sorted")
@@ -1812,7 +1813,7 @@ object SourceQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x5h_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_bf")
     spark.sql(
@@ -1826,15 +1827,11 @@ object SourceQueries {
       """INSERT OVERWRITE graft.demo.cust_bf PARTITION (seg = 'MACHINERY')
         |SELECT CAST(c_custkey AS BIGINT), c_acctbal * 0.5
         |FROM x5h_customer_src WHERE c_mktsegment = 'MACHINERY'""".stripMargin)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.sql(
-      """INSERT OVERWRITE graft.demo.cust_bf
-        |SELECT CAST(c_custkey AS BIGINT), c_mktsegment, c_acctbal * 2.0
-        |FROM x5h_customer_src WHERE c_mktsegment = 'BUILDING'""".stripMargin)
-    finally prevMode match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    SessionConf.withConfs(spark)("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      spark.sql(
+        """INSERT OVERWRITE graft.demo.cust_bf
+          |SELECT CAST(c_custkey AS BIGINT), c_mktsegment, c_acctbal * 2.0
+          |FROM x5h_customer_src WHERE c_mktsegment = 'BUILDING'""".stripMargin)
     }
     spark.table("graft.demo.cust_bf")
       .groupBy("seg")
@@ -1871,7 +1868,7 @@ object SourceQueries {
       |GROUP BY cohort
       |ORDER BY cohort""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x5i_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_ev")
     spark.sql(
@@ -1925,7 +1922,7 @@ object SourceQueries {
       |GROUP BY change_type, seg
       |ORDER BY change_type, seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x10_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_cdc")
     spark.sql(
@@ -1976,7 +1973,7 @@ object SourceQueries {
       |GROUP BY change_type
       |ORDER BY change_type""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x10b_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_upd")
     spark.sql(
@@ -2020,7 +2017,7 @@ object SourceQueries {
       |GROUP BY c_mktsegment
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x10c_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_cdt")
     spark.sql(
@@ -2084,7 +2081,7 @@ object SourceQueries {
       |GROUP BY side, seg
       |ORDER BY side, seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, lit, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x11_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_branch")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_main")
@@ -2144,7 +2141,7 @@ object SourceQueries {
       |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS total
       |FROM wk GROUP BY event_type
       |ORDER BY slice, event_type""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.events(spark, dir).createOrReplaceTempView("x5j_events_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.ev_hidden")
     spark.sql(
@@ -2239,7 +2236,7 @@ object SourceQueries {
       |WHERE o_orderstatus <> 'P'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     ensureBucketPair(spark, dir)
     // MERGE hint + no auto-broadcast: pin the sort-merge SPJ path the
@@ -2291,7 +2288,7 @@ object SourceQueries {
       |UNION ALL
       |SELECT 'swept' AS side, 1 AS n, 128.0 AS total
       |ORDER BY side""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x15_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.orp")
     spark.sql("DROP TABLE IF EXISTS graft.demo.orp_cl")
@@ -2362,7 +2359,7 @@ object SourceQueries {
       |       round(bal + 100, 2) AS bal
       |FROM b2
       |ORDER BY row_id""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.demo.lin")
     spark.sql("CREATE TABLE graft.demo.lin (k BIGINT, bal DOUBLE) USING graft")
     val cust = Tables.customer(spark, dir)
@@ -2414,7 +2411,7 @@ object SourceQueries {
       |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
       |FROM orders WHERE o_orderstatus = 'O'
       |ORDER BY era""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x17_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.ud PURGE")
     spark.sql(
@@ -2466,7 +2463,7 @@ object SourceQueries {
       |UNION ALL
       |SELECT k, 1000 + 5 * ((SELECT count(*) FROM b1) + r) AS id FROM b2
       |ORDER BY id""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.demo.idn PURGE")
     spark.sql(
       """CREATE TABLE graft.demo.idn
@@ -2507,7 +2504,7 @@ object SourceQueries {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY day, event_type""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.events(spark, dir).createOrReplaceTempView("x19_events_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.gen PURGE")
     spark.sql(
@@ -2553,7 +2550,7 @@ object SourceQueries {
       |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
       |FROM orders WHERE o_orderkey % 4 <> 3
       |ORDER BY era""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("x20_orders_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.ret PURGE")
     spark.sql(
@@ -2612,7 +2609,7 @@ object SourceQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x13_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_mor")
     spark.sql(
@@ -2699,7 +2696,7 @@ object SourceQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     ensureDeletesHeavy(spark, dir)
     spark.table("graft.demo.cust_dh")
       .groupBy("seg")
@@ -2734,7 +2731,7 @@ object SourceQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x13c_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_cr")
     spark.sql(
@@ -2794,7 +2791,7 @@ object SourceQueries {
       |GROUP BY era, seg
       |ORDER BY era, seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, lit, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x12_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cust_wap")
     spark.sql(
@@ -2850,7 +2847,7 @@ object SourceQueries {
       |UNION ALL
       |SELECT 'history', CAST(3 AS BIGINT), CAST(2 AS BIGINT)
       |ORDER BY rel""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x14_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.`meta14@wip`")
     spark.sql("DROP TABLE IF EXISTS graft.demo.meta14")
@@ -2902,7 +2899,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x21_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.cd PURGE")
     spark.sql(
@@ -2954,7 +2951,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x22_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.mse PURGE")
     spark.sql("CREATE TABLE graft.demo.mse (k BIGINT, bal DOUBLE) USING graft")
@@ -2995,7 +2992,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val evens = tmp(s"x23_evens_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
     val odds = tmp(s"x23_odds_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
     val src = Tables.customer(spark, dir)
@@ -3041,7 +3038,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x24_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.sc PURGE")
     spark.sql(
@@ -3084,7 +3081,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x25_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.nev PURGE")
     spark.sql(
@@ -3138,7 +3135,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x25b_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.dev PURGE")
     spark.sql(
@@ -3213,7 +3210,7 @@ object SourceQueries {
       |  UNION ALL SELECT 'vc_uniq', 'UNIQUE', (SELECT v FROM uq), (SELECT v FROM uq) = 0)
       |ORDER BY constraint_name""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("x26_customer_src")
     Tables.nation(spark, dir).createOrReplaceTempView("x26_nation_src")
     spark.sql("DROP TABLE IF EXISTS graft.demo.vc PURGE")

@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Q, SessionConf, Tables}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** Streaming operators (SURVEY.md §2b ST1–ST9) as differential-oracle
   * rows: each query replays `events` through the real incremental
@@ -39,6 +39,11 @@ object StreamingQueries {
       .agg(max(when(col("up"), struct(col("seg"), col("bal")))).as("s"))
       .select(col("k"), col("s.seg").as("seg"), col("s.bal").as("bal"),
         col("s").isNull.as("is_del"))
+
+  /** `transformWithState` requires the RocksDB state store provider. */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    SessionConf.withConfs(spark)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** ST1+ST2: watermarked tumbling-window aggregate, complete mode.
     * 1-hour windows are epoch-aligned ⇒ oracle is date_trunc('hour').
@@ -199,10 +204,7 @@ object StreamingQueries {
       |GROUP BY n_events
       |ORDER BY n_events""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .selectExpr("user_id", "value")
         .as[(Long, Double)]
@@ -221,9 +223,6 @@ object StreamingQueries {
         .groupBy(col("n_events"))
         .agg(count(lit(1)).as("n_users"), round(sum(col("total_value")), 4).as("sum_value"))
         .orderBy(col("n_events"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -264,10 +263,7 @@ object StreamingQueries {
       |GROUP BY n_events
       |ORDER BY session_size""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .withWatermark("ts", "7 minutes")
         .selectExpr("user_id", "unix_micros(ts) AS ts_us", "value")
@@ -285,9 +281,6 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_sessions"),
           round(sum(col("sum_value")), 2).as("sum_value"))
         .orderBy(col("session_size"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -315,10 +308,7 @@ object StreamingQueries {
       |FROM prof GROUP BY n_types, total
       |ORDER BY n_types, n_events""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb(spark) {
       val typed = StreamingOps.eventsStream(spark, dir)
         .selectExpr("user_id", "event_type", "value")
         .as[(Long, String, Double)]
@@ -342,9 +332,6 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_users"),
           round(sum(col("top3")), 2).as("sum_top3"))
         .orderBy(col("n_types"), col("n_events"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -466,7 +453,7 @@ object StreamingQueries {
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
       |ORDER BY tag""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.sink11")
     spark.sql(
       "CREATE TABLE graft.stream.sink11 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
@@ -504,7 +491,7 @@ object StreamingQueries {
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
       |ORDER BY tag""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.src12")
     spark.sql("DROP TABLE IF EXISTS graft.stream.sink12")
     spark.sql(
@@ -608,7 +595,7 @@ object StreamingQueries {
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
       |ORDER BY tag""".stripMargin) { (spark, dir) =>
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.base14")
     spark.sql("DROP TABLE IF EXISTS graft.stream.mv14")
     spark.sql(
@@ -674,7 +661,7 @@ object StreamingQueries {
       |GROUP BY change_type, seg
       |ORDER BY change_type, seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("st15_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.stream.cdc15")
     spark.sql(
@@ -727,7 +714,7 @@ object StreamingQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("st16_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.stream.cdc16")
     spark.sql("DROP TABLE IF EXISTS graft.stream.replica16")
@@ -814,7 +801,7 @@ object StreamingQueries {
       |GROUP BY seg
       |ORDER BY seg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.{col, count, round, sum}
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("st17_customer_src")
     spark.sql("DROP TABLE IF EXISTS graft.stream.ups17")
     spark.sql("DROP TABLE IF EXISTS graft.stream.ups17_replica")

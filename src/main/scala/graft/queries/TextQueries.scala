@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Q, SessionConf, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -273,7 +273,7 @@ object TextQueries {
       |UNION ALL SELECT 'new_docs', count(*) FROM newd
       |ORDER BY k""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    SessionConf.registerCatalog(spark)
     val docs = Tables.documents(spark, dir)
     spark.sql("DROP TABLE IF EXISTS graft.demo.dedup_idx PURGE")
     spark.sql("CREATE TABLE graft.demo.dedup_idx (h STRING) USING graft")

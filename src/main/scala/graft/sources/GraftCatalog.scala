@@ -4012,8 +4012,7 @@ object GraftCatalog {
     */
   private[sources] def installOverwrite(
       ident: Identifier, segs: Seq[Segment],
-      filters: Option[Seq[org.apache.spark.sql.sources.Filter]],
-      dynamic: Boolean): Unit = commitSegments(ident) { prev =>
+      filters: Option[Seq[org.apache.spark.sql.sources.Filter]]): Unit = commitSegments(ident) { prev =>
     import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter}
     // Key matching is only meaningful against keys valued over the
     // CURRENT spec. After a partition-spec evolution, old-era segments'

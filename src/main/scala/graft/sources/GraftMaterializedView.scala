@@ -283,7 +283,7 @@ private[graft] object GraftMvOps {
       fns: String, ftbl: String, vf: Long,
       dims: Seq[(String, String)], vds: Seq[Long],
       condConj: String, groupCols: Seq[String], aggList: Seq[String],
-      where: Option[String] = None): DataFrame = {
+      where: Option[String]): DataFrame = {
     val from = (s"${fqn(cat, fns, ftbl)} VERSION AS OF $vf" +:
       dims.zip(vds).map { case ((dns, dtbl), vd) =>
         s"${fqn(cat, dns, dtbl)} VERSION AS OF $vd"

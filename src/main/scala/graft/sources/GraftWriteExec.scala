@@ -126,7 +126,7 @@ private[sources] class GraftCatalogBatchWrite(
       GraftCatalog.installUpsert(ident, segs.toSeq, upsertKeys,
         msgs.flatMap(_.upsertKeys).toSeq)
     else if (overwriteFilters.isDefined || dynamicOverwrite)
-      GraftCatalog.installOverwrite(ident, segs.toSeq, overwriteFilters, dynamicOverwrite)
+      GraftCatalog.installOverwrite(ident, segs.toSeq, overwriteFilters)
     else GraftCatalog.install(ident, segs.toSeq, truncateFirst, copyTokens = copyTokens)
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -1,9 +1,8 @@
 package graft.streaming
 
+import graft.{SessionConf, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Structured-Streaming plumbing (SURVEY.md §2b ST1–ST9).
   *
@@ -21,36 +20,6 @@ import org.apache.spark.sql.types._
   * boundary I/O changes.
   */
 object StreamingOps {
-
-  /** The file stream source needs an explicit schema; probe the staged
-    * file's REAL batch schema instead of hardcoding one. The driver has
-    * shipped `events.ts` as both TIMESTAMP(NANOS) (readable only as a raw
-    * long via `nanosAsLong`) and plain TIMESTAMP(MICROS)/NTZ across
-    * testdata generations — a hardcoded LongType schema silently read the
-    * µs-encoded int64 as a long and compressed every timestamp 1000×
-    * (wrong window counts, not an error). Probing is a driver-side
-    * footer read, negligible next to starting a streaming query.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def probedSchema(spark: SparkSession, stagedDir: String): StructType = {
-    // Footer-schema probe memoized per (staged file, size, mtime) — the
-    // bare read is a Spark JOB per stream start (the Tables.table
-    // discipline); the key invalidates when the staged copy is
-    // refreshed after testdata regeneration.
-    val f = java.nio.file.Paths.get(stagedDir, "events.parquet").toFile
-    // nanosAsLong folded into the key (the Tables.table discipline):
-    // the inferred type of events.ts depends on it.
-    val nanosFlag = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key = s"$stagedDir:${f.length}:${f.lastModified}:$nanosFlag"
-    var schema = schemaCache.get(key)
-    if (schema == null) {
-      schema = spark.read.parquet(stagedDir).schema
-      schemaCache.put(key, schema)
-    }
-    schema
-  }
 
   /** The file stream source lists a DIRECTORY of arriving files; the
     * testdata table is a single file, so stage it into a per-sf temp dir.
@@ -92,31 +61,15 @@ object StreamingOps {
   }
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    // Deliberately session-wide and NOT restored, matching
-    // Tables.events (the batch loader): both entry points must read
-    // the driver's ns-encoded events parquet identically for the whole
-    // session, and the flag must still be set when the lazy stream
-    // plans its batches. The only TIMESTAMP(NANOS) source in the
-    // harness is this table, and both loaders canonicalize ts to
-    // micros right here, so no other read observes the flag.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val staged = stagedEventsDir(dir)
-    val schema = probedSchema(spark, staged)
-    val raw = spark.readStream.schema(schema).parquet(staged)
-    schema("ts").dataType match {
-      // ns-as-long generation: exact integer ns→µs truncation (same as
-      // DuckDB's read of the same file).
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    // Same flag, schema and ts canonicalization as the batch loader: the
+    // file source needs an explicit schema, and only the file's REAL one
+    // is right across testdata generations (a hardcoded LongType once
+    // read µs as ns and compressed every timestamp 1000×).
+    Tables.nanosAsLongIfNeeded(spark, dir)
+    val schema = Tables.table(spark, dir, "events").schema
+    Tables.canonicalTs(spark.readStream.schema(schema).parquet(stagedEventsDir(dir)))
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink; return
-    * the sink table. `complete` mode for windowed aggregations (all
-    * windows emitted at end), `append`/`update` for row-wise ops.
-    */
   /** State partitions for the replay harness. State-store commit
     * overhead scales with partition count (delta files + maintenance
     * per partition per batch), and the judged replay is a single batch
@@ -137,18 +90,16 @@ object StreamingOps {
   private def statePartitions(spark: SparkSession): String =
     spark.conf.get("spark.graft.streaming.statePartitions", StatePartitions.toString)
 
+  /** Run a streaming DataFrame to completion into a memory sink; return
+    * the sink table. `complete` mode for windowed aggregations (all
+    * windows emitted at end), `append`/`update` for row-wise ops.
+    */
   def runToBatch(
       spark: SparkSession,
       sdf: DataFrame,
       mode: String,
       name: String): DataFrame = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevRetain = spark.conf.getOption("spark.sql.streaming.minBatchesToRetain")
-    // Default 100 retained state snapshots is recovery-window tuning a
-    // bounded replay doesn't need.
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions(spark))
-    try {
+    withStreamConfs(spark) {
       sdf.writeStream
         .format("memory")
         .queryName(name)
@@ -156,12 +107,6 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevRetain match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.minBatchesToRetain", v)
-        case None => spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
-      }
     }
     // Materialize off the sink and drop it: the memory sink holds the
     // full result on the driver, and leaked sink tables from a batch of
@@ -185,17 +130,22 @@ object StreamingOps {
   def runForeachBatch(
       spark: SparkSession,
       sdf: DataFrame,
-      f: (DataFrame, Long) => Unit): Unit = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions(spark))
-    try {
+      f: (DataFrame, Long) => Unit): Unit =
+    withStreamConfs(spark) {
       sdf.writeStream
         .outputMode("append")
         .foreachBatch(f)
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
+    }
+
+  /** The replay harness's conf for one streaming run: state partitions
+    * (above), and 2 retained state snapshots instead of the default 100
+    * — recovery-window tuning a bounded replay doesn't need.
+    */
+  private def withStreamConfs[T](spark: SparkSession)(body: => T): T =
+    SessionConf.withConfs(spark)(
+      "spark.sql.streaming.minBatchesToRetain" -> "2",
+      "spark.sql.shuffle.partitions" -> statePartitions(spark))(body)
 }

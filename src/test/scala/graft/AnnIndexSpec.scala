@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * past its trained index.
   */
 class AnnIndexSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   // Deterministic near-axis unit vector: axis direction + small jitter.

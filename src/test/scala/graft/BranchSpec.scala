@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * branch-written file that main now serves.
   */
 class BranchSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def ks(t: String): Seq[Long] =

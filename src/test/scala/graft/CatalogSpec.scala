@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * user hits), not by calling the catalog object directly.
   */
 class CatalogSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("create / insert / select round-trip through SQL") {

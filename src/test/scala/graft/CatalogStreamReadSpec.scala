@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and zone-map segment skipping inside micro-batch planning.
   */
 class CatalogStreamReadSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def freshCkpt(tag: String): String =

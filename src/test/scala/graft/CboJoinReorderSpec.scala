@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * from the low-cardinality pair instead of the syntactic order.
   */
 class CboJoinReorderSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def scanOrder(df: org.apache.spark.sql.DataFrame): Seq[String] =

@@ -18,11 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are deterministic regressions, not flaky fuzzing.
   */
 class CdcReplaySpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private val T = "graft.cdcrp.t"
 

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a schema change across the range fails loudly.
   */
 class ChangeFeedSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def changes(from: String, to: Option[String] = None) = {

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the two tables evolve independently after the branch point.
   */
 class CloneRestoreSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def ks(t: String): Seq[Long] =

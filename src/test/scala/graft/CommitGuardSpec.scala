@@ -15,11 +15,7 @@ object CommitGuardSpec {
   * conflict detection, and reserved-name/namespace invariants.
   */
 class CommitGuardSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("a row-level rewrite refuses to erase a commit that landed mid-flight") {

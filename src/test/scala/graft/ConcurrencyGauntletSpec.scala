@@ -74,11 +74,7 @@ private object ForkedDrivers {
 }
 
 class ConcurrencyGauntletSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private val T = "graft.conc.t"
 

@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * what a prior run didn't.
   */
 class CopyIntoSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def freshDir(name: String): java.io.File = {

@@ -11,11 +11,7 @@ import graft.sources.GraftCatalog
   * stay exact (COUNT via live rows; MIN/MAX decline the stats path).
   */
 class DeletionVectorSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("minority DELETE writes a deletion vector, not a file; scans skip it") {

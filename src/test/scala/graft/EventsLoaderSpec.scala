@@ -81,6 +81,34 @@ class EventsLoaderSpec extends AnyFunSuite {
     assert(v == micros)
   }
 
+  test("only a TIMESTAMP(NANOS) footer sets nanosAsLong; ns truncate exactly to µs") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    // Spark cannot write TIMESTAMP(NANOS); parquet-hadoop can.
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val nsDir = java.nio.file.Files.createTempDirectory("graft_events_nanos")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(nsDir.resolve("events.parquet").toUri))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 0L).append("ts", micros * 1000L + 999L))
+    finally w.close()
+    val usDir = writeSingleFile(
+      Seq((0L, micros)).toDF("event_id", "us")
+        .withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType)).drop("us"),
+      "us_flag")
+    spark.conf.unset(flag)
+    try {
+      assert(normalizedTs(usDir) == ((TimestampType, micros)))
+      assert(!spark.conf.getAll.contains(flag), "a MICROS footer must not set the flag")
+      assert(normalizedTs(nsDir.toString) == ((TimestampType, micros)))
+      assert(spark.conf.get(flag) == "true")
+    } finally spark.conf.unset(flag)
+  }
+
   test("streaming source normalizes ts identically to the batch loader") {
     // NTZ staged dir (today's real encoding) through the file-stream
     // source: the probed schema must land on the same µs value the

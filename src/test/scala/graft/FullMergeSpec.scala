@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (it post-dates the classic MERGE shape and was untested).
   */
 class FullMergeSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def kv(t: String): Seq[(Long, String)] =

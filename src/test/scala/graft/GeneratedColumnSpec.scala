@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the codegen'd write projection.
   */
 class GeneratedColumnSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("omitted generated columns are computed; expressions span functions and columns") {

@@ -19,11 +19,7 @@ import graft.sources.{PartBucket, PartDays, PartField, PartIdentity, PartTruncat
   * hidden partitions.
   */
 class HiddenPartitionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def graftScan(df: org.apache.spark.sql.DataFrame): graft.sources.GraftCatalogScan = {

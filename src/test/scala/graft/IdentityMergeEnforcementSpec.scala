@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ALWAYS values only on the new rows.
   */
 class IdentityMergeEnforcementSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   test("MERGE explicit insert into GENERATED ALWAYS identity is refused") {
     spark.sql("DROP TABLE IF EXISTS graft.idn.p PURGE")

@@ -15,11 +15,7 @@ object IdentitySpec {
 }
 
 class IdentitySpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("values continue across commits; single-task inserts are contiguous") {

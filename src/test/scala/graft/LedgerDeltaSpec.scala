@@ -26,7 +26,6 @@ class LedgerDeltaSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.pgraft", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.pgraft.root",
       java.nio.file.Files.createTempDirectory("graft_ledger_delta_").toString)
-    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     s
   }
 

@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewrite in one statement.
   */
 class MergeSchemaEvolutionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("WITH SCHEMA EVOLUTION adds source-only columns; pre-merge rows read NULL") {

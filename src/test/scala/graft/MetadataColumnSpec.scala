@@ -10,11 +10,7 @@ import graft.sources.GraftCatalog
   * deletion-vector gaps.
   */
 class MetadataColumnSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("_segment/_pos are hidden from SELECT * but selectable; one _segment per file") {

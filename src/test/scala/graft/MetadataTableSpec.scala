@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * segment-file reads, joinable like any relation.
   */
 class MetadataTableSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("files/history/eq_deletes reflect commits, upserts, and compaction") {

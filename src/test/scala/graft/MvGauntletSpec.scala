@@ -25,11 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * retraction).
   */
 class MvGauntletSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =

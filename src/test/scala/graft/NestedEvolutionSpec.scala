@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * inner names key nothing, zero file I/O.
   */
 class NestedEvolutionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("ADD a nested field: old rows read NULL, NULL structs stay NULL") {

@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the exact op that broke, with the seed and op log in the message.
   */
 class NestedGauntletSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   // Inner-field model: ordered (name, kind) plus per-row values.
   // kind: "int" (widenable), "long" (post-widen), "str", "dbl".

@@ -29,7 +29,6 @@ class OccRollbackSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.pgraft", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.pgraft.root",
       java.nio.file.Files.createTempDirectory("graft_occ_rollback_").toString)
-    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     s
   }
 

@@ -13,26 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * silently report nothing — never a wrong ordering.
   */
 class OrderedScanSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   test("co-partitioned co-sorted join plans no exchange AND no sort") {
@@ -47,7 +33,7 @@ class OrderedScanSpec extends AnyFunSuite {
         .selectExpr("concat('k', id % 4) AS k", "id AS v")
         .writeTo(s"graft.os.$t").append()
     }
-    withSQLConf(
+    SessionConf.withConfs(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
@@ -124,7 +110,7 @@ class OrderedScanSpec extends AnyFunSuite {
         .selectExpr("concat('k', id % 2) AS k", "id AS v", "(97 - id) % 100 AS w")
         .writeTo(s"graft.os.$t").append()
     }
-    withSQLConf(
+    SessionConf.withConfs(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
@@ -158,7 +144,7 @@ class OrderedScanSpec extends AnyFunSuite {
       "CREATE TABLE graft.os.plain (k STRING, v BIGINT) USING graft PARTITIONED BY (k)")
     spark.range(0, 50).selectExpr("concat('k', id % 2) AS k", "id AS v")
       .writeTo("graft.os.plain").append()
-    withSQLConf(
+    SessionConf.withConfs(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * writers.
   */
 class OrphanFilesSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import graft.sources.GraftCatalog
 
   private def dirOf(ns: String, t: String): java.nio.file.Path = {

@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * atomic commit; everything else (incl. retained history) survives.
   */
 class PartitionOverwriteSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def rows(t: String): Set[(String, Long)] =

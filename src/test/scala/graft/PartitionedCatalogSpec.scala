@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * joins and aggregates.
   */
 class PartitionedCatalogSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String = {
@@ -72,7 +68,7 @@ class PartitionedCatalogSpec extends AnyFunSuite {
     spark.range(0, 4, 1, 2)
       .selectExpr("concat('k', id) AS k", "concat('label-', id) AS label")
       .writeTo("graft.pt.d").append()
-    withSQLConf(
+    SessionConf.withConfs(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       // isolate the SPJ path: no broadcast fallback for the small side
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -439,7 +435,7 @@ class PartitionedCatalogSpec extends AnyFunSuite {
       .selectExpr("id", "id * 2 AS amount").writeTo("graft.pt.bf").append()
     spark.range(0, 500, 1, 4)
       .selectExpr("id", "id * 3 AS score").writeTo("graft.pt.bg").append()
-    withSQLConf(
+    SessionConf.withConfs(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
@@ -480,15 +476,5 @@ class PartitionedCatalogSpec extends AnyFunSuite {
     assert(spark.table("graft.pt.days").count() == 4L,
       "other days ride through untouched")
     spark.sql("DROP TABLE graft.pt.days PURGE")
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

@@ -20,10 +20,6 @@ class PersistentCatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.pgraft", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.pgraft.root",
       Files.createTempDirectory("graft_persist_root_").toString)
-    // `CALL graft.system.…` resolves against the graft catalog — this
-    // suite must register it itself, not inherit it from whichever
-    // other suite happened to run first on the shared session.
-    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     s
   }
   import spark.implicits._

@@ -188,7 +188,6 @@ class PlanRewriteSpec extends AnyFunSuite {
   }
 
   test("RELY join elimination: unreferenced FK→PK inner join is removed; gates hold") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
@@ -266,7 +265,6 @@ class PlanRewriteSpec extends AnyFunSuite {
   }
 
   test("RELY elimination sheds multiple star dims and a snowflake tail (fixpoint)") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>

@@ -21,12 +21,24 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  // Each row must also leave the session as it found it: same conf map,
+  // no stream left running. Cached data is not checked — the persisted
+  // stages of SimilarityQueries and PipelineQueries.gramRows are
+  // released by the caller's clearCache(), their documented contract.
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"smoke: $name runs on sf0.001") {
+      val before = spark.conf.getAll
       try {
         val df = fn(spark, sfDir)
         assert(df.columns.nonEmpty)
         assert(df.count() >= 0)
+        val after = spark.conf.getAll
+        val changed = (before.keySet ++ after.keySet).toSeq.sorted
+          .filter(k => before.get(k) != after.get(k))
+          .map(k => s"$k: ${before.getOrElse(k, "<unset>")} -> ${after.getOrElse(k, "<unset>")}")
+        assert(changed.isEmpty, s"$name changed the session conf: ${changed.mkString("; ")}")
+        assert(spark.streams.active.isEmpty,
+          s"$name left streams running: ${spark.streams.active.map(_.name).mkString(", ")}")
       } finally spark.catalog.clearCache() // see Bench: cache-entry buildup
     }
   }

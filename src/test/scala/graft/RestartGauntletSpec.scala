@@ -23,9 +23,6 @@ class RestartGauntletSpec extends AnyFunSuite {
       classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.pgraft.root",
       java.nio.file.Files.createTempDirectory("graft_restart_gauntlet_").toString)
-    // CALL graft.system.… resolves against the graft catalog name;
-    // state is the shared singleton, so it acts on the same tables.
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     s
   }
 

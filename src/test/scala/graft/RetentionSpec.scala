@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fallback.
   */
 class RetentionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private def snapshots(t: String): Long =
     spark.sql(s"SELECT count(*) FROM graft.$t.history").collect().head.getLong(0)

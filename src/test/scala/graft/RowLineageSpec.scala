@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tracks the snapshot version that last CHANGED the row.
   */
 class RowLineageSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def lineage(t: String): Seq[(Long, Long, Long)] =

@@ -18,11 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * renames, drops, widenings, and restores that rewind the schema.
   */
 class SchemaEvolutionGauntletSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private val T = "graft.sev.t"
 

@@ -9,11 +9,7 @@ import graft.sources.GraftCatalog
   * guards: partition columns and constraint-referenced columns refuse.
   */
 class SchemaEvolutionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("RENAME COLUMN is metadata-only: no file rewritten, data intact, old name gone") {

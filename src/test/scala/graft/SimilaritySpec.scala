@@ -172,7 +172,6 @@ class SimilaritySpec extends AnyFunSuite {
     // order consistency between append and probe.
     import graft.queries.SimilarityQueries
     val dir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     try {
       SimilarityQueries.ensureL9Index(spark, dir)
       val dfBefore = spark.table("graft.demo.nd_df").count()

@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * neighbors expire.
   */
 class SnapshotTagSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("VERSION AS OF 'tag' resolves; tagged snapshots outlive retention churn") {

@@ -14,6 +14,8 @@ object SparkTestSession {
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
       // Engine default, matching Verify/Bench: SPJ reads the layout.
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      // Every catalog suite reads `graft.*`; registered once, here.
+      .config(SessionConf.CatalogKey, classOf[graft.sources.GraftCatalog].getName)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions()) // prod extension path, incl. V2 views
       .getOrCreate()

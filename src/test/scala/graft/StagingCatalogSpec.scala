@@ -10,11 +10,7 @@ import graft.sources.GraftCatalog
   * and leave the OLD table fully readable (RTAS).
   */
 class StagingCatalogSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("CREATE TABLE AS SELECT commits atomically with data") {

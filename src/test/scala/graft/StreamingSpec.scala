@@ -225,7 +225,6 @@ class StreamingSpec extends AnyFunSuite {
     // after failure), then append — replays become no-ops. Composes the
     // streaming escape hatch with the catalog's SupportsDelete.
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graft.fb.sink")
     spark.sql("CREATE TABLE graft.fb.sink (k BIGINT, batch_id BIGINT) USING graft")
     val in = MemoryStream[Long]
@@ -256,7 +255,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("S5d: native streaming write to a catalog table (toTable) commits per epoch") {
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graft.stw.t")
     spark.sql("CREATE TABLE graft.stw.t (k BIGINT) USING graft")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_s5d_ckpt").toString

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `DROP TABLE ... PURGE` keeps the immediate-GC semantics.
   */
 class UndropSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("drop → undrop restores data, history, properties, and row ids") {

@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly-once, and schema DDL refuses to break outstanding keys.
   */
 class UpsertSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def kv(t: String): Seq[(Long, String)] =

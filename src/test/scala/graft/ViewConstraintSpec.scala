@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * planning) on the graft catalog.
   */
 class ViewConstraintSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("CREATE/SELECT/SHOW/DROP view lifecycle through SQL; rename/alter via API") {

@@ -12,11 +12,7 @@ import graft.sources.GraftCatalog
   * ordinary zone maps, and results are byte-identical before/after.
   */
 class ZorderSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def plannedParts(ns: String, table: String, pred: Filter*): Int = {
