@@ -1533,19 +1533,28 @@ object GraftCatalog {
   }
 
   /** Source side: resolves a physical ordinal to its (rowId,
-    * updateSeq) through the segment's runs. Ordinals must only grow
-    * (the sequential-read invariant every caller has) — O(1)
-    * amortized. None = the segment has no lineage for the ordinal.
+    * updateSeq) through the segment's runs, allocation-free. Ordinals
+    * must only grow (the sequential-read invariant every caller has) —
+    * O(1) amortized.
     */
   private[sources] final class RunCursor(runs: IndexedSeq[(Long, Long, Long)]) {
     private var i = 0
     private var start = 0L
-    def at(ord: Long): Option[(Long, Long)] = {
+    private var id = 0L
+    private var q = 0L
+    /** Seek to `ord`: true when the segment has lineage for it (then
+      * `rowId` / `updatedSeq` hold it).
+      */
+    def seek(ord: Long): Boolean = {
       while (i < runs.length && ord >= start + runs(i)._2) {
         start += runs(i)._2; i += 1
       }
-      if (i < runs.length) Some((runs(i)._1 + (ord - start), runs(i)._3)) else None
+      i < runs.length && {
+        id = runs(i)._1 + (ord - start); q = runs(i)._3; true
+      }
     }
+    def rowId: Long = id
+    def updatedSeq: Long = q
   }
 
   /** EQUALITY DELETE (merge-on-read upsert, the Iceberg v2 /
@@ -1712,7 +1721,7 @@ object GraftCatalog {
       // number of identity columns.
       val maxK = Array.fill(specs.length)(-1L)
       entry.segments.foreach { seg =>
-        SegmentIO.foreachRow(seg, entry.schema.length) { r =>
+        SegmentIO.foreachRow(GraftSegFile.of(seg), entry.schema.length) { r =>
           var j = 0
           while (j < specs.length) {
             val (_, idx, isLong, start, step) = specs(j)
@@ -3892,8 +3901,7 @@ object GraftCatalog {
     threshold.foreach { n =>
       val entry = store.get(ident)
       if (entry != null) {
-        val target = sys.props
-          .getOrElse("graft.compact.targetBytes", (64L * 1024 * 1024).toString).toLong
+        val target = compactTargetBytes
         // Compact ONLY the partition groups that satisfy the reduce
         // predicate — this runs synchronously inside the committing
         // writer's mutation lock, and a single hot partition must not
@@ -4134,6 +4142,13 @@ object GraftCatalog {
   private[sources] def upsertMaxKeys: Int =
     sys.props.getOrElse("graft.upsert.maxKeys", "100000").toInt
 
+  /** Byte size compaction splits an ordered group's output at — ONE
+    * parse (auto-compaction's reduce predicate must agree with the
+    * fold it triggers).
+    */
+  private def compactTargetBytes: Long =
+    sys.props.getOrElse("graft.compact.targetBytes", (64L * 1024 * 1024).toString).toLong
+
   /** Upsert-key columns must exist and carry exact-equality-comparable
     * types (the external encodings the writer collects and the reader
     * compares; floats are excluded — NaN/−0.0 equality is a trap).
@@ -4329,21 +4344,6 @@ object GraftCatalog {
     else None // lost CAS: publish reloaded the winner's state
   }
 
-  /** OPTIMIZE-style segment compaction (`CALL graft.system.compact`):
-    * within each partition-key group, segments beyond the first are
-    * folded into ONE fresh segment (streamed, never materialized), the
-    * list swaps atomically as the next snapshot, and the small files
-    * retire through the usual retention GC. Returns
-    * (segmentsBefore, segmentsAfter, rows). The small-files answer for
-    * a long-running append/stream workload — same protocol as
-    * Delta OPTIMIZE / Iceberg rewrite_data_files at demo scale (a
-    * cluster deployment would run the rewrites as tasks; the commit
-    * path is identical).
-    */
-  /** `onlyKeys`: restrict the fold to these partition-group keys
-    * (auto-compaction's scoped path — groups outside the scope pass
-    * through byte-identical); None = every group (the `CALL` path).
-    */
   /** Resolve a `compact(..., where)` predicate — comma-joined
     * `field=value` equalities on partition fields — to the partition
     * GROUPS it names (None = whole table). Identity columns coerce the
@@ -4402,6 +4402,21 @@ object GraftCatalog {
     Some(hit)
   }
 
+  /** OPTIMIZE-style segment compaction (`CALL graft.system.compact`):
+    * within each partition-key group, segments beyond the first are
+    * folded into ONE fresh segment (streamed, never materialized), the
+    * list swaps atomically as the next snapshot, and the small files
+    * retire through the usual retention GC. Returns
+    * (segmentsBefore, segmentsAfter, rows). The small-files answer for
+    * a long-running append/stream workload — same protocol as
+    * Delta OPTIMIZE / Iceberg rewrite_data_files at demo scale (a
+    * cluster deployment would run the rewrites as tasks; the commit
+    * path is identical).
+    *
+    * `onlyKeys` restricts the fold to these partition-group keys
+    * (auto-compaction's scoped path — groups outside the scope pass
+    * through byte-identical); None = every group (the `CALL` path).
+    */
   private[sources] def compact(
       ident: Identifier,
       onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]] = None): (Int, Int, Long) = mutate {
@@ -4448,8 +4463,7 @@ object GraftCatalog {
     // GC drops them all.
     val nextSeq = nextVersion(ident)
     val compiledEq = EqFilter.compileAll(entry.schema, entry.eqDeletes)
-    def eqKeep(seg: Segment): UnsafeRow => Boolean =
-      EqFilter.keepOf(EqFilter.applicable(compiledEq, seg)).getOrElse(_ => true)
+    def liveOf(seg: Segment): GraftSegFile = GraftSegFile.of(seg, compiledEq)
     def eqApplies(seg: Segment): Boolean =
       entry.eqDeletes.exists(_.seq > seg.seq)
     // Group by (spec, key): after a partition-spec evolution, equal key
@@ -4487,9 +4501,8 @@ object GraftCatalog {
           val writers =
             new scala.collection.mutable.LinkedHashMap[IndexedSeq[Any], SegmentIO.Writer]()
           segs.foreach { seg =>
-            val keep = eqKeep(seg)
-            SegmentIO.foreachRow(seg, entry.schema.length) { r =>
-              if (keep(r)) writers.getOrElseUpdate(keyOf(r),
+            SegmentIO.foreachRow(liveOf(seg), entry.schema.length) { r =>
+              writers.getOrElseUpdate(keyOf(r),
                 new SegmentIO.Writer(entry.dir, entry.schema)).add(r)
             }
           }
@@ -4499,70 +4512,29 @@ object GraftCatalog {
         }
         else if (segs.length <= 1 && segs.forall(_.dv.isEmpty) &&
           segs.forall(!eqApplies(_))) segs
-        else if (orderIdx.isEmpty) {
-          val w = new SegmentIO.Writer(entry.dir, entry.schema)
+        else if (orderIdx.isEmpty)
           // ROW-LINEAGE preservation: the unordered fold concatenates
-          // sources in list order, so surviving rows' (id, updateSeq)
-          // pairs carry over as run concatenation — dv/eq-dropped rows
-          // just break runs. Degrades to fresh ids (empty runs →
-          // publish reassigns) if any source predates lineage or the
-          // run list would bloat the ledger (pathological alternating
-          // deletes) — conservative, never wrong.
-          val acc = new RunAccumulator
-          segs.foreach { seg =>
-            val keep = eqKeep(seg)
-            val cur = new RunCursor(seg.lineage)
-            SegmentIO.foreachRowPhysical(seg, entry.schema.length) { (r, ord) =>
-              val masked =
-                seg.dv.exists(d => ord <= Int.MaxValue && d.contains(ord.toInt))
-              if (!masked && keep(r)) {
-                w.add(r)
-                cur.at(ord) match {
-                  case Some((id, q)) => acc.push(id, q)
-                  case None => acc.invalidate()
-                }
-              }
-            }
-          }
-          w.finish().map(_.copy(key = key, spec = spec, seq = nextSeq,
-            lineage = acc.result())).toSeq
-        } else {
-          val payloads = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          segs.foreach { seg =>
-            val keep = eqKeep(seg)
-            SegmentIO.foreachRow(seg, entry.schema.length) { r =>
-              if (keep(r)) payloads += r.getBytes.clone()
-            }
-          }
-          val ra = new UnsafeRow(entry.schema.length)
-          val rb = new UnsafeRow(entry.schema.length)
-          def lt(a: Array[Byte], b: Array[Byte]): Boolean = {
-            ra.pointTo(a, a.length); rb.pointTo(b, b.length)
+          // sources in list order through the lineage-preserving copy.
+          SegmentIO.rewrite(segs.map(liveOf), entry.dir, entry.schema.length, entry.schema)(
+            Some(_)).map(_.copy(key = key, spec = spec, seq = nextSeq)).toSeq
+        else {
+          val buf = new SegmentIO.RowBuffer(entry.schema.length)
+          segs.foreach(seg => SegmentIO.foreachRow(liveOf(seg), entry.schema.length)(buf.add))
+          val sorted = buf.sortedBy { (a, b) =>
             var i = 0
-            while (i < orderIdx.length) {
-              val c = cmpAt(ra, rb, orderIdx(i))
-              if (c != 0) return c < 0
-              i += 1
-            }
-            false
+            var c = 0
+            while (c == 0 && i < orderIdx.length) { c = cmpAt(a, b, orderIdx(i)); i += 1 }
+            c < 0
           }
-          val sorted = payloads.sortWith(lt)
           val totalBytes = segs.map(s =>
             if (s.bytes > 0) s.bytes else s.rows * 8L * (entry.schema.length + 1)).sum
-          val target = sys.props
-            .getOrElse("graft.compact.targetBytes", (64L * 1024 * 1024).toString).toLong
-          val outSegs = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
+          val outSegs = math.max(1, math.ceil(totalBytes.toDouble / compactTargetBytes).toInt)
           val perSeg = math.max(1, math.ceil(sorted.length.toDouble / outSegs).toInt)
-          val row = new UnsafeRow(entry.schema.length)
-          sorted.grouped(perSeg).flatMap { chunk =>
-            val w = new SegmentIO.Writer(entry.dir, entry.schema)
-            chunk.foreach { b => row.pointTo(b, b.length); w.add(row) }
-            // The sorted fold provably orders output on the write-order
-            // columns — carry the provenance flag (only for types the
-            // comparator really compares).
-            w.finish().map(_.copy(key = key, sorted = orderProvable, spec = spec,
-              seq = nextSeq))
-          }.toSeq
+          // The sorted fold provably orders output on the write-order
+          // columns — carry the provenance flag (only for types the
+          // comparator really compares).
+          buf.write(sorted, perSeg, entry.dir, entry.schema).map(_.copy(
+            key = key, sorted = orderProvable, spec = spec, seq = nextSeq))
         }
       }.toVector
     store.put(ident, entry.copy(segments = compacted))
@@ -4658,20 +4630,16 @@ object GraftCatalog {
     val zCompiledEq = EqFilter.compileAll(schema, entry.eqDeletes)
     def zorderGroup(spec: Seq[String], key: IndexedSeq[Any],
         segs: Vector[Segment]): Seq[Segment] = {
-        // Pass 1 (buffered): payload bytes + the z-column values.
-        val payloads = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+        // Pass 1 (buffered): the live rows + their z-column values.
+        val buf = new SegmentIO.RowBuffer(schema.length)
         val vals = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
         segs.foreach { seg =>
-          val keep = EqFilter.keepOf(EqFilter.applicable(zCompiledEq, seg))
-            .getOrElse((_: UnsafeRow) => true)
-          SegmentIO.foreachRow(seg, schema.length) { r =>
-            if (keep(r)) {
-              payloads += r.getBytes.clone()
-              vals += zIdx.map(numeric(r, _))
-            }
+          SegmentIO.foreachRow(GraftSegFile.of(seg, zCompiledEq), schema.length) { r =>
+            buf.add(r)
+            vals += zIdx.map(numeric(r, _))
           }
         }
-        val n = payloads.length
+        val n = buf.length
         if (n == 0) Nil
         else {
           val mins = Array.fill(zIdx.length)(Double.PositiveInfinity)
@@ -4692,16 +4660,8 @@ object GraftCatalog {
           val order = (0 until n).sortBy(r => zvalue(
             Array.tabulate(zIdx.length)(i => norm16(vals(r)(i), i))))
           val perSeg = math.max(1L, math.ceil(n.toDouble / targetSegments).toLong)
-          val row = new UnsafeRow(schema.length)
-          order.grouped(perSeg.toInt).flatMap { chunk =>
-            val w = new SegmentIO.Writer(entry.dir, schema)
-            chunk.foreach { r =>
-              val b = payloads(r)
-              row.pointTo(b, b.length)
-              w.add(row)
-            }
-            w.finish().map(_.copy(key = key, spec = spec, seq = zNextSeq))
-          }.toSeq
+          buf.write(order, perSeg.toInt, entry.dir, schema)
+            .map(_.copy(key = key, spec = spec, seq = zNextSeq))
         }
     }
 
@@ -4762,11 +4722,11 @@ object GraftCatalog {
         else {
           val hits = scala.collection.immutable.BitSet.newBuilder
           var nHits = 0L
-          SegmentIO.foreachRowPhysical(seg, prev.schema.length) { (r, ord) =>
-            if (!seg.dv.exists(_.contains(ord.toInt)) &&
-                filters.forall(GraftFilterEval.eval(_, schema, r))) {
-              hits += ord.toInt; nHits += 1
-            }
+          SegmentIO.withCursor(GraftSegFile.of(seg), prev.schema.length) { cur =>
+            while (cur.nextLive())
+              if (filters.forall(GraftFilterEval.eval(_, schema, cur.row))) {
+                hits += cur.ordinal.toInt; nHits += 1
+              }
           }
           val live = seg.liveRows
           if (nHits == 0) Some(seg)
@@ -4785,6 +4745,17 @@ object GraftCatalog {
   }
 }
 
+/** A catalog table: batch-readable, batch-writable (append, truncate,
+  * overwrite) with the same two-phase commit protocol as
+  * GraftMemorySink, and DELETE-capable (`SupportsDelete`):
+  * `DELETE FROM graft.ns.t WHERE …` ships the WHERE down as source
+  * Filters, and the table mostly attaches DELETION VECTORS to the
+  * matching segments instead of rewriting them (see
+  * [[GraftCatalog.deleteWhere]]). A predicate the evaluator can't
+  * prove (`canDeleteWhere` false) never takes that path, so it cannot
+  * delete the wrong rows: Spark plans it — like every UPDATE / MERGE —
+  * as a group-based row-level rewrite (`SupportsRowLevelOperations`).
+  */
 private[sources] class GraftCatalogTable(
     ident: Identifier, schema0: StructType, dir: String,
     pinned: Option[Vector[GraftCatalog.Segment]] = None,

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataInputStream, FileInputStream}
-
 import scala.collection.immutable.BitSet
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -869,80 +867,41 @@ private[sources] case class GraftChangeReaderFactory(data: StructType)
     (UnsafeProjection.create(exprs), joined, metaRow)
   }
 
-  /** Length-prefixed segment cursor shared by the change readers. */
-  private class SegCursor(path: String, total: Long) {
-    private val in = new DataInputStream(
-      new BufferedInputStream(new FileInputStream(path), 1 << 16))
-    var buf = new Array[Byte](1 << 10)
-    var size = 0
-    private var remaining = total
-    var ordinal: Long = -1L
-    def readNext(): Boolean =
-      if (remaining <= 0) false
-      else {
-        size = in.readInt()
-        if (size > buf.length) buf = new Array[Byte](math.max(size, buf.length << 1))
-        in.readFully(buf, 0, size)
-        remaining -= 1
-        ordinal += 1
-        true
-      }
-    def close(): Unit = in.close()
-  }
-
   /** Paired update reader: pre/post files advanced in lockstep over
     * LIVE pre ordinals; byte-identical positions are skipped (rows the
-    * rewrite copied unchanged), differing positions emit the
-    * `update_preimage` row then the `update_postimage` row. Cost is
-    * one sequential read of each file — the same bytes the unpaired
-    * delete+insert form read, minus the duplicated emission.
+    * rewrite copied unchanged — `UnsafeRow.equals` compares exactly
+    * the record bytes), differing positions emit the `update_preimage`
+    * row then the `update_postimage` row. Cost is one sequential read
+    * of each file — the same bytes the unpaired delete+insert form
+    * read, minus the duplicated emission.
     */
   private def pairedReader(p: GraftChangeUpdatePartition): PartitionReader[InternalRow] = {
     val (proj, joined, metaRow) = changeProjection()
     new PartitionReader[InternalRow] {
-      private val row = new UnsafeRow(p.numFields)
       // Constant tags allocated once, not per emitted row (same
       // reused-row discipline as the plain change reader).
       private val PreTag = UTF8String.fromString("update_preimage")
       private val PostTag = UTF8String.fromString("update_postimage")
-      private var pre: SegCursor = _
-      private var post: SegCursor = _
-      private var emitPost = false // a pre was just emitted; its post is due
-      private def liveNextPre(): Boolean = {
-        while (pre.readNext()) {
-          if (!p.pre.dvDead(pre.ordinal)) return true
-        }
-        false
-      }
+      private val pre = new SegmentIO.Cursor(p.pre, p.numFields)
+      private val post = new SegmentIO.Cursor(p.post, p.numFields)
+      private var out: UnsafeRow = _
       override def next(): Boolean = {
-        if (pre == null) {
-          pre = new SegCursor(p.pre.path, p.pre.rows)
-          post = new SegCursor(p.post.path, p.post.rows)
-        }
-        if (emitPost) {
-          row.pointTo(post.buf, post.size)
+        if (out eq pre.row) { // a pre was just emitted; its post is due
+          out = post.row
           metaRow.update(0, PostTag)
-          emitPost = false
           return true
         }
-        while (liveNextPre() && post.readNext()) {
-          val same = pre.size == post.size &&
-            java.util.Arrays.equals(
-              pre.buf, 0, pre.size, post.buf, 0, post.size)
-          if (!same) {
-            row.pointTo(pre.buf, pre.size)
+        while (pre.nextLive() && post.nextLive()) {
+          if (pre.row != post.row) {
+            out = pre.row
             metaRow.update(0, PreTag)
-            emitPost = true
             return true
           }
         }
         false
       }
-      override def get(): InternalRow = proj(joined(row, metaRow))
-      override def close(): Unit = {
-        if (pre != null) pre.close()
-        if (post != null) post.close()
-      }
+      override def get(): InternalRow = proj(joined(out, metaRow))
+      override def close(): Unit = { pre.close(); post.close() }
     }
   }
 
@@ -955,21 +914,13 @@ private[sources] case class GraftChangeReaderFactory(data: StructType)
     val (proj, joined, metaRow) = changeProjection()
     metaRow.update(0, UTF8String.fromString(p.changeType))
     new PartitionReader[InternalRow] {
-      private val row = new UnsafeRow(p.numFields)
-      private var cur: SegCursor = _
+      private val cur = new SegmentIO.Cursor(p.file, p.numFields)
       override def next(): Boolean = {
-        if (cur == null) cur = new SegCursor(p.file.path, p.file.rows)
-        while (cur.readNext()) {
-          if (!p.file.dvDead(cur.ordinal)) {
-            row.pointTo(cur.buf, cur.size)
-            if (!p.file.eq.exists(_.matches(row)) && p.newKeys.exists(_.matches(row)))
-              return true
-          }
-        }
+        while (cur.nextLive()) if (p.newKeys.exists(_.matches(cur.row))) return true
         false
       }
-      override def get(): InternalRow = proj(joined(row, metaRow))
-      override def close(): Unit = if (cur != null) cur.close()
+      override def get(): InternalRow = proj(joined(cur.row, metaRow))
+      override def close(): Unit = cur.close()
     }
   }
 
@@ -984,24 +935,17 @@ private[sources] case class GraftChangeReaderFactory(data: StructType)
     // reader (Spark copies when it retains).
     val (proj, joined, metaRow) = changeProjection()
     metaRow.update(0, UTF8String.fromString(p.changeType))
+    val only = p.emitOnly.orNull
     new PartitionReader[InternalRow] {
-      private val row = new UnsafeRow(p.numFields)
-      private var cur: SegCursor = _
-      private def emit(ord: Long): Boolean =
-        (p.emitOnly match {
-          case Some(only) => ord <= Int.MaxValue && only.contains(ord.toInt)
-          case None => !p.file.dvDead(ord)
-        }) && !p.file.eq.exists(_.matches(row)) // row points at this record
+      private val cur = new SegmentIO.Cursor(p.file, p.numFields)
       override def next(): Boolean = {
-        if (cur == null) cur = new SegCursor(p.file.path, p.file.rows)
-        while (cur.readNext()) {
-          row.pointTo(cur.buf, cur.size)
-          if (emit(cur.ordinal)) return true
-        }
+        if (only == null) return cur.nextLive()
+        // Emit-only (dv delta): the delta's ordinals, if still live.
+        while (cur.next()) if (GraftSegFile.marked(only, cur.ordinal) && cur.live) return true
         false
       }
-      override def get(): InternalRow = proj(joined(row, metaRow))
-      override def close(): Unit = if (cur != null) cur.close()
+      override def get(): InternalRow = proj(joined(cur.row, metaRow))
+      override def close(): Unit = cur.close()
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataInputStream, FileInputStream}
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -263,14 +261,13 @@ private[graft] case class GraftCatalogAggScan(
     // in between the builder's dv guard and scan build — rare by
     // construction, and bounded to the raced segments.
     val compiledEq = EqFilter.compileAll(schema, eqs)
-    def eqKeepOf(s: GraftCatalog.Segment): Option[UnsafeRow => Boolean] =
-      EqFilter.keepOf(EqFilter.applicable(compiledEq, s))
+    def eqRaced(s: GraftCatalog.Segment): Boolean =
+      EqFilter.applicable(compiledEq, s).nonEmpty
     def exactSegExtremum(s: GraftCatalog.Segment, i: Int, wantMin: Boolean): Option[Any] = {
       val dt = schema.fields(i).dataType
-      val keep = eqKeepOf(s).getOrElse((_: UnsafeRow) => true)
       var best: Any = null
-      SegmentIO.foreachRow(s, schema.length) { r =>
-        if (!r.isNullAt(i) && keep(r)) {
+      SegmentIO.foreachRow(GraftSegFile.of(s, compiledEq), schema.length) { r =>
+        if (!r.isNullAt(i)) {
           val v: Any = dt match {
             case LongType | TimestampType | TimestampNTZType => r.getLong(i)
             case IntegerType | DateType => r.getInt(i)
@@ -293,7 +290,7 @@ private[graft] case class GraftCatalogAggScan(
       val vals = group.flatMap { s =>
         require(s.stats.length > i,
           s"segment ${s.path} lacks stats for column $c — metadata aggregate unanswerable")
-        if (s.dv.isEmpty && eqKeepOf(s).isEmpty)
+        if (s.dv.isEmpty && !eqRaced(s))
           Option(if (wantMin) s.stats(i).min else s.stats(i).max)
         else exactSegExtremum(s, i, wantMin)
       }
@@ -301,13 +298,13 @@ private[graft] case class GraftCatalogAggScan(
       else CatalystTypeConverters.convertToCatalyst(
         vals.reduce((a, b) => if (lt(a, b) == wantMin) a else b))
     }
-    def exactLiveCount(s: GraftCatalog.Segment): Long = eqKeepOf(s) match {
-      case None => s.liveRows
-      case Some(keep) => // raced eq delete: count the filtered rows
+    def exactLiveCount(s: GraftCatalog.Segment): Long =
+      if (!eqRaced(s)) s.liveRows
+      else { // raced eq delete: count the filtered rows
         var n = 0L
-        SegmentIO.foreachRow(s, schema.length)(r => if (keep(r)) n += 1)
+        SegmentIO.foreachRow(GraftSegFile.of(s, compiledEq), schema.length)(_ => n += 1)
         n
-    }
+      }
     def aggRow(group: Vector[GraftCatalog.Segment]): Seq[Any] = aggs.map {
       case GraftCatalogAgg.CountStar => group.map(exactLiveCount).sum
       case GraftCatalogAgg.MinCol(c) => fold(group, c, wantMin = true)
@@ -980,14 +977,24 @@ private[sources] case class GraftSegFile(
     case Some(bc) => val all = bc.value; eqIdx.map(all(_))
     case None => eq
   }
-  /** THE dv-membership test, int-bounds-guarded (BitSet is Int-indexed;
-    * ordinals are Long). One definition so every reader skips the same
-    * rows — a fix to large-ordinal handling must not need three copies.
+  /** THE deletion-vector test. Its only caller is
+    * [[SegmentIO.Cursor]]'s live-row rule, which every reader — scans,
+    * change feed, maintenance rewrites, DELETE — steps through, so all
+    * of them skip the same rows.
     */
-  def dvDead(ord: Long): Boolean =
-    dv.exists(d => ord <= Int.MaxValue && d.contains(ord.toInt))
+  def dvDead(ord: Long): Boolean = dv match {
+    case Some(d) => GraftSegFile.marked(d, ord)
+    case None => false
+  }
 }
 private[sources] object GraftSegFile {
+  /** Ordinal-bitmap membership, int-bounds-guarded (BitSet is
+    * Int-indexed; ordinals are Long) — shared by the deletion vector
+    * and the change feed's emit-only delta.
+    */
+  def marked(bits: scala.collection.immutable.BitSet, ord: Long): Boolean =
+    ord <= Int.MaxValue && bits.contains(ord.toInt)
+
   def of(s: GraftCatalog.Segment): GraftSegFile =
     GraftSegFile(s.path, s.rows, s.dv, lineage = s.lineage)
   /** Plan-shared pre-compiled form — use inside per-segment loops. */
@@ -1057,81 +1064,40 @@ private[sources] case class GraftCatalogReaderFactory(
         val up = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
         if (wantsMeta) r => up(joined(r, metaRow)) else r => up(r)
       }
+    // Files are read through the segment cursor's LIVE step: deletion-
+    // vector rows and rows a newer EQUALITY DELETE matches are read
+    // past, never emitted — the merge-on-read subtraction.
     new PartitionReader[InternalRow] {
-      private val row = new UnsafeRow(p.numFields)
-      // Growable read buffer reused across records (grown on demand,
-      // never shrunk): with the explicit-size pointTo the reader is
-      // genuinely allocation-free per row, matching the reused-row
-      // contract of PartitionReader (Spark copies when it retains).
-      private var buf = new Array[Byte](1 << 10)
       private val fileIter = p.files.iterator
-      private var in: DataInputStream = _
-      private var remaining = 0L
-      private var ordinal = 0L
-      private var dv: scala.collection.immutable.BitSet = _
-      private var eq: Seq[EqFilter] = Nil
-      // Row-lineage cursor (runs cover physical ordinals in order, the
-      // ordinal only grows — O(1) amortized): spanStart is the ordinal
-      // where runs(spanIdx) begins.
-      private var runs: IndexedSeq[(Long, Long, Long)] = Vector.empty
-      private var spanIdx = 0
-      private var spanStart = 0L
-      private def advance(): Boolean = {
-        if (in != null) { in.close(); in = null }
-        if (!fileIter.hasNext) false
-        else {
-          val f = fileIter.next()
-          in = new DataInputStream(new BufferedInputStream(new FileInputStream(f.path), 1 << 16))
-          remaining = f.rows
-          ordinal = 0L
-          dv = f.dv.orNull
-          eq = f.resolvedEq
-          runs = f.lineage
-          spanIdx = 0
-          spanStart = 0L
-          if (wantsMeta)
-            metaRow.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f.path))
-          if (f.rows > 0) true else advance() // a rowless file is never written, but be safe
-        }
+      private var cur: SegmentIO.Cursor = _
+      private def nextFile(): Boolean = fileIter.hasNext && {
+        val f = fileIter.next()
+        cur = new SegmentIO.Cursor(f, p.numFields)
+        if (wantsMeta)
+          metaRow.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f.path))
+        true
       }
-      // Deletion-vector rows are READ (the format is length-prefixed
-      // sequential, there is no seek index) but never emitted; rows a
-      // newer EQUALITY DELETE matches are likewise read past — the
-      // merge-on-read subtraction.
       override def next(): Boolean = {
-        while (true) {
-          if (remaining <= 0 && !advance()) return false
-          val size = in.readInt()
-          if (size > buf.length) buf = new Array[Byte](math.max(size, buf.length << 1))
-          in.readFully(buf, 0, size)
-          remaining -= 1
-          var deleted = dv != null && ordinal <= Int.MaxValue && dv.contains(ordinal.toInt)
-          if (!deleted && eq.nonEmpty) {
-            row.pointTo(buf, size)
-            deleted = eq.exists(_.matches(row))
-          }
-          if (!deleted && wantsMeta) {
-            metaRow.update(1, ordinal)
-            while (spanIdx < runs.length && ordinal >= spanStart + runs(spanIdx)._2) {
-              spanStart += runs(spanIdx)._2
-              spanIdx += 1
+        while (cur != null || nextFile()) {
+          if (cur.nextLive()) {
+            if (wantsMeta) {
+              metaRow.update(1, cur.ordinal)
+              if (cur.lineage()) {
+                metaRow.update(2, cur.rowId)
+                metaRow.update(3, cur.updatedSeq)
+              } else { // unassigned lineage (legacy segment) -> null
+                metaRow.update(2, null)
+                metaRow.update(3, null)
+              }
             }
-            if (spanIdx < runs.length) {
-              val (first, _, seqV) = runs(spanIdx)
-              metaRow.update(2, first + (ordinal - spanStart))
-              metaRow.update(3, seqV)
-            } else { // unassigned lineage (legacy segment) -> null
-              metaRow.update(2, null)
-              metaRow.update(3, null)
-            }
+            return true
           }
-          ordinal += 1
-          if (!deleted) { row.pointTo(buf, size); return true }
+          cur.close(); cur = null
         }
-        false // unreachable
+        false
       }
-      override def get(): InternalRow = proj(row)
-      override def close(): Unit = if (in != null) in.close()
+      override def get(): InternalRow = proj(cur.row)
+      override def close(): Unit = if (cur != null) cur.close()
     }
   }
 }

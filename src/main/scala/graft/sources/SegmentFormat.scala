@@ -16,12 +16,6 @@ import org.apache.spark.sql.types.StructType
 // behavior change).
 
 
-/** Evaluates V1 source Filters against stored InternalRows — the
-  * delete-path twin of what a file source does with partition values.
-  * Only shapes/types it can prove are supported; `supported` is the
-  * `canDeleteWhere` gate, so an unprovable predicate rejects the DELETE
-  * instead of misapplying it.
-  */
 /** THE value comparator for every metadata path — zone-map pruning,
   * the delete-filter evaluator, and the aggregate-pushdown fold all
   * compare the same universe of boxed values (stat entries, pushed
@@ -63,6 +57,12 @@ private[graft] object GraftCompare {
   }
 }
 
+/** Evaluates V1 source Filters against stored InternalRows — the
+  * delete-path twin of what a file source does with partition values.
+  * Only shapes/types it can prove are supported; `supported` is the
+  * `canDeleteWhere` gate, so an unprovable predicate rejects the DELETE
+  * instead of misapplying it.
+  */
 private[sources] object GraftFilterEval {
   import org.apache.spark.sql.sources._
   import org.apache.spark.sql.types._
@@ -347,13 +347,17 @@ private[graft] object ZoneMap {
   }
 }
 
-/** Segment file I/O: `[int32 size][UnsafeRow bytes]` records. Writers
-  * stream (no buffering of the whole segment); readers reuse one
-  * `UnsafeRow` pointed at each record's buffer (the `PartitionReader`
-  * contract allows instance reuse).
+/** Segment file I/O: `[int32 size][UnsafeRow bytes]` records. This
+  * object is the ONLY reader and writer of that record format — every
+  * scan, change-feed split and maintenance rewrite reads through
+  * [[Cursor]] and writes through [[Writer]], so a payload change (say,
+  * a columnar one) touches this file alone. Writers stream (no
+  * buffering of the whole segment); the cursor reuses one `UnsafeRow`
+  * pointed at each record's buffer (the `PartitionReader` contract
+  * allows instance reuse).
   */
 private[sources] object SegmentIO {
-  import GraftCatalog.{ColStat, Segment}
+  import GraftCatalog.{ColStat, RunAccumulator, RunCursor, Segment}
 
   def delete(seg: Segment): Unit =
     try Files.deleteIfExists(Paths.get(seg.path))
@@ -474,79 +478,150 @@ private[sources] object SegmentIO {
     }
   }
 
-  /** Iterate a segment's rows. The yielded `UnsafeRow` is REUSED —
-    * copy before retaining.
+  /** THE segment reader: a pull cursor over one file's records.
+    * Each step decodes the next record into `row` — one `UnsafeRow`
+    * REUSED for the whole file (copy before retaining) over one
+    * growable buffer, so a step allocates nothing. `next()` is the
+    * PHYSICAL step (every row, deleted or not — the deletion-vector
+    * builder's view); `nextLive()` is the LIVE step, which reads past
+    * rows the file's deletion vector masks and rows one of its
+    * applicable equality-delete filters matches (the format is
+    * length-prefixed sequential, there is no seek index). The file
+    * opens on the first step, so a cursor costs nothing until read.
     */
-  /** Iterate a segment's LIVE rows (deletion-vector ordinals are read
-    * past and skipped, so every maintenance rewrite — compact, Z-order,
-    * ALTER migration, delete-rewrite — materializes deletes for free).
-    */
-  def foreachRow(seg: Segment, numFields: Int)(f: UnsafeRow => Unit): Unit =
-    foreachRowPhysical(seg, numFields) { (row, ord) =>
-      if (!seg.dv.exists(d => ord <= Int.MaxValue && d.contains(ord.toInt))) f(row)
-    }
+  final class Cursor(file: GraftSegFile, numFields: Int) extends java.io.Closeable {
+    val row = new UnsafeRow(numFields)
+    // pointTo takes an explicit size, so an oversized buffer is fine
+    // (and getBytes copies exactly sizeInBytes when a consumer
+    // retains the row).
+    private var buf = new Array[Byte](1 << 10)
+    private var in: DataInputStream = _
+    private var ord = -1L
+    private val eq = file.resolvedEq.toArray
+    private val runs = new RunCursor(file.lineage)
 
-  /** Iterate ALL physical rows with their file ordinals — the
-    * deletion-vector builder's view (a DELETE must address rows by
-    * physical position, deleted-or-not).
-    */
-  def foreachRowPhysical(seg: Segment, numFields: Int)(f: (UnsafeRow, Long) => Unit): Unit = {
-    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(seg.path), 1 << 16))
-    try {
-      val row = new UnsafeRow(numFields)
-      // One growable buffer for the whole segment — per-record byte[]
-      // allocation on the scan hot path was the only thing the reused
-      // UnsafeRow wrapper still paid for. pointTo takes an explicit
-      // size, so an oversized buffer is fine (and getBytes copies
-      // exactly sizeInBytes when a consumer retains the row).
-      var buf = new Array[Byte](1 << 10)
-      var i = 0L
-      while (i < seg.rows) {
+    /** Physical ordinal of the current row within the file. */
+    def ordinal: Long = ord
+
+    /** Physical step: decode the next record; false past the last. */
+    def next(): Boolean =
+      ord + 1 < file.rows && {
+        if (in == null)
+          in = new DataInputStream(new BufferedInputStream(new FileInputStream(file.path), 1 << 16))
         val size = in.readInt()
         if (size > buf.length) buf = new Array[Byte](math.max(size, buf.length << 1))
         in.readFully(buf, 0, size)
         row.pointTo(buf, size)
-        f(row, i)
-        i += 1
+        ord += 1
+        true
       }
-    } finally in.close()
+
+    /** THE live-row rule: not in the deletion vector, and matched by
+      * no equality delete newer than the segment.
+      */
+    def live: Boolean = !file.dvDead(ord) && {
+      var i = 0
+      while (i < eq.length && !eq(i).matches(row)) i += 1
+      i == eq.length
+    }
+
+    /** Live step: advance to the next live row; false past the last. */
+    def nextLive(): Boolean = {
+      while (next()) if (live) return true
+      false
+    }
+
+    /** Resolve the current row's lineage: true when the segment carries
+      * one for this ordinal (then read `rowId` / `updatedSeq`).
+      */
+    def lineage(): Boolean = runs.seek(ord)
+    def rowId: Long = runs.rowId
+    def updatedSeq: Long = runs.updatedSeq
+
+    override def close(): Unit = if (in != null) in.close()
   }
 
-  /** Stream `seg` (laid out with `inFields` columns) through `f` into a
-    * fresh segment in `dir` whose rows follow `outSchema` (zone maps are
-    * re-collected under the OUTPUT layout); rows mapped to None are
-    * dropped. Always yields a segment (possibly empty-file-free: None
-    * when no rows survive).
+  def withCursor[T](file: GraftSegFile, numFields: Int)(f: Cursor => T): T = {
+    val cur = new Cursor(file, numFields)
+    try f(cur) finally cur.close()
+  }
+
+  /** Iterate a file's LIVE rows ([[Cursor.nextLive]]: deletion-vector
+    * ordinals and rows its equality filters match are read past and
+    * skipped, so every maintenance rewrite — compact, Z-order, ALTER
+    * migration, delete-rewrite — materializes deletes for free). The
+    * yielded `UnsafeRow` is REUSED — copy before retaining.
     */
-  def rewriteOpt(seg: Segment, dir: String, inFields: Int, outSchema: StructType)(
+  def foreachRow(file: GraftSegFile, numFields: Int)(f: UnsafeRow => Unit): Unit =
+    withCursor(file, numFields)(cur => while (cur.nextLive()) f(cur.row))
+
+  /** THE lineage-preserving row copy: stream the live rows of `files`
+    * (each laid out with `inFields` columns), in order, through `f`
+    * into ONE fresh segment in `dir` whose rows follow `outSchema`
+    * (zone maps are re-collected under the OUTPUT layout); rows mapped
+    * to None are dropped. Surviving rows' (id, updateSeq) pairs carry
+    * over run by run — masked, filtered or dropped rows just break
+    * runs; a source row without lineage degrades the output to fresh
+    * ids (empty runs, publish reassigns), conservative, never wrong.
+    * None when no row survives; the caller stamps key, spec and seq.
+    */
+  def rewrite(files: Seq[GraftSegFile], dir: String, inFields: Int, outSchema: StructType)(
       f: UnsafeRow => Option[UnsafeRow]): Option[Segment] = {
-    import GraftCatalog.{RunAccumulator, RunCursor}
     val w = new Writer(dir, outSchema)
-    // Migrations are value-rewrites of the SAME rows — row ids and
-    // update-seqs carry over run-by-run (dv-masked or f-dropped rows
-    // break runs, exactly like compaction's fold).
     val acc = new RunAccumulator
-    val cur = new RunCursor(seg.lineage)
-    foreachRowPhysical(seg, inFields) { (r, ord) =>
-      val masked = seg.dv.exists(d => ord <= Int.MaxValue && d.contains(ord.toInt))
-      if (!masked) f(r) match {
+    files.foreach(withCursor(_, inFields) { cur =>
+      while (cur.nextLive()) f(cur.row) match {
         case Some(out) =>
           w.add(out)
-          cur.at(ord) match {
-            case Some((id, q)) => acc.push(id, q)
-            case None => acc.invalidate()
-          }
+          if (cur.lineage()) acc.push(cur.rowId, cur.updatedSeq) else acc.invalidate()
         case None => ()
       }
+    })
+    w.finish().map(_.copy(lineage = acc.result()))
+  }
+
+  /** [[rewrite]] of one segment's rows (its deletion vector applies;
+    * its equality deletes stay outstanding). A rewrite never crosses
+    * partition boundaries: the output inherits the source's partition
+    * key (and the spec that key is valued over) AND its data sequence
+    * number — a 1:1 re-projection copies eq-deleted rows verbatim, so
+    * the equality filters must keep applying to the output exactly as
+    * they did to the source.
+    */
+  def rewriteOpt(seg: Segment, dir: String, inFields: Int, outSchema: StructType)(
+      f: UnsafeRow => Option[UnsafeRow]): Option[Segment] =
+    rewrite(Seq(GraftSegFile.of(seg)), dir, inFields, outSchema)(f)
+      .map(_.copy(key = seg.key, spec = seg.spec, seq = seg.seq))
+
+  /** Rows a reordering rewrite (sorted compaction, Z-order) must hold
+    * before it can write: each kept as its exact record bytes and read
+    * back through a reused row.
+    */
+  final class RowBuffer(numFields: Int) {
+    private val recs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    private val ra = new UnsafeRow(numFields)
+    private val rb = new UnsafeRow(numFields)
+    private def at(r: UnsafeRow, i: Int): UnsafeRow = {
+      val b = recs(i); r.pointTo(b, b.length); r
     }
-    // A rewrite never crosses partition boundaries: the rewritten
-    // segment inherits the source segment's partition key (and the
-    // spec that key is valued over) AND its data sequence number — a
-    // 1:1 re-projection copies eq-deleted rows verbatim, so the
-    // equality filters must keep applying to the output exactly as
-    // they did to the source.
-    w.finish().map(_.copy(key = seg.key, spec = seg.spec, seq = seg.seq,
-      lineage = acc.result()))
+
+    // copy() owns an exact-size array, which getBytes returns as is.
+    def add(r: UnsafeRow): Unit = recs += r.copy().getBytes
+    def length: Int = recs.length
+
+    /** Buffer positions in `lt` order (stable). */
+    def sortedBy(lt: (UnsafeRow, UnsafeRow) => Boolean): IndexedSeq[Int] =
+      (0 until recs.length).sortWith((i, j) => lt(at(ra, i), at(rb, j)))
+
+    /** Write the rows at `order` into fresh segments of `perSeg` rows
+      * each (the last may be shorter).
+      */
+    def write(order: IndexedSeq[Int], perSeg: Int, dir: String, schema: StructType): Seq[Segment] =
+      order.grouped(perSeg).flatMap { chunk =>
+        val w = new Writer(dir, schema)
+        chunk.foreach(i => w.add(at(ra, i)))
+        w.finish()
+      }.toSeq
   }
 }
 
@@ -600,22 +675,8 @@ private[graft] object EqFilter {
       schema: StructType, eqs: Seq[GraftCatalog.EqDelete],
       seg: GraftCatalog.Segment): Seq[EqFilter] =
     applicable(compileAll(schema, eqs), seg)
-
-  /** keep-predicate over live rows, or None when nothing applies. */
-  def keepOf(fs: Seq[EqFilter]): Option[UnsafeRow => Boolean] =
-    if (fs.isEmpty) None else Some(r => !fs.exists(_.matches(r)))
-
 }
 
-/** A catalog table: batch-readable, batch-writable (append + truncate)
-  * with the same two-phase commit protocol as GraftMemorySink, and
-  * DELETE-capable (`SupportsDelete`): `DELETE FROM graft.ns.t WHERE …`
-  * ships the WHERE down as source Filters and the table rewrites its
-  * committed segments — the metadata-delete path (file-source analogue:
-  * dropping whole partitions), not a row-level MERGE rewrite.
-  * Predicates the evaluator can't prove (`canDeleteWhere` false) fail
-  * the statement instead of deleting the wrong rows.
-  */
 /** The catalog's metadata columns (the Iceberg `_file`/`_pos` shape):
   * hidden from `SELECT *`, served by the scan when referenced.
   * `_pos` is the PHYSICAL ordinal — rows masked by a deletion vector

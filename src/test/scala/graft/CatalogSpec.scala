@@ -849,7 +849,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("CALL graft.system.train_ann persists a codebook; retrain swaps it atomically") {
-    import org.apache.spark.sql.functions.{array, col, lit}
+    import org.apache.spark.sql.functions.{array, col}
     spark.sql("DROP TABLE IF EXISTS graft.annx.cb")
     spark.range(0, 40).select(
       col("id").as("vec_id"),

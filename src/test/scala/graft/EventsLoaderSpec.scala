@@ -26,7 +26,7 @@ class EventsLoaderSpec extends AnyFunSuite {
     * write through Spark, then promote the single part file.
     */
   private def writeSingleFile(df: org.apache.spark.sql.DataFrame, suffix: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val d = Files.createTempDirectory(s"graft_events_$suffix")
     val stage = d.resolve("_stage")
     df.coalesce(1).write.mode("overwrite").parquet(stage.toString)

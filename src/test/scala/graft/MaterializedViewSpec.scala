@@ -1109,7 +1109,6 @@ class MaterializedViewSpec extends AnyFunSuite {
   }
 
   test("rollup navigation: coarser grouping re-aggregates the MV, never the base") {
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
     def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
       plan(df).collect {
@@ -1753,7 +1752,6 @@ class MaterializedViewSpec extends AnyFunSuite {
   }
 
   test("N-way snowflake MV: create/serve any join order, per-side delta refresh, stale fact appends") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>

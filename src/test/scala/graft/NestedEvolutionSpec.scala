@@ -199,7 +199,6 @@ class NestedEvolutionSpec extends AnyFunSuite {
     spark.sql("ALTER TABLE graft.ne.c ALTER COLUMN m.value TYPE BIGINT")
     spark.sql(
       "INSERT INTO graft.ne.c VALUES (3, array(5000000000), map('b', 6000000000))")
-    import org.apache.spark.sql.functions.{aggregate, coalesce, lit, map_values}
     assert(spark.sql(
       "SELECT sum(aggregate(coalesce(xs, array()), 0L, (acc, x) -> acc + x)) FROM graft.ne.c")
       .as[Long].head() == 1L + 2147483647L + 5000000000L,

@@ -14,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OrderedScanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()

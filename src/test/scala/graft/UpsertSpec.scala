@@ -199,7 +199,6 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   test("clone/branch continue the source's sequence domain (no resurrect/no-shadow)") {
-    import graft.sources.GraftCatalog
     spark.sql("DROP TABLE IF EXISTS graft.up.src")
     spark.sql("DROP TABLE IF EXISTS graft.up.dup")
     spark.sql("CREATE TABLE graft.up.src (k BIGINT, v STRING) USING graft")
