@@ -1153,7 +1153,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // (tombstone it — our own doc, so this CAS is ours to win) and
     // refuse, so exactly one name survives and a retry sees the
     // winner's commit.
-    GraftCatalog.occWindowHookForTest(oldIdent)
     try persistTable(oldIdent) // old document deleted (tombstone CAS)
     catch { case e: java.util.ConcurrentModificationException =>
       // Retract the just-committed new-name document. This tombstone
@@ -1570,7 +1569,16 @@ object GraftCatalog {
     */
   private[graft] case class EqDelete(
       keyCols: Seq[String], keys: Vector[IndexedSeq[Any]], seq: Long)
-      extends Serializable
+      extends Serializable {
+    def appliesTo(seg: Segment): Boolean = eqApplies(seq, seg.seq)
+  }
+
+  /** THE equality-delete scoping rule: a delete registered at `eqSeq`
+    * applies to a segment with data sequence number `segSeq` iff it is
+    * strictly newer — a segment stamped by the delete's own commit (or
+    * a later one) holds rows written after the delete.
+    */
+  private[graft] def eqApplies(eqSeq: Long, segSeq: Long): Boolean = eqSeq > segSeq
 
   /** Per-column ANALYZE output (`CALL graft.system.analyze`): distinct
     * and null counts over the table's live rows at analyze time. The
@@ -1879,7 +1887,7 @@ object GraftCatalog {
     */
   private[sources] val CopyIntoProp = "graft.copyinto.loaded"
   /** Writer option that carries a copy_into batch's tokens so they
-    * commit ATOMICALLY with its segments (see `commitSegments`).
+    * commit ATOMICALLY with its segments (see [[install]]).
     */
   private[sources] val CopyIntoTokensOption = "graft.copyinto.tokens"
 
@@ -2200,7 +2208,7 @@ object GraftCatalog {
       if ((prevByPath.keySet -- curPaths).nonEmpty) return None
       if (s.segments.exists(x => prevByPath.get(x.path).exists(_.dv != x.dv))) return None
       val gone = prev.eqDeletes.filterNot(s.eqDeletes.contains)
-      if (gone.exists(d => last.segments.exists(_.seq < d.seq))) return None
+      if (gone.exists(d => last.segments.exists(d.appliesTo))) return None
       delta ++= s.segments.filterNot(x => prevByPath.contains(x.path))
       prev = s
     }
@@ -2311,11 +2319,11 @@ object GraftCatalog {
     */
   private[graft] def warehouseRootForTest: Path = segmentRoot
 
-  /** Test-only race window: invoked between the staleness refresh and
-    * the tombstone CAS on destructive paths (purge, rename old-name),
-    * so a spec can deterministically land a "foreign process" commit
-    * inside the OCC window — the microsecond interleaving the forked
-    * two-driver gauntlets cannot schedule on demand. No-op in
+  /** Test-only race window: invoked by [[persistTableCas]] just before
+    * every ledger CAS (data commits through publish, DDL, drop, purge,
+    * rename), so a spec can deterministically land a "foreign process"
+    * commit inside the OCC window — the microsecond interleaving the
+    * forked two-driver gauntlets cannot schedule on demand. No-op in
     * production.
     */
   @volatile private[graft] var occWindowHookForTest: Identifier => Unit = _ => ()
@@ -2526,8 +2534,8 @@ object GraftCatalog {
     * holds OUR uncommitted view — the caller must reload or merge).
     * Call under `mutate {}` after the in-memory swap; always true in
     * ephemeral mode.
-    */
-  /** `delta`: the commit's history change (snapshots added, versions
+    *
+    * `delta`: the commit's history change (snapshots added, versions
     * expired) when the caller KNOWS the change is append+expire-shaped
     * — publish's retention pass is, by construction. With it the
     * ledger write is a small DELTA document (O(current segments), not
@@ -2544,6 +2552,7 @@ object GraftCatalog {
       ident: Identifier,
       delta: Option[(Vector[CatalogSnapshot], Seq[Long])] = None): Boolean = {
     if (!persistent) return true
+    occWindowHookForTest(ident)
     val dir = GraftLedger.tablesDir(segmentRoot)
     val entry = store.get(ident)
     if (entry == null) {
@@ -2615,10 +2624,10 @@ object GraftCatalog {
     * cross-process CAS: the other driver's state is adopted and the
     * statement fails loudly for the user to retry (its in-memory
     * mutation is discarded — nothing of the loser's intent lands, so
-    * nothing is half-applied). Commit paths that can re-apply their
-    * intent instead (appends) go through `commitSegments`' merge loop,
-    * not this. Call under `mutate {}` after the in-memory swap; no-op
-    * in ephemeral mode.
+    * nothing is half-applied). Data commits that can re-apply their
+    * intent go through `commitSegments`' merge loop instead. Call
+    * under `mutate {}` after the in-memory swap; no-op in ephemeral
+    * mode.
     */
   private[sources] def persistTable(ident: Identifier): Unit =
     if (!persistTableCas(ident)) {
@@ -2837,8 +2846,8 @@ object GraftCatalog {
     * expire retention-aged snapshots, and delete segment files no
     * retained snapshot references. Call under `mutate {}` after the
     * metastore swap.
-    */
-  /** `firstVersion`: the number the FIRST snapshot takes when the
+    *
+    * `firstVersion`: the number the FIRST snapshot takes when the
     * table has no history yet (0 for created tables; the SOURCE
     * version for clones/branches — their inherited segment seqs and
     * eq-delete seqs are valued in the source's version domain, and a
@@ -2846,8 +2855,8 @@ object GraftCatalog {
     * seqs BELOW inherited ones: an insert into the clone could be
     * swallowed by an inherited equality delete, or an upsert fail to
     * shadow inherited rows).
-    */
-  /** Returns true when the commit landed; false ONLY when
+    *
+    * Returns true when the commit landed; false ONLY when
     * `casRetryable` is set and the cross-process ledger CAS was lost
     * (in-memory state has been reloaded to the winner's — the caller
     * re-applies its intent and retries). With `casRetryable = false`
@@ -2866,8 +2875,7 @@ object GraftCatalog {
     val entry1 =
       if (entry0.eqDeletes.isEmpty) entry0
       else {
-        val live = entry0.eqDeletes.filter(eq =>
-          entry0.segments.exists(_.seq < eq.seq))
+        val live = entry0.eqDeletes.filter(eq => entry0.segments.exists(eq.appliesTo))
         if (live.length == entry0.eqDeletes.length) entry0
         else { val e = entry0.copy(eqDeletes = live); store.put(ident, e); e }
       }
@@ -3220,7 +3228,6 @@ object GraftCatalog {
       // delete files the live table still serves. reloadFromDisk (inside
       // persistTable's loss path) already restored the live in-memory
       // state; the trash/dropped-doc cleanup is on us.
-      occWindowHookForTest(ident)
       try persistTable(ident) // deletes the live ledger document
       catch { case e: java.util.ConcurrentModificationException =>
         trash.remove(ident)
@@ -3248,7 +3255,6 @@ object GraftCatalog {
     epochs.keySet.asScala.filter(_._1 == ident).foreach(epochs.remove)
     val hist = Option(history.remove(ident)).getOrElse(Vector.empty)
     val entry = store.remove(ident)
-    occWindowHookForTest(ident)
     persistTable(ident) // tombstone CAS — on loss: reload + throw, no file touched
     if (trash.containsKey(ident)) purgeTrashed(ident)
     if (entry != null) {
@@ -3818,12 +3824,31 @@ object GraftCatalog {
     }
   }
 
+  /** Append (or, with `truncate`, replace) the batch's segments. COPY
+    * INTO exactly-once: `copyTokens` (the batch's source-file tokens)
+    * join the ingestion registry IN THE SAME commit as its segments —
+    * crash atomicity by construction. A token already present means a
+    * concurrent copy_into loaded one of our files between our diff and
+    * this commit: installing would double-load its rows, so refuse
+    * (the caller re-diffs and retries with the remainder).
+    */
   private[sources] def install(
       ident: Identifier, segs: Seq[Segment], truncate: Boolean,
-      rewrites: Map[String, String] = Map.empty,
       copyTokens: Seq[String] = Nil): Unit =
-    commitSegments(ident, rewrites, copyTokens) { prev =>
-      if (truncate) segs.toVector else prev.segments ++ segs
+    commitSegments(ident) { (prev, _) =>
+      val props =
+        if (copyTokens.isEmpty) prev.props
+        else {
+          val loaded = prev.props.get(CopyIntoProp)
+            .map(_.split(',').toSet).getOrElse(Set.empty)
+          val dup = copyTokens.filter(loaded)
+          if (dup.nonEmpty) throw new java.util.ConcurrentModificationException(
+            s"$ident: ${dup.length} source file(s) were loaded by a concurrent " +
+              "copy_into while this one ran; re-run to load only the remainder")
+          prev.props.updated(CopyIntoProp, (loaded ++ copyTokens).toSeq.sorted.mkString(","))
+        }
+      Some(prev.copy(props = props,
+        segments = if (truncate) segs.toVector else prev.segments ++ segs))
     }
 
   /** Version + (segments, eq) under the mutation lock — the row-level
@@ -3845,21 +3870,20 @@ object GraftCatalog {
     * landed in between — so the commit carries the planned version and
     * refuses on mismatch (optimistic concurrency; Spark aborts the
     * write, its files are deleted, and a retry plans against the new
-    * state). deleteWhere/installOverwrite recompute from `prev` inside
-    * the commit and don't need this.
+    * state). The token is checked inside [[commitSegments]]' loop,
+    * after the cross-process staleness refresh, so a commit from
+    * another driver JVM moves it just like a local one.
+    * deleteWhere/installOverwrite recompute from `prev` inside the
+    * commit and don't need this.
     */
   private[sources] def installRowLevel(
       ident: Identifier, segs: Seq[Segment], plannedVersion: Long,
-      rewrites: Map[String, String] = Map.empty): Unit =
-    // The version token is checked INSIDE commitSegments' loop, after
-    // the cross-process staleness refresh: a commit that landed in
-    // another driver JVM moves the version just like a local one, so
-    // stale row-level rewrites refuse identically in both topologies.
-    {
+      rewrites: Map[String, String] = Map.empty): Unit = {
     dbg(s"installRowLevel($ident) plannedV=$plannedVersion segs=${segs.length}")
-    commitSegments(ident, rewrites, requireVersion = Some(plannedVersion))(_ =>
-      segs.toVector)
+    commitSegments(ident, rewrites, requireVersion = Some(plannedVersion)) { (prev, _) =>
+      Some(prev.copy(segments = segs.toVector))
     }
+  }
 
   /** AUTO-COMPACTION (`'graft.autocompact.segments'='N'` TBLPROPERTY —
     * the Delta autoCompact shape, opt-in): any data commit that leaves
@@ -3871,11 +3895,12 @@ object GraftCatalog {
     * is its own commit in the history (time travel still sees the
     * pre-compact version) but carries `dataChange=false`, so append
     * streams ride through it silently and the CDC feed emits nothing
-    * for it — auto-compaction is stream-safe. A malformed threshold
-    * fails the commit loudly rather than silently never compacting.
-    */
-  /** Parse + validate the threshold BEFORE the data commit — a typo'd
-    * property must fail the statement without having landed rows.
+    * for it — auto-compaction is stream-safe.
+    *
+    * This parses and validates the threshold; [[commitSegments]] calls
+    * it BEFORE the data commit, so a malformed property fails the
+    * statement loudly without having landed rows, rather than silently
+    * never compacting.
     */
   private def autoCompactThreshold(ident: Identifier): Option[Int] =
     Option(store.get(ident)).flatMap(_.props.get(AutoCompactProp)).map { v =>
@@ -3919,29 +3944,44 @@ object GraftCatalog {
       }
     }
 
-  /** ONE commit shell for every batch data commit (plain append,
-    * truncate, partition-scoped/dynamic overwrite): pre-commit
-    * validation, the dropped-mid-write guard, the snapshot publish, and
-    * the auto-compaction check live here exactly once — two copies of
-    * this protocol had already started to drift (the epoch path's
-    * validation ordering bug).
+  /** ONE commit shell for every data commit whose intent can be
+    * re-applied to a moved table: append and truncate ([[install]],
+    * COPY INTO included), partition-scoped and dynamic overwrite
+    * ([[installOverwrite]]), row-level rewrites ([[installRowLevel]]),
+    * batch upserts ([[installUpsert]]) and streaming epochs
+    * ([[installEpoch]]). `transform` maps the current entry and the
+    * version this commit will publish to the next entry, or None for
+    * "nothing to commit" (a replayed epoch); the result is true when a
+    * commit landed.
+    *
+    * Each attempt syncs with the on-disk ledger, checks the row-level
+    * version token, validates the auto-compaction threshold before
+    * anything lands, applies `transform` to the refreshed state,
+    * stamps segments NEW to this commit with the version being
+    * published (DATA SEQUENCE: fresh appends by definition, row-level
+    * rewrites because their scan subtracted the applicable equality
+    * deletes — see Segment.seq), and CASes the ledger. A lost CAS
+    * (another DRIVER committed the same sequence first) reloads the
+    * winner and re-applies — so two processes' disjoint appends or
+    * upserts BOTH land, in some serial order, which is exactly the
+    * blind-write conflict class. Row-level rewrites pass
+    * `requireVersion`: their replacement list was computed against a
+    * pinned snapshot and re-applying it onto a moved table would erase
+    * the interleaved commit, so they refuse instead (the Iceberg/Delta
+    * conflict taxonomy). A won commit runs the auto-compaction check
+    * once.
+    *
+    * Outside on purpose: [[deleteWhere]] (its transform writes files,
+    * so re-running it per attempt would rewrite them again),
+    * [[commitStaged]] (CTAS/RTAS, whose lost CAS must refuse or
+    * surface as TableAlreadyExists), and [[compact]] / [[zorder]]
+    * (maintenance rewrites that refuse on a lost CAS).
     */
   private def commitSegments(ident: Identifier, rewrites: Map[String, String] = Map.empty,
-      copyTokens: Seq[String] = Nil, requireVersion: Option[Long] = None)(
-      transform: TableEntry => Vector[Segment]): Unit = mutate {
-    // Cross-process retry-merge loop: each attempt syncs with the
-    // on-disk ledger, re-applies `transform` to the refreshed state,
-    // and CASes the commit. A lost CAS (another DRIVER committed the
-    // same sequence first) reloads the winner and re-applies — so two
-    // processes' disjoint appends BOTH land, in some serial order,
-    // which is exactly the append-commute conflict class. Row-level
-    // rewrites pass `requireVersion`: their replacement list was
-    // computed against a pinned snapshot and re-applying it onto a
-    // moved table would erase the interleaved commit, so they refuse
-    // instead (the Iceberg/Delta conflict taxonomy).
-    var attempt = 0
-    var committed = false
-    while (!committed) {
+      requireVersion: Option[Long] = None)(
+      transform: (TableEntry, Long) => Option[TableEntry]): Boolean = mutate {
+    @annotation.tailrec
+    def attempt(n: Int): Boolean = {
       refreshIfStale(ident)
       requireVersion.foreach { pv =>
         val cur = history.getOrDefault(ident, Vector.empty)
@@ -3952,60 +3992,31 @@ object GraftCatalog {
               "was running — its result would erase the interleaved commit; retry " +
               "the statement")
       }
-      committed = commitSegmentsOnce(ident, rewrites, copyTokens, transform)
-      dbg(s"commitSegments($ident) attempt=$attempt committed=$committed")
-      if (!committed) {
-        attempt += 1
-        if (attempt > 20)
-          throw new java.util.ConcurrentModificationException(
-            s"$ident: lost the ledger CAS to concurrent drivers $attempt times; " +
-              "giving up — retry the statement")
-      }
-    }
-  }
-
-  /** One optimistic attempt of [[commitSegments]]: in-memory swap +
-    * publish with a retryable CAS. False = lost to another process
-    * (state already reloaded to the winner's — re-apply and retry).
-    */
-  private def commitSegmentsOnce(
-      ident: Identifier, rewrites: Map[String, String],
-      copyTokens: Seq[String],
-      transform: TableEntry => Vector[Segment]): Boolean = {
-    val threshold = autoCompactThreshold(ident) // validate pre-commit
-    store.compute(ident, (_, prev) => {
-      require(prev != null, s"table $ident dropped mid-write")
-      // COPY INTO exactly-once: the batch's source-file tokens join the
-      // ingestion registry IN THE SAME commit as its segments — crash
-      // atomicity by construction. A token already present means a
-      // concurrent copy_into loaded one of our files between our diff
-      // and this commit: installing would double-load its rows, so
-      // refuse (the caller re-diffs and retries with the remainder).
-      val next0 =
-        if (copyTokens.isEmpty) prev
-        else {
-          val loaded = prev.props.get(CopyIntoProp)
-            .map(_.split(',').toSet).getOrElse(Set.empty)
-          val dup = copyTokens.filter(loaded)
-          if (dup.nonEmpty) throw new java.util.ConcurrentModificationException(
-            s"$ident: ${dup.length} source file(s) were loaded by a concurrent " +
-              "copy_into while this one ran; re-run to load only the remainder")
-          prev.copy(props = prev.props.updated(
-            CopyIntoProp, (loaded ++ copyTokens).toSeq.sorted.mkString(",")))
+      val threshold = autoCompactThreshold(ident)
+      var applied = false
+      store.compute(ident, (_, prev) => {
+        require(prev != null, s"table $ident dropped mid-write")
+        val nextV = nextVersion(ident)
+        transform(prev, nextV) match {
+          case None => prev
+          case Some(next) =>
+            applied = true
+            val prevPaths = prev.segments.map(_.path).toSet
+            next.copy(segments = next.segments.map(s =>
+              if (prevPaths.contains(s.path)) s else s.copy(seq = nextV)))
         }
-      // DATA SEQUENCE stamping: segments NEW to this commit carry the
-      // version being published. Safe for every path through here —
-      // fresh appends/overwrites by definition, and row-level rewrites
-      // because their scan subtracted the applicable equality deletes
-      // (see Segment.seq).
-      val prevPaths = prev.segments.map(_.path).toSet
-      val nextV = nextVersion(ident)
-      next0.copy(segments = transform(prev).map(s =>
-        if (prevPaths.contains(s.path)) s else s.copy(seq = nextV)))
-    })
-    val won = publish(ident, rewrites, casRetryable = true)
-    if (won) maybeAutoCompact(ident, threshold)
-    won
+      })
+      val won = applied && publish(ident, rewrites, casRetryable = true)
+      dbg(s"commitSegments($ident) attempt=$n applied=$applied won=$won")
+      if (won) { maybeAutoCompact(ident, threshold); true }
+      else if (!applied) false
+      else if (n >= 20)
+        throw new java.util.ConcurrentModificationException(
+          s"$ident: lost the ledger CAS to concurrent drivers ${n + 1} times; " +
+            "giving up — retry the statement")
+      else attempt(n + 1)
+    }
+    attempt(0)
   }
 
   /** Partition-scoped / dynamic INSERT OVERWRITE commit: replace only
@@ -4020,7 +4031,7 @@ object GraftCatalog {
     */
   private[sources] def installOverwrite(
       ident: Identifier, segs: Seq[Segment],
-      filters: Option[Seq[org.apache.spark.sql.sources.Filter]]): Unit = commitSegments(ident) { prev =>
+      filters: Option[Seq[org.apache.spark.sql.sources.Filter]]): Unit = commitSegments(ident) { (prev, _) =>
     import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter}
     // Key matching is only meaningful against keys valued over the
     // CURRENT spec. After a partition-spec evolution, old-era segments'
@@ -4054,7 +4065,7 @@ object GraftCatalog {
         val newKeys = segs.map(_.key).toSet
         prev.segments.filterNot(s => newKeys.contains(s.key))
     }
-    kept ++ segs.toVector
+    Some(prev.copy(segments = kept ++ segs))
   }
 
   /** Partition-overwrite literals arrive as EXTERNAL temporals
@@ -4169,45 +4180,47 @@ object GraftCatalog {
     }
   }
 
+  /** The equality delete an upsert commit registers at `seq`: one
+    * delete over the batch's distinct key tuples (None for a batch with
+    * no keys). ONE check for the batch and the streaming path: valid
+    * key columns, the per-commit key cap that keeps the delete
+    * metadata-sized, and the KEY-UNIQUE batch contract (the MERGE
+    * cardinality rule's analogue) — two rows for one key in the SAME
+    * commit share a sequence number, so neither shadows the other and
+    * last-wins is undefined; refuse loudly instead of committing both.
+    */
+  private def upsertEqDelete(
+      schema: StructType, keyCols: Seq[String], keys: Seq[IndexedSeq[Any]],
+      segs: Seq[Segment], seq: Long): Option[EqDelete] = {
+    validateUpsertKeys(schema, keyCols)
+    val distinct = keys.distinct.toVector
+    val maxKeys = upsertMaxKeys
+    require(distinct.length <= maxKeys,
+      s"upsert commit carries ${distinct.length} distinct keys (> $maxKeys) — " +
+        "use MERGE INTO for bulk rewrites or raise -Dgraft.upsert.maxKeys")
+    val written = segs.map(_.rows).sum
+    require(written == distinct.length,
+      s"upsert batch is not key-unique: $written rows over ${distinct.length} " +
+        s"distinct (${keyCols.mkString(",")}) keys — dedup the batch first " +
+        "(keep the last row per key)")
+    if (distinct.isEmpty) None else Some(EqDelete(keyCols, distinct, seq))
+  }
+
   /** UPSERT commit (merge-on-read, the Iceberg-v2 equality-delete
     * shape): append the batch's segments AND register one equality
     * delete over the batch's distinct key tuples — older rows with
-    * those keys disappear at read time, no file is rewritten. The
-    * per-commit key cap keeps the delete metadata-sized; compaction
-    * materializes and GCs it.
+    * those keys disappear at read time, no file is rewritten.
+    * Compaction materializes and GCs the delete. An upsert is a blind
+    * write, so a lost ledger CAS re-applies it onto the winner.
     */
   private[sources] def installUpsert(
       ident: Identifier, segs: Seq[Segment], keyCols: Seq[String],
-      keys: Seq[IndexedSeq[Any]]): Unit = mutate {
-    val threshold = autoCompactThreshold(ident)
-    val maxKeys = upsertMaxKeys
-    store.compute(ident, (_, prev) => {
-      require(prev != null, s"table $ident dropped mid-write")
-      validateUpsertKeys(prev.schema, keyCols)
-      val distinct = keys.distinct.toVector
-      require(distinct.length <= maxKeys,
-        s"upsert commit carries ${distinct.length} distinct keys (> $maxKeys) — " +
-          "use MERGE INTO for bulk rewrites or raise -Dgraft.upsert.maxKeys")
-      // KEY-UNIQUE batch contract (the MERGE cardinality rule's
-      // analogue): two rows for one key in the SAME commit share a
-      // sequence number, so neither shadows the other and last-wins is
-      // undefined — refuse loudly instead of committing both.
-      val written = segs.map(_.rows).sum
-      require(written == distinct.length,
-        s"upsert batch is not key-unique: $written rows over ${distinct.length} " +
-          s"distinct (${keyCols.mkString(",")}) keys — dedup the batch first " +
-          "(keep the last row per key)")
-      val nextV = nextVersion(ident)
-      val stamped = segs.toVector.map(_.copy(seq = nextV))
-      prev.copy(
-        segments = prev.segments ++ stamped,
-        eqDeletes =
-          if (distinct.isEmpty) prev.eqDeletes
-          else prev.eqDeletes :+ EqDelete(keyCols, distinct, nextV))
-    })
-    publish(ident)
-    maybeAutoCompact(ident, threshold)
-  }
+      keys: Seq[IndexedSeq[Any]]): Unit =
+    commitSegments(ident) { (prev, v) =>
+      Some(prev.copy(
+        segments = prev.segments ++ segs,
+        eqDeletes = prev.eqDeletes ++ upsertEqDelete(prev.schema, keyCols, keys, segs, v)))
+    }
 
   private[graft] def analyzedOf(ident: Identifier): Map[String, ColAnalysis] =
     Option(store.get(ident)).map(_.analyzed).getOrElse(Map.empty)
@@ -4249,7 +4262,14 @@ object GraftCatalog {
   /** Streaming epoch commit. `truncate` = Complete output mode: each
     * epoch REPLACES the table with the full recomputed result instead
     * of appending (the pre-round-7 bug was dropping this flag and
-    * appending every epoch — duplicating rows).
+    * appending every epoch — duplicating rows). Goes through
+    * [[commitSegments]]: a streaming epoch racing another DRIVER's
+    * commit re-applies onto the reloaded winner instead of killing the
+    * streaming query (which would burn a full checkpoint-restart per
+    * lost CAS). The reload restores the epochs ledger from disk too,
+    * so the exactly-once replay check always judges against committed
+    * truth. Truncate epochs re-applying over a concurrent append IS
+    * the complete-mode contract: each epoch replaces the whole table.
     */
   private[sources] def installEpoch(
       ident: Identifier, queryId: String, epochId: Long,
@@ -4257,91 +4277,24 @@ object GraftCatalog {
       // Streaming UPSERT epoch: (key columns, this epoch's key tuples)
       // — appended segments + one equality delete, atomically; a
       // replayed epoch registers NEITHER (exactly-once covers both).
-      upsert: Option[(Seq[String], Seq[IndexedSeq[Any]])] = None): Boolean = mutate {
-    // Same pre-commit validation as `install`: a malformed autocompact
-    // property must fail the epoch BEFORE it lands — post-publish it
-    // would kill the streaming query in a crash loop that makes one
-    // committed epoch of progress per restart.
-    val threshold = autoCompactThreshold(ident)
-    // Cross-process retry-merge, same shape as commitSegments: a
-    // streaming epoch racing another DRIVER's commit must re-apply
-    // onto the reloaded winner and retry, not kill the streaming query
-    // (which would burn a full checkpoint-restart per lost CAS). The
-    // reload restores the epochs ledger from disk too, so the
-    // exactly-once replay check always judges against committed truth.
-    // Truncate (complete-output-mode) epochs re-applying over a
-    // concurrent append IS the complete-mode contract: each epoch
-    // replaces the whole table.
-    var attempt = 0
-    while (true) {
-      refreshIfStale(ident)
-      val appliedNow = installEpochOnce(
-        ident, queryId, epochId, segs, truncate, upsert)
-      appliedNow match {
-        case Some(applied) =>
-          if (applied) maybeAutoCompact(ident, threshold)
-          return applied
-        case None => // lost the ledger CAS; state reloaded — re-apply
-          attempt += 1
-          if (attempt > 20)
-            throw new java.util.ConcurrentModificationException(
-              s"$ident: streaming epoch $epochId lost the ledger CAS to " +
-                s"concurrent drivers $attempt times; giving up — the query " +
-                "will replay the epoch on restart")
-      }
-    }
-    false // unreachable
-  }
-
-  /** One optimistic attempt of [[installEpoch]]: Some(applied) when the
-    * commit landed (or the epoch was a replay), None on a lost
-    * cross-process CAS (state already reloaded to the winner's).
-    */
-  private def installEpochOnce(
-      ident: Identifier, queryId: String, epochId: Long,
-      segs: Seq[Segment], truncate: Boolean,
-      upsert: Option[(Seq[String], Seq[IndexedSeq[Any]])]): Option[Boolean] = {
-    val maxKeys = upsertMaxKeys
-    var applied = false
-    var replayed: Seq[Segment] = Nil
-    store.compute(ident, (_, prev) => {
-      require(prev != null, s"table $ident dropped mid-stream")
-      val key = (ident, queryId)
+      upsert: Option[(Seq[String], Seq[IndexedSeq[Any]])] = None): Unit = {
+    val key = (ident, queryId)
+    val applied = commitSegments(ident) { (prev, v) =>
       val last = Option(epochs.get(key)).map(_.longValue()).getOrElse(Long.MinValue)
-      if (epochId <= last) { replayed = segs; prev } // replayed epoch: already visible
+      if (epochId <= last) None // replayed epoch: already visible
       else {
-        upsert.foreach { case (kc, _) => validateUpsertKeys(prev.schema, kc) }
+        val eq = upsert.flatMap { case (kc, ks) => upsertEqDelete(prev.schema, kc, ks, segs, v) }
         epochs.put(key, epochId)
         epochTouched.put(key, java.lang.Long.valueOf(System.currentTimeMillis()))
-        applied = true
-        val nextV = nextVersion(ident)
-        val stamped = segs.toVector.map(_.copy(seq = nextV))
-        val eqs = upsert match {
-          case Some((kc, ks)) if ks.nonEmpty =>
-            val distinct = ks.distinct.toVector
-            require(distinct.length <= maxKeys,
-              s"upsert epoch carries ${distinct.length} distinct keys (> $maxKeys)")
-            // Same key-unique contract as the batch path: intra-epoch
-            // duplicates share a seq and cannot shadow each other.
-            val written = segs.map(_.rows).sum
-            require(written == distinct.length,
-              s"upsert epoch is not key-unique: $written rows over " +
-                s"${distinct.length} distinct (${kc.mkString(",")}) keys — " +
-                "dedup per epoch (keep the last row per key)")
-            prev.eqDeletes :+ EqDelete(kc, distinct, nextV)
-          case _ => prev.eqDeletes
-        }
-        if (truncate) prev.copy(segments = stamped, eqDeletes = eqs)
-        else prev.copy(segments = prev.segments ++ stamped, eqDeletes = eqs)
+        Some(prev.copy(
+          segments = if (truncate) segs.toVector else prev.segments ++ segs,
+          eqDeletes = prev.eqDeletes ++ eq))
       }
-    })
+    }
     // Replayed-epoch segments were NEVER visible to any scan — delete
     // immediately (no snapshot ever referenced them); an applied epoch
     // publishes a snapshot and retention protects what it replaced.
-    replayed.foreach(SegmentIO.delete)
-    if (!applied) Some(false)
-    else if (publish(ident, casRetryable = true)) Some(true)
-    else None // lost CAS: publish reloaded the winner's state
+    if (!applied) segs.foreach(SegmentIO.delete)
   }
 
   /** Resolve a `compact(..., where)` predicate — comma-joined
@@ -4464,8 +4417,6 @@ object GraftCatalog {
     val nextSeq = nextVersion(ident)
     val compiledEq = EqFilter.compileAll(entry.schema, entry.eqDeletes)
     def liveOf(seg: Segment): GraftSegFile = GraftSegFile.of(seg, compiledEq)
-    def eqApplies(seg: Segment): Boolean =
-      entry.eqDeletes.exists(_.seq > seg.seq)
     // Group by (spec, key): after a partition-spec evolution, equal key
     // VECTORS under different specs are different partitions — folding
     // them together would mint a segment whose key lies about one era.
@@ -4511,7 +4462,7 @@ object GraftCatalog {
           }
         }
         else if (segs.length <= 1 && segs.forall(_.dv.isEmpty) &&
-          segs.forall(!eqApplies(_))) segs
+          !segs.exists(s => entry.eqDeletes.exists(_.appliesTo(s)))) segs
         else if (orderIdx.isEmpty)
           // ROW-LINEAGE preservation: the unordered fold concatenates
           // sources in list order through the lineage-preserving copy.
@@ -4708,6 +4659,7 @@ object GraftCatalog {
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = mutate {
     import org.apache.spark.sql.sources.{And, Filter}
     val cond: Option[Filter] = filters.reduceOption(And.apply)
+    var added: Seq[Segment] = Nil
     store.compute(ident, (_, prev) => {
       require(prev != null, s"table $ident dropped mid-delete")
       val kept = prev.segments.flatMap { seg =>
@@ -4739,9 +4691,18 @@ object GraftCatalog {
             Some(seg.dv.getOrElse(scala.collection.immutable.BitSet.empty) ++ hits.result())))
         }
       }
+      val prevPaths = prev.segments.map(_.path).toSet
+      added = kept.filterNot(s => prevPaths.contains(s.path))
       prev.copy(segments = kept)
     })
-    publish(ident)
+    // A lost CAS refuses the DELETE; the survivors' files rewritten
+    // above are then referenced by nothing, so delete them here rather
+    // than leave them for remove_orphans.
+    try publish(ident)
+    catch { case e: java.util.ConcurrentModificationException =>
+      added.foreach(SegmentIO.delete)
+      throw e
+    }
   }
 }
 

@@ -713,7 +713,7 @@ private[sources] object GraftChangeScan {
                 // rows of `added` the lockstep reader would still emit
                 // as postimages — degrade to the (eq-filtered)
                 // delete+insert form, which nets correctly.
-                !to.eqDeletes.exists(_.seq > added.seq) &&
+                !to.eqDeletes.exists(_.appliesTo(added)) &&
                 src.liveRows == added.rows &&
                 // The retained range must be COMPLETE: an expired
                 // mid-range commit could hide a dv flip or eq-delete
@@ -724,7 +724,7 @@ private[sources] object GraftChangeScan {
                 // but present in `added` — a resurrection INSERT the
                 // lockstep reader can never emit (it only reports
                 // byte diffs).
-                !removedEq.exists(e => e.seq > src.seq &&
+                !removedEq.exists(e => e.appliesTo(src) &&
                   !ZoneMap.eqDisjoint(from.schema, src, e)) &&
                 // src's dv never differed from its from-state in any
                 // mid-range snapshot, and no chain link ever carried a

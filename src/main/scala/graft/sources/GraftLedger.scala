@@ -40,11 +40,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * NOT the primitive) to `<known+1>.json`, the Delta
   * `_delta_log/N.json` shape — so of two
   * driver JVMs racing the same sequence number exactly one wins; the
-  * loser reloads the winner's document and retries (appends re-apply
-  * and both land) or refuses (row-level rewrites — see
-  * GraftCatalog.commitSegments). Readers list the directory and take
-  * the highest number; a flat legacy `<fname>.json` reads as sequence
-  * 0. Views and the drop-trash stay last-write-wins flat documents —
+  * loser reloads the winner's document and retries (appends, upserts
+  * and streaming epochs re-apply and both land) or refuses (row-level
+  * rewrites — see GraftCatalog.commitSegments). Readers list the
+  * directory and take the highest number; a flat legacy
+  * `<fname>.json` reads as sequence 0. Views and the drop-trash stay last-write-wins flat documents —
   * they are not data-commit surfaces.
   */
 private[graft] object GraftLedger {

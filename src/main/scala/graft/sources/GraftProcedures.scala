@@ -294,7 +294,7 @@ private[graft] object GraftSyncIdentityProcedure
   * sha-256(path|size|mtime) — a rewritten file (new size/mtime) counts
   * as new data, an untouched file never reloads. The batch's tokens
   * commit ATOMICALLY with its segments (one snapshot — see
-  * `commitSegments`), so there is no crash window between "rows
+  * `GraftCatalog.install`), so there is no crash window between "rows
   * landed" and "files marked loaded"; a concurrent copy_into racing on
   * the same files makes the later commit refuse, and the retry's
   * re-diff loads only the remainder. Force-reload escape hatch:

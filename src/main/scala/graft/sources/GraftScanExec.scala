@@ -1015,7 +1015,7 @@ private[sources] object GraftSegFile {
       case None => GraftSegFile(s.path, s.rows, s.dv, lineage = s.lineage)
       case Some(b) =>
         val idx = compiled.zipWithIndex.collect {
-          case ((sq, _), i) if sq > s.seq => i
+          case ((sq, _), i) if GraftCatalog.eqApplies(sq, s.seq) => i
         }
         GraftSegFile(s.path, s.rows, s.dv, lineage = s.lineage, eqBc = Some(b),
           eqIdx = idx)

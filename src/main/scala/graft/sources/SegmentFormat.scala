@@ -668,7 +668,7 @@ private[graft] object EqFilter {
   def applicable(
       compiled: IndexedSeq[(Long, EqFilter)],
       seg: GraftCatalog.Segment): Seq[EqFilter] =
-    compiled.collect { case (sq, f) if sq > seg.seq => f }
+    compiled.collect { case (sq, f) if GraftCatalog.eqApplies(sq, seg.seq) => f }
 
   /** One-shot convenience for single-segment callers. */
   def compile(

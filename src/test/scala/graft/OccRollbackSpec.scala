@@ -22,6 +22,10 @@ import graft.sources.{GraftCatalog, GraftLedger}
   *    CAS refused honestly but had already erased the winner's data;
   *  - a rename whose old-name tombstone lost left the table live under
   *    BOTH names with diverging states sharing segment files.
+  *
+  * The data commits are pinned the same way: a lost CAS on an append
+  * or a batch upsert re-applies the intent (lands exactly once), and a
+  * refused rewrite-path DELETE deletes the file it rewrote.
   */
 class OccRollbackSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -45,6 +49,19 @@ class OccRollbackSpec extends AnyFunSuite {
     assert(GraftLedger.casWrite(tablesDir, id, json, seq + 1),
       "forged foreign commit must win its CAS")
   }
+
+  /** Arm the OCC window to forge ONE foreign commit on `id`, at its
+    * next ledger CAS; the returned probe says whether it fired.
+    */
+  private def loseNextCas(id: Identifier): () => Boolean = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    GraftCatalog.occWindowHookForTest =
+      i => if (i == id && fired.compareAndSet(false, true)) forgeForeignCommit(i)
+    () => fired.get
+  }
+
+  private def keys(table: String): Seq[Long] =
+    spark.sql(s"SELECT k FROM $table ORDER BY k").collect().map(_.getLong(0)).toSeq
 
   private def isConcurrentRefusal(t: Throwable): Boolean =
     t != null && (t.isInstanceOf[java.util.ConcurrentModificationException] ||
@@ -178,5 +195,55 @@ class OccRollbackSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM pgraft.occ.r2").head.getLong(0) == 1L)
     assert(!spark.catalog.tableExists("pgraft.occ.r1"))
     spark.sql("DROP TABLE pgraft.occ.r2 PURGE")
+  }
+
+  test("a batch INSERT that loses its ledger CAS re-applies and lands exactly once") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.a PURGE")
+    spark.sql("CREATE TABLE pgraft.occ.a (k BIGINT) USING graft")
+    spark.sql("INSERT INTO pgraft.occ.a VALUES (1), (2)")
+    val fired = loseNextCas(ident("a"))
+    try spark.sql("INSERT INTO pgraft.occ.a VALUES (3)")
+    finally GraftCatalog.occWindowHookForTest = _ => ()
+    assert(fired(), "the forged foreign commit never ran")
+    assert(keys("pgraft.occ.a") == Seq(1L, 2L, 3L))
+    spark.sql("DROP TABLE pgraft.occ.a PURGE")
+  }
+
+  test("a batch upsert that loses its ledger CAS re-applies: one row per key") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.u PURGE")
+    spark.sql("CREATE TABLE pgraft.occ.u (k BIGINT, v STRING) USING graft")
+    def upsert(values: String): Unit =
+      spark.sql(s"SELECT * FROM VALUES $values AS t(k, v)").writeTo("pgraft.occ.u")
+        .option("graft.upsert.keys", "k").append()
+    upsert("(1L, 'a'), (2L, 'b')")
+    // Upserts are blind writes: after the winner's commit is adopted,
+    // re-applying the intent gives the serial order "winner, then us".
+    val fired = loseNextCas(ident("u"))
+    try upsert("(2L, 'b2'), (3L, 'c')")
+    finally GraftCatalog.occWindowHookForTest = _ => ()
+    assert(fired(), "the forged foreign commit never ran")
+    val rows = spark.sql("SELECT k, v FROM pgraft.occ.u ORDER BY k").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(rows == Seq(1L -> "a", 2L -> "b2", 3L -> "c"))
+    spark.sql("DROP TABLE pgraft.occ.u PURGE")
+  }
+
+  test("a rewrite-path DELETE that loses its ledger CAS leaves no orphan file") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.x PURGE")
+    spark.sql("CREATE TABLE pgraft.occ.x (k BIGINT) USING graft")
+    spark.sql("INSERT INTO pgraft.occ.x SELECT /*+ REPARTITION(1) */ id FROM range(10)")
+    val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", "x")
+    // 8 of the segment's 10 rows match: a majority, so DELETE rewrites
+    // the survivors into a new file instead of attaching a dv.
+    val fired = loseNextCas(ident("x"))
+    val t =
+      try intercept[Throwable] { spark.sql("DELETE FROM pgraft.occ.x WHERE k < 8") }
+      finally GraftCatalog.occWindowHookForTest = _ => ()
+    assert(fired(), "the forged foreign commit never ran")
+    assert(isConcurrentRefusal(t), s"expected a concurrent-commit refusal, got $t")
+    assert(GraftCatalog.segmentFilesOnDisk("occ", "x") == filesBefore,
+      "a refused DELETE left its rewritten segment file behind")
+    assert(keys("pgraft.occ.x") == (0L until 10L))
+    spark.sql("DROP TABLE pgraft.occ.x PURGE")
   }
 }
