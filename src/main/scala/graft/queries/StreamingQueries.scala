@@ -356,6 +356,13 @@ object StreamingQueries {
   /** ST8: stream–stream inner join with watermarks + time-range bound —
     * each 'click' matched to same-user 'view's in the preceding 10
     * minutes. Both sides watermarked so join state is evictable.
+    *
+    * The replay runs ONE micro-batch: the trailing no-data batch that
+    * would advance the watermark and evict join state is skipped
+    * (`StreamingOps.evictionIsSilent`). That is exact for an inner join:
+    * a pair is emitted in the batch where its second row arrives, and an
+    * evicted row that never matched is dropped without output, so the
+    * skipped batch could only ever have emitted nothing.
     */
   val st8StreamStreamJoin: Q = Q(
     "st8_stream_stream_join",
@@ -427,7 +434,7 @@ object StreamingQueries {
       |  round(sum(i * 0.25), 4) AS total_val
       |FROM range(0, 3000) t(i)
       |GROUP BY 1
-      |ORDER BY tag""".stripMargin) { (spark, dir) =>
+      |ORDER BY tag""".stripMargin) { (spark, _) =>
     val sdf = spark.readStream.format("graft-range")
       .option("end", "3000").option("rowsPerBatch", "1000")
       .load()
@@ -452,7 +459,7 @@ object StreamingQueries {
       |  round(sum(i * 0.25), 4) AS total_val
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
-      |ORDER BY tag""".stripMargin) { (spark, dir) =>
+      |ORDER BY tag""".stripMargin) { (spark, _) =>
     SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.sink11")
     spark.sql(
@@ -490,7 +497,7 @@ object StreamingQueries {
       |  round(sum(i * 0.25), 4) AS total_val
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
-      |ORDER BY tag""".stripMargin) { (spark, dir) =>
+      |ORDER BY tag""".stripMargin) { (spark, _) =>
     SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.src12")
     spark.sql("DROP TABLE IF EXISTS graft.stream.sink12")
@@ -543,7 +550,7 @@ object StreamingQueries {
     """SELECT (1030 + i + i % 20) // 60 * 60 AS w_start, count(*) AS n_pairs
       |FROM range(0, 100) t(i)
       |GROUP BY 1
-      |ORDER BY w_start""".stripMargin) { (spark, dir) =>
+      |ORDER BY w_start""".stripMargin) { (spark, _) =>
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -594,7 +601,7 @@ object StreamingQueries {
       |  round(sum(i * 0.25), 4) AS total_val
       |FROM range(0, 2000) t(i)
       |GROUP BY 1
-      |ORDER BY tag""".stripMargin) { (spark, dir) =>
+      |ORDER BY tag""".stripMargin) { (spark, _) =>
     SessionConf.registerCatalog(spark)
     spark.sql("DROP TABLE IF EXISTS graft.stream.base14")
     spark.sql("DROP TABLE IF EXISTS graft.stream.mv14")

@@ -1916,6 +1916,37 @@ object GraftCatalog {
     }
   }
 
+  /** Compaction's sorted-fold order over the columns at `orderIdx`;
+    * strings compare in UTF-8 binary order.
+    */
+  private[sources] def foldLt(schema: StructType, orderIdx: Array[Int])
+      : (UnsafeRow, UnsafeRow) => Boolean = {
+    import org.apache.spark.sql.types._
+    def cmpAt(a: UnsafeRow, b: UnsafeRow, i: Int): Int = {
+      val an = a.isNullAt(i); val bn = b.isNullAt(i)
+      if (an && bn) 0
+      else if (an) -1 // NULLS FIRST, matching the write path's sort
+      else if (bn) 1
+      else schema.fields(i).dataType match {
+        case LongType => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+        case IntegerType => Integer.compare(a.getInt(i), b.getInt(i))
+        case ShortType => java.lang.Short.compare(a.getShort(i), b.getShort(i))
+        case ByteType => java.lang.Byte.compare(a.getByte(i), b.getByte(i))
+        case DoubleType => java.lang.Double.compare(a.getDouble(i), b.getDouble(i))
+        case FloatType => java.lang.Float.compare(a.getFloat(i), b.getFloat(i))
+        case BooleanType => java.lang.Boolean.compare(a.getBoolean(i), b.getBoolean(i))
+        case StringType => a.getUTF8String(i).binaryCompare(b.getUTF8String(i))
+        case _ => 0
+      }
+    }
+    (a, b) => {
+      var i = 0
+      var c = 0
+      while (c == 0 && i < orderIdx.length) { c = cmpAt(a, b, orderIdx(i)); i += 1 }
+      c < 0
+    }
+  }
+
   /** Drop every sorted-provenance flag of a table — entry AND retained
     * history (pinned time-travel scans read old segment lists against
     * the LIVE write-order property, so stale flags there are just as
@@ -4388,27 +4419,10 @@ object GraftCatalog {
     val orderIdx: Array[Int] =
       writeOrderCols(entry.props, entry.schema).map(entry.schema.fieldIndex).toArray
     // The sorted-provenance stamp below is only honest when the fold's
-    // comparator actually handles every order column's type — cmpAt
+    // comparator actually handles every order column's type — foldLt
     // falls back to 0 for anything else, which INTERLEAVES runs.
     val orderProvable = orderIdx.nonEmpty &&
       orderIdx.forall(i => sortProvableType(entry.schema.fields(i).dataType))
-    def cmpAt(a: UnsafeRow, b: UnsafeRow, i: Int): Int = {
-      val an = a.isNullAt(i); val bn = b.isNullAt(i)
-      if (an && bn) 0
-      else if (an) -1 // NULLS FIRST, matching the write path's sort
-      else if (bn) 1
-      else entry.schema.fields(i).dataType match {
-        case LongType => java.lang.Long.compare(a.getLong(i), b.getLong(i))
-        case IntegerType => Integer.compare(a.getInt(i), b.getInt(i))
-        case ShortType => java.lang.Short.compare(a.getShort(i), b.getShort(i))
-        case ByteType => java.lang.Byte.compare(a.getByte(i), b.getByte(i))
-        case DoubleType => java.lang.Double.compare(a.getDouble(i), b.getDouble(i))
-        case FloatType => java.lang.Float.compare(a.getFloat(i), b.getFloat(i))
-        case BooleanType => java.lang.Boolean.compare(a.getBoolean(i), b.getBoolean(i))
-        case StringType => a.getUTF8String(i).compareTo(b.getUTF8String(i))
-        case _ => 0
-      }
-    }
     // Compaction is the EQUALITY-DELETE materialization point too:
     // every fold filters matching rows out of the bytes it copies, and
     // the output stamps the new data sequence number — after a full
@@ -4471,12 +4485,7 @@ object GraftCatalog {
         else {
           val buf = new SegmentIO.RowBuffer(entry.schema.length)
           segs.foreach(seg => SegmentIO.foreachRow(liveOf(seg), entry.schema.length)(buf.add))
-          val sorted = buf.sortedBy { (a, b) =>
-            var i = 0
-            var c = 0
-            while (c == 0 && i < orderIdx.length) { c = cmpAt(a, b, orderIdx(i)); i += 1 }
-            c < 0
-          }
+          val sorted = buf.sortedBy(foldLt(entry.schema, orderIdx))
           val totalBytes = segs.map(s =>
             if (s.bytes > 0) s.bytes else s.rows * 8L * (entry.schema.length + 1)).sum
           val outSegs = math.max(1, math.ceil(totalBytes.toDouble / compactTargetBytes).toInt)

@@ -38,7 +38,7 @@ private[graft] object GraftCompare {
     case (_, y: org.apache.spark.sql.types.Decimal) => cmp(a, y.toJavaBigDecimal)
     case (x: String, y: String) =>
       Some(org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)))
+        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(y)))
     case (x: java.lang.Boolean, y: java.lang.Boolean) => Some(x.compareTo(y))
     case (x: Number, y: Number) =>
       val xd = x.doubleValue(); val yd = y.doubleValue()
@@ -429,7 +429,7 @@ private[sources] object SegmentIO {
         java.lang.Float.compare(x, y) < 0
       case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
       case (x: org.apache.spark.unsafe.types.UTF8String,
-            y: org.apache.spark.unsafe.types.UTF8String) => x.compareTo(y) < 0
+            y: org.apache.spark.unsafe.types.UTF8String) => x.binaryCompare(y) < 0
       case _ => false
     }
 

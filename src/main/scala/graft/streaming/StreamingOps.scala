@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.{SessionConf, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming plumbing (SURVEY.md §2b ST1–ST9).
@@ -99,7 +101,7 @@ object StreamingOps {
       sdf: DataFrame,
       mode: String,
       name: String): DataFrame = {
-    withStreamConfs(spark) {
+    withStreamConfs(spark, sdf) {
       sdf.writeStream
         .format("memory")
         .queryName(name)
@@ -131,7 +133,7 @@ object StreamingOps {
       spark: SparkSession,
       sdf: DataFrame,
       f: (DataFrame, Long) => Unit): Unit =
-    withStreamConfs(spark) {
+    withStreamConfs(spark, sdf) {
       sdf.writeStream
         .outputMode("append")
         .foreachBatch(f)
@@ -140,12 +142,47 @@ object StreamingOps {
         .awaitTermination()
     }
 
-  /** The replay harness's conf for one streaming run: state partitions
-    * (above), and 2 retained state snapshots instead of the default 100
-    * — recovery-window tuning a bounded replay doesn't need.
+  /** The replay harness's conf for one streaming run of `sdf`:
+    *  - `spark.sql.shuffle.partitions`: the state partitions (above);
+    *  - `spark.sql.streaming.minBatchesToRetain` = 2 instead of the
+    *    default 100 — recovery-window tuning a bounded replay doesn't
+    *    need;
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` = false, only
+    *    when [[evictionIsSilent]] proves that a batch which merely
+    *    advances the watermark emits no row. Such a batch runs after
+    *    the last data batch only to evict state; skipping it leaves the
+    *    sink's rows unchanged (st8's inner join: 2 batches → 1). A plan
+    *    the rule cannot prove keeps Spark's default — st13's append-mode
+    *    window aggregate emits its final windows in exactly that batch.
     */
-  private def withStreamConfs[T](spark: SparkSession)(body: => T): T =
-    SessionConf.withConfs(spark)(
+  private def withStreamConfs[T](spark: SparkSession, sdf: DataFrame)(body: => T): T = {
+    val confs = Seq(
       "spark.sql.streaming.minBatchesToRetain" -> "2",
-      "spark.sql.shuffle.partitions" -> statePartitions(spark))(body)
+      "spark.sql.shuffle.partitions" -> statePartitions(spark)) ++
+      (if (evictionIsSilent(sdf.queryExecution.analyzed))
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil)
+    SessionConf.withConfs(spark)(confs: _*)(body)
+  }
+
+  /** Whether a batch that only advances the watermark is sure to emit
+    * no row of this streaming plan: every stateful operator is a
+    * stream–stream `Inner` join (it emits a pair in the batch where the
+    * second row arrives and drops an unmatched row silently on
+    * eviction), `Deduplicate` or `DeduplicateWithinWatermark` (they emit
+    * a key's first row on arrival). Anything else keeps the no-data batch:
+    * `Aggregate` (windows, session windows), the group-state operators
+    * (they may emit on timeout or timer), a non-inner stream–stream join
+    * (it emits null-padded rows on eviction), and every streaming node
+    * this rule does not recognise. Static subtrees hold no state.
+    */
+  private[graft] def evictionIsSilent(plan: LogicalPlan): Boolean = plan match {
+    case p if !p.isStreaming => true
+    case j: Join if j.left.isStreaming && j.right.isStreaming =>
+      j.joinType == Inner && j.children.forall(evictionIsSilent)
+    case _: Join | _: Deduplicate | _: DeduplicateWithinWatermark | _: Project |
+         _: Filter | _: EventTimeWatermark | _: SubqueryAlias | _: Union | _: LeafNode =>
+      plan.children.forall(evictionIsSilent)
+    case _ => false
+  }
 }

@@ -15,29 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * TimestampType value, batch and streaming alike.
   */
 class EventsLoaderSpec extends AnyFunSuite {
+  import EventsLoaderSpec.writeSingleFile
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   // One row per encoding, same instant: 2024-01-02 03:04:05.678901 UTC.
   private val micros = 1704164645678901L
-
-  /** The real testdata ships `events.parquet` as a single FILE (the
-    * streaming stager Files.copy-es that exact path), so mimic it:
-    * write through Spark, then promote the single part file.
-    */
-  private def writeSingleFile(df: org.apache.spark.sql.DataFrame, suffix: String): String = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val d = Files.createTempDirectory(s"graft_events_$suffix")
-    val stage = d.resolve("_stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val listing = Files.list(stage)
-    val part =
-      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow()
-      finally listing.close()
-    Files.move(part, d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    d.toString
-  }
 
   private def normalizedTs(dir: String): (DataType, Long) = {
     val df = Tables.events(spark, dir)
@@ -125,5 +108,25 @@ class EventsLoaderSpec extends AnyFunSuite {
       .select(col("event_id"), unix_micros(col("ts")).as("us"))
     val out = streaming.StreamingOps.runToBatch(spark, sdf, "append", "events_loader_spec")
     assert(out.select("us").as[Long].collect().toSeq == Seq(micros))
+  }
+}
+
+object EventsLoaderSpec {
+  /** The real testdata ships `events.parquet` as a single FILE (the
+    * streaming stager Files.copy-es that exact path), so mimic it:
+    * write through Spark, then promote the single part file.
+    */
+  def writeSingleFile(df: org.apache.spark.sql.DataFrame, suffix: String): String = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val d = Files.createTempDirectory(s"graft_events_$suffix")
+    val stage = d.resolve("_stage")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val listing = Files.list(stage)
+    val part =
+      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+        .findFirst().orElseThrow()
+      finally listing.close()
+    Files.move(part, d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    d.toString
   }
 }

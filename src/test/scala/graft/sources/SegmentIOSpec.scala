@@ -107,4 +107,24 @@ class SegmentIOSpec extends AnyFunSuite {
     assert(out.lineage == Vector((10L, 2L, 3L), (13L, 2L, 3L)))
     assert(lineageOf(GraftSegFile.of(out)).flatten.map(_._1) == Seq(10L, 11L, 13L, 14L))
   }
+
+  test("string min/max and the sorted fold use UTF-8 binary order, also under spark.testing") {
+    // UTF8String.compareTo throws when spark.testing is set; the writer's
+    // zone map and compaction's fold must never reach it.
+    val prior = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try {
+      // "\uFF21" sorts after the emoji in UTF-16 but before it in UTF-8.
+      val strs = Seq("b", "", "\u00e9t\u00e9", "\uFF21", "\uD83D\uDE00", "\u4e2d", null, "a")
+      val seg = write(strs.zipWithIndex.map { case (s, i) => i.toLong -> s }: _*)
+      assert(seg.stats(1) == GraftCatalog.ColStat("", "\uD83D\uDE00", 1L))
+      val buf = new SegmentIO.RowBuffer(schema.length)
+      SegmentIO.foreachRow(GraftSegFile.of(seg), schema.length)(buf.add)
+      val sorted = buf.sortedBy(GraftCatalog.foldLt(schema, Array(1))).map(strs(_))
+      assert(sorted == Seq(null, "", "a", "b", "\u00e9t\u00e9", "\u4e2d", "\uFF21", "\uD83D\uDE00"))
+    } finally prior match {
+      case Some(v) => System.setProperty("spark.testing", v)
+      case None => System.clearProperty("spark.testing")
+    }
+  }
 }
