@@ -1460,14 +1460,14 @@ object GraftCatalog {
       // version at which this segment's ROWS entered the table. An
       // equality delete applies to a segment iff eq.seq > this —
       // "deletes hit rows written before the delete". Assignment:
-      // fresh data commits stamp the new version; 1:1 migrations
-      // (ALTER re-projections) inherit the source's seq (their bytes
-      // still carry eq-deleted rows, so the filters must keep
-      // applying); compaction/zorder/row-level rewrites stamp the new
-      // version BECAUSE they provably applied the filters while
-      // rewriting (the materialization points). Inheriting too low is
-      // always safe (filters re-apply as no-ops); stamping too high
-      // without filtering would resurrect deleted rows — never done.
+      // commitSegments stamps every segment NEW to a commit with its
+      // version — fresh data, and rewrites (compaction, zorder, DELETE
+      // survivors, row-level) BECAUSE they provably applied the
+      // filters while rewriting; 1:1 migrations (ALTER re-projections,
+      // `rewriteOpt`) inherit the source's seq (their bytes still carry
+      // eq-deleted rows, so the filters must keep applying). Too low is
+      // always safe (filters re-apply as no-ops); too high without
+      // filtering would resurrect deleted rows — never done.
       seq: Long = 0L,
       // ROW LINEAGE (the Iceberg v3 `_row_id` /
       // `_last_updated_sequence_number` concept): contiguous runs
@@ -1586,7 +1586,7 @@ object GraftCatalog {
     */
   private[graft] case class ColAnalysis(ndv: Long, nulls: Long)
 
-  private[sources] case class TableEntry(
+  private[graft] case class TableEntry(
       schema: StructType, segments: Vector[Segment], dir: String,
       partitionCols: Seq[String] = Nil,
       constraints: Vector[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
@@ -2155,12 +2155,6 @@ object GraftCatalog {
     }
   }
 
-  /** Live value of one table property (None if table or key absent). */
-  private[graft] def tableProp(ident: Identifier, key: String): Option[String] = {
-    ensureLoaded()
-    Option(store.get(ident)).flatMap(_.props.get(key))
-  }
-
   /** Segments appended to `ns.tbl` STRICTLY AFTER version `fromV`,
     * provided every commit since is append-only — no segment removed,
     * no deletion vector changed, schema identical — and the snapshot
@@ -2641,8 +2635,7 @@ object GraftCatalog {
             ident, entry, history.getOrDefault(ident, Vector.empty), live), next)
       }
       if (won) {
-        dbg(s"persist($ident) seq=$next v=${history.getOrDefault(ident, Vector.empty)
-          .lastOption.map(_.version).getOrElse(-1L)} segs=${entry.segments.length}" +
+        dbg(s"persist($ident) seq=$next v=${headVersion(ident)} segs=${entry.segments.length}" +
           (if (asDelta.isDefined) " delta" else " checkpoint"))
         ledgerSeqs.put(ident, next)
         if (asDelta.isEmpty) checkpointSeqs.put(ident, java.lang.Long.valueOf(next)): Unit
@@ -3139,8 +3132,7 @@ object GraftCatalog {
     val old = entry.partitionCols
     store.put(ident, entry.copy(partitionCols = canonical))
     publish(ident, dataChange = false) // metadata-only: no logical row changed
-    val v = history.getOrDefault(ident, Vector.empty).lastOption.map(_.version).getOrElse(-1L)
-    (v, old)
+    (headVersion(ident), old)
   }
 
   /** Zero-copy CLONE (`CALL graft.system.clone`): create `dst` whose
@@ -3605,9 +3597,7 @@ object GraftCatalog {
       rewrites = bHist.lastOption.map(_.rewrites).getOrElse(Map.empty),
       dataChange = bHist.lastOption.forall(_.dataChange))
     purgeEntry(bIdent) // cross-table GC guard spares files main now serves
-    val newV = history.getOrDefault(src, Vector.empty)
-      .lastOption.map(_.version).getOrElse(-1L)
-    (newV, bV - base, b.segments.length)
+    (headVersion(src), bV - base, b.segments.length)
   }
 
   /** Resolve a user-supplied version string — a numeric commit id or a
@@ -3891,8 +3881,7 @@ object GraftCatalog {
       ident: Identifier): (Long, Vector[Segment], Vector[EqDelete]) = mutate {
     refreshIfStale(ident) // the version token must reflect other drivers' commits
     val (s, e) = stateOf(ident)
-    (history.getOrDefault(ident, Vector.empty).lastOption.map(_.version).getOrElse(-1L),
-      s, e)
+    (headVersion(ident), s, e)
   }
 
   /** Row-level (UPDATE / MERGE / rewrite-DELETE) commit: the
@@ -3904,8 +3893,6 @@ object GraftCatalog {
     * state). The token is checked inside [[commitSegments]]' loop,
     * after the cross-process staleness refresh, so a commit from
     * another driver JVM moves it just like a local one.
-    * deleteWhere/installOverwrite recompute from `prev` inside the
-    * commit and don't need this.
     */
   private[sources] def installRowLevel(
       ident: Identifier, segs: Seq[Segment], plannedVersion: Long,
@@ -3952,6 +3939,8 @@ object GraftCatalog {
     * N × targetBytes of ordered data in one group — would re-run a
     * full-table rewrite on EVERY subsequent commit (under the global
     * mutation lock) while never getting below the threshold.
+    * A compaction a concurrent commit refuses is only logged: the
+    * triggering commit has landed, and the next one re-checks.
     */
   private def maybeAutoCompact(ident: Identifier, threshold: Option[Int]): Unit =
     threshold.foreach { n =>
@@ -3971,63 +3960,67 @@ object GraftCatalog {
             g.length >= n && g.length > post
           } => key
         }.toSet
-        if (hotKeys.nonEmpty) { compact(ident, onlyKeys = Some(hotKeys)); () }
+        if (hotKeys.nonEmpty)
+          try compact(ident, onlyKeys = Some(hotKeys)): Unit
+          catch { case e: java.util.ConcurrentModificationException =>
+            System.err.println(s"[graft-catalog] auto-compaction skipped: ${e.getMessage}") }
       }
     }
 
-  /** ONE commit shell for every data commit whose intent can be
-    * re-applied to a moved table: append and truncate ([[install]],
-    * COPY INTO included), partition-scoped and dynamic overwrite
-    * ([[installOverwrite]]), row-level rewrites ([[installRowLevel]]),
-    * batch upserts ([[installUpsert]]) and streaming epochs
-    * ([[installEpoch]]). `transform` maps the current entry and the
-    * version this commit will publish to the next entry, or None for
-    * "nothing to commit" (a replayed epoch); the result is true when a
-    * commit landed.
+  /** ONE commit shell for every commit that writes segment files:
+    * append and truncate ([[install]], COPY INTO included),
+    * partition-scoped and dynamic overwrite ([[installOverwrite]]),
+    * row-level rewrites ([[installRowLevel]]), batch upserts
+    * ([[installUpsert]]), streaming epochs ([[installEpoch]]) and the
+    * file rewrites of [[commitRewrite]] (compact, zorder, metadata
+    * DELETE). `transform` maps the current entry and the version this
+    * commit will publish to the next entry, or None for "nothing to
+    * commit" (a replayed epoch); files are written before the shell
+    * runs. The result is true when a commit landed.
     *
     * Each attempt syncs with the on-disk ledger, checks the row-level
     * version token, validates the auto-compaction threshold before
     * anything lands, applies `transform` to the refreshed state,
     * stamps segments NEW to this commit with the version being
-    * published (DATA SEQUENCE: fresh appends by definition, row-level
-    * rewrites because their scan subtracted the applicable equality
-    * deletes — see Segment.seq), and CASes the ledger. A lost CAS
+    * published (DATA SEQUENCE: fresh appends by definition, rewrites
+    * because they read through the applicable equality deletes — see
+    * Segment.seq), and CASes the ledger with `dataChange`. A lost CAS
     * (another DRIVER committed the same sequence first) reloads the
     * winner and re-applies — so two processes' disjoint appends or
     * upserts BOTH land, in some serial order, which is exactly the
-    * blind-write conflict class. Row-level rewrites pass
-    * `requireVersion`: their replacement list was computed against a
-    * pinned snapshot and re-applying it onto a moved table would erase
-    * the interleaved commit, so they refuse instead (the Iceberg/Delta
-    * conflict taxonomy). A won commit runs the auto-compaction check
-    * once.
+    * blind-write conflict class. Rewrites CHECK, THEN SWAP (the
+    * Iceberg/Delta conflict taxonomy): the transform first checks that
+    * every segment it replaces is still live, unchanged and under the
+    * equality deletes it read, and refuses otherwise — a disjoint
+    * foreign commit re-applies, an overlapping one refuses. Row-level
+    * rewrites pass `requireVersion` instead: planned against a pinned
+    * snapshot, they refuse on any moved table. A won `dataChange`
+    * commit runs the auto-compaction check; a failure before anything
+    * lands runs `abandon` (a rewrite's file cleanup), then rethrows.
     *
-    * Outside on purpose: [[deleteWhere]] (its transform writes files,
-    * so re-running it per attempt would rewrite them again),
-    * [[commitStaged]] (CTAS/RTAS, whose lost CAS must refuse or
-    * surface as TableAlreadyExists), and [[compact]] / [[zorder]]
-    * (maintenance rewrites that refuse on a lost CAS).
+    * Outside on purpose: [[commitStaged]] (CTAS/RTAS, whose lost CAS
+    * must refuse or surface as TableAlreadyExists).
     */
   private def commitSegments(ident: Identifier, rewrites: Map[String, String] = Map.empty,
-      requireVersion: Option[Long] = None)(
+      requireVersion: Option[Long] = None, dataChange: Boolean = true,
+      abandon: () => Unit = () => ())(
       transform: (TableEntry, Long) => Option[TableEntry]): Boolean = mutate {
+    var landed = false
     @annotation.tailrec
     def attempt(n: Int): Boolean = {
       refreshIfStale(ident)
+      val nextV = headVersion(ident) + 1
       requireVersion.foreach { pv =>
-        val cur = history.getOrDefault(ident, Vector.empty)
-          .lastOption.map(_.version).getOrElse(-1L)
-        if (cur != pv)
+        if (nextV - 1 != pv)
           throw new java.util.ConcurrentModificationException(
-            s"$ident advanced v$pv -> v$cur while a row-level rewrite " +
+            s"$ident advanced v$pv -> v${nextV - 1} while a row-level rewrite " +
               "was running — its result would erase the interleaved commit; retry " +
               "the statement")
       }
-      val threshold = autoCompactThreshold(ident)
+      val threshold = if (dataChange) autoCompactThreshold(ident) else None
       var applied = false
       store.compute(ident, (_, prev) => {
         require(prev != null, s"table $ident dropped mid-write")
-        val nextV = nextVersion(ident)
         transform(prev, nextV) match {
           case None => prev
           case Some(next) =>
@@ -4037,9 +4030,9 @@ object GraftCatalog {
               if (prevPaths.contains(s.path)) s else s.copy(seq = nextV)))
         }
       })
-      val won = applied && publish(ident, rewrites, casRetryable = true)
+      val won = applied && publish(ident, rewrites, dataChange, casRetryable = true)
       dbg(s"commitSegments($ident) attempt=$n applied=$applied won=$won")
-      if (won) { maybeAutoCompact(ident, threshold); true }
+      if (won) { landed = true; maybeAutoCompact(ident, threshold); true }
       else if (!applied) false
       else if (n >= 20)
         throw new java.util.ConcurrentModificationException(
@@ -4047,7 +4040,48 @@ object GraftCatalog {
             "giving up — retry the statement")
       else attempt(n + 1)
     }
-    attempt(0)
+    try attempt(0)
+    catch { case scala.util.control.NonFatal(e) if !landed => abandon(); throw e }
+  }
+
+  /** Commit `planned` — `base.segments` with some replaced by new
+    * files, a wider dv on the same file, or nothing — through
+    * [[commitSegments]]' check-then-swap: each replaced segment must
+    * still be live with the same path and dv (a file never changes, so
+    * that pair is its value) and under the same equality deletes (one
+    * added was not read; one a RESTORE removed was applied anyway —
+    * publish's GC never drops one that still applies), and the schema
+    * and partition spec the files were written under must stand.
+    * Untouched segments take their current value, foreign additions
+    * stay. Until the commit lands, any failure deletes the new files no
+    * live entry references (never a dv-only entry's live path).
+    * Call under `mutate {}`; returns the published list.
+    */
+  private def commitRewrite(ident: Identifier, base: TableEntry,
+      planned: Vector[Segment], dataChange: Boolean): Vector[Segment] = {
+    def id(s: Segment) = (s.path, s.dv)
+    val baseIds = base.segments.map(id).toSet
+    val plannedIds = planned.map(id).toSet
+    val replaced = base.segments.filterNot(s => plannedIds(id(s)))
+    val basePaths = base.segments.map(_.path).toSet
+    def eqOn(e: TableEntry) = e.eqDeletes.filter(eq => replaced.exists(eq.appliesTo)).toSet
+    val readEq = eqOn(base)
+    commitSegments(ident, dataChange = dataChange, abandon = () => {
+      val inUse = Option(store.get(ident)).fold(Set.empty[String])(_.segments.map(_.path).toSet)
+      planned.filterNot(s => basePaths(s.path) || inUse(s.path)).foreach(SegmentIO.delete)
+    }) { (prev, _) =>
+      val live = prev.segments.map(id).toSet
+      if (prev.schema != base.schema || prev.partitionCols != base.partitionCols ||
+          !replaced.forall(s => live(id(s))) || eqOn(prev) != readEq)
+        throw new java.util.ConcurrentModificationException(
+          s"$ident: a concurrent commit changed segments this rewrite replaces — " +
+            "its result would erase that commit; it was NOT applied, retry the statement")
+      val cur = prev.segments.map(s => s.path -> s).toMap
+      Some(prev.copy(segments =
+        planned.flatMap(s => if (baseIds(id(s))) cur.get(s.path) else Some(s)) ++
+          prev.segments.filterNot(s => basePaths(s.path))))
+    }: Unit
+    store.get(ident).segments
   }
 
   /** Partition-scoped / dynamic INSERT OVERWRITE commit: replace only
@@ -4117,13 +4151,9 @@ object GraftCatalog {
     case other => other
   }
 
-  /** The version the NEXT publish of `ident` will take — the data
-    * sequence number every fresh-commit path stamps (one definition:
-    * five hand-rolled copies had already appeared).
-    */
-  private def nextVersion(ident: Identifier): Long =
-    history.getOrDefault(ident, Vector.empty)
-      .lastOption.map(_.version + 1).getOrElse(0L)
+  /** The table's latest published version (-1 before the first). */
+  private def headVersion(ident: Identifier): Long =
+    history.getOrDefault(ident, Vector.empty).lastOption.map(_.version).getOrElse(-1L)
 
   private[sources] def segmentsOf(ident: Identifier): Vector[Segment] =
     Option(store.get(ident)).map(_.segments).getOrElse(Vector.empty)
@@ -4390,12 +4420,11 @@ object GraftCatalog {
     * within each partition-key group, segments beyond the first are
     * folded into ONE fresh segment (streamed, never materialized), the
     * list swaps atomically as the next snapshot, and the small files
-    * retire through the usual retention GC. Returns
-    * (segmentsBefore, segmentsAfter, rows). The small-files answer for
-    * a long-running append/stream workload — same protocol as
-    * Delta OPTIMIZE / Iceberg rewrite_data_files at demo scale (a
-    * cluster deployment would run the rewrites as tasks; the commit
-    * path is identical).
+    * retire through the usual retention GC; result and conflicts as
+    * in [[rewriteGroups]]. The small-files answer for a long-running
+    * append/stream workload — same protocol as Delta OPTIMIZE /
+    * Iceberg rewrite_data_files at demo scale (a cluster deployment
+    * would run the rewrites as tasks; the commit path is identical).
     *
     * `onlyKeys` restricts the fold to these partition-group keys
     * (auto-compaction's scoped path — groups outside the scope pass
@@ -4403,12 +4432,8 @@ object GraftCatalog {
     */
   private[sources] def compact(
       ident: Identifier,
-      onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]] = None): (Int, Int, Long) = mutate {
-    import org.apache.spark.sql.types._
-    val entry = store.get(ident)
-    if (entry == null) throw new NoSuchTableException(ident)
-    val before = entry.segments.length
-    val rows = entry.segments.map(_.liveRows).sum
+      onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]] = None): (Int, Int, Long) =
+    rewriteGroups(ident, onlyKeys) { entry =>
     // A declared write order obliges compaction to PRESERVE range
     // clustering: successive INSERTs are each internally range-disjoint
     // but overlap ACROSS inserts, so a naive fold-to-one would erase
@@ -4424,45 +4449,19 @@ object GraftCatalog {
     val orderProvable = orderIdx.nonEmpty &&
       orderIdx.forall(i => sortProvableType(entry.schema.fields(i).dataType))
     // Compaction is the EQUALITY-DELETE materialization point too:
-    // every fold filters matching rows out of the bytes it copies, and
-    // the output stamps the new data sequence number — after a full
-    // compact no live segment predates any eq delete, so publish-time
-    // GC drops them all.
-    val nextSeq = nextVersion(ident)
+    // after a full compact no live segment predates any eq delete, so
+    // publish-time GC drops them all.
     val compiledEq = EqFilter.compileAll(entry.schema, entry.eqDeletes)
     def liveOf(seg: Segment): GraftSegFile = GraftSegFile.of(seg, compiledEq)
-    // Group by (spec, key): after a partition-spec evolution, equal key
-    // VECTORS under different specs are different partitions — folding
-    // them together would mint a segment whose key lies about one era.
-    val compacted = entry.segments.groupBy(s => (s.spec, s.key)).toSeq
-      .sortBy { case ((spec, key), _) => spec.mkString(" ") + "\u0000" + key.mkString(" ") }
-      .flatMap { case ((spec, key), segs) =>
-        // A lone segment still rewrites when it carries a deletion
-        // vector OR a pending equality delete — compaction is the
-        // dv/eq materialization point.
-        if (onlyKeys.exists(!_.contains((spec, key)))) segs
-        else if (spec != entry.partitionCols) {
+    (spec, key, segs) =>
+        if (spec != entry.partitionCols) {
           // PARTITION-SPEC MIGRATION: a group written under an older
           // spec re-routes its live rows into segments keyed by the
           // CURRENT spec — compaction is the era-migration point (the
           // Iceberg rewrite_data_files answer to spec evolution).
           // `sorted` stays false: re-routing may interleave runs.
-          // Transform fields key by the transform OUTPUT, same
-          // PartField semantics as the write router.
-          val newFields: IndexedSeq[(PartField, Int, DataType)] =
-            entry.partitionCols.map { c =>
-              val pf = PartField.parse(c)
-              val i = entry.schema.fieldIndex(pf.source)
-              (pf, i, entry.schema.fields(i).dataType)
-            }.toIndexedSeq
-          def keyOf(r: UnsafeRow): IndexedSeq[Any] =
-            newFields.map { case (pf, i, dt) =>
-              if (r.isNullAt(i)) null
-              else pf.eval(dt match {
-                case StringType => r.getUTF8String(i).toString
-                case _ => r.get(i, dt)
-              }, dt)
-            }
+          // Keys route through the write router's PartField.keyOf.
+          val keyOf = PartField.keyOf(entry.partitionCols, entry.schema)
           val writers =
             new scala.collection.mutable.LinkedHashMap[IndexedSeq[Any], SegmentIO.Writer]()
           segs.foreach { seg =>
@@ -4472,16 +4471,19 @@ object GraftCatalog {
             }
           }
           writers.toSeq.flatMap { case (k, w) =>
-            w.finish().map(_.copy(key = k, spec = entry.partitionCols, seq = nextSeq))
+            w.finish().map(_.copy(key = k, spec = entry.partitionCols))
           }
         }
+        // A lone segment still rewrites when it carries a deletion
+        // vector OR a pending equality delete — compaction is the
+        // dv/eq materialization point.
         else if (segs.length <= 1 && segs.forall(_.dv.isEmpty) &&
           !segs.exists(s => entry.eqDeletes.exists(_.appliesTo(s)))) segs
         else if (orderIdx.isEmpty)
           // ROW-LINEAGE preservation: the unordered fold concatenates
           // sources in list order through the lineage-preserving copy.
           SegmentIO.rewrite(segs.map(liveOf), entry.dir, entry.schema.length, entry.schema)(
-            Some(_)).map(_.copy(key = key, spec = spec, seq = nextSeq)).toSeq
+            Some(_)).map(_.copy(key = key, spec = spec)).toSeq
         else {
           val buf = new SegmentIO.RowBuffer(entry.schema.length)
           segs.foreach(seg => SegmentIO.foreachRow(liveOf(seg), entry.schema.length)(buf.add))
@@ -4494,14 +4496,40 @@ object GraftCatalog {
           // columns — carry the provenance flag (only for types the
           // comparator really compares).
           buf.write(sorted, perSeg, entry.dir, entry.schema).map(_.copy(
-            key = key, sorted = orderProvable, spec = spec, seq = nextSeq))
+            key = key, sorted = orderProvable, spec = spec))
         }
+  }
+
+  /** The frame [[compact]] and [[zorder]] share: refresh once, rewrite
+    * each in-scope (spec, key) group with the function `plan` derives
+    * from the entry, and commit through [[commitRewrite]] as a logical
+    * no-op (dataChange=false: streams ride through, CDC emits nothing)
+    * — a concurrent commit that removed or dv-marked a rewritten
+    * segment, or changed the equality deletes applying to one, refuses
+    * it. Returns (segmentsBefore,
+    * segmentsAfter, rows), `rows` summing `liveRows` over the published
+    * list: exact whenever every group an equality delete applies to
+    * was in scope (always, for a full rewrite).
+    */
+  private def rewriteGroups(ident: Identifier,
+      onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]])(
+      plan: TableEntry => (Seq[String], IndexedSeq[Any], Vector[Segment]) => Seq[Segment])
+      : (Int, Int, Long) = mutate {
+    refreshIfStale(ident)
+    val entry = store.get(ident)
+    if (entry == null) throw new NoSuchTableException(ident)
+    val rewrite = plan(entry)
+    // Group by (spec, key): after a partition-spec evolution, equal key
+    // VECTORS under different specs are different partitions. The
+    // unambiguous separator keeps distinct groups from colliding and
+    // ordering unstably across runs.
+    val planned = entry.segments.groupBy(s => (s.spec, s.key)).toSeq
+      .sortBy { case ((spec, key), _) => spec.mkString(" ") + "\u0000" + key.mkString(" ") }
+      .flatMap { case ((spec, key), segs) =>
+        if (onlyKeys.exists(!_.contains((spec, key)))) segs else rewrite(spec, key, segs)
       }.toVector
-    store.put(ident, entry.copy(segments = compacted))
-    // Logical no-op commit (files rearranged, no row changed): streams
-    // ride through, the CDC feed emits nothing — dataChange=false.
-    publish(ident, dataChange = false)
-    (before, compacted.length, rows)
+    val out = commitRewrite(ident, entry, planned, dataChange = false)
+    (entry.segments.length, out.length, out.map(_.liveRows).sum)
   }
 
   /** OPTIMIZE ZORDER analogue (`CALL graft.system.zorder`): rewrite the
@@ -4525,15 +4553,15 @@ object GraftCatalog {
     * sort job. The swap publishes atomically as the next snapshot, so
     * time travel and concurrent scans stay correct — and a streaming
     * read sees it as a change commit (skip or fail, never duplicate).
+    * Result and conflicts as in [[rewriteGroups]].
     */
   private[sources] def zorder(
       ident: Identifier, cols: Seq[String], targetSegments: Int,
       // Scoped re-clustering (see [[compactKeysFor]]): at 100 TB you
       // z-order the recent/hot partition groups, not the whole table.
-      onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]] = None): (Int, Int, Long) = mutate {
+      onlyKeys: Option[Set[(Seq[String], IndexedSeq[Any])]] = None): (Int, Int, Long) =
+    rewriteGroups(ident, onlyKeys) { entry =>
     import org.apache.spark.sql.types._
-    val entry = store.get(ident)
-    if (entry == null) throw new NoSuchTableException(ident)
     require(cols.nonEmpty && cols.length <= 4, "zorder takes 1..4 numeric columns")
     // Z-ordering interleaves bits: output segments are NOT sorted on
     // any single column, which would silently contradict the declared
@@ -4581,15 +4609,10 @@ object GraftCatalog {
       z
     }
 
-    val before = entry.segments.length
-    val totalRows = entry.segments.map(_.liveRows).sum
     // Like compact, the Z-order rewrite MATERIALIZES pending equality
-    // deletes (filters matching rows while folding, stamps the new
-    // data sequence number) — the same reasoning makes it sound.
-    val zNextSeq = nextVersion(ident)
+    // deletes (filters matching rows while folding).
     val zCompiledEq = EqFilter.compileAll(schema, entry.eqDeletes)
-    def zorderGroup(spec: Seq[String], key: IndexedSeq[Any],
-        segs: Vector[Segment]): Seq[Segment] = {
+    (spec, key, segs) => {
         // Pass 1 (buffered): the live rows + their z-column values.
         val buf = new SegmentIO.RowBuffer(schema.length)
         val vals = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
@@ -4621,24 +4644,9 @@ object GraftCatalog {
             Array.tabulate(zIdx.length)(i => norm16(vals(r)(i), i))))
           val perSeg = math.max(1L, math.ceil(n.toDouble / targetSegments).toLong)
           buf.write(order, perSeg.toInt, entry.dir, schema)
-            .map(_.copy(key = key, spec = spec, seq = zNextSeq))
+            .map(_.copy(key = key, spec = spec))
         }
     }
-
-    val rewritten = entry.segments.groupBy(s => (s.spec, s.key)).toSeq
-      // Same unambiguous separator as compact's sort: a space-joined
-      // rendering lets distinct (spec, key) groups collide and order
-      // unstably across runs.
-      .sortBy { case ((spec, key), _) =>
-        spec.mkString(" ") + "\u0000" + key.mkString(" ") }
-      .flatMap { case ((spec, key), segs) =>
-        if (onlyKeys.exists(!_.contains((spec, key)))) segs
-        else zorderGroup(spec, key, segs)
-      }.toVector
-
-    store.put(ident, entry.copy(segments = rewritten))
-    publish(ident, dataChange = false) // re-clustering: logical no-op
-    (before, rewritten.length, totalRows)
   }
 
   /** Metadata-path DELETE, MERGE-ON-READ first. Per segment:
@@ -4654,13 +4662,19 @@ object GraftCatalog {
     *    materialize them later;
     *  - a MAJORITY match → copy-on-write rewrite of the survivors
     *    (an almost-empty file plus an almost-full bitmap serves reads
-    *    worse than a small clean file); every row matching → the
-    *    segment simply leaves the list.
+    *    worse than a small clean file), read through the equality
+    *    deletes so the new sequence stamp cannot resurrect a row; every
+    *    row matching → the segment simply leaves the list.
     *
     * The list swaps atomically as the next snapshot; a change stream
     * treats a dv change exactly like a segment removal (change
     * commit). Driver-side streaming I/O at demo scale — on a cluster
     * the per-segment work runs as tasks, same commit protocol.
+    *
+    * Conflicts ([[commitRewrite]]): a concurrent commit that changed
+    * a touched segment, or the equality deletes applying to one,
+    * refuses the DELETE; any other re-applies
+    * (write-serializable: rows a concurrent append added survive).
     */
   private[sources] def deleteWhere(
       ident: Identifier,
@@ -4668,50 +4682,36 @@ object GraftCatalog {
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = mutate {
     import org.apache.spark.sql.sources.{And, Filter}
     val cond: Option[Filter] = filters.reduceOption(And.apply)
-    var added: Seq[Segment] = Nil
-    store.compute(ident, (_, prev) => {
-      require(prev != null, s"table $ident dropped mid-delete")
-      val kept = prev.segments.flatMap { seg =>
-        // mightMatch false ⇒ the conjunction provably matches no row of
-        // this segment ⇒ the DELETE cannot touch it: keep the file.
-        if (cond.exists(c => !ZoneMap.mightMatch(c, schema, seg))) Some(seg)
-        else if (seg.rows > Int.MaxValue)
-          // not dv-addressable (ordinals are Int): straight rewrite
-          SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, prev.schema) { r =>
-            if (filters.forall(GraftFilterEval.eval(_, schema, r))) None else Some(r)
-          }
-        else {
-          val hits = scala.collection.immutable.BitSet.newBuilder
-          var nHits = 0L
-          SegmentIO.withCursor(GraftSegFile.of(seg), prev.schema.length) { cur =>
-            while (cur.nextLive())
-              if (filters.forall(GraftFilterEval.eval(_, schema, cur.row))) {
-                hits += cur.ordinal.toInt; nHits += 1
-              }
-          }
-          val live = seg.liveRows
-          if (nHits == 0) Some(seg)
-          else if (nHits == live) None // whole segment deleted: file retires via retention
-          else if (nHits * 2 > live)
-            SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, prev.schema) { r =>
-              if (filters.forall(GraftFilterEval.eval(_, schema, r))) None else Some(r)
-            }
-          else Some(seg.copy(dv =
-            Some(seg.dv.getOrElse(scala.collection.immutable.BitSet.empty) ++ hits.result())))
+    def hit(r: UnsafeRow): Boolean = filters.forall(GraftFilterEval.eval(_, schema, r))
+    refreshIfStale(ident)
+    val base = store.get(ident)
+    require(base != null, s"table $ident dropped mid-delete")
+    val compiledEq = EqFilter.compileAll(base.schema, base.eqDeletes)
+    val planned = base.segments.flatMap { seg =>
+      val file = GraftSegFile.of(seg, compiledEq)
+      def survivors: Option[Segment] =
+        SegmentIO.rewrite(Seq(file), base.dir, base.schema.length, base.schema)(
+          r => if (hit(r)) None else Some(r)).map(_.copy(key = seg.key, spec = seg.spec))
+      // mightMatch false ⇒ the conjunction provably matches no row of
+      // this segment ⇒ the DELETE cannot touch it: keep the file.
+      if (cond.exists(c => !ZoneMap.mightMatch(c, schema, seg))) Some(seg)
+      else if (seg.rows > Int.MaxValue) survivors // not dv-addressable (ordinals are Int)
+      else {
+        val hits = scala.collection.immutable.BitSet.newBuilder
+        var nHits = 0L
+        SegmentIO.withCursor(file, base.schema.length) { cur =>
+          while (cur.nextLive())
+            if (hit(cur.row)) { hits += cur.ordinal.toInt; nHits += 1 }
         }
+        val live = seg.liveRows
+        if (nHits == 0) Some(seg)
+        else if (nHits == live) None // whole segment deleted: file retires via retention
+        else if (nHits * 2 > live) survivors
+        else Some(seg.copy(dv =
+          Some(seg.dv.getOrElse(scala.collection.immutable.BitSet.empty) ++ hits.result())))
       }
-      val prevPaths = prev.segments.map(_.path).toSet
-      added = kept.filterNot(s => prevPaths.contains(s.path))
-      prev.copy(segments = kept)
-    })
-    // A lost CAS refuses the DELETE; the survivors' files rewritten
-    // above are then referenced by nothing, so delete them here rather
-    // than leave them for remove_orphans.
-    try publish(ident)
-    catch { case e: java.util.ConcurrentModificationException =>
-      added.foreach(SegmentIO.delete)
-      throw e
     }
+    commitRewrite(ident, base, planned, dataChange = true): Unit
   }
 }
 

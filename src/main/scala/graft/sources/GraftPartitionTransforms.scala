@@ -239,6 +239,27 @@ private[graft] object PartField {
   }
 
   def fields(cols: Seq[String]): Seq[PartField] = cols.map(parse)
+
+  /** A row's partition key under `cols` — external values, transform
+    * fields keyed by their OUTPUT: the one router for the writer and
+    * compaction's era migration. UTF8String reads point into the
+    * reused row buffer: toString copies.
+    */
+  def keyOf(cols: Seq[String], schema: StructType)
+      : org.apache.spark.sql.catalyst.expressions.UnsafeRow => IndexedSeq[Any] = {
+    val fields = cols.map { c =>
+      val pf = parse(c)
+      val i = schema.fieldIndex(pf.source)
+      (pf, i, schema.fields(i).dataType)
+    }.toIndexedSeq
+    r => fields.map { case (pf, i, dt) =>
+      if (r.isNullAt(i)) null
+      else pf.eval(dt match {
+        case StringType => r.getUTF8String(i).toString
+        case _ => r.get(i, dt)
+      }, dt)
+    }
+  }
   def sources(cols: Seq[String]): Seq[String] = cols.map(parse(_).source)
   def allIdentity(cols: Seq[String]): Boolean =
     cols.forall(parse(_).isInstanceOf[PartIdentity])

@@ -5,7 +5,6 @@ import java.util
 
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
@@ -262,16 +261,9 @@ private[sources] case class GraftSegmentWriterFactory(
       import org.apache.spark.sql.types.StringType
       private var proj: UnsafeProjection = _
       private var projFields = -1
-      // Per partition FIELD: (parsed field, source-column ordinal,
-      // source type). Identity fields pass the raw value through;
-      // transform fields (days/bucket/truncate) key by the transform
-      // OUTPUT — the hidden-partitioning router.
-      private val keyFields: Array[(PartField, Int, org.apache.spark.sql.types.DataType)] =
-        partCols.map { c =>
-          val pf = PartField.parse(c)
-          val i = target.fieldIndex(pf.source)
-          (pf, i, target.fields(i).dataType)
-        }.toArray
+      // The hidden-partitioning router: transform fields
+      // (days/bucket/truncate) key by the transform OUTPUT.
+      private val keyOf = PartField.keyOf(partCols, target)
       private val writers =
         new scala.collection.mutable.LinkedHashMap[IndexedSeq[Any], SegmentIO.Writer]()
       private val MaxWritersPerTask = 1000
@@ -306,22 +298,6 @@ private[sources] case class GraftSegmentWriterFactory(
           }
         })
       }
-
-      // Partition key as EXTERNAL values (String, boxed numerics) —
-      // comparable to pushed-filter literals and stable in the
-      // metastore. UTF8String reads point into the reused row buffer:
-      // toString copies.
-      private def keyOf(row: UnsafeRow): IndexedSeq[Any] =
-        keyFields.toIndexedSeq.map { case (pf, i, dt) =>
-          if (row.isNullAt(i)) null
-          else {
-            val v = dt match {
-              case StringType => row.getUTF8String(i).toString
-              case _ => row.get(i, dt)
-            }
-            pf.eval(v, dt)
-          }
-        }
 
       // True while the current row is a CARRIED (pre-existing) row of
       // a row-level rewrite — set from the two-arg write's metadata
@@ -405,7 +381,7 @@ private[sources] case class GraftSegmentWriterFactory(
               "deletes are the small-hot-batch path; use MERGE INTO for bulk rewrites " +
               "(or raise -Dgraft.upsert.maxKeys)")
         }
-        val key = if (keyFields.isEmpty) Vector.empty else keyOf(rowF)
+        val key = if (partCols.isEmpty) Vector.empty else keyOf(rowF)
         val w = writers.getOrElseUpdate(key, {
           require(writers.size < MaxWritersPerTask,
             s"task saw > $MaxWritersPerTask distinct partition values — " +

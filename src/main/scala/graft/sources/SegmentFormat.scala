@@ -580,13 +580,12 @@ private[sources] object SegmentIO {
     w.finish().map(_.copy(lineage = acc.result()))
   }
 
-  /** [[rewrite]] of one segment's rows (its deletion vector applies;
-    * its equality deletes stay outstanding). A rewrite never crosses
-    * partition boundaries: the output inherits the source's partition
-    * key (and the spec that key is valued over) AND its data sequence
-    * number — a 1:1 re-projection copies eq-deleted rows verbatim, so
-    * the equality filters must keep applying to the output exactly as
-    * they did to the source.
+  /** [[rewrite]] of one segment's rows for the ALTER re-projections
+    * (its dv applies; its equality deletes stay outstanding). The
+    * output inherits the source's partition key, spec AND data
+    * sequence number — a 1:1 re-projection copies eq-deleted rows
+    * verbatim, so the filters must keep applying to it. Never for a
+    * rewrite the commit shell stamps anew: that resurrects those rows.
     */
   def rewriteOpt(seg: Segment, dir: String, inFields: Int, outSchema: StructType)(
       f: UnsafeRow => Option[UnsafeRow]): Option[Segment] =

@@ -24,8 +24,16 @@ import graft.sources.{GraftCatalog, GraftLedger}
   *    BOTH names with diverging states sharing segment files.
   *
   * The data commits are pinned the same way: a lost CAS on an append
-  * or a batch upsert re-applies the intent (lands exactly once), and a
-  * refused rewrite-path DELETE deletes the file it rewrote.
+  * or a batch upsert re-applies the intent (lands exactly once). The
+  * file rewrites — compaction, Z-order, dv and copy-on-write DELETE —
+  * pass through the commit shell's check-then-swap rule: over a
+  * foreign commit that leaves their segments alone they re-apply and
+  * land; over one that changed a segment they replace (dropped it,
+  * widened its dv, or added an equality delete that applies to it)
+  * they refuse and delete every file they wrote. So do they over one
+  * that dropped an equality delete they read through (a RESTORE), and
+  * on any failure before their commit lands. A refused
+  * auto-compaction never fails the INSERT that triggered it.
   */
 class OccRollbackSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -39,26 +47,47 @@ class OccRollbackSpec extends AnyFunSuite {
   private def ident(name: String) = Identifier.of(Array("occ"), name)
   private def tablesDir = GraftLedger.tablesDir(GraftCatalog.warehouseRootForTest)
 
-  /** Land a foreign commit at the table's next ledger sequence — the
-    * same document content re-committed, which is exactly what another
-    * driver's no-op-shaped commit looks like to the CAS.
+  /** Land a foreign commit at the table's next ledger sequence, as the
+    * CHECKPOINT another driver would write: the resolved ledger state
+    * with `edit` applied to the entry and one new snapshot recording
+    * it. The default edit changes nothing — a no-op-shaped commit.
     */
-  private def forgeForeignCommit(id: Identifier): Unit = {
-    val (json, seq) = GraftLedger.readLatest(tablesDir, id)
+  private def forgeForeignCommit(id: Identifier,
+      edit: GraftCatalog.TableEntry => GraftCatalog.TableEntry = identity): Unit = {
+    val st = GraftLedger.readTableState(tablesDir, id, System.nanoTime())
       .getOrElse(fail(s"no ledger document for $id"))
-    assert(GraftLedger.casWrite(tablesDir, id, json, seq + 1),
+    val (tid, entry0, hist, eps) = st.state.getOrElse(fail(s"$id is dropped"))
+    val entry = edit(entry0)
+    val snap = hist.last.copy(version = hist.last.version + 1, segments = entry.segments,
+      eqDeletes = entry.eqDeletes, rewrites = Map.empty, dataChange = true)
+    assert(GraftLedger.casWrite(tablesDir, id,
+      GraftLedger.encodeTable(tid, entry, hist :+ snap, eps), st.seq + 1),
       "forged foreign commit must win its CAS")
   }
 
+  /** The version a commit forged now would take. */
+  private def forgedVersion(id: Identifier): Long =
+    GraftLedger.readTableState(tablesDir, id, System.nanoTime())
+      .flatMap(_.state).map(_._3.last.version + 1).getOrElse(fail(s"no ledger state for $id"))
+
   /** Arm the OCC window to forge ONE foreign commit on `id`, at its
-    * next ledger CAS; the returned probe says whether it fired.
+    * `at`-th ledger CAS from now; the returned probe says whether it
+    * fired.
     */
-  private def loseNextCas(id: Identifier): () => Boolean = {
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private def loseNextCas(id: Identifier, at: Int = 1,
+      edit: GraftCatalog.TableEntry => GraftCatalog.TableEntry = identity): () => Boolean = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
     GraftCatalog.occWindowHookForTest =
-      i => if (i == id && fired.compareAndSet(false, true)) forgeForeignCommit(i)
-    () => fired.get
+      i => if (i == id && seen.incrementAndGet() == at) forgeForeignCommit(i, edit)
+    () => seen.get >= at
   }
+
+  /** A foreign DELETE of the first physical row of the table's FIRST
+    * segment (a dv attached to it) — overlaps every rewrite below.
+    */
+  private val dvOnFirstSegment: GraftCatalog.TableEntry => GraftCatalog.TableEntry = e =>
+    e.copy(segments = e.segments.updated(0, e.segments.head.copy(
+      dv = Some(scala.collection.immutable.BitSet(0)))))
 
   private def keys(table: String): Seq[Long] =
     spark.sql(s"SELECT k FROM $table ORDER BY k").collect().map(_.getLong(0)).toSeq
@@ -234,8 +263,9 @@ class OccRollbackSpec extends AnyFunSuite {
     spark.sql("INSERT INTO pgraft.occ.x SELECT /*+ REPARTITION(1) */ id FROM range(10)")
     val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", "x")
     // 8 of the segment's 10 rows match: a majority, so DELETE rewrites
-    // the survivors into a new file instead of attaching a dv.
-    val fired = loseNextCas(ident("x"))
+    // the survivors into a new file instead of attaching a dv. The
+    // foreign commit deletes k = 0 from that same segment: overlap.
+    val fired = loseNextCas(ident("x"), edit = dvOnFirstSegment)
     val t =
       try intercept[Throwable] { spark.sql("DELETE FROM pgraft.occ.x WHERE k < 8") }
       finally GraftCatalog.occWindowHookForTest = _ => ()
@@ -243,7 +273,138 @@ class OccRollbackSpec extends AnyFunSuite {
     assert(isConcurrentRefusal(t), s"expected a concurrent-commit refusal, got $t")
     assert(GraftCatalog.segmentFilesOnDisk("occ", "x") == filesBefore,
       "a refused DELETE left its rewritten segment file behind")
-    assert(keys("pgraft.occ.x") == (0L until 10L))
+    assert(keys("pgraft.occ.x") == (1L until 10L))
     spark.sql("DROP TABLE pgraft.occ.x PURGE")
+  }
+
+  /** Two single-segment inserts: k = v = 0..9, then 10..19. */
+  private def twoSegments(name: String): String = {
+    val t = s"pgraft.occ.$name"
+    spark.sql(s"DROP TABLE IF EXISTS $t PURGE")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) USING graft")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, id FROM range(10)")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, id FROM range(10, 20)")
+    t
+  }
+
+  // Each rewrite replaces the first segment (k = 0..9): compact and
+  // zorder fold it, the dv DELETE widens its dv, the majority DELETE
+  // rewrites its survivors. Value: (statement, keys after it lands).
+  private val rewrites: Seq[(String, String => String, Seq[Long])] = Seq(
+    ("compact", n => s"CALL pgraft.system.compact('occ', '$n', '')", 0L until 20L),
+    ("zorder", n => s"CALL pgraft.system.zorder('occ', '$n', 'k,v', 1)", 0L until 20L),
+    ("dv DELETE", n => s"DELETE FROM pgraft.occ.$n WHERE k = 3",
+      (0L until 20L).filterNot(_ == 3L)),
+    ("majority DELETE", n => s"DELETE FROM pgraft.occ.$n WHERE k < 8", 8L until 20L))
+
+  rewrites.zipWithIndex.foreach { case ((op, stmt, after), i) =>
+    test(s"$op re-applies over a disjoint foreign commit and lands") {
+      val t = twoSegments(s"rw$i")
+      val fired = loseNextCas(ident(s"rw$i"))
+      try spark.sql(stmt(s"rw$i")).collect()
+      finally GraftCatalog.occWindowHookForTest = _ => ()
+      assert(fired(), "the forged foreign commit never ran")
+      assert(keys(t) == after)
+      spark.sql(s"DROP TABLE $t PURGE")
+    }
+
+    test(s"$op over an overlapping foreign commit refuses and deletes what it wrote") {
+      val t = twoSegments(s"ro$i")
+      val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", s"ro$i")
+      val fired = loseNextCas(ident(s"ro$i"), edit = dvOnFirstSegment)
+      val e =
+        try intercept[Throwable] { spark.sql(stmt(s"ro$i")).collect() }
+        finally GraftCatalog.occWindowHookForTest = _ => ()
+      assert(fired(), "the forged foreign commit never ran")
+      assert(isConcurrentRefusal(e), s"expected a concurrent-commit refusal, got $e")
+      // Unchanged: nothing leaked, and no live file (a dv DELETE's
+      // segment keeps its path) was deleted.
+      assert(GraftCatalog.segmentFilesOnDisk("occ", s"ro$i") == filesBefore)
+      assert(keys(t) == (1L until 20L), "the foreign commit's state must stand")
+      spark.sql(s"DROP TABLE $t PURGE")
+    }
+  }
+
+  test("a compaction racing a foreign upsert whose eq delete hits a folded segment refuses") {
+    val t = twoSegments("ce")
+    val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", "ce")
+    // The foreign upsert's equality delete (key 3, at its own version)
+    // applies to both folded segments; a fold stamped above it without
+    // having read it would resurrect k = 3.
+    val v = forgedVersion(ident("ce"))
+    val fired = loseNextCas(ident("ce"), edit = e => e.copy(eqDeletes = e.eqDeletes :+
+      GraftCatalog.EqDelete(Seq("k"), Vector(Vector(java.lang.Long.valueOf(3L))), v)))
+    val e =
+      try intercept[Throwable] {
+        spark.sql("CALL pgraft.system.compact('occ', 'ce', '')").collect() }
+      finally GraftCatalog.occWindowHookForTest = _ => ()
+    assert(fired(), "the forged foreign commit never ran")
+    assert(isConcurrentRefusal(e), s"expected a concurrent-commit refusal, got $e")
+    assert(GraftCatalog.segmentFilesOnDisk("occ", "ce") == filesBefore)
+    assert(keys(t) == (0L until 20L).filterNot(_ == 3L))
+    spark.sql(s"DROP TABLE $t PURGE")
+  }
+
+  // Upserted k = 2 shadows its row in the first segment (k = 1..5)
+  // through an equality delete; the foreign commit drops that delete
+  // (what a RESTORE to before the upsert does to it). The rewrite read
+  // through it, so landing would lose the row (2, 'a') it brought back.
+  Seq(
+    ("compact", "CALL pgraft.system.compact('occ', 'rq0', '')"),
+    ("majority DELETE", "DELETE FROM pgraft.occ.rq1 WHERE k IN (1, 3, 4)")
+  ).zipWithIndex.foreach { case ((op, stmt), i) =>
+    test(s"$op over a foreign commit that dropped an equality delete it read refuses") {
+      val t = s"pgraft.occ.rq$i"
+      spark.sql(s"DROP TABLE IF EXISTS $t PURGE")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING graft")
+      spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, 'a' FROM range(1, 6)")
+      spark.sql("SELECT 2L AS k, 'a2' AS v").writeTo(t)
+        .option("graft.upsert.keys", "k").append()
+      val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", s"rq$i")
+      val fired = loseNextCas(ident(s"rq$i"), edit = _.copy(eqDeletes = Vector.empty))
+      val e =
+        try intercept[Throwable] { spark.sql(stmt).collect() }
+        finally GraftCatalog.occWindowHookForTest = _ => ()
+      assert(fired(), "the forged foreign commit never ran")
+      assert(isConcurrentRefusal(e), s"expected a concurrent-commit refusal, got $e")
+      assert(GraftCatalog.segmentFilesOnDisk("occ", s"rq$i") == filesBefore)
+      val rows = spark.sql(s"SELECT k, v FROM $t ORDER BY k, v").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq
+      assert(rows == Seq(1L -> "a", 2L -> "a", 2L -> "a2", 3L -> "a", 4L -> "a", 5L -> "a"),
+        "the foreign commit's state must stand")
+      spark.sql(s"DROP TABLE $t PURGE")
+    }
+  }
+
+  test("a DELETE that fails before its commit lands deletes what it wrote") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.bad PURGE")
+    spark.sql("CREATE TABLE pgraft.occ.bad (k BIGINT) USING graft")
+    spark.sql("INSERT INTO pgraft.occ.bad SELECT /*+ REPARTITION(1) */ id FROM range(10)")
+    // ALTER accepts a malformed threshold; the commit shell's check of
+    // it throws after the DELETE has written its survivors' file.
+    spark.sql("ALTER TABLE pgraft.occ.bad SET TBLPROPERTIES ('graft.autocompact.segments'='soon')")
+    val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", "bad")
+    intercept[Throwable] { spark.sql("DELETE FROM pgraft.occ.bad WHERE k < 8") }
+    assert(GraftCatalog.segmentFilesOnDisk("occ", "bad") == filesBefore,
+      "a failed DELETE left its rewritten segment file behind")
+    assert(keys("pgraft.occ.bad") == (0L until 10L))
+    spark.sql("DROP TABLE pgraft.occ.bad PURGE")
+  }
+
+  test("a refused auto-compaction does not fail the INSERT that triggered it") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.ac PURGE")
+    spark.sql(
+      """CREATE TABLE pgraft.occ.ac (k BIGINT) USING graft
+        |TBLPROPERTIES ('graft.autocompact.segments'='2')""".stripMargin)
+    spark.sql("INSERT INTO pgraft.occ.ac SELECT /*+ REPARTITION(1) */ id FROM range(10)")
+    // The INSERT's second CAS is its auto-compaction's; the foreign
+    // commit there deletes k = 0 from a segment the fold replaces.
+    val fired = loseNextCas(ident("ac"), at = 2, edit = dvOnFirstSegment)
+    try spark.sql("INSERT INTO pgraft.occ.ac VALUES (100)")
+    finally GraftCatalog.occWindowHookForTest = _ => ()
+    assert(fired(), "the forged foreign commit never ran")
+    // The INSERT landed (its file was not aborted away) exactly once.
+    assert(keys("pgraft.occ.ac") == (1L until 10L) :+ 100L)
+    spark.sql("DROP TABLE pgraft.occ.ac PURGE")
   }
 }

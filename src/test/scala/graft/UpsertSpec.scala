@@ -70,6 +70,31 @@ class UpsertSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.up.c")
   }
 
+  test("compact reports the rows left after the fold, not the shadowed ones") {
+    spark.sql("DROP TABLE IF EXISTS graft.up.cr")
+    spark.sql("CREATE TABLE graft.up.cr (k BIGINT, v STRING) USING graft")
+    spark.sql("INSERT INTO graft.up.cr VALUES (1, 'a1'), (2, 'a2'), (3, 'a3'), (4, 'a4')")
+    upsert("graft.up.cr", 2L -> "b2")
+    val r = spark.sql("CALL graft.system.compact('up', 'cr')").head()
+    assert(r.getAs[Long]("rows") == 4L, r)
+    spark.sql("DROP TABLE graft.up.cr")
+  }
+
+  test("a majority DELETE's survivors keep an upserted-away row deleted") {
+    // The rewritten survivors take the DELETE's (newer) sequence stamp,
+    // so they must not carry k=1's old row: the upsert's equality
+    // delete would no longer apply to it and 'a1' would come back.
+    spark.sql("DROP TABLE IF EXISTS graft.up.sd")
+    spark.sql("CREATE TABLE graft.up.sd (k BIGINT, v STRING) USING graft")
+    spark.sql(
+      "INSERT INTO graft.up.sd SELECT /*+ REPARTITION(1) */ id, concat('a', id) FROM range(1, 6)")
+    upsert("graft.up.sd", 1L -> "b1")
+    // 3 of the old segment's rows match: a majority, so it is rewritten.
+    spark.sql("DELETE FROM graft.up.sd WHERE k >= 3")
+    assert(kv("graft.up.sd") == Seq(1L -> "b1", 2L -> "a2"))
+    spark.sql("DROP TABLE graft.up.sd")
+  }
+
   test("metadata shortcuts decline while deletes are outstanding") {
     spark.sql("DROP TABLE IF EXISTS graft.up.m")
     spark.sql("CREATE TABLE graft.up.m (k BIGINT, v STRING) USING graft")
