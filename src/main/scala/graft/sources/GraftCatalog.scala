@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
 import org.apache.spark.sql.connector.expressions.Transform
@@ -81,8 +81,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       // tables (files/history/eq_deletes/branches).
       return GraftMetadataTables.resolve(ident)
         .getOrElse(throw new NoSuchTableException(ident))
-    new GraftCatalogTable(ident, entry.schema, entry.dir,
-      partitionCols = entry.partitionCols, tableConstraints = entry.constraints)
+    tableOf(ident, entry)
   }
 
   /** Table constraints (Spark 4 ANSI constraints surface): the catalog
@@ -203,9 +202,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // Constraints land IN the entry BEFORE the v0 publish: the v0
     // snapshot is what restore/clone/branch at version 0 re-install,
     // and a constraint-less v0 would silently drop the CHECKs there.
-    if (store.putIfAbsent(ident,
-        TableEntry(schema, Vector.empty, dir, partCols, constraints,
-          props = props)) != null) {
+    val entry = TableEntry(schema, Vector.empty, dir, partCols, constraints, props = props)
+    if (store.putIfAbsent(ident, entry) != null) {
       deleteRecursively(Paths.get(dir))
       throw new TableAlreadyExistsException(ident.toString, ident.name())
     }
@@ -218,8 +216,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       deleteRecursively(Paths.get(dir))
       throw new TableAlreadyExistsException(ident.toString, ident.name())
     }
-    new GraftCatalogTable(ident, schema, dir, partitionCols = partCols,
-      tableConstraints = constraints)
+    tableOf(ident, entry)
   }
 
   /** The TableInfo entry point is the one that carries CONSTRAINTS
@@ -270,25 +267,35 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       info.constraints().toVector, props)
   }
 
-  /** Schema evolution. ADD COLUMN (appended, nullable, optional
-    * DEFAULT) migrates the committed segments eagerly — each segment is
-    * streamed through ONE re-projection to the fully widened layout
-    * (backfill default or NULL in every new slot) into a fresh segment,
-    * and the schema + segment list swap atomically (a lazy per-read pad
-    * would leave mixed layouts on disk). RENAME COLUMN is pure metadata
-    * (positional storage). DROP COLUMN re-projects the slot out of
-    * every row, same machinery in reverse. Retype is rejected. All
-    * changes are VALIDATED before any segment I/O — a multi-change
-    * ALTER with a late unsupported change must fail without having
-    * written (and then orphaned) files — and a mid-rewrite I/O failure
-    * deletes the unpublished fresh segments before rethrowing.
+  /** Schema evolution. Each ALTER takes one of three shapes; the
+    * branches below only validate and return what they change.
+    *
+    *  - METADATA EDIT — SET/UNSET TBLPROPERTIES, ADD/DROP CONSTRAINT,
+    *    column COMMENT / DROP NOT NULL / SET+DROP DEFAULT: the live
+    *    entry changes and is persisted; no snapshot, no segment I/O.
+    *  - RENAME SNAPSHOT — RENAME COLUMN, top-level or nested at any
+    *    depth: segments store rows positionally, so only the schema and
+    *    the name-keyed metadata change, published as a `dataChange =
+    *    false` snapshot; no file touched.
+    *  - RE-PROJECTION — safe type widening, DROP COLUMN, reorder
+    *    (FIRST / AFTER) and ADD COLUMN, top-level or nested: the row
+    *    layout is physical, so [[reprojectTable]] streams every segment
+    *    through one projection to the new layout and swaps schema and
+    *    segments in one `dataChange = false` snapshot.
+    *
+    * Every shape ends in [[editEntry]], the one entry edit.
+    * All changes are VALIDATED before any segment I/O — a multi-change
+    * ALTER with a late invalid change fails without having written a
+    * file — and a failure before the commit lands (a mid-rewrite I/O
+    * error, a lost ledger CAS) deletes the files it wrote. A lost CAS
+    * refuses the statement.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = mutate {
     refreshIfStale(ident) // migrate the LATEST state, not a stale snapshot of it
     if (store.get(ident) == null) throw new NoSuchTableException(ident)
     // Property-only ALTERs (SET/UNSET TBLPROPERTIES) are pure metadata:
     // no segment I/O, no new snapshot.
-    if (changes.forall(c => c.isInstanceOf[TableChange.SetProperty] ||
+    val entry = if (changes.forall(c => c.isInstanceOf[TableChange.SetProperty] ||
         c.isInstanceOf[TableChange.RemoveProperty])) {
       // CHANGING the declared write order makes every existing
       // sorted-provenance flag a claim about the WRONG columns — the
@@ -304,9 +311,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
             .contains(s.value())
         case _ => false
       }
-      val result = store.compute(ident, (_, prev) => {
-        require(prev != null, s"table $ident dropped mid-alter")
-        changes.foldLeft(prev) {
+      editEntry(ident, snapshot = false, unsort = orderChanged) { prev =>
+        Some(changes.foldLeft(prev) {
           case (e, s: TableChange.SetProperty) =>
             if (ReservedProps.contains(s.property()) || s.property().startsWith("option."))
               throw new UnsupportedOperationException(
@@ -350,24 +356,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
                 s"table property '${r.property()}' is reserved")
             e.copy(props = e.props - r.property())
           case (e, _) => e // unreachable under the forall guard
-        }
-      })
-      if (orderChanged) clearSortedFlags(ident)
-      persistTable(ident)
-      new GraftCatalogTable(ident, result.schema, result.dir,
-        partitionCols = result.partitionCols, tableConstraints = result.constraints)
+        })
+      }
     }
     // Constraint-only ALTERs are pure metadata: no segment I/O.
     else if (changes.forall(c => c.isInstanceOf[TableChange.AddConstraint] ||
         c.isInstanceOf[TableChange.DropConstraint])) {
-      // NOTE: no `return` anywhere in this method — alterTable's body is
-      // a closure (mutate {}), where `return` compiles to a
-      // NonLocalReturnControl THROWABLE that a careless catch would
-      // swallow (the DeleteColumn cleanup below caught exactly that and
-      // deleted freshly migrated segments). Branches yield values.
-      val result = store.compute(ident, (_, prev) => {
-        require(prev != null, s"table $ident dropped mid-alter")
-        changes.foldLeft(prev) {
+      editEntry(ident, snapshot = false) { prev =>
+        Some(changes.foldLeft(prev) {
           case (e, add: TableChange.AddConstraint) =>
             validateConstraint(add.constraint())
             if (e.constraints.exists(_.name() == add.constraint().name()))
@@ -380,11 +376,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
                 s"no such constraint ${drop.name()} on $ident")
             e.copy(constraints = e.constraints.filterNot(_.name() == drop.name()))
           case (e, _) => e
-        }
-      })
-      persistTable(ident) // constraint-only ALTER publishes no snapshot
-      new GraftCatalogTable(ident, result.schema, result.dir,
-        partitionCols = result.partitionCols, tableConstraints = result.constraints)
+        })
+      }
     }
     // RENAME COLUMN is PURE METADATA here: segments store rows
     // positionally (UnsafeRow ordinals), so only the schema's field
@@ -408,9 +401,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           case _ => false
         }
       }
-      val result = store.compute(ident, (_, prev) => {
-        require(prev != null, s"table $ident dropped mid-alter")
-        changes.foldLeft(prev) { case (e, rn: TableChange.RenameColumn) =>
+      // A snapshot of logically identical rows.
+      editEntry(ident, snapshot = true, unsort = orderTouched) { prev =>
+        Some(changes.foldLeft(prev) { case (e, rn: TableChange.RenameColumn) =>
           // NESTED field rename (`RENAME COLUMN meta.a TO a2`, any
           // depth, incl. fields inside array<struct> / map<_,struct>
           // via `.element` / `.value`): the positional storage keys
@@ -429,14 +422,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
             // write time — a renamed inner field would leave them
             // dangling and brick every future write): any constraint
             // or generated column referencing into this struct refuses.
-            if (e.constraints.exists(_.toDDL.contains(parent)))
-              throw new UnsupportedOperationException(
-                s"struct column $parent is referenced by a constraint; drop it first")
-            if (GraftCatalog.generationRefs(e.schema)
-                .contains(parent.toLowerCase(java.util.Locale.ROOT)))
-              throw new UnsupportedOperationException(
-                s"struct column $parent is referenced by a generation expression — " +
-                  "renaming a field inside it would orphan the formula")
+            refuseIfPinned(e, Seq(parent),
+              s"struct column $parent is referenced by a constraint; drop it first",
+              Some(s"struct column $parent is referenced by a generation expression — " +
+                "renaming a field inside it would orphan the formula"))
             val newDt = NestedSchema.restructAt(
               e.schema.fields(pi).dataType, parts.tail.dropRight(1), full) { st =>
               if (!st.fieldNames.contains(inner))
@@ -456,14 +445,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           val i = e.schema.fieldIndex(from)
           if (e.schema.fieldNames.contains(rn.newName()))
             throw new IllegalArgumentException(s"column ${rn.newName()} already exists")
-          if (e.constraints.exists(_.toDDL.contains(from)))
-            throw new UnsupportedOperationException(
-              s"column $from is referenced by a constraint; drop it first")
-          if (GraftCatalog.generationRefs(e.schema)
-              .contains(from.toLowerCase(java.util.Locale.ROOT)))
-            throw new UnsupportedOperationException(
-              s"column $from is referenced by a generation expression — " +
-                "renaming it would orphan the generated column's formula")
+          refuseIfPinned(e, Seq(from),
+            s"column $from is referenced by a constraint; drop it first",
+            Some(s"column $from is referenced by a generation expression — " +
+              "renaming it would orphan the generated column's formula"))
           val fields = e.schema.fields.clone()
           fields(i) = fields(i).copy(name = rn.newName())
           // An identity column's allocation watermark is keyed by
@@ -498,12 +483,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
               else s))
           }
           case (e, _) => e // unreachable under the forall guard
-        }
-      })
-      if (orderTouched) clearSortedFlags(ident)
-      publish(ident, dataChange = false) // rename: logically identical rows
-      new GraftCatalogTable(ident, result.schema, result.dir,
-        partitionCols = result.partitionCols, tableConstraints = result.constraints)
+        })
+      }
     }
     // ALTER COLUMN TYPE: only SAFE WIDENINGS (every old value exactly
     // representable in the new type) — int-family upward, float→double
@@ -531,268 +512,198 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           kf == kt && (!cn || tn) && widens(vf, vt)
         case _ => false
       }
-      val written = scala.collection.mutable.ArrayBuffer[Segment]()
-      try {
-        val result = store.compute(ident, (_, prev) => {
-          require(prev != null, s"table $ident dropped mid-alter")
-          // Split: top-level retypes keyed by name; nested retypes
-          // (parent, inner, to) COMPOSE per parent — one alterTable
-          // call may widen several fields inside the same struct
-          // (MERGE WITH SCHEMA EVOLUTION pushes them all at once, and
-          // the merge user has no way to split the statement).
-          val topRetypes = changes.collect {
-            case u: TableChange.UpdateColumnType if u.fieldNames().length == 1 =>
-              val n = u.fieldNames()(0)
-              val f = prev.schema.fields.find(_.name == n).getOrElse(
-                throw new IllegalArgumentException(s"no such column $n"))
-              if (!widens(f.dataType, u.newDataType()))
-                throw new UnsupportedOperationException(
-                  s"unsupported retype of $n: ${f.dataType.simpleString} -> " +
-                    s"${u.newDataType().simpleString} is not a safe widening")
-              if (PartField.sources(prev.partitionCols).contains(n))
-                throw new UnsupportedOperationException(
-                  "cannot retype a partition column")
-              if (prev.eqDeletes.exists(_.keyCols.contains(n)))
-                throw new UnsupportedOperationException(
-                  s"column $n keys outstanding equality deletes (upserts); " +
-                    "run CALL graft.system.compact to materialize them first")
-              if (prev.constraints.exists(_.toDDL.contains(n)))
-                throw new UnsupportedOperationException(
-                  s"column $n is referenced by a constraint; drop it first")
-              n -> u.newDataType()
-          }
-          // NESTED widen at ANY depth (`ALTER COLUMN meta.a.b TYPE
-          // BIGINT`, `items.element.qty`, `m.value.amt`, bare
-          // container slots `xs.element` / `m.value`): the top-level
-          // update becomes struct -> widened-struct, and the
-          // projection's Cast upcasts structs/arrays/maps element-wise
-          // at any depth, preserving NULL parents and containers. Map
-          // KEYS never retype — key identity IS the map's semantics
-          // (refused inside NestedSchema.retypeAt). Validation, the
-          // key refusal, and the widened type all come from ONE
-          // recursive traversal so they can never disagree.
-          val nestedRetypes: Seq[(Seq[String], DataType)] = changes.collect {
-            case u: TableChange.UpdateColumnType if u.fieldNames().length >= 2 =>
-              val parts = u.fieldNames().toSeq
-              if (!prev.schema.fieldNames.contains(parts.head))
-                throw new IllegalArgumentException(s"no such column ${parts.head}")
-              (parts, u.newDataType())
-          }
-          // Conflicts in one statement: duplicate targets, and any
-          // target nested inside another (a column and a field within
-          // it, or a field and its own subfield) — the two rewrites
-          // would race over the same slot.
-          val allPaths: Seq[Seq[String]] =
-            topRetypes.map(t => Seq(t._1)) ++ nestedRetypes.map(_._1)
-          if (allPaths.distinct.length != allPaths.length)
-            throw new UnsupportedOperationException(
-              "conflicting retypes of the same column/field in one statement")
-          for (p <- allPaths; q <- allPaths; if p != q && q.startsWith(p))
-            throw new UnsupportedOperationException(
-              s"cannot retype ${p.mkString(".")} and ${q.mkString(".")} " +
-                "(nested inside it) in one statement")
-          val nestedByParent: Map[String, DataType] =
-            nestedRetypes.groupBy(_._1.head).map { case (parent, ws) =>
-              parent -> ws.foldLeft(
-                prev.schema.fields.find(_.name == parent).get.dataType) {
-                case (dt, (parts, to)) =>
-                  val full = parts.mkString(".")
-                  NestedSchema.retypeAt(dt, parts.tail, full) { cur =>
-                    if (!widens(cur, to))
-                      throw new UnsupportedOperationException(
-                        s"unsupported retype of $full: ${cur.simpleString} -> " +
-                          s"${to.simpleString} is not a safe widening")
-                    to
-                  }
-              }
+      reprojectTable(ident) { prev =>
+        // Split: top-level retypes keyed by name; nested retypes
+        // (parent, inner, to) COMPOSE per parent — one alterTable
+        // call may widen several fields inside the same struct
+        // (MERGE WITH SCHEMA EVOLUTION pushes them all at once, and
+        // the merge user has no way to split the statement).
+        val topRetypes = changes.collect {
+          case u: TableChange.UpdateColumnType if u.fieldNames().length == 1 =>
+            val n = u.fieldNames()(0)
+            val f = prev.schema.fields.find(_.name == n).getOrElse(
+              throw new IllegalArgumentException(s"no such column $n"))
+            if (!widens(f.dataType, u.newDataType()))
+              throw new UnsupportedOperationException(
+                s"unsupported retype of $n: ${f.dataType.simpleString} -> " +
+                  s"${u.newDataType().simpleString} is not a safe widening")
+            if (PartField.sources(prev.partitionCols).contains(n))
+              throw new UnsupportedOperationException(
+                "cannot retype a partition column")
+            if (prev.eqDeletes.exists(_.keyCols.contains(n)))
+              throw new UnsupportedOperationException(
+                s"column $n keys outstanding equality deletes (upserts); " +
+                  "run CALL graft.system.compact to materialize them first")
+            refuseIfPinned(prev, Seq(n),
+              s"column $n is referenced by a constraint; drop it first")
+            n -> u.newDataType()
+        }
+        // NESTED widen at ANY depth (`ALTER COLUMN meta.a.b TYPE
+        // BIGINT`, `items.element.qty`, `m.value.amt`, bare
+        // container slots `xs.element` / `m.value`): the top-level
+        // update becomes struct -> widened-struct, and the
+        // projection's Cast upcasts structs/arrays/maps element-wise
+        // at any depth, preserving NULL parents and containers. Map
+        // KEYS never retype — key identity IS the map's semantics
+        // (refused inside NestedSchema.retypeAt). Validation, the
+        // key refusal, and the widened type all come from ONE
+        // recursive traversal so they can never disagree.
+        val nestedRetypes: Seq[(Seq[String], DataType)] = changes.collect {
+          case u: TableChange.UpdateColumnType if u.fieldNames().length >= 2 =>
+            val parts = u.fieldNames().toSeq
+            if (!prev.schema.fieldNames.contains(parts.head))
+              throw new IllegalArgumentException(s"no such column ${parts.head}")
+            (parts, u.newDataType())
+        }
+        // Conflicts in one statement: duplicate targets, and any
+        // target nested inside another (a column and a field within
+        // it, or a field and its own subfield) — the two rewrites
+        // would race over the same slot.
+        val allPaths: Seq[Seq[String]] =
+          topRetypes.map(t => Seq(t._1)) ++ nestedRetypes.map(_._1)
+        if (allPaths.distinct.length != allPaths.length)
+          throw new UnsupportedOperationException(
+            "conflicting retypes of the same column/field in one statement")
+        for (p <- allPaths; q <- allPaths; if p != q && q.startsWith(p))
+          throw new UnsupportedOperationException(
+            s"cannot retype ${p.mkString(".")} and ${q.mkString(".")} " +
+              "(nested inside it) in one statement")
+        val nestedByParent: Map[String, DataType] =
+          nestedRetypes.groupBy(_._1.head).map { case (parent, ws) =>
+            parent -> ws.foldLeft(
+              prev.schema.fields.find(_.name == parent).get.dataType) {
+              case (dt, (parts, to)) =>
+                val full = parts.mkString(".")
+                NestedSchema.retypeAt(dt, parts.tail, full) { cur =>
+                  if (!widens(cur, to))
+                    throw new UnsupportedOperationException(
+                      s"unsupported retype of $full: ${cur.simpleString} -> " +
+                        s"${to.simpleString} is not a safe widening")
+                  to
+                }
             }
-          val updates: Map[String, org.apache.spark.sql.types.DataType] =
-            topRetypes.toMap ++ nestedByParent
-          val widenedSchema = StructType(prev.schema.fields.map(f =>
-            updates.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f)))
-          val exprs = prev.schema.fields.zipWithIndex.map { case (f, i) =>
-            val ref = org.apache.spark.sql.catalyst.expressions.BoundReference(
-              i, f.dataType, f.nullable)
-            updates.get(f.name) match {
-              case Some(t) => org.apache.spark.sql.catalyst.expressions.Cast(
-                ref, t, Some("UTC")): org.apache.spark.sql.catalyst.expressions.Expression
-              case None => ref: org.apache.spark.sql.catalyst.expressions.Expression
-            }
-          }.toSeq
-          val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
-          val migrated = prev.segments.flatMap { seg =>
-            val s = SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, widenedSchema)(
-              r => Some(proj(r)))
-            s.foreach(written += _)
-            s
           }
-          prev.copy(schema = widenedSchema, segments = migrated)
-        })
-        publish(ident, dataChange = false) // widen: 1:1 re-projection, same rows
-        new GraftCatalogTable(ident, result.schema, result.dir,
-          partitionCols = result.partitionCols, tableConstraints = result.constraints)
-      } catch { case scala.util.control.NonFatal(e) =>
-        written.foreach(SegmentIO.delete)
-        throw e
+        val updates: Map[String, DataType] = topRetypes.toMap ++ nestedByParent
+        Some((StructType(prev.schema.fields.map(f =>
+          updates.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f))),
+          prev.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+            val ref = BoundReference(i, f.dataType, f.nullable)
+            updates.get(f.name).fold(ref: Expression)(Cast(ref, _, Some("UTC")))
+          }))
       }
     }
     // DROP COLUMN: positional layout means the column's slot must leave
     // every row — one streamed re-projection per segment (the ADD
     // COLUMN migration machinery in reverse), atomic swap at the end.
     else if (changes.forall(_.isInstanceOf[TableChange.DeleteColumn])) {
-      val written = scala.collection.mutable.ArrayBuffer[Segment]()
-      // IF EXISTS resolving to nothing must be a TRUE no-op — no
-      // segment rewrite, no published snapshot.
-      var noop = false
-      try {
-        val result = store.compute(ident, (_, prev) => {
-          require(prev != null, s"table $ident dropped mid-alter")
-          // NESTED field drops at ANY depth (`DROP COLUMN meta.b`,
-          // `meta.a.b`, `items.element.f`, `m.value.f`) rebuild the
-          // enclosing struct minus the field — same streamed
-          // re-projection, NULL structs/containers preserved at every
-          // level (NestedSchema.rebuildExpr). Collected as
-          // (topColumn, parentPathWithinColumn, innerName).
-          val nestedDropList: Seq[(String, Seq[String], String)] = changes.flatMap {
-            case d: TableChange.DeleteColumn if d.fieldNames().length >= 2 =>
-              val parts = d.fieldNames().toSeq
-              val ifE = java.lang.Boolean.TRUE.equals(d.ifExists())
-              val full = parts.mkString(".")
-              prev.schema.fields.find(_.name == parts.head) match {
-                case None if ifE => None // IF EXISTS: column gone = no-op
-                case None =>
-                  throw new IllegalArgumentException(s"no such column ${parts.head}")
-                case Some(pf) =>
-                  // Navigate to the enclosing struct. A missing field
-                  // ANYWHERE along the path under IF EXISTS is a TRUE
-                  // no-op (IllegalArgumentException); a shape error —
-                  // addressing into a non-struct, a map key — is real
-                  // and propagates (UnsupportedOperationException).
-                  val present =
-                    try {
-                      var has = false
-                      NestedSchema.restructAt(
-                        pf.dataType, parts.tail.dropRight(1), full) { st =>
-                        has = st.fieldNames.contains(parts.last); st
-                      }
-                      if (!has && !ifE)
-                        throw new IllegalArgumentException(s"no such field $full")
-                      has
-                    } catch {
-                      case _: IllegalArgumentException if ifE => false
+      reprojectTable(ident) { prev =>
+        // NESTED field drops at ANY depth (`DROP COLUMN meta.b`,
+        // `meta.a.b`, `items.element.f`, `m.value.f`) rebuild the
+        // enclosing struct minus the field — same streamed
+        // re-projection, NULL structs/containers preserved at every
+        // level (NestedSchema.rebuildExpr). Collected as
+        // (topColumn, parentPathWithinColumn, innerName).
+        val nestedDropList: Seq[(String, Seq[String], String)] = changes.flatMap {
+          case d: TableChange.DeleteColumn if d.fieldNames().length >= 2 =>
+            val parts = d.fieldNames().toSeq
+            val ifE = java.lang.Boolean.TRUE.equals(d.ifExists())
+            val full = parts.mkString(".")
+            prev.schema.fields.find(_.name == parts.head) match {
+              case None if ifE => None // IF EXISTS: column gone = no-op
+              case None =>
+                throw new IllegalArgumentException(s"no such column ${parts.head}")
+              case Some(pf) =>
+                // Navigate to the enclosing struct. A missing field
+                // ANYWHERE along the path under IF EXISTS is a TRUE
+                // no-op (IllegalArgumentException); a shape error —
+                // addressing into a non-struct, a map key — is real
+                // and propagates (UnsupportedOperationException).
+                val present =
+                  try {
+                    var has = false
+                    NestedSchema.restructAt(
+                      pf.dataType, parts.tail.dropRight(1), full) { st =>
+                      has = st.fieldNames.contains(parts.last); st
                     }
-                  if (!present) None
-                  else {
-                    // CONSERVATIVE parent-level guards, mirroring the
-                    // top-level drop screens: a stored constraint or
-                    // generation expression referencing into this struct
-                    // would dangle on the dropped field.
-                    if (prev.constraints.exists(_.toDDL.contains(parts.head)))
-                      throw new UnsupportedOperationException(
-                        s"struct column ${parts.head} is referenced by a constraint; " +
-                          "drop it first")
-                    if (GraftCatalog.generationRefs(prev.schema)
-                        .contains(parts.head.toLowerCase(java.util.Locale.ROOT)))
-                      throw new UnsupportedOperationException(
-                        s"struct column ${parts.head} is referenced by a generation " +
-                          "expression; drop the generated column first")
-                    Some((parts.head, parts.tail.dropRight(1), parts.last))
+                    if (!has && !ifE)
+                      throw new IllegalArgumentException(s"no such field $full")
+                    has
+                  } catch {
+                    case _: IllegalArgumentException if ifE => false
                   }
-              }
-            case _ => None
-          }
-          // Per top column: ordered (parentPath -> inner names) groups,
-          // applied sequentially over the evolving type/expression.
-          val nestedDrops: Map[String, Seq[(Seq[String], Set[String])]] =
-            nestedDropList.groupBy(_._1).map { case (c, xs) =>
-              c -> xs.map(_._2).distinct.map(pp =>
-                pp -> xs.collect { case (_, `pp`, inner) => inner }.toSet)
-            }
-          def droppedType(colName: String, start:
-              org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
-            nestedDrops(colName).foldLeft(start) { case (dt, (pp, inners)) =>
-              val full = (colName +: pp).mkString(".")
-              NestedSchema.restructAt(dt, pp, full) { st =>
-                if (st.fields.forall(f => inners.contains(f.name)))
-                  throw new UnsupportedOperationException(
-                    s"cannot drop every field of struct " +
-                      s"${if (pp.isEmpty) s"column $colName" else full} — drop the " +
-                      "struct itself")
-                StructType(st.fields.filterNot(f => inners(f.name)))
-              }
-            }
-          val dropNames = changes.collect {
-            case d: TableChange.DeleteColumn if d.fieldNames().length == 1 =>
-              val n = d.fieldNames()(0)
-              if (!prev.schema.fieldNames.contains(n) &&
-                  !java.lang.Boolean.TRUE.equals(d.ifExists()))
-                throw new IllegalArgumentException(s"no such column $n")
-              n
-          }.toSet
-          if (PartField.sources(prev.partitionCols).exists(dropNames))
-            throw new UnsupportedOperationException(
-              "cannot drop a partition column")
-          if (prev.eqDeletes.exists(_.keyCols.exists(dropNames)))
-            throw new UnsupportedOperationException(
-              "cannot drop a column keying outstanding equality deletes (upserts); " +
-                "run CALL graft.system.compact to materialize them first")
-          if (prev.constraints.exists(c => dropNames.exists(c.toDDL.contains)))
-            throw new UnsupportedOperationException(
-              "cannot drop a column referenced by a constraint; drop the constraint first")
-          if (GraftCatalog.generationRefs(prev.schema)
-              .intersect(dropNames.map(_.toLowerCase(java.util.Locale.ROOT))).nonEmpty)
-            throw new UnsupportedOperationException(
-              "cannot drop a column referenced by a generation expression; " +
-                "drop the generated column first")
-          val keepIdx = prev.schema.fields.zipWithIndex
-            .filterNot { case (f, _) => dropNames.contains(f.name) }.map(_._2)
-          if (keepIdx.isEmpty) throw new UnsupportedOperationException(
-            "cannot drop every column of a table")
-          if (dropNames.isEmpty && nestedDrops.isEmpty) { noop = true; prev }
-          else {
-          import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-          val narrowed = StructType(keepIdx.map { i =>
-            val f = prev.schema.fields(i)
-            if (nestedDrops.contains(f.name))
-              f.copy(dataType = droppedType(f.name, f.dataType))
-            else f
-          })
-          val exprs = keepIdx.toSeq.map { i =>
-            val f = prev.schema.fields(i)
-            val ref = BoundReference(i, f.dataType, f.nullable)
-            nestedDrops.get(f.name) match {
-              case None => ref: Expression
-              case Some(groups) =>
-                // Expression and type evolve in lockstep group-by-group
-                // so a later drop addresses the already-narrowed layout.
-                var dt: org.apache.spark.sql.types.DataType = f.dataType
-                var ex: Expression = ref
-                groups.foreach { case (pp, inners) =>
-                  val full = (f.name +: pp).mkString(".")
-                  ex = NestedSchema.rebuildExpr(
-                    ex, dt, pp, NestedSchema.DropFields(inners), full)
-                  dt = NestedSchema.restructAt(dt, pp, full)(st =>
-                    StructType(st.fields.filterNot(sf => inners(sf.name))))
+                if (!present) None
+                else {
+                  // CONSERVATIVE parent-level guards, mirroring the
+                  // top-level drop screens: a stored constraint or
+                  // generation expression referencing into this struct
+                  // would dangle on the dropped field.
+                  refuseIfPinned(prev, Seq(parts.head),
+                    s"struct column ${parts.head} is referenced by a constraint; " +
+                      "drop it first",
+                    Some(s"struct column ${parts.head} is referenced by a generation " +
+                      "expression; drop the generated column first"))
+                  Some((parts.head, parts.tail.dropRight(1), parts.last))
                 }
-                ex
+            }
+          case _ => None
+        }
+        // Per top column: ordered (parentPath -> inner names) groups,
+        // applied sequentially over the evolving type/expression.
+        val nestedDrops: Map[String, Seq[(Seq[String], Set[String])]] =
+          nestedDropList.groupBy(_._1).map { case (c, xs) =>
+            c -> xs.map(_._2).distinct.map(pp =>
+              pp -> xs.collect { case (_, `pp`, inner) => inner }.toSet)
+          }
+        val dropNames = changes.collect {
+          case d: TableChange.DeleteColumn if d.fieldNames().length == 1 =>
+            val n = d.fieldNames()(0)
+            if (!prev.schema.fieldNames.contains(n) &&
+                !java.lang.Boolean.TRUE.equals(d.ifExists()))
+              throw new IllegalArgumentException(s"no such column $n")
+            n
+        }.toSet
+        if (PartField.sources(prev.partitionCols).exists(dropNames))
+          throw new UnsupportedOperationException(
+            "cannot drop a partition column")
+        if (prev.eqDeletes.exists(_.keyCols.exists(dropNames)))
+          throw new UnsupportedOperationException(
+            "cannot drop a column keying outstanding equality deletes (upserts); " +
+              "run CALL graft.system.compact to materialize them first")
+        refuseIfPinned(prev, dropNames,
+          "cannot drop a column referenced by a constraint; drop the constraint first",
+          Some("cannot drop a column referenced by a generation expression; " +
+            "drop the generated column first"))
+        val keepIdx = prev.schema.fields.indices
+          .filterNot(i => dropNames.contains(prev.schema.fields(i).name))
+        if (keepIdx.isEmpty) throw new UnsupportedOperationException(
+          "cannot drop every column of a table")
+        // IF EXISTS resolving to nothing is a TRUE no-op — no segment
+        // rewrite, no published snapshot.
+        if (keepIdx.length == prev.schema.length && nestedDrops.isEmpty) None
+        else {
+          // Per kept column: its field and expression, evolved in
+          // lockstep group-by-group so a later nested drop addresses
+          // the already-narrowed layout.
+          val cols = keepIdx.map { i =>
+            val f = prev.schema.fields(i)
+            nestedDrops.getOrElse(f.name, Nil).foldLeft(
+              (f, BoundReference(i, f.dataType, f.nullable): Expression)) {
+              case ((g, ex), (pp, inners)) =>
+                val full = (f.name +: pp).mkString(".")
+                val dt = NestedSchema.restructAt(g.dataType, pp, full) { st =>
+                  if (st.fields.forall(sf => inners.contains(sf.name)))
+                    throw new UnsupportedOperationException(
+                      s"cannot drop every field of struct " +
+                        s"${if (pp.isEmpty) s"column ${f.name}" else full} — drop the " +
+                        "struct itself")
+                  StructType(st.fields.filterNot(sf => inners(sf.name)))
+                }
+                (g.copy(dataType = dt), NestedSchema.rebuildExpr(
+                  ex, g.dataType, pp, NestedSchema.DropFields(inners), full))
             }
           }
-          val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
-          val migrated = prev.segments.flatMap { seg =>
-            val s = SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, narrowed)(
-              r => Some(proj(r)))
-            s.foreach(written += _)
-            s
-          }
-          prev.copy(schema = narrowed, segments = migrated)
-          }
-        })
-        if (!noop) publish(ident, dataChange = false) // 1:1 re-projection; old segments stay readable via retained snapshots
-        new GraftCatalogTable(ident, result.schema, result.dir,
-          partitionCols = result.partitionCols, tableConstraints = result.constraints)
-      } catch { case scala.util.control.NonFatal(e) =>
-        written.foreach(SegmentIO.delete)
-        throw e
+          Some((StructType(cols.map(_._1)), cols.map(_._2)))
+        }
       }
     }
     // Metadata-only COLUMN updates — COMMENT, DROP NOT NULL, SET/DROP
@@ -806,9 +717,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         c.isInstanceOf[TableChange.UpdateColumnComment] ||
         c.isInstanceOf[TableChange.UpdateColumnNullability] ||
         c.isInstanceOf[TableChange.UpdateColumnDefaultValue])) {
-      val result = store.compute(ident, (_, prev) => {
-        require(prev != null, s"table $ident dropped mid-alter")
-        changes.foldLeft(prev) { (e, c) =>
+      editEntry(ident, snapshot = false) { prev =>
+        Some(changes.foldLeft(prev) { (e, c) =>
           val cc = c.asInstanceOf[TableChange.ColumnChange]
           val parts = cc.fieldNames().toSeq
           val full = parts.mkString(".")
@@ -857,11 +767,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
               StructType(st.fields.updated(j, edited(st.fields(j))))
             })
           e.copy(schema = StructType(fields))
-        }
-      })
-      persistTable(ident)
-      new GraftCatalogTable(ident, result.schema, result.dir,
-        partitionCols = result.partitionCols, tableConstraints = result.constraints)
+        })
+      }
     }
     // ALTER COLUMN x FIRST / AFTER y: positional storage makes column
     // ORDER physical — one streamed permutation re-projection per
@@ -870,65 +777,51 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // watermarks, eq-delete keys, constraints, generation refs)
     // follows automatically.
     else if (changes.forall(_.isInstanceOf[TableChange.UpdateColumnPosition])) {
-      val written = scala.collection.mutable.ArrayBuffer[Segment]()
-      try {
-        val result = store.compute(ident, (_, prev) => {
-          require(prev != null, s"table $ident dropped mid-alter")
-          var order: Vector[Int] = prev.schema.fields.indices.toVector
-          changes.foreach { case m: TableChange.UpdateColumnPosition =>
-            if (m.fieldNames().length != 1) throw new UnsupportedOperationException(
-              s"graft catalog repositions only top-level columns, got " +
-                m.fieldNames().mkString("."))
-            val n = m.fieldNames()(0)
-            val cur = order.indexWhere(i => prev.schema.fields(i).name == n)
-            if (cur < 0) throw new IllegalArgumentException(s"no such column $n")
-            val idx = order(cur)
-            val rest = order.patch(cur, Nil, 1)
-            order = m.position() match {
-              case _: TableChange.First => idx +: rest
-              case a: TableChange.After =>
-                val t = rest.indexWhere(i => prev.schema.fields(i).name == a.column())
-                if (t < 0) throw new IllegalArgumentException(
-                  s"AFTER target column ${a.column()} not found")
-                rest.patch(t + 1, Seq(idx), 0)
-              case other => throw new UnsupportedOperationException(
-                s"unsupported column position $other")
-            }
+      reprojectTable(ident) { prev =>
+        var order: Vector[Int] = prev.schema.fields.indices.toVector
+        changes.foreach { case m: TableChange.UpdateColumnPosition =>
+          if (m.fieldNames().length != 1) throw new UnsupportedOperationException(
+            s"graft catalog repositions only top-level columns, got " +
+              m.fieldNames().mkString("."))
+          val n = m.fieldNames()(0)
+          val cur = order.indexWhere(i => prev.schema.fields(i).name == n)
+          if (cur < 0) throw new IllegalArgumentException(s"no such column $n")
+          val idx = order(cur)
+          val rest = order.patch(cur, Nil, 1)
+          order = m.position() match {
+            case _: TableChange.First => idx +: rest
+            case a: TableChange.After =>
+              val t = rest.indexWhere(i => prev.schema.fields(i).name == a.column())
+              if (t < 0) throw new IllegalArgumentException(
+                s"AFTER target column ${a.column()} not found")
+              rest.patch(t + 1, Seq(idx), 0)
+            case other => throw new UnsupportedOperationException(
+              s"unsupported column position $other")
           }
-          val permuted = StructType(order.map(prev.schema.fields(_)))
-          val exprs = order.map { i =>
-            val f = prev.schema.fields(i)
-            org.apache.spark.sql.catalyst.expressions.BoundReference(
-              i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-          }
-          val proj =
-            org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
-          val migrated = prev.segments.flatMap { seg =>
-            val s = SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, permuted)(
-              r => Some(proj(r)))
-            s.foreach(written += _)
-            s
-          }
-          prev.copy(schema = permuted, segments = migrated)
-        })
-        publish(ident, dataChange = false) // reorder: 1:1 permutation, same rows
-        new GraftCatalogTable(ident, result.schema, result.dir,
-          partitionCols = result.partitionCols, tableConstraints = result.constraints)
-      } catch { case scala.util.control.NonFatal(e) =>
-        written.foreach(SegmentIO.delete)
-        throw e
+        }
+        Some((StructType(order.map(prev.schema.fields(_))), order.map { i =>
+          val f = prev.schema.fields(i)
+          BoundReference(i, f.dataType, f.nullable): Expression
+        }))
       }
     }
-    else alterAddColumns(ident, changes)
+    else reprojectTable(ident)(addColumnsPlan(changes))
+    tableOf(ident, entry)
   }
 
-  private def alterAddColumns(ident: Identifier, changes: Seq[TableChange]): Table = {
+  /** The live table `e` describes. */
+  private def tableOf(ident: Identifier, e: TableEntry): Table =
+    new GraftCatalogTable(ident, e.schema, e.dir,
+      partitionCols = e.partitionCols, tableConstraints = e.constraints)
+
+  /** ADD COLUMN's re-projection plan (see [[reprojectTable]]). */
+  private def addColumnsPlan(changes: Seq[TableChange])(
+      prev: TableEntry): Option[(StructType, Seq[Expression])] = {
     // Each add: the widened field (DEFAULT sql kept in the standard
     // CURRENT_DEFAULT/EXISTS_DEFAULT metadata keys so the analyzer
     // fills omitted INSERT columns) + the backfill literal for rows
     // that exist NOW (ANSI: evaluated default at ALTER time, else null).
-    val adds: Seq[(org.apache.spark.sql.types.StructField,
-        org.apache.spark.sql.catalyst.expressions.Literal)] = changes.map {
+    val adds: Seq[(org.apache.spark.sql.types.StructField, Literal)] = changes.map {
       case add: TableChange.AddColumn if add.fieldNames().length == 1 =>
         val base = org.apache.spark.sql.types.StructField(
           add.fieldNames()(0), add.dataType(), nullable = true)
@@ -941,11 +834,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
                 .build()
               case None => base.metadata
             }
-            (base.copy(metadata = md),
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                d.getValue.value(), d.getValue.dataType()))
+            (base.copy(metadata = md), Literal(d.getValue.value(), d.getValue.dataType()))
           case None =>
-            (base, org.apache.spark.sql.catalyst.expressions.Literal(null, add.dataType()))
+            (base, Literal(null, add.dataType()))
         }
       case add: TableChange.AddColumn if add.fieldNames().length >= 2 =>
         // NESTED field add (any depth, FIRST/AFTER honored within the
@@ -954,7 +845,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         if (add.defaultValue() != null) throw new UnsupportedOperationException(
           s"DEFAULT on a nested field (${add.fieldNames().mkString(".")}) is not supported")
         (org.apache.spark.sql.types.StructField("", org.apache.spark.sql.types.NullType),
-          org.apache.spark.sql.catalyst.expressions.Literal(null))
+          Literal(null))
       case other =>
         throw new UnsupportedOperationException(
           s"unsupported ADD COLUMNS change: $other")
@@ -964,8 +855,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // add — the parent column must be REBUILT row-by-row (same streamed
     // re-projection as DROP/widen). NULL structs stay NULL: a row whose
     // parent was never set must not sprout a struct of nulls.
-    val topAdds: Seq[(org.apache.spark.sql.types.StructField,
-        org.apache.spark.sql.catalyst.expressions.Literal,
+    val topAdds: Seq[(org.apache.spark.sql.types.StructField, Literal,
         Option[TableChange.ColumnPosition])] = changes.zip(adds).collect {
       case (a: TableChange.AddColumn, (f, lit)) if a.fieldNames().length == 1 =>
         (f, lit, Option(a.position()))
@@ -990,82 +880,59 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
             org.apache.spark.sql.types.StructField(parts.last, a.dataType(), nullable = true),
             pos))
       }.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-    val written = scala.collection.mutable.ArrayBuffer[Segment]()
-    try {
-      val result = store.compute(ident, (_, prev) => {
-        require(prev != null, s"table $ident dropped mid-alter")
-        import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-        nestedAdds.foreach { case (parent, _) =>
-          if (!prev.schema.fieldNames.contains(parent))
-            throw new IllegalArgumentException(s"no such column $parent")
-        }
-        // Per-column evolved (type, rebuild expression): adds applied
-        // in statement order over the evolving layout, so a second add
-        // into the same struct lands after the first, and an add into
-        // a struct ADDED by this statement resolves (meta.a then
-        // meta.a.b in one ALTER is still refused upstream by Spark —
-        // each add here targets a pre-existing struct).
-        def addInto(colName: String,
-            start: (org.apache.spark.sql.types.DataType, Expression))
-            : (org.apache.spark.sql.types.DataType, Expression) =
-          nestedAdds(colName).foldLeft(start) { case ((dt, ex), (pp, kid, pos)) =>
-            val full = (colName +: pp :+ kid.name).mkString(".")
-            val edit = NestedSchema.AddFields(Seq(kid), pos)
-            val ndt = NestedSchema.restructAt(dt, pp, full) { st =>
-              if (st.fieldNames.contains(kid.name))
-                throw new IllegalArgumentException(s"field $full already exists")
-              NestedSchema.editType(st, edit, full)
-            }
-            (ndt, NestedSchema.rebuildExpr(ex, dt, pp, edit, full))
-          }
-        // One SLOT per output column: (name, projection expr, field).
-        // Old fields come first (nested adds rebuild their parent in
-        // place); positioned top-level adds then splice into the order —
-        // `FIRST` / `AFTER k` honored exactly, where AFTER may target an
-        // old column or one added earlier in the same statement
-        // (silently appending a positioned add at the end would be a
-        // wrong answer wearing a success code).
-        var slots: Vector[(String, Expression, org.apache.spark.sql.types.StructField)] =
-          prev.schema.fields.toVector.zipWithIndex.map { case (of, i) =>
-            val ref = BoundReference(i, of.dataType, of.nullable)
-            if (nestedAdds.contains(of.name)) {
-              val (ndt, ex) = addInto(of.name, (of.dataType, ref))
-              (of.name, ex, of.copy(dataType = ndt))
-            } else (of.name, ref: Expression, of)
-          }
-        topAdds.foreach { case (f, lit, pos) =>
-          val slot = (f.name, lit: Expression, f)
-          pos match {
-            case None => slots = slots :+ slot
-            case Some(_: TableChange.First) => slots = slot +: slots
-            case Some(a: TableChange.After) =>
-              val i = slots.indexWhere(_._1 == a.column())
-              if (i < 0) throw new IllegalArgumentException(
-                s"AFTER target column ${a.column()} not found")
-              slots = slots.patch(i + 1, Seq(slot), 0)
-            case Some(other) => throw new UnsupportedOperationException(
-              s"unsupported column position $other")
-          }
-        }
-        val proj =
-          org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-            slots.map(_._2))
-        val widenedSchema = StructType(slots.map(_._3))
-        val widened = prev.segments.flatMap { seg =>
-          val s = SegmentIO.rewriteOpt(seg, prev.dir, prev.schema.length, widenedSchema)(
-            r => Some(proj(r)))
-          s.foreach(written += _)
-          s
-        }
-        prev.copy(schema = widenedSchema, segments = widened)
-      })
-      publish(ident, dataChange = false) // 1:1 re-projection; old segments stay readable via retained snapshots
-      new GraftCatalogTable(ident, result.schema, result.dir,
-        partitionCols = result.partitionCols, tableConstraints = result.constraints)
-    } catch { case scala.util.control.NonFatal(e) =>
-      written.foreach(SegmentIO.delete) // never published — GC immediately
-      throw e
+    nestedAdds.foreach { case (parent, _) =>
+      if (!prev.schema.fieldNames.contains(parent))
+        throw new IllegalArgumentException(s"no such column $parent")
     }
+    // Per-column evolved (type, rebuild expression): adds applied
+    // in statement order over the evolving layout, so a second add
+    // into the same struct lands after the first, and an add into
+    // a struct ADDED by this statement resolves (meta.a then
+    // meta.a.b in one ALTER is still refused upstream by Spark —
+    // each add here targets a pre-existing struct).
+    def addInto(colName: String,
+        start: (org.apache.spark.sql.types.DataType, Expression))
+        : (org.apache.spark.sql.types.DataType, Expression) =
+      nestedAdds(colName).foldLeft(start) { case ((dt, ex), (pp, kid, pos)) =>
+        val full = (colName +: pp :+ kid.name).mkString(".")
+        val edit = NestedSchema.AddFields(Seq(kid), pos)
+        val ndt = NestedSchema.restructAt(dt, pp, full) { st =>
+          if (st.fieldNames.contains(kid.name))
+            throw new IllegalArgumentException(s"field $full already exists")
+          NestedSchema.editType(st, edit, full)
+        }
+        (ndt, NestedSchema.rebuildExpr(ex, dt, pp, edit, full))
+      }
+    // One SLOT per output column: (name, projection expr, field).
+    // Old fields come first (nested adds rebuild their parent in
+    // place); positioned top-level adds then splice into the order —
+    // `FIRST` / `AFTER k` honored exactly, where AFTER may target an
+    // old column or one added earlier in the same statement
+    // (silently appending a positioned add at the end would be a
+    // wrong answer wearing a success code).
+    var slots: Vector[(String, Expression, org.apache.spark.sql.types.StructField)] =
+      prev.schema.fields.toVector.zipWithIndex.map { case (of, i) =>
+        val ref = BoundReference(i, of.dataType, of.nullable)
+        if (nestedAdds.contains(of.name)) {
+          val (ndt, ex) = addInto(of.name, (of.dataType, ref))
+          (of.name, ex, of.copy(dataType = ndt))
+        } else (of.name, ref: Expression, of)
+      }
+    topAdds.foreach { case (f, lit, pos) =>
+      val slot = (f.name, lit: Expression, f)
+      pos match {
+        case None => slots = slots :+ slot
+        case Some(_: TableChange.First) => slots = slot +: slots
+        case Some(a: TableChange.After) =>
+          val i = slots.indexWhere(_._1 == a.column())
+          if (i < 0) throw new IllegalArgumentException(
+            s"AFTER target column ${a.column()} not found")
+          slots = slots.patch(i + 1, Seq(slot), 0)
+        case Some(other) => throw new UnsupportedOperationException(
+          s"unsupported column position $other")
+      }
+    }
+    Some((StructType(slots.map(_._3)), slots.map(_._2)))
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -1463,9 +1330,10 @@ object GraftCatalog {
       // commitSegments stamps every segment NEW to a commit with its
       // version — fresh data, and rewrites (compaction, zorder, DELETE
       // survivors, row-level) BECAUSE they provably applied the
-      // filters while rewriting; 1:1 migrations (ALTER re-projections,
-      // `rewriteOpt`) inherit the source's seq (their bytes still carry
-      // eq-deleted rows, so the filters must keep applying). Too low is
+      // filters while rewriting; 1:1 migrations (the ALTER
+      // re-projections, through `SegmentIO.reproject`) inherit the
+      // source's seq (their bytes still carry eq-deleted rows, so the
+      // filters must keep applying). Too low is
       // always safe (filters re-apply as no-ops); too high without
       // filtering would resurrect deleted rows — never done.
       seq: Long = 0L,
@@ -1854,6 +1722,39 @@ object GraftCatalog {
       }).toSet
   }
 
+  /** Refuse renaming, retyping or dropping `cols` when a stored
+    * constraint names one (`constraintMsg`) or, when `generationMsg` is
+    * given, a generation expression does: both are resolved by NAME at
+    * write time, so the edit would leave them dangling and brick every
+    * future write. Constraints match by whole identifier in a CHECK's
+    * predicate (any other constraint's DDL), case-insensitively as
+    * Spark resolves: `CHECK (uid > 0)` leaves `id` free, `CHECK
+    * (AMOUNT > 0)` pins `amount`.
+    */
+  private def refuseIfPinned(e: TableEntry, cols: Iterable[String],
+      constraintMsg: String, generationMsg: Option[String] = None): Unit = {
+    val lc = cols.iterator.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    val sqlOf: org.apache.spark.sql.connector.catalog.constraints.Constraint => String = {
+      case k: org.apache.spark.sql.connector.catalog.constraints.Check
+          if k.predicateSql() != null => k.predicateSql()
+      case c => c.toDDL
+    }
+    if (e.constraints.exists(c => DdlIdentifier.findAllMatchIn(sqlOf(c)).exists { m =>
+        val id = Option(m.group(1)).map(_.replace("``", "`")).orElse(Option(m.group(2)))
+        id.exists(i => lc(i.toLowerCase(java.util.Locale.ROOT)))
+      }))
+      throw new UnsupportedOperationException(constraintMsg)
+    generationMsg.foreach { msg =>
+      if (generationRefs(e.schema).exists(lc)) throw new UnsupportedOperationException(msg)
+    }
+  }
+
+  /** One token of constraint SQL: a quoted string literal (no group), a
+    * back-quoted identifier (group 1) or a bare one (group 2).
+    */
+  private val DdlIdentifier =
+    """'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*"|`((?:[^`]|``)+)`|([\p{L}_][\p{L}\p{N}_]*)""".r
+
   /** `'graft.write.order'='c1,c2'`: declared write ordering — every
     * batch INSERT range-partitions + sorts on these columns (see
     * `newWriteBuilder`).
@@ -1944,6 +1845,65 @@ object GraftCatalog {
       var c = 0
       while (c == 0 && i < orderIdx.length) { c = cmpAt(a, b, orderIdx(i)); i += 1 }
       c < 0
+    }
+  }
+
+  /** The one entry edit of every ALTER (and of [[patchTableProps]]):
+    * `edit` runs inside `store.compute` on the live entry — so it
+    * validates against exactly the state it replaces — and returns the
+    * new entry, or None for a true no-op (nothing persisted). A change
+    * is published as a `dataChange = false` snapshot when `snapshot`
+    * (the rows are logically the same), otherwise persisted as catalog
+    * metadata; `unsort` first clears the sorted-provenance flags (see
+    * [[clearSortedFlags]]). A lost ledger CAS refuses (see
+    * [[persistTable]]). Call under `mutate {}`; returns the entry as it
+    * now stands.
+    */
+  private def editEntry(ident: Identifier, snapshot: Boolean, unsort: Boolean = false)(
+      edit: TableEntry => Option[TableEntry]): TableEntry = {
+    var changed = false
+    val result = store.compute(ident, (_, prev) => {
+      require(prev != null, s"table $ident dropped mid-alter")
+      edit(prev).map { next => changed = true; next }.getOrElse(prev)
+    })
+    if (changed) {
+      if (unsort) clearSortedFlags(ident)
+      if (snapshot) publish(ident, dataChange = false) else persistTable(ident)
+    }
+    result
+  }
+
+  /** The re-projection shell of widen, DROP COLUMN, reorder and ADD
+    * COLUMN. `plan` validates the change against the live entry and
+    * returns the new schema with one expression per output column over
+    * the old row layout, or None for a true no-op (nothing published).
+    * The shell builds the projection once, streams every segment
+    * through it into a fresh file ([[SegmentIO.reproject]]: key, spec
+    * and seq inherited), swaps schema and segments and publishes one
+    * `dataChange = false` snapshot through [[editEntry]]. Validation
+    * lives only in `plan`, so no change can fail once segment I/O has
+    * begun; a failure before the commit lands (an I/O error, a lost
+    * ledger CAS) deletes every file written, then rethrows.
+    *
+    * NOTE: no `return` inside a plan — it runs in a closure under
+    * `mutate {}`, where `return` compiles to a NonLocalReturnControl
+    * THROWABLE; a careless catch would swallow it and delete the
+    * freshly migrated segments. Plans yield values.
+    */
+  private def reprojectTable(ident: Identifier)(
+      plan: TableEntry => Option[(StructType, Seq[Expression])]): TableEntry = {
+    val written = scala.collection.mutable.ArrayBuffer[Segment]()
+    try editEntry(ident, snapshot = true)(prev => plan(prev).map { case (schema, exprs) =>
+      val proj = UnsafeProjection.create(exprs)
+      prev.copy(schema = schema, segments = prev.segments.flatMap { seg =>
+        val out = SegmentIO.reproject(seg, prev.dir, prev.schema.length, schema, proj)
+        written ++= out
+        out
+      })
+    })
+    catch { case scala.util.control.NonFatal(e) =>
+      written.foreach(SegmentIO.delete) // never published — GC immediately
+      throw e
     }
   }
 
@@ -2063,11 +2023,7 @@ object GraftCatalog {
       unset: Set[String] = Set.empty): Unit = mutate {
     refreshIfStale(ident) // patch on top of other drivers' commits, not under them
     if (store.get(ident) == null) throw new NoSuchTableException(ident)
-    store.compute(ident, (_, prev) => {
-      require(prev != null, s"table $ident dropped mid-alter")
-      prev.copy(props = prev.props -- unset ++ set)
-    })
-    persistTable(ident)
+    editEntry(ident, snapshot = false)(prev => Some(prev.copy(props = prev.props -- unset ++ set)))
   }
 
   /** Test hook: force MV bookkeeping props into a known state. */

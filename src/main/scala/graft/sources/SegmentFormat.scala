@@ -6,7 +6,7 @@ import java.util.UUID
 
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.types.StructType
 
@@ -580,16 +580,17 @@ private[sources] object SegmentIO {
     w.finish().map(_.copy(lineage = acc.result()))
   }
 
-  /** [[rewrite]] of one segment's rows for the ALTER re-projections
-    * (its dv applies; its equality deletes stay outstanding). The
-    * output inherits the source's partition key, spec AND data
+  /** [[rewrite]] of every live row of one segment through `proj` (its
+    * dv applies; its equality deletes stay outstanding): the ALTER
+    * re-projections' 1:1 copy into the layout `outSchema`. The output
+    * inherits the source's lineage, partition key, spec AND data
     * sequence number — a 1:1 re-projection copies eq-deleted rows
     * verbatim, so the filters must keep applying to it. Never for a
     * rewrite the commit shell stamps anew: that resurrects those rows.
     */
-  def rewriteOpt(seg: Segment, dir: String, inFields: Int, outSchema: StructType)(
-      f: UnsafeRow => Option[UnsafeRow]): Option[Segment] =
-    rewrite(Seq(GraftSegFile.of(seg)), dir, inFields, outSchema)(f)
+  def reproject(seg: Segment, dir: String, inFields: Int, outSchema: StructType,
+      proj: UnsafeProjection): Option[Segment] =
+    rewrite(Seq(GraftSegFile.of(seg)), dir, inFields, outSchema)(r => Some(proj(r)))
       .map(_.copy(key = seg.key, spec = seg.spec, seq = seg.seq))
 
   /** Rows a reordering rewrite (sorted compaction, Z-order) must hold

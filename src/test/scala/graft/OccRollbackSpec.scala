@@ -33,7 +33,9 @@ import graft.sources.{GraftCatalog, GraftLedger}
   * they refuse and delete every file they wrote. So do they over one
   * that dropped an equality delete they read through (a RESTORE), and
   * on any failure before their commit lands. A refused
-  * auto-compaction never fails the INSERT that triggered it.
+  * auto-compaction never fails the INSERT that triggered it. The ALTER
+  * re-projections (ADD and DROP COLUMN, widen, reorder) refuse on any
+  * lost CAS and delete every file they wrote.
   */
 class OccRollbackSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -406,5 +408,51 @@ class OccRollbackSpec extends AnyFunSuite {
     // The INSERT landed (its file was not aborted away) exactly once.
     assert(keys("pgraft.occ.ac") == (1L until 10L) :+ 100L)
     spark.sql("DROP TABLE pgraft.occ.ac PURGE")
+  }
+
+  // Each ALTER re-projects both segments of a (k BIGINT, v INT) table
+  // into fresh files; the foreign commit in its OCC window drops the
+  // second segment (k = 10..19).
+  Seq(
+    ("ADD COLUMN", "ADD COLUMN z STRING"),
+    ("widen", "ALTER COLUMN v TYPE BIGINT"),
+    ("DROP COLUMN", "DROP COLUMN v"),
+    ("reorder", "ALTER COLUMN v FIRST")
+  ).zipWithIndex.foreach { case ((op, change), i) =>
+    test(s"$op that loses its ledger CAS refuses and leaves no file behind") {
+      val t = s"pgraft.occ.al$i"
+      spark.sql(s"DROP TABLE IF EXISTS $t PURGE")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v INT) USING graft")
+      Seq("range(10)", "range(10, 20)").foreach(r =>
+        spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, CAST(id AS INT) FROM $r"))
+      val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", s"al$i")
+      val fired = loseNextCas(ident(s"al$i"), edit = e => e.copy(segments = e.segments.take(1)))
+      val e =
+        try intercept[Throwable] { spark.sql(s"ALTER TABLE $t $change") }
+        finally GraftCatalog.occWindowHookForTest = _ => ()
+      assert(fired(), "the forged foreign commit never ran")
+      assert(isConcurrentRefusal(e), s"expected a concurrent-commit refusal, got $e")
+      assert(GraftCatalog.segmentFilesOnDisk("occ", s"al$i") == filesBefore,
+        s"a refused $op left its re-projected segment files behind")
+      assert(spark.table(t).schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("k" -> "bigint", "v" -> "int"))
+      val rows = spark.sql(s"SELECT k, v FROM $t ORDER BY k").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toSeq
+      assert(rows == (0 until 10).map(k => k.toLong -> k), "the foreign commit's state must stand")
+      spark.sql(s"DROP TABLE $t PURGE")
+    }
+  }
+
+  test("DROP COLUMN IF EXISTS on a missing column publishes nothing") {
+    spark.sql("DROP TABLE IF EXISTS pgraft.occ.dn PURGE")
+    spark.sql("CREATE TABLE pgraft.occ.dn (k BIGINT, v INT) USING graft")
+    spark.sql("INSERT INTO pgraft.occ.dn VALUES (1, 1), (2, 2)")
+    val v = GraftCatalog.currentVersion("occ", "dn")
+    val filesBefore = GraftCatalog.segmentFilesOnDisk("occ", "dn")
+    spark.sql("ALTER TABLE pgraft.occ.dn DROP COLUMN IF EXISTS nosuch")
+    assert(GraftCatalog.currentVersion("occ", "dn") == v)
+    assert(GraftCatalog.segmentFilesOnDisk("occ", "dn") == filesBefore)
+    assert(keys("pgraft.occ.dn") == Seq(1L, 2L))
+    spark.sql("DROP TABLE pgraft.occ.dn PURGE")
   }
 }

@@ -181,4 +181,74 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       .as[Long].head() == 1L)
     spark.sql("DROP TABLE graft.se.m PURGE")
   }
+
+  test("a constraint pins a column by whole identifier: CHECK (uid > 0) leaves id free") {
+    spark.sql("DROP TABLE IF EXISTS graft.se.ci PURGE")
+    spark.sql("CREATE TABLE graft.se.ci (uid BIGINT, id INT, v STRING) USING graft")
+    spark.sql("INSERT INTO graft.se.ci VALUES (1, 10, 'a'), (2, 20, 'b')")
+    spark.sql("ALTER TABLE graft.se.ci ADD CONSTRAINT pos CHECK (uid > 0)")
+    spark.sql("ALTER TABLE graft.se.ci ALTER COLUMN id TYPE BIGINT")
+    spark.sql("ALTER TABLE graft.se.ci RENAME COLUMN id TO n")
+    spark.sql("ALTER TABLE graft.se.ci RENAME COLUMN n TO id")
+    spark.sql("ALTER TABLE graft.se.ci DROP COLUMN id")
+    assert(spark.table("graft.se.ci").columns.toSeq == Seq("uid", "v"))
+    assert(spark.sql("SELECT uid, v FROM graft.se.ci ORDER BY uid")
+      .as[(Long, String)].collect().toSeq == Seq(1L -> "a", 2L -> "b"))
+    // The constraint still pins uid itself.
+    intercept[Exception] { spark.sql("ALTER TABLE graft.se.ci DROP COLUMN uid") }
+    spark.sql("DROP TABLE graft.se.ci PURGE")
+  }
+
+  test("DROP COLUMN IF EXISTS of a missing column through the TableCatalog API is a true no-op") {
+    spark.sql("DROP TABLE IF EXISTS graft.se.dx PURGE")
+    spark.sql("CREATE TABLE graft.se.dx (k BIGINT, v INT) USING graft")
+    spark.sql("INSERT INTO graft.se.dx VALUES (1, 1)")
+    val files = GraftCatalog.segmentFilesOnDisk("se", "dx")
+    val v = GraftCatalog.currentVersion("se", "dx")
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog, TableChange}
+    spark.sessionState.catalogManager.catalog("graft").asInstanceOf[TableCatalog]
+      .alterTable(Identifier.of(Array("se"), "dx"), TableChange.deleteColumn(Array("nosuch"), true))
+    assert(GraftCatalog.segmentFilesOnDisk("se", "dx") == files, "no segment may be rewritten")
+    assert(GraftCatalog.currentVersion("se", "dx") == v, "no snapshot may be published")
+    spark.sql("DROP TABLE graft.se.dx PURGE")
+  }
+
+  test("a multi-change ALTER whose last change is invalid writes no file and publishes nothing") {
+    spark.sql("DROP TABLE IF EXISTS graft.se.vb PURGE")
+    spark.sql("CREATE TABLE graft.se.vb (k INT, x FLOAT) USING graft")
+    spark.sql("INSERT INTO graft.se.vb VALUES (1, 0.5), (2, 1.5)")
+    val files = GraftCatalog.segmentFilesOnDisk("se", "vb")
+    val v = GraftCatalog.currentVersion("se", "vb")
+    def unchanged(): Unit = {
+      assert(GraftCatalog.segmentFilesOnDisk("se", "vb") == files)
+      assert(GraftCatalog.currentVersion("se", "vb") == v)
+      assert(spark.table("graft.se.vb").schema.map(_.dataType.simpleString) ==
+        Seq("int", "float"))
+    }
+    intercept[Exception] {
+      spark.sql("ALTER TABLE graft.se.vb ADD COLUMNS (x2 INT, y INT AFTER nosuch)")
+    }
+    unchanged()
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog, TableChange}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val cat = spark.sessionState.catalogManager.catalog("graft").asInstanceOf[TableCatalog]
+    intercept[UnsupportedOperationException] {
+      cat.alterTable(Identifier.of(Array("se"), "vb"),
+        TableChange.updateColumnType(Array("k"), LongType),
+        TableChange.updateColumnType(Array("x"), IntegerType))
+    }
+    unchanged()
+    spark.sql("DROP TABLE graft.se.vb PURGE")
+  }
+
+  test("a constraint pins a column case-insensitively: CHECK (AMOUNT > 0) pins amount") {
+    spark.sql("DROP TABLE IF EXISTS graft.se.cu PURGE")
+    spark.sql("CREATE TABLE graft.se.cu (amount BIGINT, k BIGINT) USING graft")
+    spark.sql("INSERT INTO graft.se.cu VALUES (5, 1)")
+    spark.sql("ALTER TABLE graft.se.cu ADD CONSTRAINT big CHECK (AMOUNT > 0)")
+    intercept[Exception] { spark.sql("ALTER TABLE graft.se.cu RENAME COLUMN amount TO amt") }
+    intercept[Exception] { spark.sql("ALTER TABLE graft.se.cu DROP COLUMN amount") }
+    assert(spark.table("graft.se.cu").columns.toSeq == Seq("amount", "k"))
+    spark.sql("DROP TABLE graft.se.cu PURGE")
+  }
 }

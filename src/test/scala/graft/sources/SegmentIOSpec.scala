@@ -97,15 +97,17 @@ class SegmentIOSpec extends AnyFunSuite {
     assert(rowIds.result() == Seq(Some(100L), Some(101L), Some(500L), None))
   }
 
-  test("rewriteOpt dropping a middle row splits the lineage run and keeps the surviving ids") {
+  test("rewrite dropping a middle row splits the lineage run and keeps the surviving ids") {
     val seg = write((0L until 5L).map(i => i -> s"r$i"): _*)
       .copy(lineage = Vector((10L, 5L, 3L)), seq = 2L)
-    val out = SegmentIO.rewriteOpt(seg, dir, schema.length, schema) { r =>
+    val out = SegmentIO.rewrite(Seq(GraftSegFile.of(seg)), dir, schema.length, schema) { r =>
       if (r.getLong(0) == 2L) None else Some(r)
     }.get
-    assert(out.rows == 4L && out.seq == 2L)
+    assert(out.rows == 4L)
     assert(out.lineage == Vector((10L, 2L, 3L), (13L, 2L, 3L)))
     assert(lineageOf(GraftSegFile.of(out)).flatten.map(_._1) == Seq(10L, 11L, 13L, 14L))
+    // A 1:1 re-projection keeps the source's data sequence number.
+    assert(SegmentIO.reproject(seg, dir, schema.length, schema, toUnsafe).get.seq == 2L)
   }
 
   test("string min/max and the sorted fold use UTF-8 binary order, also under spark.testing") {
