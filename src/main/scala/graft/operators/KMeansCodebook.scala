@@ -1,38 +1,49 @@
 package graft.operators
 
-import graft.SessionConf
 import graft.functions.CosineSim
+import java.math.BigDecimal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Distributed spherical k-means (Lloyd's) trainer for IVF codebooks —
-  * the upgrade from a sampled codebook (k lowest-id vectors) to TRAINED
+/** Spherical k-means (Lloyd's) trainer for IVF and PQ codebooks — the
+  * upgrade from a sampled codebook (k lowest-id vectors) to TRAINED
   * centroids, which is what makes an IVF recall number meaningful at
-  * scale.
+  * scale. `train` (one codebook over whole vectors) is the m = 1 case of
+  * `trainSubspaces` (m sub-codebooks over sub-vectors); both run the one
+  * private loop `lloyd`.
   *
-  * Every step is shaped for 100 TB:
+  * Each round is ONE map-only Spark job, no exchange:
   *
-  *  - **Assignment** is the shuffle-free broadcast-codebook pattern
-  *    shared with `SimilarityQueries.l3AnnIvf`: the whole bounded
-  *    codebook rides ONE broadcast row; each vector picks its centroid
-  *    with a per-row `aggregate()` argmax. The embedding column never
+  *  - **Assignment**: the driver-held codebook rides the plan as a
+  *    literal column; each point picks its centroid with `bestCentroid`
+  *    (the serving argmax and tie-break). The embedding column never
   *    crosses an exchange.
-  *  - **Update** computes per-list element-wise means via
-  *    `posexplode` → `groupBy(list, dim)`: partial aggregation
-  *    (map-side combine) reduces each task's contribution to k×dim
-  *    (list, dim, sum, count) scalars BEFORE the exchange — the shuffle
-  *    carries bounded per-dimension partials, never vectors.
-  *  - **Iteration state** stays a one-row codebook DataFrame,
-  *    `localCheckpoint`-ed per round to truncate lineage (the
-  *    ConnectedComponents pattern); nothing is collected to the driver.
-  *  - A list that loses every member keeps its previous centroid, so k
+  *  - **Partials**: each task folds its rows, in row order, into
+  *    per-(subspace, centroid) `double` sums and counts — the same
+  *    partial Spark's `avg` builds — and converts them once to exact
+  *    `BigDecimal`s (a NaN or infinite component fails training).
+  *    `RDD.reduce` merges the partials; exact addition makes the result
+  *    independent of the order tasks finish in.
+  *  - **Update** runs on the driver: centroid = (sum / count).toFloat.
+  *    A centroid that lost every member keeps its previous vector, so k
   *    stays fixed (no degenerate shrinking codebook).
+  *
+  * Bounds, independent of corpus size: the driver holds the codebook
+  * (k·dim floats, m·ks·sub for PQ) and one running partial of
+  * m·ks·(sub + 1) values; each task holds the codebook and its own
+  * partial. Seeds are the k lowest-id vectors, collected once. Training
+  * sets no session conf, so it is safe beside other work on the session.
   *
   * Spherical variant: assignment by cosine (the serving metric of the
   * ANN queries), update by arithmetic mean — `CosineSim` normalizes at
   * use, so the mean need not be re-normalized.
   */
 object KMeansCodebook {
+
+  /** Type of the one-row `cents` column: a cid-sorted codebook. */
+  private val Cents = ArrayType(StructType(Seq(
+    StructField("cid", LongType), StructField("cvec", ArrayType(FloatType)))))
 
   /** Per-row nearest-centroid id for `vec` against a bounded
     * `array<struct<cid, cvec>>` codebook column — a projection, not a
@@ -50,32 +61,6 @@ object KMeansCodebook {
           .otherwise(acc)
       }).getField("cid")
 
-  /** Run `body` (the training loop — its per-round localCheckpoints
-    * execute eagerly inside this window) with AQE off and a small fixed
-    * shuffle width, both restored after. Why this is right at ANY
-    * scale, not a local-mode twiddle (the u6 recursion discipline):
-    * every shuffle inside training REDUCES to a bounded domain — the
-    * update aggregations key on (list, dim) / (subspace, list, dim),
-    * ≤ k·dim / m·ks·sub rows — so a handful of reduce partitions covers
-    * them at 100 TB exactly as here, while AQE's per-stage query jobs
-    * and re-optimization added 2–3 driver round-trips per Lloyd round
-    * for plans whose shape never changes (the map side — the corpus
-    * scan — is not affected by either conf). Codebook floats are
-    * unchanged: assignment is per-row, and the update's partial-merge
-    * structure is set by the INPUT partitioning (untouched), not the
-    * reduce width.
-    *
-    * The confs are set on the CALLER's session (`e` is bound to it), so
-    * for the length of training every other query on that session runs
-    * with AQE off and the narrow shuffle too: training is NOT safe to
-    * run concurrently with other work on the same session.
-    */
-  private def withTrainingConfs[T](spark: SparkSession)(body: => T): T =
-    SessionConf.withConfs(spark)(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" ->
-        spark.conf.get("spark.graft.annTrain.shufflePartitions", "4"))(body)
-
   /** Train a k-centroid codebook over `e(idCol, vecCol)`. Returns a
     * ONE-ROW DataFrame `cents: array<struct<cid: bigint, cvec:
     * array<float>>>`, cid-sorted for deterministic array order (ties in
@@ -88,36 +73,10 @@ object KMeansCodebook {
       k: Int,
       iters: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = withTrainingConfs(e.sparkSession) {
+      vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
-    val spark = e.sparkSession
-    val seeds = e.orderBy(col(idCol)).limit(k)
-      .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cvec"))
-    var codebook = seeds
-      .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
-      .localCheckpoint()
-
-    for (_ <- 1 to iters) {
-      val assigned = e.crossJoin(broadcast(codebook))
-        .select(col(vecCol).as("vec"),
-          bestCentroid(spark, col(vecCol), col("cents")).as("list_id"))
-      val dimMeans = assigned
-        .select(col("list_id"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy(col("list_id"), col("pos"))
-        .agg(avg(col("v")).as("m"))
-      val newCents = dimMeans.groupBy(col("list_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m").cast("float")).as("newvec"))
-      val prev = codebook.select(explode(col("cents")).as("c"))
-        .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-      codebook = prev
-        .join(newCents, prev("cid") === newCents("list_id"), "left")
-        .select(col("cid"), coalesce(col("newvec"), col("cvec")).as("cvec"))
-        .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
-        .localCheckpoint()
-    }
-    codebook
+    val books = lloyd(e, 1, k, iters, idCol, array(col(vecCol)))
+    oneRow(e.sparkSession, "cents", Cents, books.headOption.getOrElse(Nil))
   }
 
   /** Per-row MIPS-PQ code for one subspace: id of the sub-centroid
@@ -138,6 +97,14 @@ object KMeansCodebook {
           struct(d.as("cdot"), c.getField("cid").as("cid"))).otherwise(acc)
       }).getField("cid")
 
+  /** Reassemble the one-row `cents` form from a persisted (cid, cvec)
+    * codebook table — the inverse of how `train_ann` / `build_ann_index`
+    * persist `train` output, with the same cid sort so argmax
+    * tie-breaks can never diverge between build, refresh and serve.
+    */
+  def packCents(rows: DataFrame): DataFrame =
+    rows.agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
+
   /** Reassemble the one-row subspace-indexed `pq` form from a persisted
     * (s, cid, cvec) codebook table — the exact inverse of how
     * `build_ann_index` / `train_ann_pq` persist `trainSubspaces`
@@ -151,15 +118,12 @@ object KMeansCodebook {
         x => x.getField("book")).as("pq"))
 
   /** Train ALL `m` product-quantization sub-codebooks in ONE pass over
-    * the data (for `ivfPqTopK`): instead of m separate `train` runs —
-    * m full scans plus m update shuffles per round — every vector
-    * explodes once into (subspace, sub-vector) points and a single
-    * Lloyd's round assigns and re-means all subspaces together, keyed
-    * by (subspace, list, dim). Same per-subspace math as `train`
-    * (spherical assignment, arithmetic-mean update, ks-lowest-id
-    * seeds, orphan centroids retained), but the data-pass count no
-    * longer scales with m — the property that matters when the scan is
-    * 100 TB.
+    * the data per round (for `ivfPqTopK`): every vector is cut into m
+    * sub-vectors and a single Lloyd's round assigns and re-means all
+    * subspaces together. Same per-subspace math as `train` (spherical
+    * assignment, arithmetic-mean update, ks-lowest-id seeds, orphan
+    * centroids retained), but the data-pass count does not scale with
+    * m — the property that matters when the scan is 100 TB.
     *
     * Returns a ONE-ROW DataFrame `pq: array<array<struct<cid, cvec>>>`
     * indexed by subspace (element_at(pq, s + 1) is subspace s's
@@ -168,48 +132,80 @@ object KMeansCodebook {
   def trainSubspaces(
       e: DataFrame, m: Int, sub: Int, ks: Int, iters: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = withTrainingConfs(e.sparkSession) {
+      vecCol: String = "embedding"): DataFrame = {
     require(m > 0 && sub > 0 && ks > 0 && iters >= 0,
       s"need m, sub, ks > 0 and iters >= 0; got m=$m sub=$sub ks=$ks iters=$iters")
-    val spark = e.sparkSession
-    def subPoints(df: DataFrame, id: Column): DataFrame =
-      df.select(id.as("pid"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          i => slice(col(vecCol), i * sub + 1, lit(sub)))).as(Seq("s", "svec")))
-    // (s, book) rows → one-row subspace-indexed array of codebooks.
-    def pack(cents: DataFrame): DataFrame =
-      cents.groupBy(col("s"))
-        .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("book"))
-        .agg(transform(array_sort(collect_list(struct(col("s"), col("book")))),
-          x => x.getField("book")).as("pq"))
-        .localCheckpoint()
-
-    var pq = pack(
-      subPoints(e.orderBy(col(idCol)).limit(ks), col(idCol).cast("long"))
-        .select(col("s"), col("pid").as("cid"), col("svec").as("cvec")))
-    val pts = subPoints(e, col(idCol).cast("long"))
-
-    for (_ <- 1 to iters) {
-      val assigned = pts.crossJoin(broadcast(pq))
-        .select(col("s"), col("svec"),
-          bestCentroid(spark, col("svec"), element_at(col("pq"), col("s") + 1))
-            .as("list_id"))
-      val dimMeans = assigned
-        .select(col("s"), col("list_id"), posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy(col("s"), col("list_id"), col("pos"))
-        .agg(avg(col("v")).as("mv"))
-      val newCents = dimMeans.groupBy(col("s"), col("list_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-          x => x.getField("mv").cast("float")).as("newvec"))
-      val prev = pq.select(posexplode(col("pq")).as(Seq("s", "book")))
-        .select(col("s"), explode(col("book")).as("c"))
-        .select(col("s"), col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-      pq = pack(prev
-        .join(newCents,
-          prev("s") === newCents("s") && prev("cid") === newCents("list_id"), "left")
-        .select(prev("s").as("s"), col("cid"),
-          coalesce(col("newvec"), col("cvec")).as("cvec")))
-    }
-    pq
+    val books = lloyd(e, m, ks, iters, idCol,
+      transform(sequence(lit(0), lit(m - 1)), i => slice(col(vecCol), i * sub + 1, lit(sub))))
+    oneRow(e.sparkSession, "pq", ArrayType(Cents), books)
   }
+
+  /** A centroid: (cid, vector). */
+  private type Cent = (Long, Seq[Float])
+
+  /** Member sums (exact) and counts per flat slot s·n + j (subspace s,
+    * centroid j): one task's, or the merge of several.
+    */
+  private final case class Partial(sums: Array[Array[BigDecimal]], counts: Array[Long]) {
+    def +(o: Partial): Partial = Partial(
+      sums.zip(o.sums).map { case (a, b) => a.zip(b).map { case (x, y) => x.add(y) } },
+      counts.zip(o.counts).map { case (x, y) => x + y })
+  }
+
+  /** The one Lloyd's loop: `subVecs` cuts a row's vector into its m
+    * sub-vectors; returns the m cid-sorted books (none on empty input,
+    * the shape of an aggregate over nothing).
+    */
+  private def lloyd(
+      e: DataFrame, m: Int, ks: Int, iters: Int, idCol: String,
+      subVecs: Column): Seq[Seq[Cent]] = {
+    val seeds = e.orderBy(col(idCol)).limit(ks)
+      .select(col(idCol).cast("long"), subVecs).collect().toSeq
+    val n = seeds.length
+    var books: Seq[Seq[Cent]] = if (n == 0) Nil else (0 until m).map(s =>
+      seeds.map(r => (r.getLong(0),
+        Option(r.getSeq[scala.collection.Seq[Float]](1)(s)).map(_.toSeq).orNull)).sortBy(_._1))
+    val pts = e.select(posexplode(subVecs).as(Seq("s", "svec")))
+    for (_ <- 1 to (if (n == 0) 0 else iters)) {
+      // One slot per cid (duplicate ids share one mean), sized to its
+      // centroid. Only a row whose cid is the -1 "no centroid" answer
+      // can differ in length from the centroid it names; it is skipped.
+      val slotOf = books.map(_.map(_._1).zipWithIndex.toMap)
+      val dims = books.flatMap(_.map(c => Option(c._2).fold(0)(_.size))).toArray
+      val book = element_at(typedLit(books).cast(ArrayType(Cents)), col("s") + 1)
+      val partial = pts
+        .select(col("s"), bestCentroid(e.sparkSession, col("svec"), book), col("svec"))
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val sums = dims.map(new Array[Double](_))
+          val counts = new Array[Long](m * n)
+          rows.foreach { r =>
+            val s = r.getInt(0)
+            if (!r.isNullAt(2)) slotOf(s).get(r.getLong(1)).foreach { j =>
+              val (v, acc) = (r.getArray(2), sums(s * n + j))
+              if (v.numElements == acc.length) {
+                acc.indices.foreach(d => acc(d) += v.getFloat(d))
+                counts(s * n + j) += 1
+              }
+            }
+          }
+          Iterator(Partial(sums.map(_.map(new BigDecimal(_))), counts))
+        }.reduce(_ + _)
+      books = books.zipWithIndex.map { case (b, s) =>
+        b.map { case c @ (cid, _) =>
+          val slot = s * n + slotOf(s)(cid)
+          val cnt = partial.counts(slot)
+          if (cnt == 0) c
+          else (cid, partial.sums(slot).map(x => (x.doubleValue / cnt).toFloat).toSeq)
+        }
+      }
+    }
+    books
+  }
+
+  /** The one-row DataFrame `name: dt` holding `value`, a local relation:
+    * reading or broadcasting it runs no job.
+    */
+  private def oneRow[T: scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, name: String, dt: DataType, value: T): DataFrame =
+    spark.createDataFrame(Seq(Tuple1(value))).select(col("_1").cast(dt).as(name))
 }

@@ -648,20 +648,19 @@ object SimilarityQueries {
   }
 
   /** L3 (IVF scale path): inverted-file ANN with a TRAINED coarse
-    * quantizer — `KMeansCodebook.train` runs distributed spherical
-    * k-means (seeded by the k lowest vec_ids, 3 Lloyd's rounds), so the
-    * inverted lists follow the data's actual cluster structure instead
-    * of whichever 16 vectors sorted first; that is what makes the
-    * recall number meaningful at scale.
+    * quantizer — `KMeansCodebook.train` runs spherical k-means (seeded
+    * by the k lowest vec_ids, 3 Lloyd's rounds, one map-only job each),
+    * so the inverted lists follow the data's actual cluster structure
+    * instead of whichever 16 vectors sorted first; that is what makes
+    * the recall number meaningful at scale.
     *
-    * Assignment is SHUFFLE-FREE: the whole bounded codebook is
-    * aggregated into ONE row (`collect_list` — an aggregate of k=16
-    * structs, the same bounded-aggregate license as the CC loop
-    * condition) and nested-loop-joined as a broadcast singleton; each
-    * vector then picks its nearest centroid with a per-row argmax fold
-    * over that 16-element array. The embedding column never crosses an
-    * exchange — training's only shuffles carry (list, dim, partial-mean)
-    * scalars (see KMeansCodebook) — vs the pre-r4 formulation (broadcast
+    * Assignment is SHUFFLE-FREE: the whole bounded codebook (k=16
+    * structs) is ONE row, nested-loop-joined as a broadcast singleton;
+    * each vector then picks its nearest centroid with a per-row argmax
+    * fold over that 16-element array. The embedding column never
+    * crosses an exchange — training has no exchange at all: tasks fold
+    * bounded per-centroid partials that the driver merges (see
+    * KMeansCodebook) — vs the pre-r4 formulation (broadcast
     * join ×16 then `groupBy(vec_id)` argmax) that pushed every embedding
     * through the aggregation shuffle, the exact scale-killer the 100 TB
     * brief forbids. Asserted by the no-embedding-shuffle plan test in
@@ -733,9 +732,9 @@ object SimilarityQueries {
   val l3AnnIvf: Q = Q(
     "l3_ann_ivf",
     annOracleSql) { (spark, dir) =>
-    // persist: training makes ~2 passes per Lloyd's round plus the
-    // assignment/probe/rerank reads — without the cache that is ~9
-    // parquet scans of the widest table per run.
+    // persist: training makes one seed pass plus one pass per Lloyd's
+    // round, then the assignment/probe/rerank reads — without the cache
+    // that is ~7 parquet scans of the widest table per run.
     val e = Tables.embeddings(spark, dir).persist()
     ivfTopK(spark, e, withPlantedCopies(e))
   }
@@ -765,8 +764,7 @@ object SimilarityQueries {
     }
     // k rows -> the one-row cents form the serving path consumes
     // (cid-sorted so argmax tie-breaks match the trained order).
-    val codebook = spark.table(full)
-      .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
+    val codebook = KMeansCodebook.packCents(spark.table(full))
     ivfTopKWithCodebook(spark, codebook, withPlantedCopies(e))
   }
 
@@ -1111,16 +1109,6 @@ object SimilarityQueries {
     val centroids = codebook.select(explode(col("cents")).as("c"))
       .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
     def pqBook(i: Int): Column = element_at(col("pq"), i + 1)
-    // MIPS-PQ encoder: id of the sub-centroid with the largest inner
-    // product against the sub-vector (argmax fold, map-side only).
-    def mipCode(vec: Column, cents: Column): Column =
-      aggregate(cents,
-        struct(lit(Double.NegativeInfinity).as("cdot"), lit(-1L).as("cid")),
-        (acc, c) => {
-          val d = VectorOps.dot(vec, c.getField("cvec"))
-          when(d > acc.getField("cdot"),
-            struct(d.as("cdot"), c.getField("cid").as("cid"))).otherwise(acc)
-        }).getField("cid")
     // fanOut: the per-row coarse argmax + m-subspace PQ encode is the
     // cost of the ephemeral flavors and row-local — parallelize it
     // (guide §2.5); training inputs are untouched, codebooks identical.
@@ -1132,7 +1120,7 @@ object SimilarityQueries {
         KMeansCodebook.bestCentroid(spark, col("embedding"), col("cents"))
           .as("list_id")) ++
         (0 until m).map(i =>
-          mipCode(slice(col("embedding"), i * sub + 1, sub), pqBook(i))
+          KMeansCodebook.mipsCode(slice(col("embedding"), i * sub + 1, sub), pqBook(i))
             .as(s"code_$i")): _*)
     val q = data.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     val probes = centroids.crossJoin(broadcast(q))
@@ -1205,13 +1193,8 @@ object SimilarityQueries {
     // k rows -> one `cents` row; (s, cid, cvec) rows -> one `pq` row
     // (both cid-sorted inside their book, books subspace-ordered — the
     // exact shapes the serving path broadcasts).
-    val codebook = spark.table(coarse)
-      .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
-    val pqRow = spark.table(pqTbl)
-      .groupBy(col("s"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("book"))
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("book")))),
-        x => x.getField("book")).as("pq"))
+    val codebook = KMeansCodebook.packCents(spark.table(coarse))
+    val pqRow = KMeansCodebook.packSubspaces(spark.table(pqTbl))
     ivfPqTopKWithBooks(spark, codebook, pqRow, withPlantedCopies(e),
       nprobe = 4, m = m, sub = sub, rerank = 64)
   }

@@ -1174,8 +1174,7 @@ private[graft] object GraftRefreshAnnProcedure
       nullable = false)))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    import org.apache.spark.sql.functions.{
-      array_sort, avg, broadcast, col, collect_list, struct}
+    import org.apache.spark.sql.functions.{avg, broadcast, col}
     val ns = input.getUTF8String(0).toString
     val index = input.getUTF8String(1).toString
     val spark = org.apache.spark.sql.SparkSession.active
@@ -1231,8 +1230,8 @@ private[graft] object GraftRefreshAnnProcedure
       // cid-sorted one-row cents form — the SAME reconstruction the
       // serving path uses, so assignment tie-breaks can never diverge
       // between build, refresh and serve.
-      val cbRow = spark.table(s"$catName.$ns.${index}_cb")
-        .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
+      val cbRow = graft.operators.KMeansCodebook
+        .packCents(spark.table(s"$catName.$ns.${index}_cb"))
       val assigned0 = adds.crossJoin(broadcast(cbRow))
         .select(idxCols.map(col).toIndexedSeq :+
           graft.operators.KMeansCodebook

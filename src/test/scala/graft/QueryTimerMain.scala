@@ -79,7 +79,7 @@ object QueryTimerMain {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val e = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(250) // let the listener bus drain before reading counters
+        org.apache.spark.sql.GraftTestBridge.drainListenerBus(spark.sparkContext)
         val detail = f"jobs=${acct.jobs.get}%3d stages=${acct.stages.get}%3d " +
           f"tasks=${acct.tasks.get}%4d taskSum=${acct.taskMs.get / 1000.0}%7.2fs"
         cleanup()

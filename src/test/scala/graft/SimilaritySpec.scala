@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.VectorOps
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -504,6 +505,110 @@ class SimilaritySpec extends AnyFunSuite {
       s"cluster split across lists: $byCluster")
     assert(byCluster.values.flatten.toSet.size == 3,
       s"clusters collapsed into one list: $byCluster")
+  }
+
+  /** The planted-cluster fixture above as (vec_id, embedding) rows: 60
+    * jittered points around three axes, ids 0–2 all in cluster 0.
+    */
+  private def plantedClusters(): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(7)
+    val axes = Seq(
+      Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 0f))
+    (0 until 60).map { i =>
+      val cluster = if (i < 3) 0 else i % 3
+      (i.toLong, axes(cluster).map(v => v + (rnd.nextFloat() - 0.5f) * 0.05f).toSeq)
+    }
+  }
+
+  /** A codebook as (cid, float bits) pairs, so equality is exact. */
+  private def bits(book: Seq[Row]): Seq[(Long, Seq[Int])] =
+    book.map(r => (r.getLong(0), r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits)))
+  private def cents(cb: DataFrame): Seq[(Long, Seq[Int])] = bits(cb.head().getSeq[Row](0))
+  private def pq(pqRow: DataFrame): Seq[Seq[(Long, Seq[Int])]] =
+    pqRow.head().getSeq[scala.collection.Seq[Row]](0).map(b => bits(b.toSeq))
+
+  test("KMeansCodebook.train equals a plain-Scala Lloyd reference exactly") {
+    val pts = plantedClusters()
+    // CosineSim's arithmetic; the first strictly larger cid wins.
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val (x, y) = (a.map(_.toDouble), b.map(_.toDouble))
+      def dot(p: Seq[Double], q: Seq[Double]) = p.zip(q).foldLeft(0.0) { case (z, (u, v)) => z + u * v }
+      dot(x, y) / (math.sqrt(dot(x, x)) * math.sqrt(dot(y, y)))
+    }
+    var ref = pts.take(3)
+    for (_ <- 1 to 3) {
+      val cur = ref
+      def best(v: Seq[Float]): Long = cur.maxBy { case (_, c) => cos(v, c) }._1
+      ref = cur.map { case (cid, c) =>
+        val members = pts.filter { case (_, v) => best(v) == cid }.map(_._2)
+        if (members.isEmpty) (cid, c)
+        else {
+          val sums = members.foldLeft(Seq.fill(c.size)(0.0)) { (acc, v) =>
+            acc.zip(v).map { case (z, f) => z + f }
+          }
+          (cid, sums.map(x => (x / members.size).toFloat))
+        }
+      }
+    }
+    val df = pts.toDF("vec_id", "embedding").coalesce(1)
+    val got = cents(graft.operators.KMeansCodebook.train(df, k = 3, iters = 3))
+    assert(got == ref.map { case (cid, c) => (cid, c.map(java.lang.Float.floatToRawIntBits)) })
+  }
+
+  test("KMeansCodebook training is deterministic over several partitions") {
+    import graft.operators.KMeansCodebook.{train, trainSubspaces}
+    val df = plantedClusters().toDF("vec_id", "embedding").repartition(3)
+    assert(cents(train(df, k = 3, iters = 3)) == cents(train(df, k = 3, iters = 3)))
+    assert(pq(trainSubspaces(df, m = 2, sub = 2, ks = 3, iters = 2)) ==
+      pq(trainSubspaces(df, m = 2, sub = 2, ks = 3, iters = 2)))
+  }
+
+  test("KMeansCodebook: iters = 0 returns the seeds, empty input one empty codebook") {
+    import graft.operators.KMeansCodebook.{train, trainSubspaces}
+    val pts = plantedClusters()
+    val df = pts.toDF("vec_id", "embedding")
+    val seeds = pts.take(3).map { case (cid, v) => (cid, v.map(java.lang.Float.floatToRawIntBits)) }
+    assert(cents(train(df, k = 3, iters = 0)) == seeds)
+    assert(pq(trainSubspaces(df, m = 2, sub = 2, ks = 3, iters = 0)) ==
+      Seq(seeds.map { case (c, v) => (c, v.take(2)) }, seeds.map { case (c, v) => (c, v.drop(2)) }))
+    val empty = train(df.limit(0), k = 3, iters = 2).collect()
+    assert(empty.length == 1 && empty.head.getSeq[Row](0).isEmpty)
+  }
+
+  test("KMeansCodebook runs one map-only job per Lloyd round") {
+    import graft.operators.KMeansCodebook.{train, trainSubspaces}
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = "kmeans-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val ourStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(ourStages.add)
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (ourStages.contains(s.stageInfo.stageId)) stages.incrementAndGet()
+    }
+    // (jobs, completed stages) that `body` runs: one stage per job is
+    // its result stage, any other is a shuffle-map stage.
+    def counted(body: => Unit): (Int, Int) = {
+      jobs.set(0); stages.set(0)
+      sc.setJobGroup(group, "k-means job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.GraftTestBridge.drainListenerBus(sc)
+      (jobs.get, stages.get)
+    }
+    val e = spark.range(0, 400).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(7)), i => sin(col("id") * (i + 1)).cast("float"))
+        .as("embedding"))
+    sc.addSparkListener(listener)
+    try {
+      assert(counted(train(e, k = 4, iters = 3).collect()) == ((4, 4)))
+      assert(counted(trainSubspaces(e, m = 2, sub = 4, ks = 4, iters = 2).collect()) == ((3, 3)))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("MinHash32/SimHash64 match their SQL folds on adversarial inputs") {
