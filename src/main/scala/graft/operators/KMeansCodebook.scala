@@ -48,12 +48,13 @@ object KMeansCodebook {
   /** Per-row nearest-centroid id for `vec` against a bounded
     * `array<struct<cid, cvec>>` codebook column — a projection, not a
     * join/shuffle. NULL-sim centroids (zero-norm input) never win;
-    * a row with no comparable centroid gets cid = -1.
+    * a row with no comparable centroid gets a NULL cid, a value no
+    * centroid's cid can take.
     */
   def bestCentroid(spark: SparkSession, vec: Column, cents: Column): Column =
     aggregate(
       cents,
-      struct(lit(Double.NegativeInfinity).as("csim"), lit(-1L).as("cid")),
+      struct(lit(Double.NegativeInfinity).as("csim"), lit(null).cast(LongType).as("cid")),
       (acc, c) => {
         val s = CosineSim(spark, vec, c.getField("cvec"))
         when(s > acc.getField("csim"),
@@ -86,11 +87,12 @@ object KMeansCodebook {
     * makes planted-copy recall PROVABLE (a copy's per-subspace code
     * attains each subspace's maximum possible ADC contribution). The
     * SAME encoder must run at build, refresh and (implicitly, through
-    * the stored codes) serve time, or codes and ADC tables diverge.
+    * the stored codes) serve time, or codes and ADC tables diverge. A
+    * row with no comparable sub-centroid gets a NULL code.
     */
   def mipsCode(vec: Column, book: Column): Column =
     aggregate(book,
-      struct(lit(Double.NegativeInfinity).as("cdot"), lit(-1L).as("cid")),
+      struct(lit(Double.NegativeInfinity).as("cdot"), lit(null).cast(LongType).as("cid")),
       (acc, c) => {
         val d = graft.functions.VectorOps.dot(vec, c.getField("cvec"))
         when(d > acc.getField("cdot"),
@@ -168,8 +170,9 @@ object KMeansCodebook {
     val pts = e.select(posexplode(subVecs).as(Seq("s", "svec")))
     for (_ <- 1 to (if (n == 0) 0 else iters)) {
       // One slot per cid (duplicate ids share one mean), sized to its
-      // centroid. Only a row whose cid is the -1 "no centroid" answer
-      // can differ in length from the centroid it names; it is skipped.
+      // centroid. A row with no comparable centroid (NULL cid) is
+      // skipped; any other row has its centroid's length, because the
+      // cosine of vectors of unequal length is NULL.
       val slotOf = books.map(_.map(_._1).zipWithIndex.toMap)
       val dims = books.flatMap(_.map(c => Option(c._2).fold(0)(_.size))).toArray
       val book = element_at(typedLit(books).cast(ArrayType(Cents)), col("s") + 1)
@@ -180,12 +183,10 @@ object KMeansCodebook {
           val counts = new Array[Long](m * n)
           rows.foreach { r =>
             val s = r.getInt(0)
-            if (!r.isNullAt(2)) slotOf(s).get(r.getLong(1)).foreach { j =>
+            if (!r.isNullAt(1)) slotOf(s).get(r.getLong(1)).foreach { j =>
               val (v, acc) = (r.getArray(2), sums(s * n + j))
-              if (v.numElements == acc.length) {
-                acc.indices.foreach(d => acc(d) += v.getFloat(d))
-                counts(s * n + j) += 1
-              }
+              acc.indices.foreach(d => acc(d) += v.getFloat(d))
+              counts(s * n + j) += 1
             }
           }
           Iterator(Partial(sums.map(_.map(new BigDecimal(_))), counts))

@@ -2516,9 +2516,10 @@ object GraftCatalog {
     * Call under `mutate {}` after the in-memory swap; always true in
     * ephemeral mode.
     *
-    * `delta`: the commit's history change (snapshots added, versions
-    * expired) when the caller KNOWS the change is append+expire-shaped
-    * — publish's retention pass is, by construction. With it the
+    * `delta`: the commit's history change (the history it applies to,
+    * snapshots added, versions expired) when the caller KNOWS the
+    * change is append+expire-shaped — publish's retention pass is, by
+    * construction. With it the
     * ledger write is a small DELTA document (O(current segments), not
     * O(retained history)); a CHECKPOINT (full document) is still forced
     * every [[CheckpointEvery]] sequences, when no anchor checkpoint is
@@ -2531,7 +2532,8 @@ object GraftCatalog {
     */
   private def persistTableCas(
       ident: Identifier,
-      delta: Option[(Vector[CatalogSnapshot], Seq[Long])] = None): Boolean = {
+      delta: Option[(Vector[CatalogSnapshot], Vector[CatalogSnapshot], Seq[Long])] = None)
+      : Boolean = {
     if (!persistent) return true
     occWindowHookForTest(ident)
     val dir = GraftLedger.tablesDir(segmentRoot)
@@ -2566,9 +2568,9 @@ object GraftCatalog {
       val asDelta = delta.filter(_ =>
         anchor.exists(a => a >= 0 && next - a < CheckpointEvery))
       val won = asDelta match {
-        case Some((added, expired)) =>
+        case Some((base, added, expired)) =>
           GraftLedger.casWrite(dir, ident,
-            GraftLedger.encodeTableDelta(ident, entry, added, expired, epsAll),
+            GraftLedger.encodeTableDelta(ident, entry, base, added, expired, epsAll),
             next, minKeepSeq = anchor.get)
         case None =>
           // CHECKPOINT-time epoch expiry: drop streaming-query entries
@@ -2923,10 +2925,10 @@ object GraftCatalog {
     history.put(ident, retained)
     // Publish's history change is append+expire-shaped by construction
     // (snapshots common to hist and retained are the same objects), so
-    // the ledger write can be a DELTA document: the new snapshot +
-    // the versions this retention pass expired.
+    // the ledger write can be a DELTA document over `hist`: the new
+    // snapshot + the versions this retention pass expired.
     val retainedVs = retained.map(_.version).toSet
-    val deltaSpec = (retained.filter(_.version == version),
+    val deltaSpec = (hist, retained.filter(_.version == version),
       hist.map(_.version).filterNot(retainedVs.contains))
     // CAS the ledger BEFORE deleting any file: a lost CAS means another
     // PROCESS committed first and its snapshots — planned against

@@ -12,40 +12,56 @@ import org.apache.spark.sql.connector.catalog.constraints.{Check, Constraint}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Durable metastore ledger for [[GraftCatalog]] (the restart story —
-  * the Delta `_delta_log` / Iceberg metadata-file role, one JSON
-  * document per table instead of a commit log, because the catalog
-  * already serializes mutations under one lock and publishes whole
-  * snapshot lists).
+  * the Delta `_delta_log` / Iceberg metadata-file role).
   *
   * Layout under the catalog root:
   * {{{
-  *   <root>/_ledger/tables/<enc(ns)>~<enc(name)>.json
+  *   <root>/_ledger/tables/<enc(ns)>~<enc(name)>.json.d/<%020d>.json
   *   <root>/_ledger/views/<enc(ns)>~<enc(name)>.json
+  *   <root>/_ledger/dropped/<enc(ns)>~<enc(name)>.json
   * }}}
-  * Each table document carries the CURRENT entry (schema, segment list,
+  * A table's state is the CURRENT entry (schema, segment list,
   * partition columns, constraints), the retained snapshot HISTORY
   * (time travel survives a restart) and the streaming EPOCH ledger
-  * (exactly-once survives a restart). Writes are atomic
-  * (temp file + ATOMIC_MOVE) and happen under the catalog's mutation
-  * lock, so a reader process never observes a torn document.
+  * (exactly-once survives a restart).
+  *
+  * NUMBERED CAS DOCUMENTS (tables): a commit writes the table's next
+  * sequence number, `<known+1>.json`, by write-temp + fsync + atomic
+  * hardlink (put-if-absent; see `casWrite` for why rename is NOT the
+  * primitive) — the Delta `_delta_log/N.json` shape. Of two driver
+  * JVMs racing the same number exactly one wins; the loser reloads the
+  * winner's state and retries (appends, upserts and streaming epochs
+  * re-apply and both land) or refuses (row-level rewrites — see
+  * GraftCatalog.commitSegments). A DROP is a tombstone document, so
+  * sequences stay monotonic across drop / recreate. Documents are
+  * sealed with a length + CRC trailer, so a torn one never validates.
+  *
+  * DELTA AND CHECKPOINT REPLAY: a CHECKPOINT document carries the whole
+  * state ([[encodeTable]]); a DELTA document carries the current entry
+  * plus only the history snapshots the commit added and the versions it
+  * expired ([[encodeTableDelta]]). A reader walks down from the top
+  * number to the nearest checkpoint (or a flat legacy `<fname>.json`,
+  * which reads as sequence 0) and replays the deltas above it in order;
+  * the CAS makes that replay exact. A checkpoint is forced every few
+  * sequences, so replay stays short.
+  *
+  * BLOOM-ONCE RULE: a segment's bloom payload (its largest field) is
+  * written inline at most once per document — at the first occurrence
+  * of its path in a checkpoint, and in a delta only for a segment new
+  * to the state the delta replays onto. Every other occurrence carries
+  * `"bloomsRef": true`, which the decoder resolves by path from the
+  * same document or the replayed base state (see `BloomPool`).
+  * Documents written before the rule (blooms inline everywhere) decode
+  * unchanged.
   *
   * Zone-map min/max values are persisted SELF-DESCRIBING
   * (`{"t":"i32","v":7}`) rather than relying on the current schema:
   * historical snapshots may carry schemas that later ALTERs widened,
   * and a stat decoded under the wrong type would silently mis-prune.
   *
-  * CROSS-PROCESS COMMITS (tables): table documents are NUMBERED —
-  * `<fname>.d/<%020d>.json` — and a commit is a CAS: write-temp +
-  * atomic hardlink (put-if-absent; see `casWrite` for why rename is
-  * NOT the primitive) to `<known+1>.json`, the Delta
-  * `_delta_log/N.json` shape — so of two
-  * driver JVMs racing the same sequence number exactly one wins; the
-  * loser reloads the winner's document and retries (appends, upserts
-  * and streaming epochs re-apply and both land) or refuses (row-level
-  * rewrites — see GraftCatalog.commitSegments). Readers list the
-  * directory and take the highest number; a flat legacy
-  * `<fname>.json` reads as sequence 0. Views and the drop-trash stay last-write-wins flat documents —
-  * they are not data-commit surfaces.
+  * Views and the drop-trash stay last-write-wins flat documents
+  * (temp file + ATOMIC_MOVE, under the catalog's mutation lock) — they
+  * are not data-commit surfaces.
   */
 private[graft] object GraftLedger {
   import GraftCatalog.{CatalogSnapshot, ColStat, Segment, TableEntry}
@@ -108,7 +124,40 @@ private[graft] object GraftLedger {
 
   // ---- segments ----
 
-  private def segNode(s: Segment): ObjectNode = {
+  /** Per-column bloom bit arrays of a segment (see `Segment.blooms`). */
+  private type Blooms = IndexedSeq[Option[Array[Long]]]
+
+  /** The bloom payloads a document has carried so far, by segment
+    * path — the BLOOM-ONCE rule. A path names one immutable file whose
+    * blooms the writer fixed when it wrote it, so every occurrence of
+    * the path carries the same payload. A segment therefore writes its
+    * blooms inline only where the path is not in the pool yet (or the
+    * pool holds different bits); everywhere else it writes
+    * `"bloomsRef": true`. Encoder and decoder fill the pool in the same
+    * order: a checkpoint starts empty and adds each inline payload in
+    * document order (the entry's segments, then history); a delta
+    * starts from the state it replays onto. A reference the decoder
+    * cannot resolve decodes as "no bloom" — never prunes, never a wrong
+    * bloom — and an older decoder ignores the unknown key the same way.
+    */
+  private type BloomPool = scala.collection.mutable.HashMap[String, Blooms]
+
+  private def sameBlooms(a: Blooms, b: Blooms): Boolean =
+    a.length == b.length && a.indices.forall { i =>
+      (a(i), b(i)) match {
+        case (Some(x), Some(y)) => (x eq y) || java.util.Arrays.equals(x, y)
+        case (x, y) => x.isEmpty && y.isEmpty
+      }
+    }
+
+  /** A pool holding the blooms of `segs`. */
+  private def poolOf(segs: Iterator[Segment]): BloomPool = {
+    val pool: BloomPool = new scala.collection.mutable.HashMap
+    segs.foreach(s => if (s.blooms.nonEmpty) pool.put(s.path, s.blooms))
+    pool
+  }
+
+  private def segNode(s: Segment, pool: BloomPool): ObjectNode = {
     val o = M.createObjectNode()
     o.put("path", s.path).put("rows", s.rows).put("bytes", s.bytes)
     if (s.sorted) o.put("sorted", true)
@@ -135,7 +184,10 @@ private[graft] object GraftLedger {
       val d = o.putArray("dv")
       bits.foreach(d.add)
     }
-    if (s.blooms.nonEmpty) {
+    if (s.blooms.nonEmpty && pool.get(s.path).exists(sameBlooms(_, s.blooms)))
+      o.put("bloomsRef", true)
+    else if (s.blooms.nonEmpty) {
+      pool.put(s.path, s.blooms)
       // One entry per column, positionally aligned with "stats":
       // base64 of the little-endian long-array bits, or null for a
       // column without a bloom.
@@ -152,7 +204,8 @@ private[graft] object GraftLedger {
     o
   }
 
-  private def segOf(n: JsonNode): Segment = {
+  private def segOf(n: JsonNode, pool: BloomPool): Segment = {
+    val path = n.get("path").asText()
     val stats = n.get("stats").elements().asScala.map { c =>
       ColStat(valOf(c.get("min")), valOf(c.get("max")), c.get("nulls").asLong())
     }.toVector
@@ -161,8 +214,8 @@ private[graft] object GraftLedger {
       scala.collection.immutable.BitSet(d.elements().asScala.map(_.asInt()).toSeq: _*)
     }
     // Absent node (pre-bloom ledger) → empty: pruning just skips blooms.
-    val blooms = Option(n.get("blooms")).map { b =>
-      b.elements().asScala.map { e =>
+    val blooms: Blooms = Option(n.get("blooms")).map { b =>
+      val bl = b.elements().asScala.map { e =>
         if (e.isNull) None
         else {
           val bytes = java.util.Base64.getDecoder.decode(e.asText())
@@ -172,8 +225,12 @@ private[graft] object GraftLedger {
           Some(bits)
         }
       }.toVector
-    }.getOrElse(Vector.empty)
-    Segment(n.get("path").asText(), n.get("rows").asLong(),
+      pool.put(path, bl)
+      bl
+    }.getOrElse(
+      if (n.path("bloomsRef").asBoolean(false)) pool.getOrElse(path, Vector.empty)
+      else Vector.empty)
+    Segment(path, n.get("rows").asLong(),
       n.get("bytes").asLong(), stats, key, dv, blooms,
       // Absent node (pre-sorted-flag ledger) => false: the scan just
       // reports no ordering, which is always safe.
@@ -251,12 +308,12 @@ private[graft] object GraftLedger {
 
   // ---- table document ----
 
-  private def snapNode(snap: CatalogSnapshot): ObjectNode = {
+  private def snapNode(snap: CatalogSnapshot, pool: BloomPool): ObjectNode = {
     val h = M.createObjectNode()
     h.put("version", snap.version).put("wallMs", snap.wallMs)
     h.put("schema", snap.schema.json)
     val hs = h.putArray("segments")
-    snap.segments.foreach(s => hs.add(segNode(s)))
+    snap.segments.foreach(s => hs.add(segNode(s, pool)))
     val hpc = h.putArray("partitionCols")
     snap.partitionCols.foreach(hpc.add)
     val hcons = h.putArray("constraints")
@@ -279,7 +336,7 @@ private[graft] object GraftLedger {
     */
   private def tableDocNode(
       ident: Identifier, entry: TableEntry,
-      epochs: Map[String, (Long, Long)]): ObjectNode = {
+      epochs: Map[String, (Long, Long)], pool: BloomPool): ObjectNode = {
     val o = M.createObjectNode()
     val ns = o.putArray("namespace")
     ident.namespace().foreach(ns.add)
@@ -289,7 +346,7 @@ private[graft] object GraftLedger {
     val pc = o.putArray("partitionCols")
     entry.partitionCols.foreach(pc.add)
     val segs = o.putArray("segments")
-    entry.segments.foreach(s => segs.add(segNode(s)))
+    entry.segments.foreach(s => segs.add(segNode(s, pool)))
     val cons = o.putArray("constraints")
     entry.constraints.foreach(c => cons.add(constraintNode(c)))
     if (entry.eqDeletes.nonEmpty) {
@@ -324,10 +381,11 @@ private[graft] object GraftLedger {
       history: Vector[CatalogSnapshot],
       epochs: Map[String, (Long, Long)],
       droppedWallMs: Option[Long] = None): String = {
-    val o = tableDocNode(ident, entry, epochs)
+    val pool = new BloomPool
+    val o = tableDocNode(ident, entry, epochs, pool)
     droppedWallMs.foreach(o.put("droppedWallMs", _))
     val hist = o.putArray("history")
-    history.foreach(snap => hist.add(snapNode(snap)))
+    history.foreach(snap => hist.add(snapNode(snap, pool)))
     M.writerWithDefaultPrettyPrinter().writeValueAsString(o)
   }
 
@@ -339,15 +397,19 @@ private[graft] object GraftLedger {
     * CAS protocol guarantees a delta at sequence N was computed against
     * the resolved state at N−1 — to win seq N a writer must have
     * observed (and reloaded) N−1 — so replay is exact, never a merge.
+    * `base` is the history the delta replays onto: blooms of segments
+    * it already holds ride as references (the bloom-once rule), so a
+    * delta carries only the blooms of segments new in this commit.
     */
   def encodeTableDelta(
-      ident: Identifier, entry: TableEntry,
+      ident: Identifier, entry: TableEntry, base: Vector[CatalogSnapshot],
       added: Vector[CatalogSnapshot], expiredVersions: Seq[Long],
       epochs: Map[String, (Long, Long)]): String = {
-    val o = tableDocNode(ident, entry, epochs)
+    val pool = poolOf(base.iterator.flatMap(_.segments))
+    val o = tableDocNode(ident, entry, epochs, pool)
     o.put("delta", true)
     val ad = o.putArray("added")
-    added.foreach(snap => ad.add(snapNode(snap)))
+    added.foreach(snap => ad.add(snapNode(snap, pool)))
     val ex = o.putArray("expired")
     expiredVersions.foreach(ex.add)
     M.writerWithDefaultPrettyPrinter().writeValueAsString(o)
@@ -363,7 +425,7 @@ private[graft] object GraftLedger {
     * old, weaker behavior) rather than silently un-partitioning.
     */
   private def snapOf(h: JsonNode, fallbackCols: Seq[String],
-      fallbackCons: Vector[Constraint], monoNow: Long): CatalogSnapshot = {
+      fallbackCons: Vector[Constraint], monoNow: Long, pool: BloomPool): CatalogSnapshot = {
     val snapCols = Option(h.get("partitionCols"))
       .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(fallbackCols)
     def patchSpec(ss: Vector[Segment]): Vector[Segment] =
@@ -371,7 +433,7 @@ private[graft] object GraftLedger {
     CatalogSnapshot(
       h.get("version").asLong(), h.get("wallMs").asLong(), monoNow,
       DataType.fromJson(h.get("schema").asText()).asInstanceOf[StructType],
-      patchSpec(h.get("segments").elements().asScala.map(segOf).toVector),
+      patchSpec(h.get("segments").elements().asScala.map(segOf(_, pool)).toVector),
       snapCols,
       Option(h.get("constraints"))
         .map(_.elements().asScala.flatMap(constraintOf).toVector).getOrElse(fallbackCons),
@@ -391,12 +453,12 @@ private[graft] object GraftLedger {
     * side of keeping time travel alive after a restart.
     */
   /** The non-history half of a table/delta document, decoded. */
-  private def decodeDocCommon(o: JsonNode)
+  private def decodeDocCommon(o: JsonNode, pool: BloomPool)
       : (Identifier, TableEntry, Seq[String], Vector[Constraint]) = {
     val ns = o.get("namespace").elements().asScala.map(_.asText()).toArray
     val ident = Identifier.of(ns, o.get("name").asText())
     val schema = DataType.fromJson(o.get("schema").asText()).asInstanceOf[StructType]
-    val segs = o.get("segments").elements().asScala.map(segOf).toVector
+    val segs = o.get("segments").elements().asScala.map(segOf(_, pool)).toVector
     val partCols = o.get("partitionCols").elements().asScala.map(_.asText()).toSeq
     val cons = o.get("constraints").elements().asScala.flatMap(constraintOf).toVector
     val analyzed = Option(o.get("analyzed")).map { a =>
@@ -437,21 +499,23 @@ private[graft] object GraftLedger {
   def decodeTable(json: String, monoNow: Long)
       : (Identifier, TableEntry, Vector[CatalogSnapshot], Map[String, (Long, Long)]) = {
     val o = M.readTree(json)
-    val (ident, entry, partCols, cons) = decodeDocCommon(o)
+    val pool = new BloomPool
+    val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
     val hist = o.get("history").elements().asScala
-      .map(h => snapOf(h, partCols, cons, monoNow)).toVector
+      .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
     (ident, entry, hist, epochsOf(o))
   }
 
   /** Decoded delta document: (ident, entry, addedSnapshots,
-    * expiredVersions, epochs).
+    * expiredVersions, epochs). `pool` holds the blooms of the state it
+    * replays onto; the delta's own inline blooms join it.
     */
-  def decodeTableDelta(json: String, monoNow: Long)
+  private def decodeTableDelta(json: String, monoNow: Long, pool: BloomPool)
       : (Identifier, TableEntry, Vector[CatalogSnapshot], Seq[Long], Map[String, (Long, Long)]) = {
     val o = M.readTree(json)
-    val (ident, entry, partCols, cons) = decodeDocCommon(o)
+    val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
     val added = o.get("added").elements().asScala
-      .map(h => snapOf(h, partCols, cons, monoNow)).toVector
+      .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
     val expired = o.get("expired").elements().asScala.map(_.asLong()).toSeq
     (ident, entry, added, expired, epochsOf(o))
   }
@@ -668,8 +732,11 @@ private[graft] object GraftLedger {
       : ((Identifier, TableEntry, Vector[CatalogSnapshot], Map[String, (Long, Long)]), Long) = {
     var (id, entry, hist, eps) = base
     var top = baseSeq
+    // Paths are never reused (a fresh UUID per file), so one pool
+    // serves the whole chain: each delta adds its new segments' blooms.
+    val pool = poolOf(entry.segments.iterator ++ hist.iterator.flatMap(_.segments))
     deltas.foreach { case (dseq, djson) =>
-      val (did, dentry, added, expired, deps) = decodeTableDelta(djson, monoNow)
+      val (did, dentry, added, expired, deps) = decodeTableDelta(djson, monoNow, pool)
       val byV = scala.collection.mutable.LinkedHashMap.empty[Long, CatalogSnapshot]
       hist.foreach(s0 => byV.put(s0.version, s0))
       added.foreach(s0 => byV.put(s0.version, s0))

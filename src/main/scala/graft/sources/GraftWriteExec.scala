@@ -257,7 +257,7 @@ private[sources] case class GraftSegmentWriterFactory(
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
       import org.apache.spark.sql.types.StringType
       private var proj: UnsafeProjection = _
       private var projFields = -1
@@ -308,17 +308,23 @@ private[sources] case class GraftSegmentWriterFactory(
         try write(record) finally carriedRow = false
       }
       override def write(record: InternalRow): Unit = {
-        if (record.numFields != projFields) {
-          val offset = record.numFields - target.length
-          require(offset >= 0,
-            s"row has ${record.numFields} fields, table needs ${target.length}")
-          val exprs = target.zipWithIndex.map { case (f, i) =>
-            BoundReference(offset + i, f.dataType, f.nullable)
-          }
-          proj = UnsafeProjection.create(exprs)
-          projFields = record.numFields
+        // A record already in the table's layout streams through as is,
+        // unless identity assignment is about to set fields in it.
+        val row = record match {
+          case u: UnsafeRow if u.numFields == target.length && idArr.isEmpty => u
+          case _ =>
+            if (record.numFields != projFields) {
+              val offset = record.numFields - target.length
+              require(offset >= 0,
+                s"row has ${record.numFields} fields, table needs ${target.length}")
+              val exprs = target.zipWithIndex.map { case (f, i) =>
+                BoundReference(offset + i, f.dataType, f.nullable)
+              }
+              proj = UnsafeProjection.create(exprs)
+              projFields = record.numFields
+            }
+            proj(record)
         }
-        val row = proj(record)
         var j = 0
         while (j < idArr.length) {
           val a = idArr(j)

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-(segment, column) Bloom filter for point-predicate segment
@@ -58,35 +57,45 @@ object SegmentBloom {
 
   /** Canonical 64-bit hash, or None for types blooms don't track
     * (floating point — point equality on floats is degenerate —
-    * booleans and anything exotic; zone maps still cover those).
+    * booleans and anything exotic; zone maps still cover those). The
+    * probe side's hash: it routes through the same [[hashLong]] /
+    * [[hashUtf8]] the writer feeds its builders, so every value the
+    * writer saw probes present.
     */
   def hashOf(v: Any): Option[Long] = v match {
-    case x: java.lang.Long => Some(mix(x.longValue))
-    case x: java.lang.Integer => Some(mix(x.longValue))
-    case x: java.lang.Short => Some(mix(x.longValue))
-    case x: java.lang.Byte => Some(mix(x.longValue))
-    case s: UTF8String => Some(hashBytes(s.getBytes))
-    case s: String => Some(hashBytes(s.getBytes(StandardCharsets.UTF_8)))
+    case x: java.lang.Long => Some(hashLong(x.longValue))
+    case x: java.lang.Integer => Some(hashLong(x.longValue))
+    case x: java.lang.Short => Some(hashLong(x.longValue))
+    case x: java.lang.Byte => Some(hashLong(x.longValue))
+    case s: UTF8String => Some(hashUtf8(s))
+    case s: String => Some(hashUtf8(UTF8String.fromString(s)))
     case _ => None
   }
 
-  /** splitmix64 finalizer — full avalanche for integral keys. */
-  private def mix(z0: Long): Long = {
+  /** Hash of an integral value widened to a long: the splitmix64
+    * finalizer, full avalanche for integral keys.
+    */
+  def hashLong(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
   }
 
-  /** FNV-1a over the bytes, finished through the splitmix mixer. */
-  private def hashBytes(b: Array[Byte]): Long = {
+  /** Hash of a string: FNV-1a over its UTF-8 bytes, read in place (no
+    * copy), finished through [[hashLong]].
+    */
+  def hashUtf8(s: UTF8String): Long = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
     var h = 0xcbf29ce484222325L
     var i = 0
-    while (i < b.length) {
-      h = (h ^ (b(i) & 0xffL)) * 0x100000001b3L
+    while (i < n) {
+      h = (h ^ (Platform.getByte(base, off + i) & 0xffL)) * 0x100000001b3L
       i += 1
     }
-    mix(h)
+    hashLong(h)
   }
 
   /** Membership probe. `bits.length` is always a power of two (the
@@ -120,9 +129,9 @@ object SegmentBloom {
   /** Streaming per-column builder the segment writer drives. Collects
     * distinct hashes (bounded by [[MaxDistinct]]) and materializes an
     * optimally-sized filter at finish; `None` when the column
-    * overflowed the budget, saw an untrackable value, or had no
-    * non-null rows (an empty bloom would prune EVERY probe — absent
-    * must mean "don't know", not "provably missing").
+    * overflowed the budget or had no non-null rows (an empty bloom
+    * would prune EVERY probe — absent must mean "don't know", not
+    * "provably missing").
     */
   final class Builder {
     // Primitive open-addressed set (linear probing, power-of-two
@@ -156,17 +165,18 @@ object SegmentBloom {
       true
     }
 
-    def add(v: Any): Unit = if (!over) hashOf(v) match {
-      case Some(h) =>
-        if (h == 0L) {
-          if (!hasZero) { hasZero = true; n += 1 }
-        } else if (put(h)) {
-          n += 1
-          if (n > MaxDistinct) { over = true; table = Array.empty; return }
-          if ((n - (if (hasZero) 1 else 0)) * 4 >= table.length * 3) grow()
-        }
-      case None =>
-        over = true; table = Array.empty
+    /** Record one value by its canonical hash — [[hashLong]] of an
+      * integral value, [[hashUtf8]] of a string, i.e. exactly what
+      * [[hashOf]] answers for it — or probes for that value miss.
+      */
+    def addHash(h: Long): Unit = if (!over) {
+      if (h == 0L) {
+        if (!hasZero) { hasZero = true; n += 1 }
+      } else if (put(h)) {
+        n += 1
+        if (n > MaxDistinct) { over = true; table = Array.empty; return }
+        if ((n - (if (hasZero) 1 else 0)) * 4 >= table.length * 3) grow()
+      }
     }
 
     def result(): Option[Array[Long]] =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 // Segment metadata machinery (value comparator, filter evaluation,
 // zone maps, segment file IO, equality-delete filters, metadata
@@ -368,105 +369,108 @@ private[sources] object SegmentIO {
 
   /** Open a streaming writer; call `add` per row, then `finish` for the
     * Segment (or `abort` to drop the file). Collects the per-column
-    * zone map (min/max/null-count) and byte size as it streams — one
-    * typed read + compare per column per row, no second pass.
+    * zone map (min/max/null-count), the blooms and the byte size as it
+    * streams — one typed read + compare per column per row, no second
+    * pass, and no allocation per row. Each column is classified once
+    * into a typed tracker: integral, boolean and floating-point values
+    * keep their min/max in `long` slots, strings as `UTF8String`s
+    * cloned only when one becomes the new min or max. Blooms take a
+    * primitive hash ([[SegmentBloom.Builder.addHash]]), rows stream out
+    * without a copy, and values are boxed only in `finish`, into the
+    * `ColStat` types the metadata paths compare.
     */
   final class Writer(dir: String, schema: StructType) {
-    import org.apache.spark.sql.types._
+    import Writer._
     private val path = newPath(dir)
     private var out: DataOutputStream = _
     private var n = 0L
     private var bytes = 0L
     private val width = schema.length
-    private val mins = new Array[Any](width)
-    private val maxs = new Array[Any](width)
+    private val kinds: Array[Int] = schema.fields.map(f => kindOf(f.dataType))
+    private val seen = new Array[Boolean](width)
     private val nulls = new Array[Long](width)
-    // Column types the zone map tracks; others get ColStat(null, null, 0)
-    // with a rows-long null count of 0 — ZoneMap treats a null min with
-    // nulls < rows as "unsupported, never prune".
-    // Temporal columns track through their INTERNAL encodings (micros
-    // Long / epoch-day Int) — ZoneMap normalizes pushed temporal
-    // literals to the same encodings, which is what makes time-range
-    // segment skipping work on event tables (the 100 TB time-series
-    // case: a `ts BETWEEN ...` should read days, not history).
-    private val tracked: Array[Boolean] = schema.fields.map(_.dataType match {
-      case LongType | IntegerType | ShortType | ByteType |
-           DoubleType | FloatType | BooleanType | StringType |
-           TimestampType | TimestampNTZType | DateType => true
-      case _ => false
-    })
+    private val minL = new Array[Long](width)
+    private val maxL = new Array[Long](width)
+    private val minS = new Array[UTF8String](width)
+    private val maxS = new Array[UTF8String](width)
     // Bloom-tracked columns (point-lookup-shaped types) get a distinct-
     // hash builder; floats/booleans don't (degenerate point equality).
     private val blooms: Array[SegmentBloom.Builder] =
       schema.fields.map(f =>
         if (SegmentBloom.trackable(f.dataType)) new SegmentBloom.Builder else null)
+    private val writeBuf = new Array[Byte](1 << 12)
 
-    private def colValue(row: UnsafeRow, i: Int): Any = schema.fields(i).dataType match {
-      case LongType | TimestampType | TimestampNTZType => row.getLong(i)
-      case IntegerType | DateType => row.getInt(i)
-      case ShortType => row.getShort(i)
-      case ByteType => row.getByte(i)
-      case DoubleType => row.getDouble(i)
-      case FloatType => row.getFloat(i)
-      case BooleanType => row.getBoolean(i)
-      // UnsafeRow string reads point into the (reused) row buffer —
-      // clone before retaining as a min/max.
-      case StringType => row.getUTF8String(i).clone()
-      case _ => null
+    private def trackLong(i: Int, v: Long): Unit = {
+      if (!seen(i)) { seen(i) = true; minL(i) = v; maxL(i) = v }
+      else if (v < minL(i)) minL(i) = v
+      else if (v > maxL(i)) maxL(i) = v
+      if (blooms(i) != null) blooms(i).addHash(SegmentBloom.hashLong(v))
     }
 
-    // Exact same-type comparisons (a column's values share one boxed
-    // type); Double/Float use compare() so NaN orders largest, matching
-    // Spark's ordering.
-    private def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Long, y: java.lang.Long) => x < y
-      case (x: java.lang.Integer, y: java.lang.Integer) => x < y
-      case (x: java.lang.Short, y: java.lang.Short) => x < y
-      case (x: java.lang.Byte, y: java.lang.Byte) => x < y
-      case (x: java.lang.Double, y: java.lang.Double) =>
-        java.lang.Double.compare(x, y) < 0
-      case (x: java.lang.Float, y: java.lang.Float) =>
-        java.lang.Float.compare(x, y) < 0
-      case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
-      case (x: org.apache.spark.unsafe.types.UTF8String,
-            y: org.apache.spark.unsafe.types.UTF8String) => x.binaryCompare(y) < 0
-      case _ => false
+    // UnsafeRow string reads point into the (reused) row buffer: clone
+    // only a value that replaces the min or max.
+    private def trackString(i: Int, v: UTF8String): Unit = {
+      if (!seen(i)) { seen(i) = true; val c = v.clone(); minS(i) = c; maxS(i) = c }
+      else if (v.binaryCompare(minS(i)) < 0) minS(i) = v.clone()
+      else if (v.binaryCompare(maxS(i)) > 0) maxS(i) = v.clone()
+      blooms(i).addHash(SegmentBloom.hashUtf8(v))
     }
 
     def add(row: UnsafeRow): Unit = {
       if (out == null) // lazy: a rowless task publishes no segment
         out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path), 1 << 16))
-      val b = row.getBytes
-      out.writeInt(b.length)
-      out.write(b)
-      bytes += 4L + b.length
+      val size = row.getSizeInBytes
+      out.writeInt(size)
+      row.writeToStream(out, writeBuf)
+      bytes += 4L + size
       n += 1
       var i = 0
       while (i < width) {
-        if (tracked(i)) {
+        val k = kinds(i)
+        if (k != Untracked) {
           if (row.isNullAt(i)) nulls(i) += 1
-          else {
-            val v = colValue(row, i)
-            if (mins(i) == null || lt(v, mins(i))) mins(i) = v
-            if (maxs(i) == null || lt(maxs(i), v)) maxs(i) = v
-            if (blooms(i) != null) blooms(i).add(v)
+          else k match {
+            case KLong => trackLong(i, row.getLong(i))
+            case KInt => trackLong(i, row.getInt(i))
+            case KShort => trackLong(i, row.getShort(i))
+            case KByte => trackLong(i, row.getByte(i))
+            case KBoolean => trackLong(i, if (row.getBoolean(i)) 1L else 0L)
+            case KDouble => trackLong(i, doubleKey(row.getDouble(i)))
+            case KFloat => trackLong(i, doubleKey(row.getFloat(i)))
+            case _ => trackString(i, row.getUTF8String(i))
           }
         }
         i += 1
       }
     }
 
+    /** Column `i`'s min (`lo`) or max as the boxed value `ColStat`
+      * carries; strings become external Strings: serializable in the
+      * metastore and directly comparable to pushed Filter values.
+      */
+    private def boxed(i: Int, lo: Boolean): Any =
+      if (!seen(i)) null
+      else {
+        val l = if (lo) minL(i) else maxL(i)
+        def d = java.lang.Double.longBitsToDouble(flipNegative(l))
+        kinds(i) match {
+          case KLong => java.lang.Long.valueOf(l)
+          case KInt => java.lang.Integer.valueOf(l.toInt)
+          case KShort => java.lang.Short.valueOf(l.toShort)
+          case KByte => java.lang.Byte.valueOf(l.toByte)
+          case KBoolean => java.lang.Boolean.valueOf(l != 0L)
+          case KDouble => java.lang.Double.valueOf(d)
+          case KFloat => java.lang.Float.valueOf(d.toFloat)
+          case _ => (if (lo) minS(i) else maxS(i)).toString
+        }
+      }
+
     def finish(): Option[Segment] =
       if (out == null) None
       else {
         out.close()
-        // UTF8String min/max become external Strings: serializable in
-        // the metastore and directly comparable to pushed Filter values.
-        def ext(v: Any): Any = v match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => other
-        }
-        val stats = Vector.tabulate(width)(i => ColStat(ext(mins(i)), ext(maxs(i)), nulls(i)))
+        val stats = Vector.tabulate(width)(i =>
+          ColStat(boxed(i, lo = true), boxed(i, lo = false), nulls(i)))
         val bl = Vector.tabulate(width)(i =>
           if (blooms(i) == null) None else blooms(i).result())
         Some(Segment(path, n, bytes, stats, blooms = bl))
@@ -475,6 +479,50 @@ private[sources] object SegmentIO {
       if (out != null) out.close()
       try Files.deleteIfExists(Paths.get(path))
       catch { case _: java.io.IOException => () }
+    }
+  }
+
+  private object Writer {
+    import org.apache.spark.sql.types._
+    // Column kinds the zone map tracks; an Untracked column gets
+    // ColStat(null, null, 0) with a rows-long null count of 0 — ZoneMap
+    // treats a null min with nulls < rows as "unsupported, never prune".
+    // Temporal columns track through their INTERNAL encodings (micros
+    // Long / epoch-day Int) — ZoneMap normalizes pushed temporal
+    // literals to the same encodings, which is what makes time-range
+    // segment skipping work on event tables (the 100 TB time-series
+    // case: a `ts BETWEEN ...` should read days, not history).
+    final val Untracked = 0
+    final val KLong = 1
+    final val KInt = 2
+    final val KShort = 3
+    final val KByte = 4
+    final val KBoolean = 5
+    final val KDouble = 6
+    final val KFloat = 7
+    final val KString = 8
+
+    /** Order-preserving long key of a double: its IEEE bits with the
+      * magnitude bits flipped for negatives, so signed-long order is
+      * `Double.compare`'s (NaN largest, -0.0 below 0.0 — Spark's order).
+      * A Float widens to the double of the same value, so its keys keep
+      * `Float.compare`'s order too.
+      */
+    def doubleKey(d: Double): Long = flipNegative(java.lang.Double.doubleToLongBits(d))
+
+    /** The flip [[doubleKey]] applies; its own inverse. */
+    def flipNegative(b: Long): Long = b ^ ((b >> 63) & Long.MaxValue)
+
+    def kindOf(dt: DataType): Int = dt match {
+      case LongType | TimestampType | TimestampNTZType => KLong
+      case IntegerType | DateType => KInt
+      case ShortType => KShort
+      case ByteType => KByte
+      case BooleanType => KBoolean
+      case DoubleType => KDouble
+      case FloatType => KFloat
+      case StringType => KString
+      case _ => Untracked
     }
   }
 

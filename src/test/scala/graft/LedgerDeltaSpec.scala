@@ -97,6 +97,118 @@ class LedgerDeltaSpec extends AnyFunSuite {
     spark.sql("DROP TABLE pgraft.ld.h PURGE")
   }
 
+  /** The newest DELTA document in the table's directory: its size and
+    * the bytes of the bloom payloads it carries inline.
+    */
+  private def newestDelta(id: Identifier): (Long, Long) = {
+    val d = docDirOf(id)
+    docSizes(id).reverseIterator.map { case (seq, size) =>
+      val raw = java.nio.file.Files.readString(d.resolve(f"$seq%020d.json"))
+      (size, new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(raw.substring(0, raw.lastIndexOf("\n#graft-seal:"))))
+    }.collectFirst { case (size, doc) if doc.path("delta").asBoolean(false) =>
+      val segs = doc.get("segments").elements().asScala ++
+        doc.get("added").elements().asScala.flatMap(_.get("segments").elements().asScala)
+      size -> segs.flatMap(s => Option(s.get("blooms")).iterator.flatMap(_.elements().asScala))
+        .map(_.asText("").length.toLong).sum
+    }.getOrElse(fail("no delta document"))
+  }
+
+  /** Every retained snapshot's segment blooms, by path. */
+  private def bloomsOf(id: Identifier): Map[String, IndexedSeq[Option[Array[Long]]]] = {
+    val v = GraftCatalog.currentVersion(id.namespace.head, id.name).get
+    (0L to v).flatMap(GraftCatalog.snapshotByVersion(id, _))
+      .flatMap(_.segments).map(s => s.path -> s.blooms).toMap
+  }
+
+  private def assertSameBlooms(
+      want: Map[String, IndexedSeq[Option[Array[Long]]]],
+      got: Map[String, IndexedSeq[Option[Array[Long]]]], when: String): Unit = {
+    assert(got.keySet == want.keySet, s"$when: segment paths differ")
+    want.foreach { case (path, w) =>
+      val g = got(path)
+      assert(g.length == w.length && g.zip(w).forall {
+        case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
+        case (a, b) => a.isEmpty && b.isEmpty
+      }, s"$when: blooms of $path differ from the writer's")
+    }
+  }
+
+  test("segment-axis gauntlet: each segment's blooms ride the ledger once") {
+    val id = ident("b")
+    spark.sql("DROP TABLE IF EXISTS pgraft.ld.b PURGE")
+    spark.sql(
+      """CREATE TABLE pgraft.ld.b (k BIGINT) USING graft
+        |TBLPROPERTIES ('graft.retention.seconds'='3600',
+        |               'graft.retention.snapshots'='600')""".stripMargin)
+    // 40 appends of 5k distinct keys, one segment each: every segment
+    // carries a real bloom, and 40 appends cross two checkpoints.
+    var second = (-1L, -1L)
+    (0 until 40).foreach { i =>
+      spark.sql(s"INSERT INTO pgraft.ld.b SELECT id FROM range(${i * 5000L}, ${(i + 1) * 5000L}, 1, 1)")
+      if (i == 1) second = newestDelta(id)
+    }
+    val live = GraftCatalog.snapshotByVersion(id, GraftCatalog.currentVersion("ld", "b").get)
+      .get.segments
+    assert(live.length == 40 && live.forall(_.blooms.headOption.flatten.isDefined),
+      "every appended segment should carry a bloom")
+    // Deltas carry only the new segment's blooms: the 40th delta's bloom
+    // payload is the 2nd's, where repeating every live bloom in the
+    // entry and the added snapshot grows it 40-fold. The rest of the
+    // document lists each live segment's stats (twice), so it still
+    // grows by a few hundred bytes a segment, far below one bloom each.
+    val (last, lastBlooms) = newestDelta(id)
+    val (secondSize, secondBlooms) = second
+    assert(secondBlooms > 0 && lastBlooms <= secondBlooms * 3 / 2,
+      s"bloom payload grew with the segment count: 2nd $secondBlooms B, newest $lastBlooms B")
+    assert(last - secondSize <= 38 * secondBlooms / 4,
+      s"delta grew by a bloom's share per segment: 2nd $secondSize B, newest $last B")
+    // Restart: checkpoint + delta replay resolves the writer's blooms.
+    def restartMatches(when: String): Unit = {
+      val want = bloomsOf(id)
+      GraftCatalog.resetInMemoryStateForTest(id)
+      spark.sql("SELECT count(*) FROM pgraft.ld.b").collect()
+      assertSameBlooms(want, bloomsOf(id), when)
+    }
+    restartMatches("after 40 appends")
+    spark.sql("CALL pgraft.system.compact('ld', 'b')").collect()
+    spark.sql("DELETE FROM pgraft.ld.b WHERE k < 10") // minority: a deletion vector
+    assert(GraftCatalog.dvDeletedRows("ld", "b") == 10L)
+    restartMatches("after compact and a dv DELETE")
+    // A legacy document with the blooms inline on every occurrence of
+    // a segment still resolves: demote the ledger to a flat document
+    // of that shape.
+    val dir = GraftLedger.tablesDir(GraftCatalog.warehouseRootForTest)
+    val (sid, entry, hist, eps) = GraftLedger.readTableState(dir, id, System.nanoTime()).get.state.get
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val doc = m.readTree(GraftLedger.encodeTable(sid, entry, hist, eps))
+    val inline = scala.collection.mutable.HashMap.empty[String, com.fasterxml.jackson.databind.JsonNode]
+    def inlineAll(segs: com.fasterxml.jackson.databind.JsonNode): Unit =
+      segs.elements().asScala.foreach { case o: com.fasterxml.jackson.databind.node.ObjectNode =>
+        val path = o.get("path").asText()
+        Option(o.get("blooms")).foreach(inline.put(path, _))
+        if (o.remove("bloomsRef") != null) o.set[com.fasterxml.jackson.databind.JsonNode]("blooms", inline(path))
+      }
+    inlineAll(doc.get("segments"))
+    doc.get("history").elements().asScala.foreach(h => inlineAll(h.get("segments")))
+    val legacy = m.writerWithDefaultPrettyPrinter().writeValueAsString(doc)
+    assert(!legacy.contains("bloomsRef"))
+    val want = bloomsOf(id)
+    val d = docDirOf(id)
+    val ls = java.nio.file.Files.list(d)
+    try ls.iterator().asScala.foreach(p => java.nio.file.Files.delete(p))
+    finally ls.close()
+    java.nio.file.Files.delete(d)
+    GraftLedger.write(dir, id, legacy)
+    GraftCatalog.resetInMemoryStateForTest(id)
+    spark.sql("SELECT count(*) FROM pgraft.ld.b").collect()
+    assertSameBlooms(want, bloomsOf(id), "from a legacy inline document")
+    // A delta above the legacy anchor references its segments.
+    spark.sql("INSERT INTO pgraft.ld.b SELECT id FROM range(900000, 905000, 1, 1)")
+    restartMatches("a delta above a legacy document")
+    spark.sql("DROP TABLE pgraft.ld.b PURGE")
+  }
+
   test("delta documents above a LEGACY FLAT doc resolve (flat is the seq-0 anchor)") {
     // A pre-numbered-ledger warehouse holds one flat <table>.json per
     // table. A process that loads it reports checkpoint seq 0, so its

@@ -1,6 +1,12 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 
 import graft.sources.SegmentBloom
 
@@ -19,7 +25,7 @@ object SegmentBloomProps extends Properties("SegmentBloom") {
 
   private def build(vs: Seq[Any]): Option[Array[Long]] = {
     val b = new SegmentBloom.Builder
-    vs.foreach(b.add)
+    vs.foreach(v => SegmentBloom.hashOf(v).foreach(b.addHash))
     b.result()
   }
 
@@ -61,9 +67,39 @@ object SegmentBloomProps extends Properties("SegmentBloom") {
   property("empty and overflowed builders yield no bloom (never 'provably absent')") = {
     val empty = new SegmentBloom.Builder
     val over = new SegmentBloom.Builder
-    (0 to SegmentBloom.MaxDistinct).foreach(i => over.add(java.lang.Long.valueOf(i.toLong)))
-    val untracked = new SegmentBloom.Builder
-    untracked.add(java.lang.Double.valueOf(1.5))
-    Prop(empty.result().isEmpty && over.result().isEmpty && untracked.result().isEmpty)
+    (0 to SegmentBloom.MaxDistinct).foreach(i => over.addHash(SegmentBloom.hashLong(i.toLong)))
+    // An untrackable value has no hash, so no builder ever sees it.
+    val untracked = SegmentBloom.hashOf(java.lang.Double.valueOf(1.5))
+    Prop(empty.result().isEmpty && over.result().isEmpty && untracked.isEmpty)
+  }
+
+  // The string hash blooms have always used: FNV-1a over a copy of the
+  // UTF-8 bytes, finished by the splitmix64 mixer.
+  private def fnvOfCopy(s: String): Long = {
+    var h = 0xcbf29ce484222325L
+    s.getBytes(StandardCharsets.UTF_8).foreach(b => h = (h ^ (b & 0xffL)) * 0x100000001b3L)
+    SegmentBloom.hashLong(h)
+  }
+
+  private val toRow = UnsafeProjection.create(Array[DataType](LongType, StringType))
+
+  property("in-place UTF-8 hash of a row's string equals hashOf of the String") = Prop.forAll(
+    Gen.oneOf(Arbitrary.arbitrary[String], Gen.stringOf(Gen.oneOf('a', '\u00e9', '\u4e2d', '\uFF21')),
+      Gen.const(""), Gen.const("\uD83D\uDE00"))) { s =>
+    // The string sits inside an UnsafeRow buffer, after a fixed field,
+    // as the segment writer reads it.
+    val inRow = toRow(InternalRow(7L, UTF8String.fromString(s))).getUTF8String(1)
+    val h = SegmentBloom.hashUtf8(inRow)
+    SegmentBloom.hashOf(inRow.toString).contains(h) && h == fnvOfCopy(inRow.toString)
+  }
+
+  property("integral hashes equal hashOf of the boxed value") = Prop.forAll(
+    Arbitrary.arbitrary[Long]) { v =>
+    SegmentBloom.hashOf(java.lang.Long.valueOf(v)).contains(SegmentBloom.hashLong(v)) &&
+      SegmentBloom.hashOf(java.lang.Integer.valueOf(v.toInt)).contains(SegmentBloom.hashLong(v.toInt.toLong)) &&
+      SegmentBloom.hashOf(java.lang.Short.valueOf(v.toShort)).contains(SegmentBloom.hashLong(v.toShort.toLong)) &&
+      SegmentBloom.hashOf(java.lang.Byte.valueOf(v.toByte)).contains(SegmentBloom.hashLong(v.toByte.toLong)) &&
+      // splitmix64's first output from state 0: the mixer is unchanged.
+      SegmentBloom.hashLong(0L) == 0xe220a8397b1dcdafL
   }
 }

@@ -555,6 +555,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == ref.map { case (cid, c) => (cid, c.map(java.lang.Float.floatToRawIntBits)) })
   }
 
+  test("KMeansCodebook: a vector with no comparable centroid gets a NULL cid, never cid -1's") {
+    import graft.operators.KMeansCodebook.{bestCentroid, train}
+    // Seeds are the two lowest ids, -1 and 5. Vector 7 (zero norm) and
+    // vector 9 (wrong length) compare with no centroid.
+    val df = Seq(
+      (-1L, Seq(1f, 0f)), (5L, Seq(0f, 1f)), (7L, Seq(0f, 0f)),
+      (8L, Seq(1f, 0.1f)), (9L, Seq(0f))).toDF("vec_id", "embedding")
+    val cb = train(df, 2, 1)
+    val c = cb.head().getSeq[Row](0).map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    // Centroid -1 is the mean of -1 and 8 only.
+    assert(c(-1L).head == 1.0f, s"centroid -1 absorbed a vector it does not own: ${c(-1L)}")
+    val lists = df.crossJoin(cb)
+      .select(col("vec_id"), bestCentroid(spark, col("embedding"), col("cents")).as("list_id"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(lists == Map(-1L -> Some(-1L), 5L -> Some(5L), 7L -> None, 8L -> Some(-1L), 9L -> None))
+  }
+
   test("KMeansCodebook training is deterministic over several partitions") {
     import graft.operators.KMeansCodebook.{train, trainSubspaces}
     val df = plantedClusters().toDF("vec_id", "embedding").repartition(3)

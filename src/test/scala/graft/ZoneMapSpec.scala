@@ -163,13 +163,13 @@ class ZoneMapSpec extends AnyFunSuite {
   test("bloom bits prune point lookups the min/max range cannot") {
     import graft.sources.SegmentBloom
     import org.apache.spark.unsafe.types.UTF8String
-    // Write side hands the builder UTF8String (the segment writer's
+    // Write side hashes the UTF8String in place (the segment writer's
     // value type); probes arrive as java.lang.String from pushed
     // filters. The canonical hash must make them meet.
     val nb = new SegmentBloom.Builder
-    Seq("ham", "hog", "pig").foreach(v => nb.add(UTF8String.fromString(v)))
+    Seq("ham", "hog", "pig").foreach(v => nb.addHash(SegmentBloom.hashUtf8(UTF8String.fromString(v))))
     val ib = new SegmentBloom.Builder
-    Seq(100L, 150L, 200L).foreach(v => ib.add(java.lang.Long.valueOf(v)))
+    Seq(100L, 150L, 200L).foreach(v => ib.addHash(SegmentBloom.hashLong(v)))
     val segB = seg.copy(blooms = Vector(
       ib.result(), nb.result(), None, None, None))
     def keepB(f: Filter): Boolean = ZoneMap.mightMatch(f, schema, segB)
@@ -194,7 +194,7 @@ class ZoneMapSpec extends AnyFunSuite {
   test("bloom builder: no false negatives over a dense key set; overflow and empty yield None") {
     import graft.sources.SegmentBloom
     val b = new SegmentBloom.Builder
-    (0L until 5000L).foreach(v => b.add(java.lang.Long.valueOf(v)))
+    (0L until 5000L).foreach(v => b.addHash(SegmentBloom.hashLong(v)))
     val bits = b.result().get
     (0L until 5000L).foreach { v =>
       assert(SegmentBloom.contains(bits, SegmentBloom.hashOf(v).get),
@@ -206,14 +206,14 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(fps < 300, s"false-positive rate degenerate: $fps / 10000")
     // Builder gives up past MaxDistinct (no bloom beats a giant bloom)
     val big = new SegmentBloom.Builder
-    (0L to SegmentBloom.MaxDistinct.toLong).foreach(v => big.add(java.lang.Long.valueOf(v)))
+    (0L to SegmentBloom.MaxDistinct.toLong).foreach(v => big.addHash(SegmentBloom.hashLong(v)))
     assert(big.result().isEmpty)
-    // ... and an empty or untrackable-typed column yields None too
-    // (an empty bloom would prune every probe).
+    // ... and an empty column yields None too (an empty bloom would
+    // prune every probe); an untrackable-typed column gets no builder
+    // and no hash at all.
     assert(new SegmentBloom.Builder().result().isEmpty)
-    val fb = new SegmentBloom.Builder
-    fb.add(java.lang.Double.valueOf(1.5))
-    assert(fb.result().isEmpty)
+    assert(!SegmentBloom.trackable(org.apache.spark.sql.types.DoubleType))
+    assert(SegmentBloom.hashOf(java.lang.Double.valueOf(1.5)).isEmpty)
   }
 
   test("prunable() reports exactly the shapes the pruner understands") {

@@ -110,6 +110,110 @@ class SegmentIOSpec extends AnyFunSuite {
     assert(SegmentIO.reproject(seg, dir, schema.length, schema, toUnsafe).get.seq == 2L)
   }
 
+  test("writer stats, blooms and bytes equal a boxed reference fold (property)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import org.apache.spark.sql.types.Decimal
+    val all = StructType(Seq(
+      StructField("l", LongType), StructField("i", IntegerType), StructField("sh", ShortType),
+      StructField("b", ByteType), StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("z", BooleanType), StructField("s", StringType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("dec", DecimalType(10, 2))))
+    val proj = UnsafeProjection.create(all)
+    // Internal values per column (the UnsafeRow encodings), with nulls
+    // and each type's edge values.
+    def orNull(g: Gen[Any]): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> g)
+    val longs = Gen.oneOf(Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L),
+      Gen.choose(-50L, 50L), Gen.choose(Long.MinValue, Long.MaxValue))
+    val ints = Gen.oneOf(Gen.oneOf(Int.MinValue, Int.MaxValue, 0), Gen.choose(-50, 50))
+    val doubles = Gen.oneOf(Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, Double.MinValue, Double.MaxValue), Gen.choose(-5.0, 5.0))
+    val floats = Gen.oneOf(Gen.oneOf(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity,
+      Float.NegativeInfinity, Float.MinValue, Float.MaxValue), Gen.choose(-5.0f, 5.0f))
+    val strs = Gen.oneOf(Gen.oneOf("", "a", "b", "\u00e9t\u00e9", "\uFF21", "\uD83D\uDE00", "\u4e2d"),
+      Gen.alphaNumStr, Gen.stringOf(Gen.oneOf('x', '\u00e9', '\u4e2d')))
+    val cols: Seq[Gen[Any]] = Seq(
+      longs, ints, Gen.choose(Short.MinValue, Short.MaxValue),
+      Gen.choose(Byte.MinValue, Byte.MaxValue), doubles, floats, Gen.oneOf(true, false),
+      strs.map(UTF8String.fromString), ints, longs, longs,
+      Gen.choose(-9999L, 9999L).map(Decimal(_, 10, 2)))
+    val rowsGen = Gen.choose(0, 60).flatMap(Gen.listOfN(_, Gen.sequence[Seq[Any], Any](cols.map(orNull))))
+
+    // The reference: box every value, fold min/max with each type's
+    // order, feed blooms through the probe side's `hashOf`.
+    def box(dt: DataType, v: Any): Any = (dt, v) match {
+      case (LongType | TimestampType | TimestampNTZType, x: Long) => java.lang.Long.valueOf(x)
+      case (IntegerType | DateType, x: Int) => java.lang.Integer.valueOf(x)
+      case (ShortType, x: Short) => java.lang.Short.valueOf(x)
+      case (ByteType, x: Byte) => java.lang.Byte.valueOf(x)
+      case (DoubleType, x: Double) => java.lang.Double.valueOf(x)
+      case (FloatType, x: Float) => java.lang.Float.valueOf(x)
+      case (BooleanType, x: Boolean) => java.lang.Boolean.valueOf(x)
+      case (StringType, x: UTF8String) => x
+      case _ => null
+    }
+    def lt(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: java.lang.Double, y: java.lang.Double) => java.lang.Double.compare(x, y) < 0
+      case (x: java.lang.Float, y: java.lang.Float) => java.lang.Float.compare(x, y) < 0
+      case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
+      case (x: UTF8String, y: UTF8String) => x.binaryCompare(y) < 0
+      case (x: Number, y: Number) => x.longValue < y.longValue
+    }
+    def ext(v: Option[Any]): Any = v match {
+      case Some(s: UTF8String) => s.toString
+      case other => other.orNull
+    }
+    // Exact: same boxed class and Java equality (NaN equals NaN, -0.0
+    // differs from 0.0).
+    def same(a: Any, b: Any): Boolean =
+      if (a == null || b == null) a == null && b == null
+      else a.getClass == b.getClass && a.asInstanceOf[AnyRef].equals(b)
+    def sameBits(a: Option[Array[Long]], b: Option[Array[Long]]): Boolean =
+      a.isEmpty == b.isEmpty && a.forall(x => java.util.Arrays.equals(x, b.get))
+
+    val prop = Prop.forAll(rowsGen) { rows =>
+      val w = new SegmentIO.Writer(dir, all)
+      val bytes = new java.io.ByteArrayOutputStream
+      val ref = new java.io.DataOutputStream(bytes)
+      rows.foreach { r =>
+        val u = proj(InternalRow.fromSeq(r))
+        val b = u.getBytes
+        ref.writeInt(b.length); ref.write(b)
+        w.add(u)
+      }
+      w.finish() match {
+        case None => rows.isEmpty :| "rowless writer"
+        case Some(seg) =>
+          val file = Files.readAllBytes(java.nio.file.Paths.get(seg.path))
+          Files.delete(java.nio.file.Paths.get(seg.path))
+          val records = (java.util.Arrays.equals(file, bytes.toByteArray) &&
+            seg.rows == rows.length && seg.bytes == file.length) :| "record bytes"
+          records && Prop.all(all.fields.indices.map { j =>
+              val dt = all.fields(j).dataType
+              val vs = rows.flatMap(r => Option(r(j)).flatMap(v => Option(box(dt, v))))
+              val tracked = dt != DecimalType(10, 2)
+              val want = GraftCatalog.ColStat(
+                ext(vs.reduceOption((a, b) => if (lt(b, a)) b else a)),
+                ext(vs.reduceOption((a, b) => if (lt(a, b)) b else a)),
+                if (tracked) rows.count(_(j) == null).toLong else 0L)
+              val bloom =
+                if (!SegmentBloom.trackable(dt)) None
+                else {
+                  val bb = new SegmentBloom.Builder
+                  vs.foreach(v => SegmentBloom.hashOf(v).foreach(bb.addHash))
+                  bb.result()
+                }
+              val got = seg.stats(j)
+              (same(got.min, want.min) && same(got.max, want.max) && got.nulls == want.nulls &&
+                sameBits(seg.blooms(j), bloom)) :| s"column ${all.fields(j).name}: $got vs $want"
+            }: _*)
+      }
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("string min/max and the sorted fold use UTF-8 binary order, also under spark.testing") {
     // UTF8String.compareTo throws when spark.testing is set; the writer's
     // zone map and compaction's fold must never reach it.
