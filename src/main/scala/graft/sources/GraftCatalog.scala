@@ -976,20 +976,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       throw new UnsupportedOperationException(
         s"$oldIdent has open branch(es) ${openBranches.map(_._1).mkString(", ")} — " +
           "publish or drop them before renaming the table")
-    val ourHist = Option(history.get(oldIdent))
-    val ourEpochs = epochs.asScala.toSeq.collect {
-      case ((id, qid), e) if id == oldIdent =>
-        qid -> (e, Option(epochTouched.get((id, qid))))
-    }
-    store.remove(oldIdent)
+    // The entry (streaming epochs included) and its history move; each
+    // name keeps its own remembered ledger sequence.
+    val (_, ourHist) = forget(oldIdent)
     store.put(newIdent, entry)
-    ourHist.foreach(history.put(newIdent, _))
-    history.remove(oldIdent)
-    ourEpochs.foreach { case (qid, (e, t)) =>
-      epochs.remove((oldIdent, qid)); epochTouched.remove((oldIdent, qid))
-      epochs.put((newIdent, qid), e)
-      t.foreach(epochTouched.put((newIdent, qid), _))
-    }
+    setHistory(newIdent, ourHist)
     // NEW document first, old deletion second: the new-name write is a
     // CAS that can LOSE to another process creating that name — losing
     // AFTER the old document was deleted would leave the table on
@@ -1002,11 +993,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     try persistTable(newIdent) // CAS: refuses if another process took the name
     catch { case _: java.util.ConcurrentModificationException =>
       store.put(oldIdent, entry)
-      ourHist.foreach(history.put(oldIdent, _))
-      ourEpochs.foreach { case (qid, (e, t)) =>
-        epochs.put((oldIdent, qid), e)
-        t.foreach(epochTouched.put((oldIdent, qid), _))
-      }
+      setHistory(oldIdent, ourHist)
       throw new TableAlreadyExistsException(newIdent.toString, newIdent.name())
     }
     // The old-name tombstone is ALSO a CAS that can lose — to a
@@ -1036,19 +1023,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       //    discovering either hazard by query results.
       // (persistTable's loss path already reloaded the winner's state
       // at newIdent, so the store probe below reads committed truth.)
-      def dropNewNameEpochs(): Unit =
-        epochs.keySet.asScala.filter(_._1 == newIdent).toSeq.foreach { k =>
-          epochs.remove(k); epochTouched.remove(k)
-        }
-      store.remove(newIdent)
-      history.remove(newIdent)
-      dropNewNameEpochs()
-      try { persistTable(newIdent); dropNewNameEpochs() } // tombstone CAS
+      forget(newIdent)
+      try persistTable(newIdent) // tombstone CAS
       catch { case _: java.util.ConcurrentModificationException =>
-        if (store.get(newIdent) == null) {
-          // Winner tombstoned it — retracted by proxy.
-          dropNewNameEpochs()
-        } else {
+        // A winner that tombstoned the name retracted it by proxy.
+        if (store.get(newIdent) != null) {
           System.err.println(
             s"[graft-catalog] WARNING: rename rollback could not retract " +
               s"'$newIdent' — a concurrent driver committed onto it, and " +
@@ -1467,7 +1446,21 @@ object GraftCatalog {
       // Next unallocated row id (see Segment.lineage): monotonic,
       // bumped by publish's assignment pass, never reused — restore
       // keeps it, clone copies it, branch publish takes the max.
-      nextRowId: Long = 0L)
+      nextRowId: Long = 0L,
+      // Streaming exactly-once ledger: STREAMING QUERY id → (last
+      // committed epoch, wall ms it was committed or adopted). A
+      // replayed epoch after failure/restart commits as a no-op (its
+      // fresh segments are deleted, not published). Keyed by the stable
+      // query id: two independent queries appending to one table each
+      // count epochs from 0 and must not dedup against each other. The
+      // stamp is the EXPIRY axis: checkpoint writes drop entries idle
+      // past the epoch retention window ([[EpochRetentionProp]]), so
+      // retired queries don't ride every future document. Contract (the
+      // Delta transaction-retention shape): a stream idle longer than
+      // that window loses replay-dedup protection. Rides with the entry
+      // through rename, drop → undrop, restore, RTAS and branch publish;
+      // a clone, branch or new table starts empty.
+      epochs: Map[String, (Long, Long)] = Map.empty)
 
   /** IDENTITY COLUMNS (`GENERATED ALWAYS AS IDENTITY (START WITH s
     * INCREMENT BY t)`, the Delta/warehouse shape): Spark validates the
@@ -1918,11 +1911,11 @@ object GraftCatalog {
       if (e.segments.exists(_.sorted))
         e.copy(segments = e.segments.map(_.copy(sorted = false)))
       else e)
-    history.computeIfPresent(ident, (_, h) =>
-      h.map(s =>
+    ledgers.computeIfPresent(ident, (_, l) =>
+      l.copy(history = l.history.map(s =>
         if (s.segments.exists(_.sorted))
           s.copy(segments = s.segments.map(_.copy(sorted = false)))
-        else s))
+        else s)))
   }
 
   /** `'graft.tag.<name>'='<version>'`: a SNAPSHOT TAG (the Iceberg tag
@@ -2197,6 +2190,28 @@ object GraftCatalog {
   }
 
   private val store = new ConcurrentHashMap[Identifier, TableEntry]()
+  /** A table's ledger-side state in this process — one record per
+    * table, beside its [[TableEntry]] in `store`:
+    *   - `history`: the retained snapshots, oldest first;
+    *   - `seq`: the ledger sequence backing this process's view, the
+    *     cross-process optimistic-concurrency token. A commit CASes
+    *     `seq + 1` into the table's numbered ledger directory; a lost
+    *     CAS means another DRIVER PROCESS committed first. -1 = none;
+    *   - `checkpoint`: the anchor CHECKPOINT sequence this process
+    *     knows (its own checkpoint writes and the anchor each reload
+    *     resolved from); -1 = none, so the next persist checkpoints.
+    * A dropped table keeps only its `seq`: a recreate must CAS above
+    * the tombstone. Written under `mutate {}` only — ledger state
+    * arrives through [[adopt]] and leaves through [[forget]]; a lock
+    * per table would live here.
+    */
+  private case class TableLedger(history: Vector[CatalogSnapshot], seq: Long, checkpoint: Long)
+  private val NoLedger = TableLedger(Vector.empty, -1L, -1L)
+  private val ledgers = new ConcurrentHashMap[Identifier, TableLedger]()
+  private def ledgerOf(ident: Identifier): TableLedger = ledgers.getOrDefault(ident, NoLedger)
+  private def historyOf(ident: Identifier): Vector[CatalogSnapshot] = ledgerOf(ident).history
+  private def setHistory(ident: Identifier, h: Vector[CatalogSnapshot]): Unit =
+    ledgers.put(ident, ledgerOf(ident).copy(history = h)): Unit
   private[sources] val views = new ConcurrentHashMap[Identifier, GraftView]()
   private[sources] def viewExists(ident: Identifier): Boolean = views.containsKey(ident)
 
@@ -2268,29 +2283,16 @@ object GraftCatalog {
     * [[refreshAllIfStale]]'s debounce); Long.MinValue = never synced.
     */
   @volatile private var lastWarehouseSyncNanos = Long.MinValue
-  /** Debounce for the retention-expiry GC path's warehouse sync.
-    * CLAMPED to [0, 10 s]: the listing-reuse window is the GC's
-    * sync-to-delete race width, and the safety argument sizes it "far
-    * below the retention floor" — an unclamped configured value could
-    * let publish's retention GC judge clone references against an
-    * arbitrarily stale warehouse listing and void that argument;
-    * negatives would make every sync look fresh forever.
+  /** Debounce for the retention-expiry GC path's warehouse sync: the
+    * listing-reuse window is the GC's sync-to-delete race width, and
+    * the safety argument needs it far below the 60 s retention floor.
     */
-  private val GcRefreshDebounceNanos =
-    java.util.concurrent.TimeUnit.MILLISECONDS.toNanos(
-      math.min(10000L, math.max(0L,
-        sys.props.getOrElse("graft.catalog.gc.refresh.debounce.ms", "3000").toLong)))
+  private val GcRefreshDebounceNanos = java.util.concurrent.TimeUnit.SECONDS.toNanos(3)
 
-  /** Log-structured ledger: the anchor CHECKPOINT sequence this process
-    * knows per table (its own checkpoint writes + the anchor each
-    * reload resolved from). Absent ⇒ the next persist must checkpoint.
-    */
-  private val checkpointSeqs = new ConcurrentHashMap[Identifier, java.lang.Long]()
   /** Force a full-document checkpoint every N sequences (bounds reader
     * replay to < N delta documents).
     */
-  private val CheckpointEvery =
-    math.max(1, sys.props.getOrElse("graft.catalog.ledger.checkpoint.every", "16").toInt)
+  private val CheckpointEvery = 16
 
   private val rootRef = new java.util.concurrent.atomic.AtomicReference[Path](null)
   @volatile private var autoRoot = false // rootRef holds a self-created temp dir
@@ -2348,21 +2350,10 @@ object GraftCatalog {
       if (!ledgerLoaded.get()) {
         val root = segmentRoot
         val mono = System.nanoTime()
-        GraftLedger.readAllTableStates(GraftLedger.tablesDir(root), mono).foreach {
-          // Tombstone top-docs = dropped tables: nothing to load (the
-          // sequence is re-learned lazily on first access/refresh).
-          case GraftLedger.LedgerState(Some((ident, entry, hist, eps)), seq, ckpt) =>
-            if (store.putIfAbsent(ident, entry) == null) {
-              ledgerSeqs.put(ident, seq)
-              checkpointSeqs.put(ident, java.lang.Long.valueOf(ckpt)): Unit
-            }
-            if (hist.nonEmpty) history.putIfAbsent(ident, hist)
-            eps.foreach { case (qid, (e, t)) =>
-              if (epochs.putIfAbsent((ident, qid), java.lang.Long.valueOf(e)) == null)
-                epochTouched.put((ident, qid), java.lang.Long.valueOf(t)): Unit
-            }
-          case _ => ()
-        }
+        // Tombstone top-docs = dropped tables: nothing to load (the
+        // sequence is re-learned lazily on first access/refresh).
+        GraftLedger.readAllTableStates(GraftLedger.tablesDir(root), mono)
+          .foreach(adoptIfUnknown)
         GraftLedger.readAll(GraftLedger.viewsDir(root)).foreach { json =>
           val v = GraftLedger.decodeView(json)
           views.putIfAbsent(v.ident, v)
@@ -2371,22 +2362,15 @@ object GraftCatalog {
         // bases differ across JVMs) — erring toward keeping UNDROP
         // alive after a restart, same policy as snapshot retention.
         GraftLedger.readAll(GraftLedger.droppedDir(root)).foreach { json =>
-          val (ident, entry, hist, eps) = GraftLedger.decodeTable(json, mono)
+          val (ident, entry, hist, _) = GraftLedger.decodeTable(json, mono)
           trash.putIfAbsent(ident,
-            DroppedEntry(entry, hist, eps, mono, GraftLedger.droppedWallOf(json)))
+            DroppedEntry(entry, hist, mono, GraftLedger.droppedWallOf(json)))
         }
         ledgerLoaded.set(true)
       }
     }
 
-  /** The ledger sequence backing this process's in-memory view of each
-    * table — the cross-process optimistic-concurrency token. A commit
-    * CASes `known + 1` into the table's numbered ledger directory; a
-    * lost CAS means another DRIVER PROCESS committed first.
-    */
-  private val ledgerSeqs = new ConcurrentHashMap[Identifier, java.lang.Long]()
-  private def knownSeq(ident: Identifier): Long =
-    Option(ledgerSeqs.get(ident)).map(_.longValue()).getOrElse(-1L)
+  private def knownSeq(ident: Identifier): Long = ledgerOf(ident).seq
 
   /** Cross-process staleness check: if another process advanced the
     * table's ledger past what this process last read/wrote, adopt the
@@ -2437,28 +2421,15 @@ object GraftCatalog {
         System.nanoTime() - lastWarehouseSyncNanos < maxAgeNanos) return
     mutate {
       val dir = GraftLedger.tablesDir(segmentRoot)
-      val knownByName: Map[String, Identifier] =
-        ledgerSeqs.keySet.asScala.map(id => GraftLedger.fileNameOf(id) -> id).toMap
+      val knownByName: Map[String, Identifier] = ledgers.asScala.collect {
+        case (id, l) if l.seq >= 0 => GraftLedger.fileNameOf(id) -> id
+      }.toMap
       GraftLedger.listTables(dir).foreach { case (fname, seq) =>
         knownByName.get(fname) match {
           case Some(id) => if (seq > knownSeq(id)) reloadFromDisk(id)
           case None =>
-            GraftLedger.readTableStateByName(dir, fname, System.nanoTime()).foreach {
-              case GraftLedger.LedgerState(Some((id, entry, hist, eps)), sq, ckpt) =>
-                // Unknown here can also mean "we know the ident under a
-                // different name hash" — putIfAbsent semantics keep a
-                // live local view from being clobbered by a re-list.
-                if (store.putIfAbsent(id, entry) == null) {
-                  if (hist.nonEmpty) history.put(id, hist)
-                  eps.foreach { case (qid, (e, t)) =>
-                    epochs.put((id, qid), java.lang.Long.valueOf(e))
-                    epochTouched.put((id, qid), java.lang.Long.valueOf(t)): Unit
-                  }
-                  ledgerSeqs.put(id, sq)
-                  checkpointSeqs.put(id, java.lang.Long.valueOf(ckpt)): Unit
-                }
-              case _ => () // tombstone: nothing to adopt
-            }
+            GraftLedger.readTableStateByName(dir, fname, System.nanoTime())
+              .foreach(adoptIfUnknown)
         }
       }
       // Stamp AFTER the listing completes: a sync that threw mid-walk
@@ -2474,40 +2445,57 @@ object GraftCatalog {
     * `mutate {}`.
     */
   private def reloadFromDisk(ident: Identifier): Unit = {
+    assert(Thread.holdsLock(mutationLock))
     if (!persistent) return
     GraftLedger.readTableState(
         GraftLedger.tablesDir(segmentRoot), ident, System.nanoTime()) match {
-      case Some(GraftLedger.LedgerState(None, seq, _)) =>
-        // Dropped (possibly by another process): absent from the maps,
-        // but the SEQUENCE is remembered — a recreate must CAS above
-        // the tombstone, never restart at 0 (monotonicity is what lets
-        // every stale process notice the drop).
-        dbg(s"reload($ident) -> tombstone seq=$seq")
-        store.remove(ident)
-        history.remove(ident)
-        epochs.keySet.asScala.filter(_._1 == ident).toSeq.foreach(epochs.remove)
-        ledgerSeqs.put(ident, seq)
-        checkpointSeqs.remove(ident): Unit
-      case Some(GraftLedger.LedgerState(Some((id, entry, hist, eps)), seq, ckpt)) =>
-        dbg(s"reload($ident) -> seq=$seq (checkpoint $ckpt)")
-        store.put(id, entry)
-        if (hist.nonEmpty) history.put(id, hist) else history.remove(id)
-        epochs.keySet.asScala.filter(_._1 == id).toSeq.foreach { k =>
-          epochs.remove(k); epochTouched.remove(k)
-        }
-        eps.foreach { case (qid, (e, t)) =>
-          epochs.put((id, qid), java.lang.Long.valueOf(e))
-          epochTouched.put((id, qid), java.lang.Long.valueOf(t)): Unit
-        }
-        ledgerSeqs.put(id, seq)
-        checkpointSeqs.put(id, java.lang.Long.valueOf(ckpt)): Unit
+      case Some(st) =>
+        dbg(s"reload($ident) -> seq=${st.seq} " +
+          (if (st.state.isEmpty) "tombstone" else s"(checkpoint ${st.checkpointSeq})"))
+        adopt(ident, st)
+      case None => forget(ident); ledgers.remove(ident): Unit
+    }
+  }
+
+  /** Make a resolved ledger state this process's view of `ident`: a
+    * live document installs its entry (streaming epochs included),
+    * history, sequence and checkpoint anchor. A TOMBSTONE (a drop,
+    * possibly by another process) leaves the table absent but keeps
+    * its SEQUENCE — a recreate must CAS above the tombstone, never
+    * restart at 0 (monotonicity is what lets every stale process
+    * notice the drop). Under `mutate {}`.
+    */
+  private def adopt(ident: Identifier, st: GraftLedger.LedgerState): Unit = {
+    assert(Thread.holdsLock(mutationLock))
+    st.state match {
+      case Some((_, entry, hist, _)) =>
+        store.put(ident, entry)
+        ledgers.put(ident, TableLedger(hist, st.seq, st.checkpointSeq)): Unit
       case None =>
         store.remove(ident)
-        history.remove(ident)
-        epochs.keySet.asScala.filter(_._1 == ident).toSeq.foreach(epochs.remove)
-        ledgerSeqs.remove(ident)
-        checkpointSeqs.remove(ident): Unit
+        ledgers.put(ident, NoLedger.copy(seq = st.seq)): Unit
     }
+  }
+
+  /** The load paths' adopt: a live document for a table this process
+    * holds no entry for (a live local view is never clobbered by a
+    * re-list); tombstones are skipped — their sequence is re-learned
+    * lazily on first access.
+    */
+  private def adoptIfUnknown(st: GraftLedger.LedgerState): Unit = st.state.foreach {
+    case (id, _, _, _) => if (!store.containsKey(id)) adopt(id, st)
+  }
+
+  /** Take `ident`'s entry and history out of memory and return them
+    * (entry null when absent). The record keeps the remembered ledger
+    * sequence: a drop's tombstone, or a later recreate, must CAS above
+    * it. Under `mutate {}`.
+    */
+  private def forget(ident: Identifier): (TableEntry, Vector[CatalogSnapshot]) = {
+    assert(Thread.holdsLock(mutationLock))
+    val hist = historyOf(ident)
+    if (hist.nonEmpty) setHistory(ident, Vector.empty)
+    (store.remove(ident), hist)
   }
 
   /** CAS-write (or delete) the table's ledger document; false = another
@@ -2534,10 +2522,13 @@ object GraftCatalog {
       ident: Identifier,
       delta: Option[(Vector[CatalogSnapshot], Vector[CatalogSnapshot], Seq[Long])] = None)
       : Boolean = {
+    assert(Thread.holdsLock(mutationLock))
     if (!persistent) return true
     occWindowHookForTest(ident)
     val dir = GraftLedger.tablesDir(segmentRoot)
     val entry = store.get(ident)
+    val led = ledgerOf(ident)
+    val next = led.seq + 1
     if (entry == null) {
       // DROP is a tombstone COMMIT at the next sequence, CAS-protected
       // like any other: sequences stay monotonic across drop/recreate/
@@ -2545,33 +2536,22 @@ object GraftCatalog {
       // process shadow the next incarnation), and a DROP racing a
       // concurrent commit now loses the CAS and refuses instead of
       // erasing it. The trash/undrop machinery keeps the data.
-      val next = knownSeq(ident) + 1
       val won = GraftLedger.casWrite(dir, ident, GraftLedger.Tombstone, next)
       if (won) {
         dbg(s"persist($ident) tombstone seq=$next")
-        ledgerSeqs.put(ident, next)
         // Deltas never ride on a tombstone: the next incarnation's
         // first persist must be a checkpoint.
-        checkpointSeqs.remove(ident): Unit
+        ledgers.put(ident, led.copy(seq = next, checkpoint = -1L))
       }
       won
     } else {
-      val nowMs = System.currentTimeMillis()
-      val epsAll = epochs.asScala.collect {
-        case ((id, qid), e) if id == ident =>
-          qid -> (e.longValue(),
-            Option(epochTouched.get((id, qid)))
-              .map(_.longValue()).getOrElse(nowMs))
-      }.toMap
-      val next = knownSeq(ident) + 1
-      val anchor = Option(checkpointSeqs.get(ident)).map(_.longValue())
       val asDelta = delta.filter(_ =>
-        anchor.exists(a => a >= 0 && next - a < CheckpointEvery))
+        led.checkpoint >= 0 && next - led.checkpoint < CheckpointEvery)
       val won = asDelta match {
         case Some((base, added, expired)) =>
           GraftLedger.casWrite(dir, ident,
-            GraftLedger.encodeTableDelta(ident, entry, base, added, expired, epsAll),
-            next, minKeepSeq = anchor.get)
+            GraftLedger.encodeTableDelta(ident, entry, base, added, expired),
+            next, minKeepSeq = led.checkpoint)
         case None =>
           // CHECKPOINT-time epoch expiry: drop streaming-query entries
           // idle past the EPOCH retention window (its own knob with a
@@ -2581,22 +2561,21 @@ object GraftCatalog {
           // a long-lived table fed by many distinct queries must not
           // carry every retired query id forever. Live queries refresh
           // their stamp on every epoch commit; the idle-past-retention
-          // replay contract is documented on [[epochTouched]].
+          // replay contract is documented on [[TableEntry]]`.epochs`.
+          val nowMs = System.currentTimeMillis()
           val retMs = epochRetentionMsOf(entry.props)
-          val (live, retired) = epsAll.partition {
-            case (_, (_, t)) => nowMs - t <= retMs
-          }
-          retired.keysIterator.foreach { qid =>
-            epochs.remove((ident, qid)); epochTouched.remove((ident, qid))
-          }
-          GraftLedger.casWrite(dir, ident, GraftLedger.encodeTable(
-            ident, entry, history.getOrDefault(ident, Vector.empty), live), next)
+          val live = entry.epochs.filter { case (_, (_, t)) => nowMs - t <= retMs }
+          val pruned =
+            if (live.size == entry.epochs.size) entry
+            else { val e = entry.copy(epochs = live); store.put(ident, e); e }
+          GraftLedger.casWrite(dir, ident,
+            GraftLedger.encodeTable(ident, pruned, led.history, pruned.epochs), next)
       }
       if (won) {
         dbg(s"persist($ident) seq=$next v=${headVersion(ident)} segs=${entry.segments.length}" +
           (if (asDelta.isDefined) " delta" else " checkpoint"))
-        ledgerSeqs.put(ident, next)
-        if (asDelta.isEmpty) checkpointSeqs.put(ident, java.lang.Long.valueOf(next)): Unit
+        ledgers.put(ident,
+          led.copy(seq = next, checkpoint = if (asDelta.isEmpty) next else led.checkpoint))
       }
       won
     }
@@ -2636,13 +2615,10 @@ object GraftCatalog {
     */
   private[graft] def resetInMemoryStateForTest(idents: Identifier*): Unit = mutate {
     idents.foreach { ident =>
-      store.remove(ident)
+      forget(ident)
+      ledgers.remove(ident)
       views.remove(ident)
-      history.remove(ident)
       trash.remove(ident)
-      ledgerSeqs.remove(ident)
-      checkpointSeqs.remove(ident)
-      epochs.keySet.asScala.filter(_._1 == ident).foreach(epochs.remove)
     }
     ledgerLoaded.set(false)
     lastWarehouseSyncNanos = Long.MinValue // a "restarted" process has no sync
@@ -2737,8 +2713,6 @@ object GraftCatalog {
       // Outstanding equality deletes AT this snapshot — time-travel
       // reads apply exactly the filters that were live then.
       eqDeletes: Vector[EqDelete] = Vector.empty)
-
-  private val history = new ConcurrentHashMap[Identifier, Vector[CatalogSnapshot]]()
 
   /** Snapshot retention IS the file-GC policy: a segment file is deleted
     * only when NO retained snapshot (current included) references it.
@@ -2848,6 +2822,7 @@ object GraftCatalog {
       ident: Identifier, rewrites: Map[String, String] = Map.empty,
       dataChange: Boolean = true, firstVersion: Long = 0L,
       casRetryable: Boolean = false): Boolean = {
+    assert(Thread.holdsLock(mutationLock))
     expireTrash() // drop-trash retention rides the same publish cadence
     val entry0 = store.get(ident)
     if (entry0 == null) return true
@@ -2862,7 +2837,7 @@ object GraftCatalog {
         else { val e = entry0.copy(eqDeletes = live); store.put(ident, e); e }
       }
     val now = System.nanoTime()
-    val hist = history.getOrDefault(ident, Vector.empty)
+    val hist = historyOf(ident)
     val version = hist.lastOption.map(_.version + 1).getOrElse(firstVersion)
     // ROW-LINEAGE assignment (see Segment.lineage): every segment this
     // snapshot publishes without id runs gets them HERE — the one
@@ -2922,7 +2897,7 @@ object GraftCatalog {
     val keptUntagged = untagged.drop((untagged.length - maxSnapshotsOf(entry.props)).max(0))
       .dropWhile(s => s.mono < cutoff && s != all.last)
     val retained = (taggedSnaps ++ keptUntagged).sortBy(_.version)
-    history.put(ident, retained)
+    setHistory(ident, retained)
     // Publish's history change is append+expire-shaped by construction
     // (snapshots common to hist and retained are the same objects), so
     // the ledger write can be a DELTA document over `hist`: the new
@@ -2990,8 +2965,8 @@ object GraftCatalog {
     store.asScala.foreach { case (id, e) =>
       if (!excluded.contains(id)) e.segments.foreach(s => refs.add(s.path))
     }
-    history.asScala.foreach { case (id, h) =>
-      if (!excluded.contains(id)) h.foreach(_.segments.foreach(s => refs.add(s.path)))
+    ledgers.asScala.foreach { case (id, l) =>
+      if (!excluded.contains(id)) l.history.foreach(_.segments.foreach(s => refs.add(s.path)))
     }
     trash.asScala.foreach { case (id, d) =>
       // Soft-dropped tables are UNDROP-able until retention purges
@@ -3034,7 +3009,7 @@ object GraftCatalog {
     // a full delete+insert of both files. Same guards as any pairing
     // (cardinality, dv) decide per segment at read time.
     val curByPath = entry.segments.map(s => s.path -> s).toMap
-    val curV = history.getOrDefault(ident, Vector.empty)
+    val curV = historyOf(ident)
       .lastOption.map(_.version).getOrElse(version)
     val reverseRewrites: Map[String, String] =
       GraftChangeScan.composedRewrites(ident, version, curV).collect {
@@ -3117,7 +3092,7 @@ object GraftCatalog {
       case Some(v) => snapshotByVersion(src, v).getOrElse(
         throw new IllegalArgumentException(
           s"clone $src: version $v is expired or never committed"))
-      case None => history.getOrDefault(src, Vector.empty).lastOption.getOrElse(
+      case None => historyOf(src).lastOption.getOrElse(
         throw new IllegalArgumentException(s"clone $src: no committed snapshots"))
     }
     val dir = Files.createTempDirectory(segmentRoot, "tbl-").toString
@@ -3152,14 +3127,6 @@ object GraftCatalog {
   private[sources] def branchIdent(table: Identifier, branch: String): Identifier =
     Identifier.of(table.namespace, table.name + "@" + branch)
 
-  /** DROP a table entry (the class's `dropTable` and the branch drop
-    * inside [[publishBranch]] share this): clears the streaming-epoch
-    * ledger (a re-created table must not inherit old high-watermarks
-    * and silently skip early epochs), GCs files no OTHER table
-    * references (a shallow clone/branch may still serve reads from
-    * them), and takes the directory down only when nothing in it had
-    * to be spared.
-    */
   /** RECOVERABLE DROP (the Delta UNDROP shape): `DROP TABLE` moves the
     * entry — data, snapshot history, streaming epochs — into a TRASH
     * registry instead of deleting anything; files stay on disk, every
@@ -3173,7 +3140,7 @@ object GraftCatalog {
     */
   private case class DroppedEntry(
       entry: TableEntry, hist: Vector[CatalogSnapshot],
-      eps: Map[String, (Long, Long)], droppedMono: Long, droppedWallMs: Long)
+      droppedMono: Long, droppedWallMs: Long)
   private val trash = new ConcurrentHashMap[Identifier, DroppedEntry]()
 
   private[sources] def dropEntry(ident: Identifier): Boolean = mutate {
@@ -3183,22 +3150,11 @@ object GraftCatalog {
     if (ident.name.contains("@")) purgeEntry(ident)
     else {
       expireTrash()
-      val dropNowMs = System.currentTimeMillis()
-      val eps = epochs.asScala.collect {
-        case ((id, qid), e) if id == ident =>
-          qid -> (e.longValue(),
-            Option(epochTouched.get((id, qid)))
-              .map(_.longValue()).getOrElse(dropNowMs))
-      }.toMap
-      epochs.keySet.asScala.filter(_._1 == ident).foreach { k =>
-        epochs.remove(k); epochTouched.remove(k)
-      }
-      val hist = Option(history.remove(ident)).getOrElse(Vector.empty)
-      val entry = store.remove(ident)
+      val (entry, hist) = forget(ident)
       if (entry != null) {
         if (trash.containsKey(ident)) purgeTrashed(ident) // latest drop wins
         trash.put(ident,
-          DroppedEntry(entry, hist, eps, System.nanoTime(), System.currentTimeMillis()))
+          DroppedEntry(entry, hist, System.nanoTime(), System.currentTimeMillis()))
         persistDropped(ident)
       }
       // Tombstone CAS last — but if it LOSES to a concurrent driver, the
@@ -3233,9 +3189,7 @@ object GraftCatalog {
     */
   private[sources] def purgeEntry(ident: Identifier): Boolean = mutate {
     refreshIfStale(ident)
-    epochs.keySet.asScala.filter(_._1 == ident).foreach(epochs.remove)
-    val hist = Option(history.remove(ident)).getOrElse(Vector.empty)
-    val entry = store.remove(ident)
+    val (entry, hist) = forget(ident)
     persistTable(ident) // tombstone CAS — on loss: reload + throw, no file touched
     if (trash.containsKey(ident)) purgeTrashed(ident)
     if (entry != null) {
@@ -3357,11 +3311,7 @@ object GraftCatalog {
       throw new TableAlreadyExistsException(ident.toString, ident.name())
     trash.remove(ident)
     store.put(ident, d.entry)
-    if (d.hist.nonEmpty) history.put(ident, d.hist)
-    d.eps.foreach { case (qid, (e, t)) =>
-      epochs.put((ident, qid), java.lang.Long.valueOf(e))
-      epochTouched.put((ident, qid), java.lang.Long.valueOf(t)): Unit
-    }
+    setHistory(ident, d.hist)
     if (persistent) GraftLedger.delete(GraftLedger.droppedDir(segmentRoot), ident)
     persistTable(ident)
     (d.hist.lastOption.map(_.version).getOrElse(-1L), d.entry.segments.length)
@@ -3372,7 +3322,8 @@ object GraftCatalog {
     val d = trash.get(ident)
     if (d != null)
       GraftLedger.write(GraftLedger.droppedDir(segmentRoot), ident,
-        GraftLedger.encodeTable(ident, d.entry, d.hist, d.eps, Some(d.droppedWallMs)))
+        GraftLedger.encodeTable(
+          ident, d.entry, d.hist, d.entry.epochs, Some(d.droppedWallMs)))
   }
 
   private[sources] def requireNotBranchName(ident: Identifier): Unit =
@@ -3443,7 +3394,7 @@ object GraftCatalog {
       s"$bIdent is not a branch of $src")
     val base = b.props.getOrElse(BranchBaseProp,
       throw new IllegalStateException(s"$bIdent lost its branch-base property")).toLong
-    val mainHist = history.getOrDefault(src, Vector.empty)
+    val mainHist = historyOf(src)
     val mainV = mainHist.lastOption.map(_.version).getOrElse(-1L)
     val since = mainHist.filter(_.version > base)
     val allRetained = since.map(_.version).toSet == (base + 1 to mainV).toSet
@@ -3452,7 +3403,7 @@ object GraftCatalog {
         s"publish_branch '$branch': $src committed data after the branch was cut at " +
           s"version $base (now at $mainV) — fast-forward would lose those commits. " +
           s"Re-create the branch from the current version and re-apply the audit.")
-    val bHist = history.getOrDefault(bIdent, Vector.empty)
+    val bHist = historyOf(bIdent)
     val bV = bHist.lastOption.map(_.version).getOrElse(base)
     val offset = mainV - base // ≥ 0; > 0 only under dataChange=false drift
     // MAINTENANCE DRIFT: main's current segments are a post-compaction
@@ -3542,7 +3493,7 @@ object GraftCatalog {
     val replayed = bHist.filter(s => s.version > base && s.version < bV)
       .map(s => s.copy(version = s.version + shift,
         segments = shiftSegs(s.segments), eqDeletes = shiftEqs(s.eqDeletes)))
-    history.put(src, mainHist ++ revert.toVector ++ replayed)
+    setHistory(src, mainHist ++ revert.toVector ++ replayed)
     store.put(src, main.copy(schema = b.schema,
       segments = shiftSegs(b.segments),
       partitionCols = b.partitionCols, constraints = b.constraints,
@@ -3580,20 +3531,20 @@ object GraftCatalog {
 
   private[graft] def snapshotByVersion(
       ident: Identifier, v: Long): Option[CatalogSnapshot] =
-    history.getOrDefault(ident, Vector.empty).find(_.version == v)
+    historyOf(ident).find(_.version == v)
   private[graft] def snapshotByTime(
       ident: Identifier, micros: Long): Option[CatalogSnapshot] =
-    history.getOrDefault(ident, Vector.empty)
+    historyOf(ident)
       .takeWhile(_.wallMs * 1000L <= micros).lastOption
   /** Retained (time-travel-servable) snapshots of a table, oldest
     * first; empty for an unknown table.
     */
   private[sources] def retainedSnapshots(ident: Identifier): Vector[CatalogSnapshot] =
-    history.getOrDefault(ident, Vector.empty)
+    historyOf(ident)
 
   /** Test observability: latest committed version of a table. */
   private[graft] def currentVersion(ns: String, table: String): Option[Long] =
-    history.getOrDefault(Identifier.of(Array(ns), table), Vector.empty)
+    historyOf(Identifier.of(Array(ns), table))
       .lastOption.map(_.version)
 
   /** Test observability: segments referenced ONLY by non-current
@@ -3601,7 +3552,7 @@ object GraftCatalog {
     * tombstone-queue metric, now derived from snapshot history).
     */
   private[graft] def tombstoneCount: Int = mutate {
-    history.asScala.map { case (ident, hist) =>
+    ledgers.asScala.map { case (ident, TableLedger(hist, _, _)) =>
       val current = Option(store.get(ident)).map(_.segments.map(_.path).toSet)
         .getOrElse(Set.empty)
       hist.flatMap(_.segments.map(_.path)).distinct.count(!current.contains(_))
@@ -3625,7 +3576,7 @@ object GraftCatalog {
     refreshAllIfStale() // GC judges references against the whole warehouse
     val entry = store.get(ident)
     if (entry == null) throw new NoSuchTableException(ident)
-    val hist = history.getOrDefault(ident, Vector.empty)
+    val hist = historyOf(ident)
     val taggedVersions: Set[Long] = entry.props.collect {
       case (k, v) if k.startsWith(TagPropPrefix) && v.forall(_.isDigit) => v.toLong
     }.toSet
@@ -3636,7 +3587,7 @@ object GraftCatalog {
       .filterNot(s => live.contains(s.path))
     gcDeleteAll(ident, dropped)
     val expired = hist.length - kept.length
-    history.put(ident,
+    setHistory(ident,
       kept.map(s => if (hist.lastOption.contains(s)) s.copy(segments = entry.segments) else s))
     persistTable(ident)
     (expired, dropped.length)
@@ -3669,8 +3620,8 @@ object GraftCatalog {
         s"remove_orphan_files: older_than_ms must be >= 0, got $olderThanMs")
     val referenced: Set[String] =
       (store.asScala.valuesIterator.flatMap(_.segments.iterator.map(_.path)) ++
-        history.asScala.valuesIterator.flatMap(
-          _.iterator.flatMap(_.segments.iterator.map(_.path))) ++
+        ledgers.asScala.valuesIterator.flatMap(
+          _.history.iterator.flatMap(_.segments.iterator.map(_.path))) ++
         trash.asScala.valuesIterator.flatMap(d =>
           d.entry.segments.iterator.map(_.path) ++
             d.hist.iterator.flatMap(_.segments.iterator.map(_.path)))).toSet
@@ -3697,22 +3648,17 @@ object GraftCatalog {
 
   private[graft] def vacuumTombstones(): Unit = mutate {
     refreshAllIfStale()
-    history.asScala.keys.toSeq.foreach { ident =>
-      val entry = store.get(ident)
-      val hist = history.getOrDefault(ident, Vector.empty)
-      if (entry == null) {
-        history.remove(ident)
-        gcDeleteAll(ident, hist.flatMap(_.segments))
-      }
-      else {
+    // A table with history always has an entry: forget and a
+    // tombstone adopt clear both together.
+    store.asScala.toSeq.foreach { case (ident, entry) =>
+      val hist = historyOf(ident)
+      if (hist.nonEmpty) {
         val current = entry.segments.map(_.path).toSet
         gcDeleteAll(ident, hist.flatMap(_.segments).distinctBy(_.path)
           .filterNot(s => current.contains(s.path)))
-        history.put(ident,
-          hist.lastOption.map(s => Vector(s.copy(segments = entry.segments)))
-            .getOrElse(Vector.empty))
+        setHistory(ident, Vector(hist.last.copy(segments = entry.segments)))
+        persistTable(ident)
       }
-      persistTable(ident)
     }
   }
 
@@ -3747,7 +3693,8 @@ object GraftCatalog {
     * user props) takes the new statement's word — the standard REPLACE
     * props reset. On conflict the staged statement wins, EXCEPT
     * identity watermarks, which take the max of both domains (either
-    * side may have minted ids the other hasn't seen).
+    * side may have minted ids the other hasn't seen). Streaming epochs
+    * carry forward too: a REPLACE does not reset a stream's dedup.
     */
   private def replaceEntry(prev: TableEntry, staged: TableEntry): TableEntry = {
     def isIdentityNext(k: String) =
@@ -3762,7 +3709,8 @@ object GraftCatalog {
     }
     staged.copy(
       nextRowId = math.max(staged.nextRowId, prev.nextRowId),
-      props = carried ++ staged.props ++ maxed)
+      props = carried ++ staged.props ++ maxed,
+      epochs = prev.epochs)
   }
 
   private[sources] def commitStaged(
@@ -4111,7 +4059,7 @@ object GraftCatalog {
 
   /** The table's latest published version (-1 before the first). */
   private def headVersion(ident: Identifier): Long =
-    history.getOrDefault(ident, Vector.empty).lastOption.map(_.version).getOrElse(-1L)
+    historyOf(ident).lastOption.map(_.version).getOrElse(-1L)
 
   private[sources] def segmentsOf(ident: Identifier): Vector[Segment] =
     Option(store.get(ident)).map(_.segments).getOrElse(Vector.empty)
@@ -4257,27 +4205,6 @@ object GraftCatalog {
     persistTable(ident)
   }
 
-  /** Last committed streaming epoch per (table, STREAMING QUERY) — the
-    * exactly-once ledger: a replayed epoch after failure/restart commits
-    * as a no-op (and its freshly written segments are deleted, not
-    * published). Keyed by the stable query id, not just the table: two
-    * independent streaming queries appending to one table each count
-    * epochs from 0 and must not dedup against each other.
-    */
-  private val epochs = new ConcurrentHashMap[(Identifier, String), java.lang.Long]()
-  /** Last wall time each (table, query) epoch entry was committed or
-    * adopted — the EXPIRY axis for the epoch ledger: entries idle past
-    * the table's retention window are dropped at checkpoint-write time
-    * (see persistTable), so retired streaming queries don't ride every
-    * future document forever. Tracked beside `epochs` rather than in
-    * it so the hot exactly-once comparison stays a bare Long. A stale
-    * stamp without a matching epochs entry is harmless (never read).
-    * Contract (the Delta transaction-retention shape): a stream idle
-    * LONGER than the table's retention window loses replay-dedup
-    * protection — operators size retention above max trigger gaps.
-    */
-  private val epochTouched = new ConcurrentHashMap[(Identifier, String), java.lang.Long]()
-
   /** Streaming epoch commit. `truncate` = Complete output mode: each
     * epoch REPLACES the table with the full recomputed result instead
     * of appending (the pre-round-7 bug was dropping this flag and
@@ -4285,8 +4212,9 @@ object GraftCatalog {
     * [[commitSegments]]: a streaming epoch racing another DRIVER's
     * commit re-applies onto the reloaded winner instead of killing the
     * streaming query (which would burn a full checkpoint-restart per
-    * lost CAS). The reload restores the epochs ledger from disk too,
-    * so the exactly-once replay check always judges against committed
+    * lost CAS). The epochs ledger rides in the entry
+    * ([[TableEntry]]`.epochs`), so the reload restores it with the rest
+    * and the exactly-once replay check always judges against committed
     * truth. Truncate epochs re-applying over a concurrent append IS
     * the complete-mode contract: each epoch replaces the whole table.
     */
@@ -4297,17 +4225,14 @@ object GraftCatalog {
       // — appended segments + one equality delete, atomically; a
       // replayed epoch registers NEITHER (exactly-once covers both).
       upsert: Option[(Seq[String], Seq[IndexedSeq[Any]])] = None): Unit = {
-    val key = (ident, queryId)
     val applied = commitSegments(ident) { (prev, v) =>
-      val last = Option(epochs.get(key)).map(_.longValue()).getOrElse(Long.MinValue)
-      if (epochId <= last) None // replayed epoch: already visible
+      if (prev.epochs.get(queryId).exists(epochId <= _._1)) None // replayed: already visible
       else {
         val eq = upsert.flatMap { case (kc, ks) => upsertEqDelete(prev.schema, kc, ks, segs, v) }
-        epochs.put(key, epochId)
-        epochTouched.put(key, java.lang.Long.valueOf(System.currentTimeMillis()))
         Some(prev.copy(
           segments = if (truncate) segs.toVector else prev.segments ++ segs,
-          eqDeletes = prev.eqDeletes ++ eq))
+          eqDeletes = prev.eqDeletes ++ eq,
+          epochs = prev.epochs + (queryId -> (epochId, System.currentTimeMillis()))))
       }
     }
     // Replayed-epoch segments were NEVER visible to any scan — delete

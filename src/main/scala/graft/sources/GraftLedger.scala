@@ -20,10 +20,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   <root>/_ledger/views/<enc(ns)>~<enc(name)>.json
   *   <root>/_ledger/dropped/<enc(ns)>~<enc(name)>.json
   * }}}
-  * A table's state is the CURRENT entry (schema, segment list,
-  * partition columns, constraints), the retained snapshot HISTORY
-  * (time travel survives a restart) and the streaming EPOCH ledger
-  * (exactly-once survives a restart).
+  * A table document holds what the catalog keeps per table in two
+  * records: the CURRENT entry (schema, segment list, partition
+  * columns, constraints, and the streaming EPOCH ledger, so
+  * exactly-once survives a restart) and the retained snapshot HISTORY
+  * (time travel survives a restart). The entry's epochs are written
+  * under the `epochs` / `epochsTouchedMs` keys; the sequence and
+  * checkpoint anchor the catalog records beside the history come from
+  * the document's number, not its body. Documents are compact JSON.
   *
   * NUMBERED CAS DOCUMENTS (tables): a commit writes the table's next
   * sequence number, `<known+1>.json`, by write-temp + fsync + atomic
@@ -335,8 +339,7 @@ private[graft] object GraftLedger {
     * documents (added/expired only).
     */
   private def tableDocNode(
-      ident: Identifier, entry: TableEntry,
-      epochs: Map[String, (Long, Long)], pool: BloomPool): ObjectNode = {
+      ident: Identifier, entry: TableEntry, pool: BloomPool): ObjectNode = {
     val o = M.createObjectNode()
     val ns = o.putArray("namespace")
     ident.namespace().foreach(ns.add)
@@ -359,10 +362,10 @@ private[graft] object GraftLedger {
     // decode-time "now", erring toward keeping idempotence protection
     // (the same rebased-clock policy as snapshot-retention reload).
     val ep = o.putObject("epochs")
-    epochs.foreach { case (qid, (e, _)) => ep.put(qid, e) }
-    if (epochs.nonEmpty) {
+    entry.epochs.foreach { case (qid, (e, _)) => ep.put(qid, e) }
+    if (entry.epochs.nonEmpty) {
       val et = o.putObject("epochsTouchedMs")
-      epochs.foreach { case (qid, (_, t)) => et.put(qid, t) }
+      entry.epochs.foreach { case (qid, (_, t)) => et.put(qid, t) }
     }
     val an = o.putObject("analyzed")
     entry.analyzed.foreach { case (c, a) =>
@@ -376,21 +379,25 @@ private[graft] object GraftLedger {
     o
   }
 
+  /** CHECKPOINT document: the entry, its full retained `history`, and
+    * `epochs` as the document's epoch map (the catalog passes the
+    * entry's own; decoding puts the map back into `TableEntry.epochs`).
+    */
   def encodeTable(
       ident: Identifier, entry: TableEntry,
       history: Vector[CatalogSnapshot],
       epochs: Map[String, (Long, Long)],
       droppedWallMs: Option[Long] = None): String = {
     val pool = new BloomPool
-    val o = tableDocNode(ident, entry, epochs, pool)
+    val o = tableDocNode(ident, entry.copy(epochs = epochs), pool)
     droppedWallMs.foreach(o.put("droppedWallMs", _))
     val hist = o.putArray("history")
     history.foreach(snap => hist.add(snapNode(snap, pool)))
-    M.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+    M.writeValueAsString(o)
   }
 
-  /** DELTA document (log-structured commits): the full CURRENT entry +
-    * epochs (small — O(table segments), not O(history)) plus only the
+  /** DELTA document (log-structured commits): the full CURRENT entry
+    * (small — O(table segments), not O(history)) plus only the
     * history snapshots ADDED by this commit and the versions EXPIRED by
     * it. A reader resolves state by replaying deltas upward from the
     * nearest lower CHECKPOINT (a plain [[encodeTable]] document). The
@@ -403,16 +410,15 @@ private[graft] object GraftLedger {
     */
   def encodeTableDelta(
       ident: Identifier, entry: TableEntry, base: Vector[CatalogSnapshot],
-      added: Vector[CatalogSnapshot], expiredVersions: Seq[Long],
-      epochs: Map[String, (Long, Long)]): String = {
+      added: Vector[CatalogSnapshot], expiredVersions: Seq[Long]): String = {
     val pool = poolOf(base.iterator.flatMap(_.segments))
-    val o = tableDocNode(ident, entry, epochs, pool)
+    val o = tableDocNode(ident, entry, pool)
     o.put("delta", true)
     val ad = o.putArray("added")
     added.foreach(snap => ad.add(snapNode(snap, pool)))
     val ex = o.putArray("expired")
     expiredVersions.foreach(ex.add)
-    M.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+    M.writeValueAsString(o)
   }
 
   def isDelta(json: String): Boolean =
@@ -480,7 +486,8 @@ private[graft] object GraftLedger {
         partCols, cons, analyzed, props,
         eqDeletes = Option(o.get("eqDeletes"))
           .map(_.elements().asScala.map(eqOf).toVector).getOrElse(Vector.empty),
-        nextRowId = Option(o.get("nextRowId")).map(_.asLong()).getOrElse(0L))
+        nextRowId = Option(o.get("nextRowId")).map(_.asLong()).getOrElse(0L),
+        epochs = epochsOf(o))
     (ident, entry, partCols, cons)
   }
 
@@ -503,21 +510,21 @@ private[graft] object GraftLedger {
     val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
     val hist = o.get("history").elements().asScala
       .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
-    (ident, entry, hist, epochsOf(o))
+    (ident, entry, hist, entry.epochs)
   }
 
   /** Decoded delta document: (ident, entry, addedSnapshots,
-    * expiredVersions, epochs). `pool` holds the blooms of the state it
+    * expiredVersions). `pool` holds the blooms of the state it
     * replays onto; the delta's own inline blooms join it.
     */
   private def decodeTableDelta(json: String, monoNow: Long, pool: BloomPool)
-      : (Identifier, TableEntry, Vector[CatalogSnapshot], Seq[Long], Map[String, (Long, Long)]) = {
+      : (Identifier, TableEntry, Vector[CatalogSnapshot], Seq[Long]) = {
     val o = M.readTree(json)
     val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
     val added = o.get("added").elements().asScala
       .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
     val expired = o.get("expired").elements().asScala.map(_.asLong()).toSeq
-    (ident, entry, added, expired, epochsOf(o))
+    (ident, entry, added, expired)
   }
 
   // ---- view document ----
@@ -538,7 +545,7 @@ private[graft] object GraftLedger {
     v.columnComments.foreach(c => if (c == null) cc.addNull() else cc.add(c))
     val pr = o.putObject("props")
     v.props.asScala.foreach { case (k, vv) => pr.put(k, vv) }
-    M.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+    M.writeValueAsString(o)
   }
 
   def decodeView(json: String): GraftView = {
@@ -713,7 +720,9 @@ private[graft] object GraftLedger {
   // ---- resolved state (checkpoint + delta replay) ----
 
   /** A table's fully-RESOLVED ledger state: `state` None = the top
-    * document is a tombstone (table dropped). `seq` is the top
+    * document is a tombstone (table dropped); its fourth element is the
+    * entry's epoch map (`entry.epochs`), the shape [[encodeTable]] takes
+    * back. `seq` is the top
     * committed sequence; `checkpointSeq` is the anchor the resolution
     * started from (== `seq` when the top document is itself a
     * checkpoint or tombstone) — callers feed it back as [[casWrite]]'s
@@ -730,21 +739,21 @@ private[graft] object GraftLedger {
       base: (Identifier, TableEntry, Vector[CatalogSnapshot], Map[String, (Long, Long)]),
       baseSeq: Long, deltas: Iterator[(Long, String)], monoNow: Long)
       : ((Identifier, TableEntry, Vector[CatalogSnapshot], Map[String, (Long, Long)]), Long) = {
-    var (id, entry, hist, eps) = base
+    var (id, entry, hist, _) = base
     var top = baseSeq
     // Paths are never reused (a fresh UUID per file), so one pool
     // serves the whole chain: each delta adds its new segments' blooms.
     val pool = poolOf(entry.segments.iterator ++ hist.iterator.flatMap(_.segments))
     deltas.foreach { case (dseq, djson) =>
-      val (did, dentry, added, expired, deps) = decodeTableDelta(djson, monoNow, pool)
+      val (did, dentry, added, expired) = decodeTableDelta(djson, monoNow, pool)
       val byV = scala.collection.mutable.LinkedHashMap.empty[Long, CatalogSnapshot]
       hist.foreach(s0 => byV.put(s0.version, s0))
       added.foreach(s0 => byV.put(s0.version, s0))
       expired.foreach(byV.remove)
       hist = byV.values.toVector.sortBy(_.version)
-      id = did; entry = dentry; eps = deps; top = dseq
+      id = did; entry = dentry; top = dseq
     }
-    ((id, entry, hist, eps), top)
+    ((id, entry, hist, entry.epochs), top)
   }
 
   def readTableState(dir: Path, ident: Identifier, monoNow: Long): Option[LedgerState] =

@@ -556,7 +556,11 @@ private[sources] object SegmentIO {
       ord + 1 < file.rows && {
         if (in == null)
           in = new DataInputStream(new BufferedInputStream(new FileInputStream(file.path), 1 << 16))
-        val size = in.readInt()
+        // The record's big-endian length in one bulk read (readInt
+        // makes four synchronized single-byte reads per row).
+        in.readFully(buf, 0, 4)
+        val size = (buf(0) & 0xff) << 24 | (buf(1) & 0xff) << 16 |
+          (buf(2) & 0xff) << 8 | (buf(3) & 0xff)
         if (size > buf.length) buf = new Array[Byte](math.max(size, buf.length << 1))
         in.readFully(buf, 0, size)
         row.pointTo(buf, size)

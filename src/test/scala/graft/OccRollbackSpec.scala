@@ -177,11 +177,13 @@ class OccRollbackSpec extends AnyFunSuite {
     // except through the GC-path warehouse sync).
     val (json, _) = GraftLedger.readLatest(tablesDir, ident("g"))
       .getOrElse(fail("no ledger doc for g"))
-    assert(json.contains("\"name\" : \"g\""), "unexpected ledger doc layout")
-    val cloneJson = json.replace("\"name\" : \"g\"", "\"name\" : \"gclone\"")
+    val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(doc.path("name").asText() == "g", "unexpected ledger doc layout")
+    val cloneJson = doc.deepCopy().put("name", "gclone").toString
     assert(GraftLedger.casWrite(tablesDir, ident("gclone"), cloneJson, 0L))
-    val sharedFiles = "\"path\" : \"([^\"]+)\"".r
-      .findAllMatchIn(json).map(_.group(1)).toSet
+    val sharedFiles = scala.jdk.CollectionConverters.ListHasAsScala(
+      doc.findValuesAsText("path")).asScala.toSet
     assert(sharedFiles.nonEmpty, "fixture has no segment files to share")
     // Retention (count cap 1) expires the previous snapshot's files on
     // this commit — the GC pass must list the warehouse (sentinel ⇒
