@@ -130,10 +130,20 @@ object Tables {
     * partition probe below reads `df.rdd`, which compiles the physical
     * plan, and under AQE that EXECUTES any shuffle stages beneath it as
     * real jobs whose results are then discarded (repartition builds a
-    * new plan). Every current call site is scan-rooted; do not apply
-    * this to a frame with exchanges below it.
+    * new plan). Asserted on the optimized plan: no aggregate, join,
+    * repartition, window or global sort may sit below the frame (a
+    * persisted frame is an `InMemoryRelation` leaf there).
     */
   def fanOut(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val exchange = df.queryExecution.optimizedPlan.find {
+      case _: Aggregate | _: Join | _: RepartitionOperation | _: RebalancePartitions |
+           _: Window => true
+      case s: Sort => s.global
+      case _ => false
+    }
+    require(exchange.isEmpty,
+      s"Tables.fanOut needs a scan-rooted frame, found ${exchange.get.nodeName} below it")
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

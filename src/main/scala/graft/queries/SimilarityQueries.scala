@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, SessionConf, Tables}
 import graft.functions.{CosineSim, MinHash32, SimHash64, SrpBucket, SrpBucketProbes, VectorOps}
 import graft.operators.KMeansCodebook
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1039,15 +1040,18 @@ object SimilarityQueries {
     // The maintenance loop: per-commit CDC batches trigger incremental
     // refreshes (the batch content itself is not re-read — refresh_ann
     // diffs from ITS watermark, so coalesced batches stay exactly-once).
-    spark.readStream.format("graft-changes")
-      .option("table", "ann.scorpus").option("changesFrom", buildV.toString).load()
-      .writeStream
-      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
-        spark.sql("CALL graft.system.refresh_ann('ann', 'sidx')").collect()
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
+    StreamingOps.withCheckpoint(spark, "graft_st18_") { ckpt =>
+      spark.readStream.format("graft-changes")
+        .option("table", "ann.scorpus").option("changesFrom", buildV.toString).load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          spark.sql("CALL graft.system.refresh_ann('ann', 'sidx')").collect()
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
     ivfIndexedTopK(spark, "graft.ann.sidx",
       spark.table("graft.ann.scorpus").filter(col("vec_id") === 0)
         .select(col("embedding").as("qe")))

@@ -464,15 +464,16 @@ object StreamingQueries {
     spark.sql("DROP TABLE IF EXISTS graft.stream.sink11")
     spark.sql(
       "CREATE TABLE graft.stream.sink11 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_st11_").toString
-    spark.readStream.format("graft-range")
-      .option("end", "2000").option("rowsPerBatch", "500")
-      .load()
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable("graft.stream.sink11")
-      .awaitTermination()
+    StreamingOps.withCheckpoint(spark, "graft_st11_") { ckpt =>
+      spark.readStream.format("graft-range")
+        .option("end", "2000").option("rowsPerBatch", "500")
+        .load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("graft.stream.sink11")
+        .awaitTermination()
+    }
     spark.sql(
       """SELECT tag, count(*) AS n, round(sum(val), 4) AS total_val
         |FROM graft.stream.sink11
@@ -505,23 +506,24 @@ object StreamingQueries {
       "CREATE TABLE graft.stream.src12 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
     spark.sql(
       "CREATE TABLE graft.stream.sink12 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_st12_").toString
-    def drain(): Unit = spark.readStream
-      .option("maxSegmentsPerTrigger", "4")
-      .table("graft.stream.src12")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable("graft.stream.sink12")
-      .awaitTermination()
-    drain()
-    spark.sql(
-      "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(0, 700, 1, 4)")
-    spark.sql(
-      "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(700, 1400, 1, 4)")
-    spark.sql(
-      "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(1400, 2000, 1, 4)")
-    drain()
+    StreamingOps.withCheckpoint(spark, "graft_st12_") { ckpt =>
+      def drain(): Unit = spark.readStream
+        .option("maxSegmentsPerTrigger", "4")
+        .table("graft.stream.src12")
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("graft.stream.sink12")
+        .awaitTermination()
+      drain()
+      spark.sql(
+        "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(0, 700, 1, 4)")
+      spark.sql(
+        "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(700, 1400, 1, 4)")
+      spark.sql(
+        "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(1400, 2000, 1, 4)")
+      drain()
+    }
     spark.sql(
       """SELECT tag, count(*) AS n, round(sum(val), 4) AS total_val
         |FROM graft.stream.sink12
@@ -611,22 +613,23 @@ object StreamingQueries {
       """CALL graft.system.create_mv('stream', 'mv14', 'stream.base14',
         |  'tag', 'count(*) AS n, sum(CAST(val AS DECIMAL(18,2))) AS dec_total')""".stripMargin)
       .collect()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_st14_").toString
     // Two epochs, not four: the incremental-fold argument is per-epoch
     // SHAPE (each refresh folds only the batch's touched groups), so a
     // second epoch pins it and further epochs only buy fixture time.
-    spark.readStream.format("graft-range")
-      .option("end", "2000").option("rowsPerBatch", "1000")
-      .load()
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.writeTo("graft.stream.base14").append()
-        batch.sparkSession.sql("CALL graft.system.refresh_mv('stream', 'mv14')")
-          .collect(): Unit
-      }
-      .start().awaitTermination()
+    StreamingOps.withCheckpoint(spark, "graft_st14_") { ckpt =>
+      spark.readStream.format("graft-range")
+        .option("end", "2000").option("rowsPerBatch", "1000")
+        .load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.writeTo("graft.stream.base14").append()
+          batch.sparkSession.sql("CALL graft.system.refresh_mv('stream', 'mv14')")
+            .collect(): Unit
+        }
+        .start().awaitTermination()
+    }
     spark.sql(
       """SELECT tag, n, round(CAST(dec_total AS DOUBLE), 4) AS total_val
         |FROM graft.stream.mv14
@@ -837,13 +840,14 @@ object StreamingQueries {
       .option("table", "stream.ups17").option("changesFrom", "0").load()
       .where(col("_change_type").isin("insert", "update_postimage"))
       .select("k", "seg", "bal")
-    val ck = java.nio.file.Files.createTempDirectory("st17-ck-").toString
-    val q = apply.writeStream
-      .option("checkpointLocation", ck)
-      .option("graft.upsert.keys", "k")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable("graft.stream.ups17_replica")
-    q.awaitTermination()
+    StreamingOps.withCheckpoint(spark, "st17-ck-") { ck =>
+      apply.writeStream
+        .option("checkpointLocation", ck)
+        .option("graft.upsert.keys", "k")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("graft.stream.ups17_replica")
+        .awaitTermination()
+    }
     spark.table("graft.stream.ups17_replica")
       .groupBy("seg")
       .agg(count("*").as("n"),

@@ -312,12 +312,20 @@ private[graft] object GraftLedger {
 
   // ---- table document ----
 
-  private def snapNode(snap: CatalogSnapshot, pool: BloomPool): ObjectNode = {
+  /** One history snapshot. `segmentsRef`: the snapshot's segments are
+    * the document entry's, written as `"segmentsRef": true` instead of
+    * a second copy (see [[encodeTableDelta]]).
+    */
+  private def snapNode(
+      snap: CatalogSnapshot, pool: BloomPool, segmentsRef: Boolean = false): ObjectNode = {
     val h = M.createObjectNode()
     h.put("version", snap.version).put("wallMs", snap.wallMs)
     h.put("schema", snap.schema.json)
-    val hs = h.putArray("segments")
-    snap.segments.foreach(s => hs.add(segNode(s, pool)))
+    if (segmentsRef) h.put("segmentsRef", true)
+    else {
+      val hs = h.putArray("segments")
+      snap.segments.foreach(s => hs.add(segNode(s, pool)))
+    }
     val hpc = h.putArray("partitionCols")
     snap.partitionCols.foreach(hpc.add)
     val hcons = h.putArray("constraints")
@@ -407,6 +415,9 @@ private[graft] object GraftLedger {
     * `base` is the history the delta replays onto: blooms of segments
     * it already holds ride as references (the bloom-once rule), so a
     * delta carries only the blooms of segments new in this commit.
+    * An added snapshot whose segments are the entry's — the usual case,
+    * as `publish` builds the snapshot from the entry — lists them once,
+    * in the entry, and carries `"segmentsRef": true`.
     */
   def encodeTableDelta(
       ident: Identifier, entry: TableEntry, base: Vector[CatalogSnapshot],
@@ -415,7 +426,7 @@ private[graft] object GraftLedger {
     val o = tableDocNode(ident, entry, pool)
     o.put("delta", true)
     val ad = o.putArray("added")
-    added.foreach(snap => ad.add(snapNode(snap, pool)))
+    added.foreach(snap => ad.add(snapNode(snap, pool, segmentsRef = snap.segments == entry.segments)))
     val ex = o.putArray("expired")
     expiredVersions.foreach(ex.add)
     M.writeValueAsString(o)
@@ -431,7 +442,8 @@ private[graft] object GraftLedger {
     * old, weaker behavior) rather than silently un-partitioning.
     */
   private def snapOf(h: JsonNode, fallbackCols: Seq[String],
-      fallbackCons: Vector[Constraint], monoNow: Long, pool: BloomPool): CatalogSnapshot = {
+      fallbackCons: Vector[Constraint], monoNow: Long, pool: BloomPool,
+      entrySegs: Vector[Segment]): CatalogSnapshot = {
     val snapCols = Option(h.get("partitionCols"))
       .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(fallbackCols)
     def patchSpec(ss: Vector[Segment]): Vector[Segment] =
@@ -439,7 +451,9 @@ private[graft] object GraftLedger {
     CatalogSnapshot(
       h.get("version").asLong(), h.get("wallMs").asLong(), monoNow,
       DataType.fromJson(h.get("schema").asText()).asInstanceOf[StructType],
-      patchSpec(h.get("segments").elements().asScala.map(segOf(_, pool)).toVector),
+      patchSpec(
+        if (h.path("segmentsRef").asBoolean(false)) entrySegs
+        else h.get("segments").elements().asScala.map(segOf(_, pool)).toVector),
       snapCols,
       Option(h.get("constraints"))
         .map(_.elements().asScala.flatMap(constraintOf).toVector).getOrElse(fallbackCons),
@@ -458,9 +472,12 @@ private[graft] object GraftLedger {
     * reloaded snapshot gets a fresh retention window, which errs on the
     * side of keeping time travel alive after a restart.
     */
-  /** The non-history half of a table/delta document, decoded. */
+  /** The non-history half of a table/delta document, decoded; the last
+    * element is the entry's segments as written (before the pre-spec
+    * patch), which a `segmentsRef` snapshot resolves to.
+    */
   private def decodeDocCommon(o: JsonNode, pool: BloomPool)
-      : (Identifier, TableEntry, Seq[String], Vector[Constraint]) = {
+      : (Identifier, TableEntry, Seq[String], Vector[Constraint], Vector[Segment]) = {
     val ns = o.get("namespace").elements().asScala.map(_.asText()).toArray
     val ident = Identifier.of(ns, o.get("name").asText())
     val schema = DataType.fromJson(o.get("schema").asText()).asInstanceOf[StructType]
@@ -488,7 +505,7 @@ private[graft] object GraftLedger {
           .map(_.elements().asScala.map(eqOf).toVector).getOrElse(Vector.empty),
         nextRowId = Option(o.get("nextRowId")).map(_.asLong()).getOrElse(0L),
         epochs = epochsOf(o))
-    (ident, entry, partCols, cons)
+    (ident, entry, partCols, cons, segs)
   }
 
   private def epochsOf(o: JsonNode): Map[String, (Long, Long)] = {
@@ -507,9 +524,9 @@ private[graft] object GraftLedger {
       : (Identifier, TableEntry, Vector[CatalogSnapshot], Map[String, (Long, Long)]) = {
     val o = M.readTree(json)
     val pool = new BloomPool
-    val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
+    val (ident, entry, partCols, cons, segs) = decodeDocCommon(o, pool)
     val hist = o.get("history").elements().asScala
-      .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
+      .map(h => snapOf(h, partCols, cons, monoNow, pool, segs)).toVector
     (ident, entry, hist, entry.epochs)
   }
 
@@ -520,9 +537,9 @@ private[graft] object GraftLedger {
   private def decodeTableDelta(json: String, monoNow: Long, pool: BloomPool)
       : (Identifier, TableEntry, Vector[CatalogSnapshot], Seq[Long]) = {
     val o = M.readTree(json)
-    val (ident, entry, partCols, cons) = decodeDocCommon(o, pool)
+    val (ident, entry, partCols, cons, segs) = decodeDocCommon(o, pool)
     val added = o.get("added").elements().asScala
-      .map(h => snapOf(h, partCols, cons, monoNow, pool)).toVector
+      .map(h => snapOf(h, partCols, cons, monoNow, pool, segs)).toVector
     val expired = o.get("expired").elements().asScala.map(_.asLong()).toSeq
     (ident, entry, added, expired)
   }

@@ -16,6 +16,13 @@ import org.apache.spark.sql.streaming.Trigger
   * watermarks, output modes) while still producing a deterministic
   * DataFrame the differential oracle can hash.
   *
+  * Every stream the engine starts runs with
+  * `spark.sql.streaming.checkpointFileManagerClass` naming
+  * [[NioCheckpointFileManager]] ([[withStreamConfs]], [[withCheckpoint]]).
+  * Without the native Hadoop library, Spark's default manager forks one
+  * `chmod` process per checkpoint file it creates and one `readlink` per
+  * rename — most of a micro-batch's state-store commit time.
+  *
   * At 100 TB the same code points `readStream` at an arriving directory
   * tree and swaps the memory sink for a parquet/Kafka sink — the plan,
   * state management, and watermark semantics are identical; only the
@@ -142,7 +149,31 @@ object StreamingOps {
         .awaitTermination()
     }
 
+  /** The conf that makes `CheckpointFileManager.create` build
+    * [[NioCheckpointFileManager]] for a stream started in its scope.
+    * Spark still wraps it in its checksum manager, so checkpoint
+    * checksums stay on.
+    */
+  private val CheckpointFiles =
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[NioCheckpointFileManager].getName
+
+  /** Run `body`, which starts a stream of its own, with a fresh
+    * checkpoint directory under `java.io.tmpdir` (named from `prefix`)
+    * that [[NioCheckpointFileManager]] serves. The directory is deleted
+    * once `body` returns or throws, so `body` must drain its stream
+    * before it returns.
+    */
+  def withCheckpoint[T](spark: SparkSession, prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try SessionConf.withConfs(spark)(CheckpointFiles)(body(dir.toString))
+    finally NioCheckpointFileManager.deleteRecursively(dir)
+  }
+
   /** The replay harness's conf for one streaming run of `sdf`:
+    *  - `spark.sql.streaming.checkpointFileManagerClass`:
+    *    [[NioCheckpointFileManager]], because without the native Hadoop
+    *    library the default manager forks one process per checkpoint
+    *    file it creates and one per rename (see the header);
     *  - `spark.sql.shuffle.partitions`: the state partitions (above);
     *  - `spark.sql.streaming.minBatchesToRetain` = 2 instead of the
     *    default 100 — recovery-window tuning a bounded replay doesn't
@@ -155,8 +186,9 @@ object StreamingOps {
     *    the rule cannot prove keeps Spark's default — st13's append-mode
     *    window aggregate emits its final windows in exactly that batch.
     */
-  private def withStreamConfs[T](spark: SparkSession, sdf: DataFrame)(body: => T): T = {
+  private[graft] def withStreamConfs[T](spark: SparkSession, sdf: DataFrame)(body: => T): T = {
     val confs = Seq(
+      CheckpointFiles,
       "spark.sql.streaming.minBatchesToRetain" -> "2",
       "spark.sql.shuffle.partitions" -> statePartitions(spark)) ++
       (if (evictionIsSilent(sdf.queryExecution.analyzed))

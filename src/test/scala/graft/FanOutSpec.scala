@@ -40,10 +40,36 @@ class FanOutSpec extends AnyFunSuite {
   }
 
   test("fanOut is an identity when the input already has enough partitions") {
-    val docs = Tables.documents(spark, dir)
-    val wide = docs.repartition(spark.sparkContext.defaultParallelism * 2)
+    // A scan-rooted frame with more splits than defaultParallelism (a
+    // repartitioned frame is refused — see the next test).
+    val wide = spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism * 2).toDF()
     val fanned = Tables.fanOut(wide)
     // Same DataFrame object: no plan change, hence no added exchange.
     assert(fanned eq wide)
+  }
+
+  test("fanOut refuses a frame with an exchange below it") {
+    val docs = Tables.documents(spark, dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq(
+        "aggregate" -> docs.groupBy("doc_id").count(),
+        "repartition" -> docs.repartition(2),
+        "join" -> docs.join(docs.select("doc_id"), "doc_id")).foreach { case (what, df) =>
+        val e = intercept[IllegalArgumentException](Tables.fanOut(df))
+        assert(e.getMessage.contains("scan-rooted"), what)
+      }
+      // A row-local projection over the scan still passes.
+      Tables.fanOut(docs.select("doc_id").filter("doc_id > 0"))
+      org.apache.spark.sql.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // The refusal happens on the plan, before the partition probe runs
+    // any of the exchanges as jobs.
+    assert(jobs.get == 0, s"${jobs.get} jobs ran")
   }
 }

@@ -97,20 +97,24 @@ class LedgerDeltaSpec extends AnyFunSuite {
     spark.sql("DROP TABLE pgraft.ld.h PURGE")
   }
 
-  /** The newest DELTA document in the table's directory: its size and
-    * the bytes of the bloom payloads it carries inline.
+  /** The newest DELTA document in the table's directory: its size, the
+    * bytes of the bloom payloads it carries inline, and the number of
+    * segment records it lists.
     */
-  private def newestDelta(id: Identifier): (Long, Long) = {
+  private def newestDelta(id: Identifier): (Long, Long, Int) = {
     val d = docDirOf(id)
     docSizes(id).reverseIterator.map { case (seq, size) =>
       val raw = java.nio.file.Files.readString(d.resolve(f"$seq%020d.json"))
       (size, new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(raw.substring(0, raw.lastIndexOf("\n#graft-seal:"))))
     }.collectFirst { case (size, doc) if doc.path("delta").asBoolean(false) =>
-      val segs = doc.get("segments").elements().asScala ++
-        doc.get("added").elements().asScala.flatMap(_.get("segments").elements().asScala)
-      size -> segs.flatMap(s => Option(s.get("blooms")).iterator.flatMap(_.elements().asScala))
-        .map(_.asText("").length.toLong).sum
+      // An added snapshot that shares the entry's segments carries
+      // "segmentsRef" and no segment list of its own.
+      val segs = (doc.get("segments").elements().asScala ++
+        doc.get("added").elements().asScala
+          .flatMap(a => Option(a.get("segments")).iterator.flatMap(_.elements().asScala))).toSeq
+      (size, segs.flatMap(s => Option(s.get("blooms")).iterator.flatMap(_.elements().asScala))
+        .map(_.asText("").length.toLong).sum, segs.size)
     }.getOrElse(fail("no delta document"))
   }
 
@@ -143,7 +147,7 @@ class LedgerDeltaSpec extends AnyFunSuite {
         |               'graft.retention.snapshots'='600')""".stripMargin)
     // 40 appends of 5k distinct keys, one segment each: every segment
     // carries a real bloom, and 40 appends cross two checkpoints.
-    var second = (-1L, -1L)
+    var second = (-1L, -1L, -1)
     (0 until 40).foreach { i =>
       spark.sql(s"INSERT INTO pgraft.ld.b SELECT id FROM range(${i * 5000L}, ${(i + 1) * 5000L}, 1, 1)")
       if (i == 1) second = newestDelta(id)
@@ -155,10 +159,14 @@ class LedgerDeltaSpec extends AnyFunSuite {
     // Deltas carry only the new segment's blooms: the 40th delta's bloom
     // payload is the 2nd's, where repeating every live bloom in the
     // entry and the added snapshot grows it 40-fold. The rest of the
-    // document lists each live segment's stats (twice), so it still
-    // grows by a few hundred bytes a segment, far below one bloom each.
-    val (last, lastBlooms) = newestDelta(id)
-    val (secondSize, secondBlooms) = second
+    // document lists each live segment's stats once (the added snapshot
+    // refers to the entry's list), so it still grows by a few hundred
+    // bytes a segment, far below one bloom each.
+    val (last, lastBlooms, lastListed) = newestDelta(id)
+    val (secondSize, secondBlooms, _) = second
+    info(s"delta document: $secondSize B at the 2nd append, $last B after the 40th")
+    assert(lastListed <= live.length,
+      s"the newest delta lists $lastListed segment records for ${live.length} live segments")
     assert(secondBlooms > 0 && lastBlooms <= secondBlooms * 3 / 2,
       s"bloom payload grew with the segment count: 2nd $secondBlooms B, newest $lastBlooms B")
     assert(last - secondSize <= 38 * secondBlooms / 4,
