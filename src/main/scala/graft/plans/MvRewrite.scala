@@ -1391,11 +1391,10 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * paths: negation is exact only for SUM/COUNT (and AVG, which
     * merges through its sum+count components), the kill predicate
     * needs single-column keys, and the key lists must stay
-    * metadata-sized — capped by `spark.graft.mvRewrite.eqKeyLimit`
-    * (falling back to the refresh side's
-    * `spark.graft.mvRefresh.eqKeyLimit`, default 10000: both caps
-    * guard the same inlined-IN blow-up and tune together). True =
-    * admissible.
+    * metadata-sized — capped by the refresh side's
+    * `spark.graft.mvRefresh.eqKeyLimit` (default 10000: rewrite and
+    * refresh guard the same inlined-IN blow-up, so they share one cap).
+    * True = admissible.
     */
   private def retractionAdmissible(
       agg: Aggregate, newEqs: Seq[GraftCatalog.EqDelete]): Boolean =
@@ -1410,8 +1409,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       }
 
   private def rewriteEqKeyLimit: Long =
-    session.conf.get("spark.graft.mvRewrite.eqKeyLimit",
-      session.conf.get("spark.graft.mvRefresh.eqKeyLimit", "10000")).toLong
+    session.conf.get("spark.graft.mvRefresh.eqKeyLimit", "10000").toLong
 
   /** LIVENESS filter for retraction-served plans: a group whose every
     * base row was killed nets count 0 across the branches but would

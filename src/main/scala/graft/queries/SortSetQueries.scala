@@ -236,21 +236,19 @@ object SortSetQueries {
     // data, ~950 tasks per invocation at ~15 levels (measured: 2.82 s →
     // 2.23 s at 4 partitions, identical plans otherwise; 1 and 2
     // partitions measured the same as 4, so 4 is not a binding floor).
-    // The DEFAULT is derived from the recursion's base-table size
+    // The count is derived from the recursion's base-table size
     // rather than a constant: the frontier is bounded by the base table
     // (each level ≤ 2× the previous, all levels ⊆ customer), so
     // bytes/64 MB capped at the cluster's parallelism tracks the
     // frontier's worst case at any scale — at bench SF it resolves to
     // the measured-best 4, at a 100 TB base it approaches the core
-    // count instead of serializing the frontier through 4 tasks. The
-    // conf still overrides for deployments that know their frontier.
+    // count instead of serializing the frontier through 4 tasks.
     val derived = {
       val baseBytes = new java.io.File(s"$dir/customer.parquet").length
       math.max(4L, math.min(s.sparkContext.defaultParallelism.toLong,
         baseBytes / (64L << 20) + 1))
     }
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.recursion.shufflePartitions", derived.toString))
+    s.conf.set("spark.sql.shuffle.partitions", derived.toString)
     Tables.customer(s, dir).createOrReplaceTempView("customer")
     // BROADCAST(t): the frontier (≤ 2× the previous level) is always
     // the small side, but the UnionLoopRef has no stats, so without

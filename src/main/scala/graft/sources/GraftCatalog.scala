@@ -1090,69 +1090,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     tables.nonEmpty || nsViews.nonEmpty
   }
 
-  // ---- ProcedureCatalog: CALL graft.system.{compact,history}(...) ----
+  // ---- ProcedureCatalog: CALL graft.system.<name>(...) ----
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    if (namespace.sameElements(Array("system")))
-      Array(Identifier.of(namespace, "compact"), Identifier.of(namespace, "history"),
-        Identifier.of(namespace, "zorder"), Identifier.of(namespace, "vacuum"),
-        Identifier.of(namespace, "train_ann"), Identifier.of(namespace, "train_ann_pq"),
-        Identifier.of(namespace, "analyze"), Identifier.of(namespace, "create_mv"),
-        Identifier.of(namespace, "refresh_mv"), Identifier.of(namespace, "restore"),
-        Identifier.of(namespace, "clone"), Identifier.of(namespace, "set_partitioning"),
-        Identifier.of(namespace, "create_branch"), Identifier.of(namespace, "publish_branch"),
-        Identifier.of(namespace, "remove_orphan_files"),
-        Identifier.of(namespace, "undrop"),
-        Identifier.of(namespace, "sync_identity"),
-        Identifier.of(namespace, "copy_into"),
-        Identifier.of(namespace, "build_ann_index"),
-        Identifier.of(namespace, "refresh_ann"),
-        Identifier.of(namespace, "verify_constraints"))
+    if (namespace.sameElements(GraftProcedure.Namespace))
+      GraftProcedure.all.map(p => Identifier.of(namespace, p.name())).toArray
     else Array.empty
 
   override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
-    if (ident.namespace.sameElements(Array("system")) && ident.name == "compact")
-      GraftCompactProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "history")
-      GraftHistoryProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "zorder")
-      GraftZorderProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "vacuum")
-      GraftVacuumProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "train_ann")
-      GraftTrainAnnProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "train_ann_pq")
-      GraftTrainAnnPqProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "analyze")
-      GraftAnalyzeProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "create_mv")
-      GraftCreateMvProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "refresh_mv")
-      GraftRefreshMvProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "restore")
-      GraftRestoreProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "clone")
-      GraftCloneProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "set_partitioning")
-      GraftSetPartitioningProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "create_branch")
-      GraftCreateBranchProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "publish_branch")
-      GraftPublishBranchProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "remove_orphan_files")
-      GraftRemoveOrphanFilesProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "undrop")
-      GraftUndropProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "sync_identity")
-      GraftSyncIdentityProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "copy_into")
-      GraftCopyIntoProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "build_ann_index")
-      GraftBuildAnnIndexProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "refresh_ann")
-      GraftRefreshAnnProcedure
-    else if (ident.namespace.sameElements(Array("system")) && ident.name == "verify_constraints")
-      GraftVerifyConstraintsProcedure
-    else throw new UnsupportedOperationException(s"no such procedure: $ident")
+    GraftProcedure.all
+      .find(p => ident.namespace.sameElements(GraftProcedure.Namespace) && p.name() == ident.name)
+      .getOrElse(throw new UnsupportedOperationException(s"no such procedure: $ident"))
 
   // ---- ViewCatalog: persistent SQL views resolved through the ----
   // ---- catalog (CREATE/ALTER/DROP/SHOW VIEWS, `SELECT FROM v`) ----
@@ -1221,27 +1168,32 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   // ---- FunctionCatalog ----
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    if (namespace.sameElements(Array("math")))
-      Array(Identifier.of(namespace, "clamp"))
-    else Array.empty
+    if (namespace.isEmpty) Array.empty // transforms resolve, but are not listed
+    else GraftCatalog.Functions.getOrElse(namespace.toSeq, Map.empty)
+      .keys.toArray.sorted.map(Identifier.of(namespace, _))
 
   override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.namespace.sameElements(Array("math")) && ident.name == "clamp")
-      GraftClampFunction
-    // Empty-namespace names are how Spark resolves partition TRANSFORMS
-    // (write-side clustered distribution, read-side key-grouped
-    // partitioning) against the table's catalog — SPARK-33779, the
-    // Iceberg FunctionCatalog shape.
-    else if (ident.namespace.isEmpty && ident.name == "days") GraftDaysFunction
-    else if (ident.namespace.isEmpty && ident.name == "hours") GraftHoursFunction
-    else if (ident.namespace.isEmpty && ident.name == "months") GraftMonthsFunction
-    else if (ident.namespace.isEmpty && ident.name == "years") GraftYearsFunction
-    else if (ident.namespace.isEmpty && ident.name == "bucket") GraftBucketFunction
-    else if (ident.namespace.isEmpty && ident.name == "truncate") GraftTruncateFunction
-    else throw new NoSuchFunctionException(ident)
+    GraftCatalog.Functions.get(ident.namespace.toSeq).flatMap(_.get(ident.name))
+      .getOrElse(throw new NoSuchFunctionException(ident))
 }
 
 object GraftCatalog {
+  /** The catalog's functions by namespace, then name: the one table
+    * `listFunctions` and `loadFunction` read. `math` holds the callable
+    * `graft.math.clamp`. The empty namespace is how Spark resolves
+    * partition TRANSFORMS (write-side clustered distribution, read-side
+    * key-grouped partitioning) against the table's catalog — SPARK-33779,
+    * the Iceberg FunctionCatalog shape. Those resolve by name but are not
+    * listed: they are a table's transforms, not functions to call.
+    */
+  private val Functions: Map[Seq[String], Map[String, UnboundFunction]] = {
+    def byName(fns: UnboundFunction*) = fns.map(f => f.name() -> f).toMap
+    Map(
+      Seq("math") -> byName(GraftClampFunction),
+      Seq.empty[String] -> byName(GraftDaysFunction, GraftHoursFunction, GraftMonthsFunction,
+        GraftYearsFunction, GraftBucketFunction, GraftTruncateFunction))
+  }
+
   /** Per-column zone-map entry for one segment: min/max over the
     * non-null values (external JVM types: boxed numerics / String /
     * Boolean — null when the column had no non-null values or an

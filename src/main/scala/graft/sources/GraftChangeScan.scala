@@ -205,18 +205,12 @@ private[sources] case class GraftChangeScan(
     to: GraftCatalog.CatalogSnapshot) extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  /** Complete all-dataChange=false range: no logical row changed,
-    * however the files (or the SCHEMA — ALTER migrations are
-    * dataChange=false 1:1 re-projections) moved. Such a range reads
-    * as ZERO rows, so the cross-epoch decode guard below does not
-    * apply — nothing will be decoded.
+  /** A range that changed no logical row reads as ZERO rows, so the
+    * cross-epoch decode guard below does not apply — nothing will be
+    * decoded.
     */
-  private lazy val noLogicalChange: Boolean = {
-    val commits = GraftCatalog.retainedSnapshots(ident)
-      .filter(s => s.version > from.version && s.version <= to.version)
-    commits.length == (to.version - from.version).toInt &&
-      commits.nonEmpty && commits.forall(!_.dataChange)
-  }
+  private lazy val noLogicalChange: Boolean =
+    GraftChangeScan.noLogicalChange(ident, from.version, to.version)
 
   private def dataSchema: StructType = {
     // Loud guard, not silent corruption: segments written under a
@@ -522,20 +516,14 @@ private[sources] class GraftChangeMicroBatchStream(
     // correctly where an endpoint-only check here would not (a
     // Trigger.Once range ENDING on a compaction still carries the
     // earlier commits' changes).
-    else {
-      // Mirror of the batch scan's noLogicalChange exemption: a range
-      // of ONLY dataChange=false commits (e.g. the ALTER migration a
-      // restarted stream resumes across) delivers zero rows, so the
-      // bounds' schemas are never decoded — skip WITHOUT
-      // snapshotOrFail, whose decode guard would otherwise wedge the
-      // restart on the pre-migration bound's old layout.
-      val commits = GraftCatalog.retainedSnapshots(ident)
-        .filter(c => c.version > s && c.version <= e)
-      if (commits.length == (e - s).toInt && commits.nonEmpty &&
-          commits.forall(!_.dataChange)) Array.empty
-      else GraftChangeScan.diffPartitions(
-        ident, snapshotOrFail(s), snapshotOrFail(e), dataSchema)
-    }
+    // The batch scan's exemption: a range that changed no logical row
+    // (e.g. the ALTER migration a restarted stream resumes across)
+    // delivers zero rows, so the bounds' schemas are never decoded —
+    // skip WITHOUT snapshotOrFail, whose decode guard would otherwise
+    // wedge the restart on the pre-migration bound's old layout.
+    else if (GraftChangeScan.noLogicalChange(ident, s, e)) Array.empty
+    else GraftChangeScan.diffPartitions(
+      ident, snapshotOrFail(s), snapshotOrFail(e), dataSchema)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -560,6 +548,22 @@ private[sources] object GraftChangeScan {
   private[sources] def decodeCompatible(a: StructType, b: StructType): Boolean =
     a.length == b.length &&
       !a.fields.zip(b.fields).exists { case (x, y) => x.dataType != y.dataType }
+
+  /** Whether the version range (from, to] changed no logical row: it
+    * is made ONLY of dataChange=false commits — compaction, Z-order,
+    * spec evolution, ALTER migrations (1:1 re-projections) — however
+    * the files or the schema moved. Guarded on COMPLETENESS: the
+    * retained list may have lost mid-range commits to expiry while the
+    * endpoints survive, and a vanished dataChange=true commit must not
+    * let the no-ops that remain visible empty the whole range. The one
+    * test for the batch scan, the micro-batch stream and
+    * `diffPartitions`.
+    */
+  private[sources] def noLogicalChange(ident: Identifier, from: Long, to: Long): Boolean = {
+    val commits = GraftCatalog.retainedSnapshots(ident)
+      .filter(s => s.version > from && s.version <= to)
+    commits.length == (to - from).toInt && commits.nonEmpty && commits.forall(!_.dataChange)
+  }
 
   /** Resolve a change-feed BOUND: a version number, a tag name, or a
     * TIMESTAMP resolved to the latest snapshot committed at or before
@@ -665,19 +669,13 @@ private[sources] object GraftChangeScan {
       from: GraftCatalog.CatalogSnapshot, to: GraftCatalog.CatalogSnapshot,
       dataSchema: org.apache.spark.sql.types.StructType): Array[InputPartition] = {
     val width = dataSchema.length
-    // A range consisting ONLY of dataChange=false commits changed no
-    // logical row — empty diff, however the files moved. (A MIXED
-    // range still plans the endpoint diff; a mid-range compaction then
-    // surfaces as delete+insert churn — the documented honest cap.)
-    // Guarded on COMPLETENESS: the retained list may have lost
-    // mid-range commits to expiry while the endpoints survive, and a
-    // vanished dataChange=true commit must not let the no-ops that
-    // remain visible empty the whole diff.
+    // Empty diff for a range that changed no logical row, however the
+    // files moved. (A MIXED range still plans the endpoint diff; a
+    // mid-range compaction then surfaces as delete+insert churn — the
+    // documented honest cap.)
+    if (noLogicalChange(ident, from.version, to.version)) return Array.empty
     val commits = GraftCatalog.retainedSnapshots(ident)
       .filter(s => s.version > from.version && s.version <= to.version)
-    if (commits.length == (to.version - from.version).toInt &&
-        commits.nonEmpty && commits.forall(!_.dataChange))
-      return Array.empty
     val fromByPath = from.segments.map(s => s.path -> s).toMap
     val toByPath = to.segments.map(s => s.path -> s).toMap
     // PAIRED UPDATES first: an added segment whose recorded rewrite

@@ -4,10 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.connector.catalog.{Identifier, procedures}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import GraftProcedure.in
 
 /** Incremental MATERIALIZED VIEWS over catalog tables —
   * `CALL graft.system.create_mv(...)` / `CALL graft.system.refresh_mv(...)`.
@@ -57,6 +58,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object GraftMvOps {
   import org.apache.spark.sql.functions.{col, expr, lit}
+
+  /** The result columns of `create_mv` and `refresh_mv`: what `create`
+    * and `refresh` return, behind the MV's name.
+    */
+  private[sources] val ProcedureResult: StructType = GraftProcedure.result(
+    "table" -> StringType, "mode" -> StringType, "groups" -> LongType,
+    "source_version" -> LongType)
 
   val SourceProp = "graft.mv.source"
   val GroupProp = "graft.mv.group"
@@ -956,87 +964,38 @@ private[graft] object GraftMvOps {
   }
 }
 
-/** Shared result shape + row assembly for the two MV procedures. */
-private[sources] trait GraftMvProcedureBase
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates catalog state
-
-  protected val outSchema: StructType = StructType(Seq(
-    StructField("table", StringType, nullable = false),
-    StructField("mode", StringType, nullable = false),
-    StructField("groups", LongType, nullable = false),
-    StructField("source_version", LongType, nullable = false)))
-
-  protected def resultScan(
-      table: String, mode: String, groups: Long, version: Long): java.util.Iterator[Scan] = {
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(table),
-        org.apache.spark.unsafe.types.UTF8String.fromString(mode),
-        groups, version))
-    val schema = outSchema
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = schema
-      override def description(): String = s"GraftMvResult($table)"
-    }).iterator()
-  }
-}
-
 /** `CALL graft.system.create_mv(ns, table, source, group_cols, aggs)`. */
-private[graft] object GraftCreateMvProcedure extends GraftMvProcedureBase {
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftCreateMvProcedure extends GraftProcedure("create_mv",
+    "create_mv(ns, table, source, group_cols, aggs, where): materialize a grouped aggregate of a catalog table",
+    Seq(
+      in("ns", StringType, "MV namespace"),
+      in("table", StringType, "MV table name"),
+      in("source", StringType, "source catalog table as '<ns>.<table>'"),
+      in("group_cols", StringType, "comma-separated GROUP BY columns"),
+      in("aggs", StringType,
+        "comma-separated aggregate expressions, each aliased (e.g. 'sum(v) AS total')"),
+      in("where", StringType,
+        "optional pre-aggregation filter over source columns ('' = none)", Some("''"))),
+    GraftMvOps.ProcedureResult) {
 
-  override def name(): String = "create_mv"
-  override def description(): String =
-    "create_mv(ns, table, source, group_cols, aggs, where): materialize a grouped aggregate of a catalog table"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("MV namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("MV table name").build(),
-    ProcedureParameter.in("source", StringType)
-      .comment("source catalog table as '<ns>.<table>'").build(),
-    ProcedureParameter.in("group_cols", StringType)
-      .comment("comma-separated GROUP BY columns").build(),
-    ProcedureParameter.in("aggs", StringType)
-      .comment("comma-separated aggregate expressions, each aliased (e.g. 'sum(v) AS total')")
-      .build(),
-    ProcedureParameter.in("where", StringType).defaultValue("''")
-      .comment("optional pre-aggregation filter over source columns ('' = none)")
-      .build())
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val source = input.getUTF8String(2).toString
-    val group = input.getUTF8String(3).toString
-    val aggs = input.getUTF8String(4).toString
-    val where =
-      if (input.numFields > 5 && !input.isNullAt(5)) input.getUTF8String(5).toString
-      else ""
-    val spark = org.apache.spark.sql.SparkSession.active
-    val (mode, groups, version) =
-      GraftMvOps.create(spark, ns, table, source, group, aggs, where)
-    resultScan(s"$ns.$table", mode, groups, version)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val (ns, table) = (str(input, 0), str(input, 1))
+    val (mode, groups, version) = GraftMvOps.create(SparkSession.active, ns, table,
+      str(input, 2), str(input, 3), str(input, 4), optStr(input, 5))
+    Seq((s"$ns.$table", mode, groups, version))
   }
 }
 
 /** `CALL graft.system.refresh_mv(ns, table)`. */
-private[graft] object GraftRefreshMvProcedure extends GraftMvProcedureBase {
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftRefreshMvProcedure extends GraftProcedure("refresh_mv",
+    "refresh_mv(ns, table): incrementally refresh a materialized view from its source's changed segments",
+    Seq(in("ns", StringType, "MV namespace"),
+      in("table", StringType, "MV table name")),
+    GraftMvOps.ProcedureResult) {
 
-  override def name(): String = "refresh_mv"
-  override def description(): String =
-    "refresh_mv(ns, table): incrementally refresh a materialized view from its source's changed segments"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("MV namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("MV table name").build())
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val spark = org.apache.spark.sql.SparkSession.active
-    val (mode, groups, version) = GraftMvOps.refresh(spark, ns, table)
-    resultScan(s"$ns.$table", mode, groups, version)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val (ns, table) = (str(input, 0), str(input, 1))
+    val (mode, groups, version) = GraftMvOps.refresh(SparkSession.active, ns, table)
+    Seq((s"$ns.$table", mode, groups, version))
   }
 }

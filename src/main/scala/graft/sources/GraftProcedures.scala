@@ -1,65 +1,132 @@
 package graft.sources
 
-
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
+import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
+import org.apache.spark.sql.types.{
+  BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+  TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import GraftProcedure.{NsTable, in, result}
 
 // Stored procedures (`CALL graft.system.*`) and catalog-resolved
-// functions — split from GraftCatalog.scala (same package, no
-// behavior change).
+// functions.
 
-/** `CALL graft.system.compact(ns, table)` — the OPTIMIZE procedure,
-  * resolved through `ProcedureCatalog` (the SQL-native maintenance
-  * entry point, same surface Iceberg uses for `rewrite_data_files`).
+/** The one shape of every `CALL graft.system.*` procedure, resolved
+  * through `ProcedureCatalog` (the SQL-native maintenance entry point,
+  * the surface Iceberg uses for `rewrite_data_files`). A procedure is
+  * its own bound form: its parameters are declared up front, so `bind`
+  * has nothing to resolve and returns it. `call` runs `run`, which does
+  * the work and returns the result rows as tuples, and wraps them in one
+  * `LocalScan` over `outSchema`; every row must have one cell per
+  * result column, and `String` cells become Spark's `UTF8String`.
+  *
+  * Never deterministic: every procedure reads or mutates catalog state
+  * (snapshots, segment files, table properties, whole tables), so two
+  * calls with the same arguments can answer differently, and Spark must
+  * neither fold a call nor reuse one call's result for another.
+  */
+private[graft] abstract class GraftProcedure(
+    procName: String, desc: String,
+    params: Seq[ProcedureParameter], outSchema: StructType)
+    extends procedures.UnboundProcedure with procedures.BoundProcedure {
+  final override def name(): String = procName
+  final override def description(): String = desc
+  final override def bind(inputType: StructType): procedures.BoundProcedure = this
+  final override def isDeterministic: Boolean = false
+  final override def parameters(): Array[ProcedureParameter] = params.toArray
+
+  /** Does the procedure's work; one tuple per result row, in order. */
+  protected def run(input: InternalRow): Seq[Product]
+
+  final override def call(input: InternalRow): java.util.Iterator[Scan] = {
+    val out: Array[InternalRow] = run(input).map { row =>
+      require(row.productArity == outSchema.length,
+        s"$procName: a result row has ${row.productArity} cells, " +
+          s"the result schema ${outSchema.length} columns")
+      new GenericInternalRow(row.productIterator.map {
+        case s: String => UTF8String.fromString(s)
+        case v => v
+      }.toArray[Any]): InternalRow
+    }.toArray
+    java.util.List.of[Scan](new LocalScan {
+      override def rows(): Array[InternalRow] = out
+      override def readSchema(): StructType = outSchema
+      override def description(): String = s"graft.system.$procName result"
+    }).iterator()
+  }
+
+  /** The string argument at ordinal `i` (a required parameter). */
+  protected def str(input: InternalRow, i: Int): String = input.getUTF8String(i).toString
+
+  /** The optional string argument at ordinal `i`: '' when absent or NULL. */
+  protected def optStr(input: InternalRow, i: Int): String =
+    if (i < input.numFields && !input.isNullAt(i)) str(input, i) else ""
+
+  /** The (ns, table) argument pair at ordinals `i`, `i + 1`. */
+  protected def identAt(input: InternalRow, i: Int): Identifier =
+    Identifier.of(Array(str(input, i)), str(input, i + 1))
+}
+
+private[graft] object GraftProcedure {
+  /** The namespace every procedure is called in: `graft.system.<name>`. */
+  val Namespace: Seq[String] = Seq("system")
+
+  /** Every procedure: the one list `listProcedures` and `loadProcedure`
+    * serve. Lazy because the procedure objects' constructors read this
+    * object's helpers — built eagerly, the list would see them unbuilt.
+    */
+  lazy val all: Seq[GraftProcedure] = Seq(
+    GraftCompactProcedure, GraftHistoryProcedure, GraftZorderProcedure,
+    GraftVacuumProcedure, GraftTrainAnnProcedure, GraftTrainAnnPqProcedure,
+    GraftAnalyzeProcedure, GraftCreateMvProcedure, GraftRefreshMvProcedure,
+    GraftRestoreProcedure, GraftCloneProcedure, GraftSetPartitioningProcedure,
+    GraftCreateBranchProcedure, GraftPublishBranchProcedure,
+    GraftRemoveOrphanFilesProcedure, GraftUndropProcedure, GraftSyncIdentityProcedure,
+    GraftCopyIntoProcedure, GraftBuildAnnIndexProcedure, GraftRefreshAnnProcedure,
+    GraftVerifyConstraintsProcedure)
+
+  /** A parameter; a `default` (SQL literal text) makes it optional. */
+  private[sources] def in(name: String, t: DataType, comment: String,
+      default: Option[String] = None): ProcedureParameter = {
+    val b = ProcedureParameter.in(name, t).comment(comment)
+    default.fold(b)(d => b.defaultValue(d)).build()
+  }
+
+  /** The (ns, table) pair most procedures start with. */
+  private[sources] val NsTable: Seq[ProcedureParameter] =
+    Seq(in("ns", StringType, "namespace"), in("table", StringType, "table name"))
+
+  /** A result schema; every procedure's result columns are NOT NULL. */
+  private[sources] def result(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
+}
+
+/** `CALL graft.system.compact(ns, table)` — the OPTIMIZE procedure.
   * Returns one summary row; the work happens in
   * `GraftCatalog.compact`.
   */
-private[graft] object GraftCompactProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftCompactProcedure extends GraftProcedure("compact",
+    "compact(ns, table, where): fold partition groups' segments ('' = whole table)",
+    NsTable :+
+      // The Delta `OPTIMIZE ... WHERE` shape: at 100 TB the hot partition
+      // is what needs folding — a maintenance pass must not pay an
+      // O(table) rewrite (or hold the mutation lock for one) to fix it.
+      in("where", StringType,
+        "comma-joined partition-field equalities 'col=value' ('' = all groups)", Some("''")),
+    result("table" -> StringType, "segments_before" -> IntegerType,
+      "segments_after" -> IntegerType, "rows" -> LongType)) {
 
-  override def name(): String = "compact"
-  override def description(): String =
-    "compact(ns, table, where): fold partition groups' segments ('' = whole table)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    // The Delta `OPTIMIZE ... WHERE` shape: at 100 TB the hot partition
-    // is what needs folding — a maintenance pass must not pay an
-    // O(table) rewrite (or hold the mutation lock for one) to fix it.
-    ProcedureParameter.in("where", StringType).defaultValue("''")
-      .comment("comma-joined partition-field equalities 'col=value' ('' = all groups)")
-      .build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments_before", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments_after", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val where = Option(input.getUTF8String(2)).map(_.toString).getOrElse("")
-    val ident = Identifier.of(Array(ns), table)
-    val only = GraftCatalog.compactKeysFor(ident, where)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
+    val only = GraftCatalog.compactKeysFor(ident, optStr(input, 2))
     val (before, after, rows) = GraftCatalog.compact(ident, onlyKeys = only)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        before, after, rows))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftCompactResult($ident)"
-    }).iterator()
+    Seq((ident.toString, before, after, rows))
   }
 }
 
@@ -70,52 +137,25 @@ private[graft] object GraftCompactProcedure
   * group). Returns one summary row; the work happens in
   * `GraftCatalog.zorder`.
   */
-private[graft] object GraftZorderProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftZorderProcedure extends GraftProcedure("zorder",
+    "zorder(ns, table, columns, target_segments, where): rewrite segments in Z-order ('' = all groups)",
+    NsTable ++ Seq(
+      in("columns", StringType, "comma-separated numeric columns (1..4)"),
+      in("target_segments", IntegerType, "balanced output segments per partition group"),
+      // Scoped re-clustering, same grammar as compact's where: at 100 TB
+      // you z-order the recent/hot partitions, not the whole table.
+      in("where", StringType,
+        "comma-joined partition-field equalities 'col=value' ('' = all groups)", Some("''"))),
+    result("table" -> StringType, "segments_before" -> IntegerType,
+      "segments_after" -> IntegerType, "rows" -> LongType)) {
 
-  override def name(): String = "zorder"
-  override def description(): String =
-    "zorder(ns, table, columns, target_segments, where): rewrite segments in Z-order ('' = all groups)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("columns", StringType)
-      .comment("comma-separated numeric columns (1..4)").build(),
-    ProcedureParameter.in("target_segments", IntegerType)
-      .comment("balanced output segments per partition group").build(),
-    // Scoped re-clustering, same grammar as compact's where: at 100 TB
-    // you z-order the recent/hot partitions, not the whole table.
-    ProcedureParameter.in("where", StringType).defaultValue("''")
-      .comment("comma-joined partition-field equalities 'col=value' ('' = all groups)")
-      .build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments_before", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments_after", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val cols = input.getUTF8String(2).toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val target = input.getInt(3)
-    val where = Option(input.getUTF8String(4)).map(_.toString).getOrElse("")
-    val ident = Identifier.of(Array(ns), table)
-    val only = GraftCatalog.compactKeysFor(ident, where)
-    val (before, after, rows) = GraftCatalog.zorder(ident, cols, target, onlyKeys = only)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        before, after, rows))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftZorderResult($ident)"
-    }).iterator()
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
+    val cols = str(input, 2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val only = GraftCatalog.compactKeysFor(ident, optStr(input, 4))
+    val (before, after, rows) =
+      GraftCatalog.zorder(ident, cols, input.getInt(3), onlyKeys = only)
+    Seq((ident.toString, before, after, rows))
   }
 }
 
@@ -124,38 +164,16 @@ private[graft] object GraftZorderProcedure
   * they referenced (tags keep their pinned versions readable). One
   * summary row; work in `GraftCatalog.vacuumTable`.
   */
-private[graft] object GraftVacuumProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftVacuumProcedure extends GraftProcedure("vacuum",
+    "vacuum(ns, table): expire non-current snapshots and GC their files",
+    NsTable,
+    result("table" -> StringType, "snapshots_expired" -> IntegerType,
+      "files_deleted" -> IntegerType)) {
 
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "vacuum(ns, table): expire non-current snapshots and GC their files"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("snapshots_expired", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("files_deleted", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
     val (expired, deleted) = GraftCatalog.vacuumTable(ident)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        expired, deleted))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftVacuumResult($ident)"
-    }).iterator()
+    Seq((ident.toString, expired, deleted))
   }
 }
 
@@ -165,42 +183,19 @@ private[graft] object GraftVacuumProcedure
   * and time-travel-retained files are spared; `older_than_ms` guards
   * in-flight writers. Work in `GraftCatalog.removeOrphanFiles`.
   */
-private[graft] object GraftRemoveOrphanFilesProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
-
-  override def name(): String = "remove_orphan_files"
-  override def description(): String =
+private[graft] object GraftRemoveOrphanFilesProcedure extends GraftProcedure(
+    "remove_orphan_files",
     "remove_orphan_files(ns, table, older_than_ms): delete unreferenced files " +
-      "in the table dir older than the guard interval"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // deletes files
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("older_than_ms", LongType)
-      .comment("only files modified more than this many ms ago (in-flight-write guard)")
-      .build())
+      "in the table dir older than the guard interval",
+    NsTable :+ in("older_than_ms", LongType,
+      "only files modified more than this many ms ago (in-flight-write guard)"),
+    result("table" -> StringType, "files_deleted" -> IntegerType,
+      "bytes_deleted" -> LongType)) {
 
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("files_deleted", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("bytes_deleted", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
     val (files, bytes) = GraftCatalog.removeOrphanFiles(ident, input.getLong(2))
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        files, bytes))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftRemoveOrphanFilesResult($ident)"
-    }).iterator()
+    Seq((ident.toString, files, bytes))
   }
 }
 
@@ -210,38 +205,16 @@ private[graft] object GraftRemoveOrphanFilesProcedure
   * refuses if the name was re-taken or retention already purged the
   * generation. Work in `GraftCatalog.undropTable`.
   */
-private[graft] object GraftUndropProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftUndropProcedure extends GraftProcedure("undrop",
+    "undrop(ns, table): restore a soft-dropped table (data, history, epochs)",
+    NsTable,
+    result("table" -> StringType, "restored_version" -> LongType,
+      "n_segments" -> IntegerType)) {
 
-  override def name(): String = "undrop"
-  override def description(): String =
-    "undrop(ns, table): restore a soft-dropped table (data, history, epochs)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates catalog state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("restored_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_segments", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
     val (v, nSegs) = GraftCatalog.undropTable(ident)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        v, nSegs))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftUndropResult($ident)"
-    }).iterator()
+    Seq((ident.toString, v, nSegs))
   }
 }
 
@@ -249,40 +222,16 @@ private[graft] object GraftUndropProcedure
   * watermarks past every value present in the data (after BY DEFAULT
   * explicit inserts). Work in `GraftCatalog.syncIdentity`.
   */
-private[graft] object GraftSyncIdentityProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftSyncIdentityProcedure extends GraftProcedure("sync_identity",
+    "sync_identity(ns, table): advance identity watermarks past all data values",
+    NsTable,
+    result("table" -> StringType, "column" -> StringType, "next_index" -> LongType)) {
 
-  override def name(): String = "sync_identity"
-  override def description(): String =
-    "sync_identity(ns, table): advance identity watermarks past all data values"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates catalog state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("column", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("next_index", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
-    val applied = GraftCatalog.syncIdentity(ident)
-    val out = applied.toSeq.sortBy(_._1).map { case (c, k) =>
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-          org.apache.spark.unsafe.types.UTF8String.fromString(c), k)): InternalRow
-    }.toArray
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = out
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftSyncIdentityResult($ident)"
-    }).iterator()
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
+    GraftCatalog.syncIdentity(ident).toSeq.sortBy(_._1).map { case (c, k) =>
+      (ident.toString, c, k)
+    }
   }
 }
 
@@ -313,31 +262,14 @@ private[graft] object GraftSyncIdentityProcedure
   * lookup); only NEW files are read, once for the row count and once
   * for the write — cost tracks the ingest batch, never the table.
   */
-private[graft] object GraftCopyIntoProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
-
-  override def name(): String = "copy_into"
-  override def description(): String =
-    "copy_into(ns, table, source, format, options): idempotent exactly-once file ingestion"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("source", StringType)
-      .comment("source directory or glob of data files").build(),
-    ProcedureParameter.in("format", StringType)
-      .comment("file format: parquet | orc | csv | json").build(),
-    ProcedureParameter.in("options", StringType)
-      .comment("comma-joined k=v reader options ('' = none)").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("files_loaded", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("files_skipped", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows_loaded", LongType, nullable = false)))
+private[graft] object GraftCopyIntoProcedure extends GraftProcedure("copy_into",
+    "copy_into(ns, table, source, format, options): idempotent exactly-once file ingestion",
+    NsTable ++ Seq(
+      in("source", StringType, "source directory or glob of data files"),
+      in("format", StringType, "file format: parquet | orc | csv | json"),
+      in("options", StringType, "comma-joined k=v reader options ('' = none)")),
+    result("table" -> StringType, "files_loaded" -> IntegerType,
+      "files_skipped" -> IntegerType, "rows_loaded" -> LongType)) {
 
   private def token(st: org.apache.hadoop.fs.FileStatus): String = {
     val d = java.security.MessageDigest.getInstance("SHA-256")
@@ -346,23 +278,21 @@ private[graft] object GraftCopyIntoProcedure
     d.take(8).map(b => f"$b%02x").mkString
   }
 
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val source = input.getUTF8String(2).toString
-    val format = input.getUTF8String(3).toString
-    val optStr = Option(input.getUTF8String(4)).map(_.toString).getOrElse("")
+    val ident = identAt(input, 0)
+    val (ns, table) = (str(input, 0), str(input, 1))
+    val source = str(input, 2)
+    val format = str(input, 3)
     require(Set("parquet", "orc", "csv", "json")(format),
       s"copy_into supports parquet|orc|csv|json, got '$format'")
-    val readerOpts = optStr.split(',').map(_.trim).filter(_.nonEmpty).map { kv =>
+    val readerOpts = optStr(input, 4).split(',').map(_.trim).filter(_.nonEmpty).map { kv =>
       val i = kv.indexOf('=')
       require(i > 0, s"malformed reader option '$kv' (want k=v)")
       kv.substring(0, i) -> kv.substring(i + 1)
     }.toMap
-    val ident = Identifier.of(Array(ns), table)
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "copy_into")
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
     val tbl = s"$catName.$ns.$table"
     val targetSchema = spark.table(tbl).schema // throws NoSuchTable if absent
 
@@ -465,14 +395,7 @@ private[graft] object GraftCopyIntoProcedure
       // prior segments), not a second read pass over the source.
       rowsLoaded = GraftCatalog.liveRowCount(ident) - before
     }
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$table"),
-        fresh.length, skip.length, rowsLoaded))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftCopyIntoResult($ident)"
-    }).iterator()
+    Seq((s"$ns.$table", fresh.length, skip.length, rowsLoaded))
   }
 }
 
@@ -482,45 +405,20 @@ private[graft] object GraftCopyIntoProcedure
   * keep their spec; new writes route by the new one; compaction
   * migrates. Work in `GraftCatalog.setPartitioning`.
   */
-private[graft] object GraftSetPartitioningProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftSetPartitioningProcedure extends GraftProcedure("set_partitioning",
+    "set_partitioning(ns, table, cols): metadata-only partition-spec evolution",
+    NsTable :+ in("cols", StringType,
+      "comma-separated identity partition columns ('' = none)"),
+    result("table" -> StringType, "version" -> LongType, "old_spec" -> StringType,
+      "new_spec" -> StringType)) {
 
-  override def name(): String = "set_partitioning"
-  override def description(): String =
-    "set_partitioning(ns, table, cols): metadata-only partition-spec evolution"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("cols", StringType)
-      .comment("comma-separated identity partition columns ('' = none)").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("old_spec", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("new_spec", StringType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
     // TOP-LEVEL commas only: 'days(ts),bucket(16,k)' is two fields,
     // and bucket's inner comma must not split it.
-    val cols = GraftCatalog.splitTopLevel(input.getUTF8String(2).toString)
+    val cols = GraftCatalog.splitTopLevel(str(input, 2))
     val (v, old) = GraftCatalog.setPartitioning(ident, cols)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        v, org.apache.spark.unsafe.types.UTF8String.fromString(old.mkString(",")),
-        org.apache.spark.unsafe.types.UTF8String.fromString(cols.mkString(","))))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftSetPartitioningResult($ident)"
-    }).iterator()
+    Seq((ident.toString, v, old.mkString(","), cols.mkString(",")))
   }
 }
 
@@ -529,43 +427,18 @@ private[graft] object GraftSetPartitioningProcedure
   * pure metadata, the snapshot's files are still on disk. Work in
   * `GraftCatalog.restoreTable`.
   */
-private[graft] object GraftRestoreProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftRestoreProcedure extends GraftProcedure("restore",
+    "restore(ns, table, version): make a retained snapshot (or tag) the current state",
+    NsTable :+ in("version", StringType, "snapshot version number or tag name"),
+    result("table" -> StringType, "restored_version" -> LongType,
+      "new_version" -> LongType, "segments" -> IntegerType)) {
 
-  override def name(): String = "restore"
-  override def description(): String =
-    "restore(ns, table, version): make a retained snapshot (or tag) the current state"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("version", StringType)
-      .comment("snapshot version number or tag name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("restored_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("new_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
-    val v = GraftCatalog.resolveVersionString(ident, input.getUTF8String(2).toString)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
+    val v = GraftCatalog.resolveVersionString(ident, str(input, 2))
     val (restored, nSegs) = GraftCatalog.restoreTable(ident, v)
-    val newV = GraftCatalog.currentVersion(ns, table).getOrElse(-1L)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(ident.toString),
-        restored, newV, nSegs))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftRestoreResult($ident)"
-    }).iterator()
+    val newV = GraftCatalog.currentVersion(str(input, 0), str(input, 1)).getOrElse(-1L)
+    Seq((ident.toString, restored, newV, nSegs))
   }
 }
 
@@ -574,48 +447,25 @@ private[graft] object GraftRestoreProcedure
   * current). Work in `GraftCatalog.cloneTable`; shared files are
   * protected by the cross-table GC guard.
   */
-private[graft] object GraftCloneProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftCloneProcedure extends GraftProcedure("clone",
+    "clone(ns, table, target_ns, target_table, version): zero-copy clone ('' = current)",
+    Seq(
+      in("ns", StringType, "source namespace"),
+      in("table", StringType, "source table"),
+      in("target_ns", StringType, "target namespace"),
+      in("target_table", StringType, "target table"),
+      in("version", StringType, "source version number or tag; '' = current")),
+    result("source" -> StringType, "target" -> StringType,
+      "source_version" -> LongType, "segments" -> IntegerType)) {
 
-  override def name(): String = "clone"
-  override def description(): String =
-    "clone(ns, table, target_ns, target_table, version): zero-copy clone ('' = current)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // creates a table
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("source namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("source table").build(),
-    ProcedureParameter.in("target_ns", StringType).comment("target namespace").build(),
-    ProcedureParameter.in("target_table", StringType).comment("target table").build(),
-    ProcedureParameter.in("version", StringType)
-      .comment("source version number or tag; '' = current").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("source", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("target", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("source_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val src = Identifier.of(
-      Array(input.getUTF8String(0).toString), input.getUTF8String(1).toString)
-    val dst = Identifier.of(
-      Array(input.getUTF8String(2).toString), input.getUTF8String(3).toString)
-    val vStr = input.getUTF8String(4).toString
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val src = identAt(input, 0)
+    val dst = identAt(input, 2)
+    val vStr = str(input, 4)
     val v = if (vStr.isEmpty) None
             else Some(GraftCatalog.resolveVersionString(src, vStr))
     val (srcV, nSegs) = GraftCatalog.cloneTable(src, dst, v)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(src.toString),
-        org.apache.spark.unsafe.types.UTF8String.fromString(dst.toString),
-        srcV, nSegs))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftCloneResult($src -> $dst)"
-    }).iterator()
+    Seq((src.toString, dst.toString, srcV, nSegs))
   }
 }
 
@@ -625,44 +475,21 @@ private[graft] object GraftCloneProcedure
   * it in SQL) and takes writes/DML in isolation; work in
   * `GraftCatalog.createBranch`.
   */
-private[graft] object GraftCreateBranchProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftCreateBranchProcedure extends GraftProcedure("create_branch",
+    "create_branch(ns, table, branch, version): zero-copy WAP branch ('' = current)",
+    NsTable ++ Seq(
+      in("branch", StringType, "branch name"),
+      in("version", StringType, "source version number or tag; '' = current")),
+    result("branch" -> StringType, "base_version" -> LongType, "segments" -> IntegerType)) {
 
-  override def name(): String = "create_branch"
-  override def description(): String =
-    "create_branch(ns, table, branch, version): zero-copy WAP branch ('' = current)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // creates a table entry
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("branch", StringType).comment("branch name").build(),
-    ProcedureParameter.in("version", StringType)
-      .comment("source version number or tag; '' = current").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("branch", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("base_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val src = Identifier.of(
-      Array(input.getUTF8String(0).toString), input.getUTF8String(1).toString)
-    val branch = input.getUTF8String(2).toString
-    val vStr = input.getUTF8String(3).toString
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val src = identAt(input, 0)
+    val branch = str(input, 2)
+    val vStr = str(input, 3)
     val v = if (vStr.isEmpty) None
             else Some(GraftCatalog.resolveVersionString(src, vStr))
     val (baseV, nSegs) = GraftCatalog.createBranch(src, branch, v)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(
-        GraftCatalog.branchIdent(src, branch).toString), baseV, nSegs))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftCreateBranchResult($src@$branch)"
-    }).iterator()
+    Seq((GraftCatalog.branchIdent(src, branch).toString, baseV, nSegs))
   }
 }
 
@@ -671,40 +498,16 @@ private[graft] object GraftCreateBranchProcedure
   * branch (refuses if the table took data commits since the branch was
   * cut). Work in `GraftCatalog.publishBranch`.
   */
-private[graft] object GraftPublishBranchProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftPublishBranchProcedure extends GraftProcedure("publish_branch",
+    "publish_branch(ns, table, branch): fast-forward the table to the branch state",
+    NsTable :+ in("branch", StringType, "branch name"),
+    result("table" -> StringType, "new_version" -> LongType,
+      "branch_commits" -> LongType, "segments" -> IntegerType)) {
 
-  override def name(): String = "publish_branch"
-  override def description(): String =
-    "publish_branch(ns, table, branch): fast-forward the table to the branch state"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build(),
-    ProcedureParameter.in("branch", StringType).comment("branch name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("new_version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("branch_commits", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("segments", IntegerType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val src = Identifier.of(
-      Array(input.getUTF8String(0).toString), input.getUTF8String(1).toString)
-    val branch = input.getUTF8String(2).toString
-    val (newV, branchCommits, nSegs) = GraftCatalog.publishBranch(src, branch)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(src.toString),
-        newV, branchCommits, nSegs))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftPublishBranchResult($src@$branch)"
-    }).iterator()
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val src = identAt(input, 0)
+    val (newV, branchCommits, nSegs) = GraftCatalog.publishBranch(src, str(input, 2))
+    Seq((src.toString, newV, branchCommits, nSegs))
   }
 }
 
@@ -714,43 +517,21 @@ private[graft] object GraftPublishBranchProcedure
   * outside the retention window have been vacuumed and no longer
   * appear — exactly the set `VERSION AS OF` can still serve.
   */
-private[graft] object GraftHistoryProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, TimestampType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftHistoryProcedure extends GraftProcedure("history",
+    "history(ns, table): retained snapshots, newest first",
+    NsTable,
+    result("version" -> LongType, "committed_at" -> TimestampType,
+      "n_segments" -> IntegerType, "n_rows" -> LongType, "is_current" -> BooleanType)) {
 
-  override def name(): String = "history"
-  override def description(): String =
-    "history(ns, table): retained snapshots, newest first"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // reads mutable state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("version", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("committed_at", TimestampType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_segments", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_rows", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("is_current", BooleanType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val ident = Identifier.of(
-      Array(input.getUTF8String(0).toString), input.getUTF8String(1).toString)
+  override protected def run(input: InternalRow): Seq[Product] = {
+    val ident = identAt(input, 0)
     val snaps = GraftCatalog.retainedSnapshots(ident)
     if (snaps.isEmpty) throw new NoSuchTableException(ident)
     val latest = snaps.map(_.version).max
-    val outRows = snaps.sortBy(-_.version).map { s =>
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-        s.version, s.wallMs * 1000L, // micros for TimestampType
-        s.segments.length, s.segments.map(_.liveRows).sum, s.version == latest)): InternalRow
-    }.toArray
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = outRows
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftHistory($ident)"
-    }).iterator()
+    snaps.sortBy(-_.version).map { s =>
+      (s.version, s.wallMs * 1000L, // micros for TimestampType
+        s.segments.length, s.segments.map(_.liveRows).sum, s.version == latest)
+    }
   }
 }
 
@@ -804,32 +585,17 @@ private[graft] class GraftClampBound extends ScalarFunction[java.lang.Double] {
   * joinReorder.enabled). Row counts and min/max were already exact
   * from segments/zone maps; NDV is the piece only a data pass can add.
   */
-private[graft] object GraftAnalyzeProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftAnalyzeProcedure extends GraftProcedure("analyze",
+    "analyze(ns, table): compute per-column distinct/null counts for the CBO",
+    NsTable,
+    result("table" -> StringType, "columns_analyzed" -> IntegerType, "rows" -> LongType)) {
 
-  override def name(): String = "analyze"
-  override def description(): String =
-    "analyze(ns, table): compute per-column distinct/null counts for the CBO"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates stored stats
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("columns_analyzed", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col, count, when}
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
-    val ident = Identifier.of(Array(ns), table)
+    val ident = identAt(input, 0)
+    val (ns, table) = (str(input, 0), str(input, 1))
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "analyze")
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
     val df = spark.table(s"$catName.$ns.$table") // throws NoSuchTable if absent
     val cols = df.columns.toSeq
     val aggs = cols.flatMap { c =>
@@ -843,14 +609,7 @@ private[graft] object GraftAnalyzeProcedure
       c -> GraftCatalog.ColAnalysis(r.getAs[Long](s"ndv_$c"), r.getAs[Long](s"nulls_$c"))
     }.toMap
     GraftCatalog.installColStats(ident, analysis)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$table"),
-        cols.length, rows))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftAnalyzeResult($ns.$table)"
-    }).iterator()
+    Seq((s"$ns.$table", cols.length, rows))
   }
 }
 
@@ -863,53 +622,31 @@ private[graft] object GraftAnalyzeProcedure
   * lands through the staged CREATE OR REPLACE path, so retraining swaps
   * the codebook atomically and readers never see a half-written one.
   */
-private[graft] object GraftTrainAnnProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftTrainAnnProcedure extends GraftProcedure("train_ann",
+    "train_ann(source, ns, table, k, iters): persist a k-means ANN codebook as a catalog table",
+    Seq(
+      in("source", StringType, "readable table/view with (vec_id, embedding)"),
+      in("ns", StringType, "destination namespace"),
+      in("table", StringType, "destination table"),
+      in("k", IntegerType, "number of centroids"),
+      in("iters", IntegerType, "Lloyd's rounds")),
+    result("table" -> StringType, "centroids" -> LongType)) {
 
-  override def name(): String = "train_ann"
-  override def description(): String =
-    "train_ann(source, ns, table, k, iters): persist a k-means ANN codebook as a catalog table"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes a table
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType)
-      .comment("readable table/view with (vec_id, embedding)").build(),
-    ProcedureParameter.in("ns", StringType).comment("destination namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("destination table").build(),
-    ProcedureParameter.in("k", IntegerType).comment("number of centroids").build(),
-    ProcedureParameter.in("iters", IntegerType).comment("Lloyd's rounds").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("centroids", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{col, explode}
-    val source = input.getUTF8String(0).toString
-    val ns = input.getUTF8String(1).toString
-    val table = input.getUTF8String(2).toString
-    val k = input.getInt(3)
-    val iters = input.getInt(4)
+    val source = str(input, 0)
+    val (ns, table) = (str(input, 1), str(input, 2))
     val spark = org.apache.spark.sql.SparkSession.active
     // Resolve this catalog's Spark-facing name from the session conf
     // (the procedure object is shared; companion state is JVM-wide, so
     // any graft-class registration reaches the same metastore).
-    val catName = GraftCatalog.sessionCatalogName(spark, "train_ann")
-    val cb = graft.operators.KMeansCodebook.train(spark.table(source), k, iters)
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
+    val cb = graft.operators.KMeansCodebook
+      .train(spark.table(source), input.getInt(3), input.getInt(4))
       .select(explode(col("cents")).as("c"))
       .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
     cb.writeTo(s"$catName.$ns.$table").createOrReplace()
-    val n = GraftCatalog.rowCount(ns, table)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$table"), n))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftTrainAnnResult($ns.$table)"
-    }).iterator()
+    Seq((s"$ns.$table", GraftCatalog.rowCount(ns, table)))
   }
 }
 
@@ -924,58 +661,32 @@ private[graft] object GraftTrainAnnProcedure
   * runs only the encode/probe/ADC/re-rank plan. Retraining swaps the
   * table atomically through the staged CREATE OR REPLACE path.
   */
-private[graft] object GraftTrainAnnPqProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftTrainAnnPqProcedure extends GraftProcedure("train_ann_pq",
+    "train_ann_pq(source, ns, table, m, sub, ks, iters): persist PQ sub-codebooks as a catalog table",
+    Seq(
+      in("source", StringType, "readable table/view with (vec_id, embedding)"),
+      in("ns", StringType, "destination namespace"),
+      in("table", StringType, "destination table"),
+      in("m", IntegerType, "number of subspaces"),
+      in("sub", IntegerType, "sub-vector width"),
+      in("ks", IntegerType, "sub-centroids per subspace"),
+      in("iters", IntegerType, "Lloyd's rounds")),
+    result("table" -> StringType, "subspaces" -> LongType, "centroids" -> LongType)) {
 
-  override def name(): String = "train_ann_pq"
-  override def description(): String =
-    "train_ann_pq(source, ns, table, m, sub, ks, iters): persist PQ sub-codebooks as a catalog table"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes a table
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType)
-      .comment("readable table/view with (vec_id, embedding)").build(),
-    ProcedureParameter.in("ns", StringType).comment("destination namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("destination table").build(),
-    ProcedureParameter.in("m", IntegerType).comment("number of subspaces").build(),
-    ProcedureParameter.in("sub", IntegerType).comment("sub-vector width").build(),
-    ProcedureParameter.in("ks", IntegerType).comment("sub-centroids per subspace").build(),
-    ProcedureParameter.in("iters", IntegerType).comment("Lloyd's rounds").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("subspaces", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("centroids", LongType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{col, explode, posexplode}
-    val source = input.getUTF8String(0).toString
-    val ns = input.getUTF8String(1).toString
-    val table = input.getUTF8String(2).toString
+    val source = str(input, 0)
+    val (ns, table) = (str(input, 1), str(input, 2))
     val m = input.getInt(3)
-    val sub = input.getInt(4)
-    val ks = input.getInt(5)
-    val iters = input.getInt(6)
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "train_ann_pq")
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
     val pqRows = graft.operators.KMeansCodebook
-      .trainSubspaces(spark.table(source), m, sub, ks, iters)
+      .trainSubspaces(spark.table(source), m, input.getInt(4), input.getInt(5), input.getInt(6))
       .select(posexplode(col("pq")).as(Seq("s", "book")))
       .select(col("s"), explode(col("book")).as("c"))
       .select(col("s"), col("c.cid").as("cid"), col("c.cvec").as("cvec"))
     pqRows.writeTo(s"$catName.$ns.$table").createOrReplace()
-    val n = GraftCatalog.rowCount(ns, table)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$table"),
-        m.toLong, n))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftTrainAnnPqResult($ns.$table)"
-    }).iterator()
+    Seq((s"$ns.$table", m.toLong, GraftCatalog.rowCount(ns, table)))
   }
 }
 
@@ -992,49 +703,34 @@ private[graft] object GraftTrainAnnPqProcedure
   * assignment similarity (the drift baseline) as table properties;
   * `refresh_ann` maintains it incrementally from the change feed.
   */
-private[graft] object GraftBuildAnnIndexProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
-
-  override def name(): String = "build_ann_index"
-  override def description(): String =
+private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_ann_index",
     "build_ann_index(source, ns, index, k, iters[, pq_m, pq_ks]): materialize a " +
       "partitioned IVF posting table + codebook (optionally PQ-coded) over a catalog " +
-      "embeddings table"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes tables
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType)
-      .comment("graft catalog table 'ns.t' with (vec_id, ..., embedding)").build(),
-    ProcedureParameter.in("ns", StringType).comment("index namespace").build(),
-    ProcedureParameter.in("index", StringType).comment("index table name").build(),
-    ProcedureParameter.in("k", IntegerType)
-      .comment("number of inverted lists; <= 0 auto-sizes to ceil(sqrt(n)), floor 16").build(),
-    ProcedureParameter.in("iters", IntegerType).comment("Lloyd's rounds").build(),
-    ProcedureParameter.in("pq_m", IntegerType).defaultValue("0")
-      .comment("PQ subspaces; > 0 also stores per-vector PQ codes (code_0..code_{m-1})")
-      .build(),
-    ProcedureParameter.in("pq_ks", IntegerType).defaultValue("16")
-      .comment("PQ sub-centroids per subspace").build())
+      "embeddings table",
+    Seq(
+      in("source", StringType, "graft catalog table 'ns.t' with (vec_id, ..., embedding)"),
+      in("ns", StringType, "index namespace"),
+      in("index", StringType, "index table name"),
+      in("k", IntegerType,
+        "number of inverted lists; <= 0 auto-sizes to ceil(sqrt(n)), floor 16"),
+      in("iters", IntegerType, "Lloyd's rounds"),
+      in("pq_m", IntegerType,
+        "PQ subspaces; > 0 also stores per-vector PQ codes (code_0..code_{m-1})", Some("0")),
+      in("pq_ks", IntegerType, "PQ sub-centroids per subspace", Some("16"))),
+    result("table" -> StringType, "rows_indexed" -> LongType, "lists" -> LongType,
+      "base_sim" -> DoubleType)) {
 
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows_indexed", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("lists", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("base_sim", DoubleType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{avg, broadcast, col, explode, posexplode}
-    val source = input.getUTF8String(0).toString
-    val ns = input.getUTF8String(1).toString
-    val index = input.getUTF8String(2).toString
+    val source = str(input, 0)
+    val ns = str(input, 1)
+    val index = str(input, 2)
     val kArg = input.getInt(3)
     val iters = input.getInt(4)
     val pqM = input.getInt(5)
     val pqKs = input.getInt(6)
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "build_ann_index")
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
     val srcParts = source.split('.')
     require(srcParts.length == 2,
       s"build_ann_index source must be a catalog table 'ns.t', got '$source'")
@@ -1113,16 +809,7 @@ private[graft] object GraftBuildAnnIndexProcedure
       pqSub.map(sub => Map(
         GraftCatalog.AnnPqMProp -> pqM.toString,
         GraftCatalog.AnnPqSubProp -> sub.toString)).getOrElse(Map.empty))
-    val rows = GraftCatalog.rowCount(ns, index)
-    val row: InternalRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$index"),
-        rows, k.toLong, baseSim))
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftBuildAnnIndexResult($ns.$index)"
-    }).iterator()
+    Seq((s"$ns.$index", GraftCatalog.rowCount(ns, index), k.toLong, baseSim))
   }
 }
 
@@ -1145,41 +832,24 @@ private[graft] object GraftBuildAnnIndexProcedure
   * only when the batch is genuinely foreign. Idle source (no new
   * commits) is a true no-op.
   */
-private[graft] object GraftRefreshAnnProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftRefreshAnnProcedure extends GraftProcedure("refresh_ann",
+    "refresh_ann(ns, index): assign source changes since the watermark to the saved " +
+      "centroids; report codebook drift",
+    Seq(in("ns", StringType, "index namespace"), in("index", StringType, "index table name")),
+    result("table" -> StringType, "rows_added" -> LongType, "rows_deleted" -> LongType,
+      "drift_ratio" -> DoubleType, "retrain_recommended" -> BooleanType)) {
 
   /** drift_ratio above this recommends retraining: the new batch sits
     * 25% farther from its centroids than the training corpus did.
     */
   private[graft] val RetrainThreshold = 1.25
 
-  override def name(): String = "refresh_ann"
-  override def description(): String =
-    "refresh_ann(ns, index): assign source changes since the watermark to the saved " +
-      "centroids; report codebook drift"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // mutates the index table
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("index namespace").build(),
-    ProcedureParameter.in("index", StringType).comment("index table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("table", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows_added", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows_deleted", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("drift_ratio", DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("retrain_recommended", BooleanType,
-      nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{avg, broadcast, col}
-    val ns = input.getUTF8String(0).toString
-    val index = input.getUTF8String(1).toString
+    val idxIdent = identAt(input, 0)
+    val (ns, index) = (str(input, 0), str(input, 1))
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "refresh_ann")
-    val idxIdent = Identifier.of(Array(ns), index)
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
     val props = GraftCatalog.tablePropsJava(idxIdent)
     val source = Option(props.get(GraftCatalog.AnnSourceProp)).getOrElse(
       throw new IllegalArgumentException(
@@ -1189,19 +859,9 @@ private[graft] object GraftRefreshAnnProcedure
     val srcParts = source.split('.')
     val v1 = GraftCatalog.currentVersion(srcParts(0), srcParts(1)).getOrElse(
       throw new NoSuchTableException(Identifier.of(Array(srcParts(0)), srcParts(1))))
-    def result(added: Long, deleted: Long, drift: Double): java.util.Iterator[Scan] = {
-      val row: InternalRow =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(s"$ns.$index"),
-            added, deleted, drift, drift > RetrainThreshold))
-      java.util.List.of[Scan](new LocalScan {
-        override def rows(): Array[InternalRow] = Array(row)
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"GraftRefreshAnnResult($ns.$index)"
-      }).iterator()
-    }
-    if (v1 <= v0) return result(0L, 0L, 1.0) // idle source: true no-op
+    def outcome(added: Long, deleted: Long, drift: Double): Seq[Product] =
+      Seq((s"$ns.$index", added, deleted, drift, drift > RetrainThreshold))
+    if (v1 <= v0) return outcome(0L, 0L, 1.0) // idle source: true no-op
     val feed = spark.read.format("graft-changes")
       .option("table", source).option("changesFrom", v0.toString).load()
       .persist() // two passes (deletes, adds) over changed segments only
@@ -1266,7 +926,7 @@ private[graft] object GraftRefreshAnnProcedure
           }
         GraftCatalog.patchTableProps(idxIdent,
           Map(GraftCatalog.AnnWatermarkProp -> v1.toString))
-        result(nAdd, nDel, drift)
+        outcome(nAdd, nDel, drift)
       } finally assigned.unpersist()
     } finally feed.unpersist()
   }
@@ -1289,38 +949,23 @@ private[graft] object GraftRefreshAnnProcedure
   * with map-side partial counts, and the FK probe is a key-only anti
   * join — never a row-wide shuffle.
   */
-private[graft] object GraftVerifyConstraintsProcedure
-    extends procedures.UnboundProcedure with procedures.BoundProcedure {
-  import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
-  import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
+private[graft] object GraftVerifyConstraintsProcedure extends GraftProcedure(
+    "verify_constraints",
+    "verify_constraints(ns, table): scan for violations of declared (incl. informational) " +
+      "constraints",
+    NsTable,
+    result("constraint" -> StringType, "kind" -> StringType, "violations" -> LongType,
+      "ok" -> BooleanType)) {
   import org.apache.spark.sql.connector.catalog.constraints.{
     Check, ForeignKey, PrimaryKey, Unique}
 
-  override def name(): String = "verify_constraints"
-  override def description(): String =
-    "verify_constraints(ns, table): scan for violations of declared (incl. informational) " +
-      "constraints"
-  override def bind(inputType: StructType): procedures.BoundProcedure = this
-  override def isDeterministic: Boolean = false // reads live table state
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("ns", StringType).comment("namespace").build(),
-    ProcedureParameter.in("table", StringType).comment("table name").build())
-
-  private val outSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("constraint", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("kind", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("violations", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("ok", BooleanType, nullable = false)))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+  override protected def run(input: InternalRow): Seq[Product] = {
     import org.apache.spark.sql.functions.{
       array, coalesce, col, count, explode, expr, hex, lit, not, struct, sum, when}
-    val ns = input.getUTF8String(0).toString
-    val table = input.getUTF8String(1).toString
+    val ident = identAt(input, 0)
     val spark = org.apache.spark.sql.SparkSession.active
-    val catName = GraftCatalog.sessionCatalogName(spark, "verify_constraints")
-    val ident = Identifier.of(Array(ns), table)
-    val df = spark.table(s"$catName.$ns.$table")
+    val catName = GraftCatalog.sessionCatalogName(spark, name())
+    val df = spark.table(s"$catName.${str(input, 0)}.${str(input, 1)}")
     val constraints = GraftCatalog.constraintsOf(ident)
 
     // ALL non-FK constraints fold into ONE scan + ONE shuffle: a table
@@ -1462,18 +1107,7 @@ private[graft] object GraftVerifyConstraintsProcedure
           (other.name(), other.getClass.getSimpleName.toUpperCase(java.util.Locale.ROOT),
             -1L) // unknown kind: surfaced, never silently "ok"
       }.sortBy(_._1)
-
-    val out: Array[InternalRow] = rows.map { case (n, kind, v) =>
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(n),
-        org.apache.spark.unsafe.types.UTF8String.fromString(kind),
-        v, v == 0L)): InternalRow
-    }.toArray
-    java.util.List.of[Scan](new LocalScan {
-      override def rows(): Array[InternalRow] = out
-      override def readSchema(): StructType = outSchema
-      override def description(): String = s"GraftVerifyConstraintsResult($ns.$table)"
-    }).iterator()
+    rows.map { case (n, kind, v) => (n, kind, v, v == 0L) }
   }
 }
 

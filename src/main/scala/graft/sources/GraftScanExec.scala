@@ -815,9 +815,7 @@ private[graft] class GraftCatalogMicroBatchStream(
     // narrower schema (e.g. a LongType slot read via getInt) would
     // silently corrupt values. Field NAMES are exempt (RENAME COLUMN is
     // metadata-only over positional storage; the bytes are identical).
-    if (cur.schema.length != schema.length ||
-        cur.schema.fields.zip(schema.fields).exists {
-          case (a, b) => a.dataType != b.dataType })
+    if (!GraftChangeScan.decodeCompatible(cur.schema, schema))
       throw new IllegalStateException(
         s"streaming read of $ident: commit v$v was written under a different schema " +
           s"(${cur.schema.simpleString} vs ${schema.simpleString}); restart the stream " +
@@ -914,9 +912,7 @@ private[graft] class GraftCatalogMicroBatchStream(
         // an ALTER COLUMN TYPE widening, reached via startingVersion)
         // must not be decoded with this stream's schema — arity alone
         // misses retypes and would silently corrupt values.
-        if (snap.schema.length != schema.length ||
-            snap.schema.fields.zip(schema.fields).exists {
-              case (a, b) => a.dataType != b.dataType })
+        if (!GraftChangeScan.decodeCompatible(snap.schema, schema))
           throw new IllegalStateException(
             s"streaming read of $ident: snapshot v$e schema ${snap.schema.simpleString} " +
               s"differs from the table's ${schema.simpleString}; restart the stream")

@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev harness (test scope, not shipped): time + explain a subset of
-  * registry queries while iterating on plans.
+  * registry queries while iterating on plans, with per-rep job, stage
+  * and task counts and, for rows that start streams, one line per
+  * micro-batch.
   *
   *   sbt 'Test/runMain graft.QueryTimerMain l8_ngram_decontaminate'
+  *   sbt 'Test/runMain graft.QueryTimerMain st13_join_window_agg'
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   * GRAFT_EXPLAIN=1 to dump the formatted plan.
@@ -33,6 +36,22 @@ object QueryTimerMain {
     def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0) }
   }
 
+  /** Per-micro-batch profile of the streams a row starts: batch id,
+    * input rows, the `durationMs` phases (addBatch, getBatch,
+    * queryPlanning, walCommit, commitOffsets, ...) and the number of
+    * state operators.
+    */
+  private object BatchLog extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      println(s"[batch]   ${p.name} batch=${p.batchId} rows=${p.numInputRows} " +
+        s"durations=${p.durationMs} stateOps=${p.stateOperators.length}")
+    }
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -54,6 +73,7 @@ object QueryTimerMain {
     spark.sparkContext.setLogLevel("WARN")
     val acct = new Acct
     spark.sparkContext.addSparkListener(acct)
+    spark.streams.addListener(BatchLog)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val reps = sys.env.getOrElse("GRAFT_REPS", "3").toInt
