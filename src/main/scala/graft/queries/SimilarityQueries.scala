@@ -1041,7 +1041,7 @@ object SimilarityQueries {
     // refreshes (the batch content itself is not re-read — refresh_ann
     // diffs from ITS watermark, so coalesced batches stay exactly-once).
     StreamingOps.withCheckpoint(spark, "graft_st18_") { ckpt =>
-      spark.readStream.format("graft-changes")
+      StreamingOps.drain(spark.readStream.format("graft-changes")
         .option("table", "ann.scorpus").option("changesFrom", buildV.toString).load()
         .writeStream
         .option("checkpointLocation", ckpt)
@@ -1050,7 +1050,7 @@ object SimilarityQueries {
           ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
+        .start())
     }
     ivfIndexedTopK(spark, "graft.ann.sidx",
       spark.table("graft.ann.scorpus").filter(col("vec_id") === 0)

@@ -465,14 +465,13 @@ object StreamingQueries {
     spark.sql(
       "CREATE TABLE graft.stream.sink11 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
     StreamingOps.withCheckpoint(spark, "graft_st11_") { ckpt =>
-      spark.readStream.format("graft-range")
+      StreamingOps.drain(spark.readStream.format("graft-range")
         .option("end", "2000").option("rowsPerBatch", "500")
         .load()
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable("graft.stream.sink11")
-        .awaitTermination()
+        .toTable("graft.stream.sink11"))
     }
     spark.sql(
       """SELECT tag, count(*) AS n, round(sum(val), 4) AS total_val
@@ -507,22 +506,21 @@ object StreamingQueries {
     spark.sql(
       "CREATE TABLE graft.stream.sink12 (id BIGINT, val DOUBLE, tag BIGINT) USING graft")
     StreamingOps.withCheckpoint(spark, "graft_st12_") { ckpt =>
-      def drain(): Unit = spark.readStream
+      def leg(): Unit = StreamingOps.drain(spark.readStream
         .option("maxSegmentsPerTrigger", "4")
         .table("graft.stream.src12")
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable("graft.stream.sink12")
-        .awaitTermination()
-      drain()
+        .toTable("graft.stream.sink12"))
+      leg()
       spark.sql(
         "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(0, 700, 1, 4)")
       spark.sql(
         "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(700, 1400, 1, 4)")
       spark.sql(
         "INSERT INTO graft.stream.src12 SELECT id, id * 0.25, id % 7 FROM range(1400, 2000, 1, 4)")
-      drain()
+      leg()
     }
     spark.sql(
       """SELECT tag, count(*) AS n, round(sum(val), 4) AS total_val
@@ -617,7 +615,7 @@ object StreamingQueries {
     // SHAPE (each refresh folds only the batch's touched groups), so a
     // second epoch pins it and further epochs only buy fixture time.
     StreamingOps.withCheckpoint(spark, "graft_st14_") { ckpt =>
-      spark.readStream.format("graft-range")
+      StreamingOps.drain(spark.readStream.format("graft-range")
         .option("end", "2000").option("rowsPerBatch", "1000")
         .load()
         .writeStream
@@ -628,7 +626,7 @@ object StreamingQueries {
           batch.sparkSession.sql("CALL graft.system.refresh_mv('stream', 'mv14')")
             .collect(): Unit
         }
-        .start().awaitTermination()
+        .start())
     }
     spark.sql(
       """SELECT tag, n, round(CAST(dec_total AS DOUBLE), 4) AS total_val
@@ -841,12 +839,11 @@ object StreamingQueries {
       .where(col("_change_type").isin("insert", "update_postimage"))
       .select("k", "seg", "bal")
     StreamingOps.withCheckpoint(spark, "st17-ck-") { ck =>
-      apply.writeStream
+      StreamingOps.drain(apply.writeStream
         .option("checkpointLocation", ck)
         .option("graft.upsert.keys", "k")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable("graft.stream.ups17_replica")
-        .awaitTermination()
+        .toTable("graft.stream.ups17_replica"))
     }
     spark.table("graft.stream.ups17_replica")
       .groupBy("seg")

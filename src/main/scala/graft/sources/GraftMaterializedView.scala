@@ -982,7 +982,7 @@ private[graft] object GraftCreateMvProcedure extends GraftProcedure("create_mv",
     val (ns, table) = (str(input, 0), str(input, 1))
     val (mode, groups, version) = GraftMvOps.create(SparkSession.active, ns, table,
       str(input, 2), str(input, 3), str(input, 4), optStr(input, 5))
-    Seq((s"$ns.$table", mode, groups, version))
+    Seq((identAt(input, 0).toString, mode, groups, version))
   }
 }
 
@@ -996,6 +996,6 @@ private[graft] object GraftRefreshMvProcedure extends GraftProcedure("refresh_mv
   override protected def run(input: InternalRow): Seq[Product] = {
     val (ns, table) = (str(input, 0), str(input, 1))
     val (mode, groups, version) = GraftMvOps.refresh(SparkSession.active, ns, table)
-    Seq((s"$ns.$table", mode, groups, version))
+    Seq((identAt(input, 0).toString, mode, groups, version))
   }
 }

@@ -395,7 +395,7 @@ private[graft] object GraftCopyIntoProcedure extends GraftProcedure("copy_into",
       // prior segments), not a second read pass over the source.
       rowsLoaded = GraftCatalog.liveRowCount(ident) - before
     }
-    Seq((s"$ns.$table", fresh.length, skip.length, rowsLoaded))
+    Seq((ident.toString, fresh.length, skip.length, rowsLoaded))
   }
 }
 
@@ -609,7 +609,7 @@ private[graft] object GraftAnalyzeProcedure extends GraftProcedure("analyze",
       c -> GraftCatalog.ColAnalysis(r.getAs[Long](s"ndv_$c"), r.getAs[Long](s"nulls_$c"))
     }.toMap
     GraftCatalog.installColStats(ident, analysis)
-    Seq((s"$ns.$table", cols.length, rows))
+    Seq((ident.toString, cols.length, rows))
   }
 }
 
@@ -646,7 +646,7 @@ private[graft] object GraftTrainAnnProcedure extends GraftProcedure("train_ann",
       .select(explode(col("cents")).as("c"))
       .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
     cb.writeTo(s"$catName.$ns.$table").createOrReplace()
-    Seq((s"$ns.$table", GraftCatalog.rowCount(ns, table)))
+    Seq((identAt(input, 1).toString, GraftCatalog.rowCount(ns, table)))
   }
 }
 
@@ -686,7 +686,7 @@ private[graft] object GraftTrainAnnPqProcedure extends GraftProcedure("train_ann
       .select(col("s"), explode(col("book")).as("c"))
       .select(col("s"), col("c.cid").as("cid"), col("c.cvec").as("cvec"))
     pqRows.writeTo(s"$catName.$ns.$table").createOrReplace()
-    Seq((s"$ns.$table", m.toLong, GraftCatalog.rowCount(ns, table)))
+    Seq((identAt(input, 1).toString, m.toLong, GraftCatalog.rowCount(ns, table)))
   }
 }
 
@@ -809,7 +809,7 @@ private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_
       pqSub.map(sub => Map(
         GraftCatalog.AnnPqMProp -> pqM.toString,
         GraftCatalog.AnnPqSubProp -> sub.toString)).getOrElse(Map.empty))
-    Seq((s"$ns.$index", GraftCatalog.rowCount(ns, index), k.toLong, baseSim))
+    Seq((identAt(input, 1).toString, GraftCatalog.rowCount(ns, index), k.toLong, baseSim))
   }
 }
 
@@ -860,7 +860,7 @@ private[graft] object GraftRefreshAnnProcedure extends GraftProcedure("refresh_a
     val v1 = GraftCatalog.currentVersion(srcParts(0), srcParts(1)).getOrElse(
       throw new NoSuchTableException(Identifier.of(Array(srcParts(0)), srcParts(1))))
     def outcome(added: Long, deleted: Long, drift: Double): Seq[Product] =
-      Seq((s"$ns.$index", added, deleted, drift, drift > RetrainThreshold))
+      Seq((idxIdent.toString, added, deleted, drift, drift > RetrainThreshold))
     if (v1 <= v0) return outcome(0L, 0L, 1.0) // idle source: true no-op
     val feed = spark.read.format("graft-changes")
       .option("table", source).option("changesFrom", v0.toString).load()

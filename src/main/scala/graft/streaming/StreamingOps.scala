@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.{SessionConf, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming plumbing (SURVEY.md §2b ST1–ST9).
   *
@@ -22,6 +22,15 @@ import org.apache.spark.sql.streaming.Trigger
   * Without the native Hadoop library, Spark's default manager forks one
   * `chmod` process per checkpoint file it creates and one `readlink` per
   * rename — most of a micro-batch's state-store commit time.
+  *
+  * Every stream the engine starts also ends through [[drain]], so a
+  * finished stream releases its state stores. Spark leaves a stateful
+  * query's providers loaded after it stops until its maintenance pass
+  * (every 60 s by default) sees the run is gone; each provider holds
+  * its in-memory state maps and a 4-thread checksum checkpoint pool
+  * until then, far longer than a bounded replay lasts. In cluster mode
+  * the providers live on the executors: the release does nothing on
+  * the driver, and Spark's maintenance pass still unloads them there.
   *
   * At 100 TB the same code points `readStream` at an arriving directory
   * tree and swaps the memory sink for a parquet/Kafka sink — the plan,
@@ -92,7 +101,10 @@ object StreamingOps {
 
   /** Run a streaming DataFrame to completion into a memory sink; return
     * the sink table. `complete` mode for windowed aggregations (all
-    * windows emitted at end), `append`/`update` for row-wise ops.
+    * windows emitted at end), `append`/`update` for row-wise ops. The
+    * stream ends through [[drain]], which releases its state stores
+    * instead of leaving them to Spark's 60 s maintenance pass (a local
+    * JVM only; see [[drain]] for cluster mode).
     */
   def runToBatch(
       spark: SparkSession,
@@ -100,13 +112,12 @@ object StreamingOps {
       mode: String,
       name: String): DataFrame = {
     withStreamConfs(spark, sdf) {
-      sdf.writeStream
+      drain(sdf.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        .start())
     }
     // Materialize off the sink and drop it: the memory sink holds the
     // full result on the driver, and leaked sink tables from a batch of
@@ -125,20 +136,35 @@ object StreamingOps {
     * e.g. a stream-stream join emitting O(pairs) rows that reduce to a
     * handful of groups: the reduction runs on the executors inside each
     * micro-batch and only the reduced rows ever reach the driver,
-    * instead of the memory sink accumulating every raw pair.
+    * instead of the memory sink accumulating every raw pair. The stream
+    * ends through [[drain]], which releases its state stores instead of
+    * leaving them to Spark's 60 s maintenance pass (a local JVM only;
+    * see [[drain]] for cluster mode).
     */
   def runForeachBatch(
       spark: SparkSession,
       sdf: DataFrame,
       f: (DataFrame, Long) => Unit): Unit =
     withStreamConfs(spark, sdf) {
-      sdf.writeStream
+      drain(sdf.writeStream
         .outputMode("append")
         .foreachBatch(f)
         .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        .start())
     }
+
+  /** Wait for `q` to terminate, then release exactly its state stores:
+    * every provider its last executed plan loaded in this JVM is closed
+    * and unloaded, also when the query failed. Spark would otherwise
+    * keep them, with their state maps and checksum thread pools, until
+    * its maintenance pass (every 60 s) notices the run is inactive.
+    * Other queries' providers stay loaded. In cluster mode the
+    * providers live on the executors, so this does nothing on the
+    * driver and Spark's maintenance pass still unloads them there.
+    */
+  def drain(q: StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally GraftSqlBridge.releaseStateStores(q)
 
   /** The conf that makes `CheckpointFileManager.create` build
     * [[NioCheckpointFileManager]] for a stream started in its scope.
@@ -151,8 +177,11 @@ object StreamingOps {
   /** Run `body`, which starts a stream of its own, with a fresh
     * checkpoint directory under `java.io.tmpdir` (named from `prefix`)
     * that [[NioCheckpointFileManager]] serves. The directory is deleted
-    * once `body` returns or throws, so `body` must drain its stream
-    * before it returns.
+    * once `body` returns or throws, so `body` must end its stream with
+    * [[drain]] before it returns: that waits for the stream and releases
+    * its state stores instead of leaving them to Spark's 60 s
+    * maintenance pass, like [[runToBatch]] does (a local JVM only; see
+    * [[drain]] for cluster mode).
     */
   def withCheckpoint[T](spark: SparkSession, prefix: String)(body: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)

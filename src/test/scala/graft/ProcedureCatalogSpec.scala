@@ -76,4 +76,18 @@ class ProcedureCatalogSpec extends AnyFunSuite {
     assert(v.collect().isEmpty)
     spark.sql("DROP TABLE graft.pcs.t PURGE")
   }
+
+  test("the table cell is Identifier.toString: a namespace that needs backticks keeps them") {
+    spark.sql("DROP TABLE IF EXISTS graft.`my-ns`.mv")
+    spark.sql("DROP TABLE IF EXISTS graft.`my-ns`.t")
+    spark.sql("CREATE TABLE graft.`my-ns`.t (k BIGINT, v BIGINT) USING graft")
+    spark.sql("INSERT INTO graft.`my-ns`.t VALUES (1, 10), (2, 20), (1, 30)")
+    def cell(call: String): String = spark.sql(s"CALL graft.system.$call").head().getString(0)
+    val created = cell("create_mv('my-ns', 'mv', 'my-ns.t', 'k', 'sum(v) AS total')")
+    assert(created == "`my-ns`.mv")
+    assert(cell("compact('my-ns', 'mv')") == created)
+    assert(cell("refresh_mv('my-ns', 'mv')") == created)
+    spark.sql("DROP TABLE graft.`my-ns`.mv PURGE")
+    spark.sql("DROP TABLE graft.`my-ns`.t PURGE")
+  }
 }

@@ -22,12 +22,15 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   // Each row must also leave the session as it found it: same conf map,
-  // no stream left running. Cached data is not checked — the persisted
+  // no stream left running, and no more checksum checkpoint threads than
+  // before within 5 s (a stream that keeps its state stores loaded keeps
+  // one pool per provider). Cached data is not checked — the persisted
   // stages of SimilarityQueries and PipelineQueries.gramRows are
   // released by the caller's clearCache(), their documented contract.
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"smoke: $name runs on sf0.001") {
       val before = spark.conf.getAll
+      val threadsBefore = StateStoreReleaseSpec.checksumThreads()
       try {
         val df = fn(spark, sfDir)
         assert(df.columns.nonEmpty)
@@ -39,6 +42,10 @@ class RegistrySpec extends AnyFunSuite {
         assert(changed.isEmpty, s"$name changed the session conf: ${changed.mkString("; ")}")
         assert(spark.streams.active.isEmpty,
           s"$name left streams running: ${spark.streams.active.map(_.name).mkString(", ")}")
+        val threadsAfter = StateStoreReleaseSpec.settledThreads(threadsBefore)
+        assert(threadsAfter <= threadsBefore,
+          s"$name left state stores loaded: $threadsBefore checksum checkpoint threads " +
+            s"before, $threadsAfter 5 s after")
       } finally spark.catalog.clearCache() // see Bench: cache-entry buildup
     }
   }
