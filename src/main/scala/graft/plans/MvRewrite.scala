@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFu
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, ExprId, Expression, If, LessThanOrEqual, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LogicalPlan, Project, SubqueryAlias, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project, SubqueryAlias, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -16,78 +16,71 @@ import org.apache.spark.sql.types.{DayTimeIntervalType, DecimalType, YearMonthIn
 
 import graft.sources.{GraftCatalog, GraftMvOps}
 
-/** Session conf switches of [[MvRewriteRule]]; both default to true. */
+/** Session conf switch of [[MvRewriteRule]]; defaults to true. */
 object MvRewrite {
   val EnabledKey = "spark.graft.mvRewrite.enabled"
-  val StaleEnabledKey = "spark.graft.mvRewrite.stale.enabled"
 }
 
 /** TRANSPARENT MATERIALIZED-VIEW REWRITE — the aggregate-navigator
-  * move (Calcite/BigQuery/Snowflake shape): a query that aggregates a
-  * catalog table with exactly the GROUP BY columns and aggregate
-  * expressions of one of its materialized views, while that MV is
-  * FRESH (its recorded source version == the source's current
-  * version), is rewritten to read the MV table instead — turning a
-  * full-table aggregation into a scan of the (usually tiny)
-  * pre-aggregated result. At 100 TB this is the difference between
-  * re-reading the fact table for every dashboard query and answering
-  * from a rollup the ingest pipeline already maintains incrementally.
+  * move (Calcite/BigQuery/Snowflake shape): an aggregate over catalog
+  * tables that one of their materialized views pre-aggregates is
+  * rewritten to read the MV instead — turning a full-table
+  * aggregation into a scan of the (usually tiny) pre-aggregated
+  * result. At 100 TB this is the difference between re-reading the
+  * fact table for every dashboard query and answering from a rollup
+  * the ingest pipeline already maintains incrementally.
   *
-  * Two match shapes:
-  *  - EXACT: query grouping set == MV grouping set → plain MV scan;
-  *  - ROLLUP: query grouping ⊂ MV grouping (including the global
-  *    aggregate) AND every aggregate is rollup-derivable
-  *    (sum→sum-of-sums, count→sum-of-counts, min→min, max→max; never
-  *    DISTINCT/FILTER or non-distributive aggs) → re-aggregate the
-  *    MV's rows at the coarser grain.
+  * ONE MATCHER OVER SIDE LISTS. Every MV is a list of sides, each with
+  * the source version the MV recorded for it: a single-table MV is
+  * `[(source, v)]`; a join MV (source `'fact JOIN d1 ON c1 [JOIN d2 ON
+  * c2 …]'`, the N-way star/snowflake shape) is `(fact, v) +: dims`
+  * plus its ON conjunction. The query is read the same way:
+  * [[stripJoin]] flattens the aggregate's input — one relation, or
+  * INNER joins in any order or tree shape — into its relations, its
+  * ON conjuncts and at most one WHERE above them. A candidate matches
+  * when its side SET equals the query's relation set and its ON
+  * conjunct SET is norm-equal to the query's, empty for one table
+  * ([[joinDefMatching]]). Discovery lists the MVs keyed by each query
+  * relation, smallest first; a candidate with every side at its
+  * recorded version is FRESH, any other is STALE, and every fresh
+  * candidate is tried before any stale one.
   *
-  * JOIN MVs (source `'fact JOIN d1 ON c1 [JOIN d2 ON c2 …]'` — the
-  * N-way star/snowflake shape) extend both shapes: an aggregate over
-  * the same set of INNER-joined tables (any join order or tree shape)
-  * whose ON conjunct SET matches the MV's recorded conjunction is
-  * served when EVERY side is fresh at the MV's recorded versions —
-  * see [[rewriteJoin]]. A join MV stale by APPENDS on at most ONE
-  * side (fact micro-batches, or a late-arriving dim's new members)
-  * is still served, as MV ⊎ re-aggregate(ΔS ⋈ others) with a
-  * segment-pinned delta scan of the moved side — see
-  * [[tryStaleJoinCandidate]]. TWO moved sides (both append-only) are
-  * served by the disjoint decomposition
-  * A₁⋈B₁ = A₀⋈B₀ ⊎ ΔA⋈B₁ ⊎ A₀⋈ΔB (the first delta term joins against
-  * the CURRENT other sides, absorbing the ΔA⋈ΔB cross term; the
-  * second pins A at v0). Eq deletes on at most ONE of the two moved
-  * sides compose with the retraction algebra (that side orders first;
-  * its killed rows subtract against the CURRENT other sides, covering
-  * K⋈ΔB); three+ moved sides, or eq deletes on both moved sides,
-  * decline the stale path.
+  * Three serve paths, each for any number of sides:
+  *  - FRESH ([[tryJoinCandidate]]): EXACT grain (query grouping set ==
+  *    MV grouping set) projects the MV; ROLLUP grain (query grouping ⊂
+  *    MV grouping, including the global aggregate) re-aggregates it
+  *    when every aggregate is rollup-derivable (sum→sum-of-sums,
+  *    count→sum-of-counts, min→min, max→max, avg from its sum and
+  *    count components; never DISTINCT/FILTER);
+  *  - GROUPING SETS ([[tryGroupingSetsJoinCandidate]]): a rollup/cube/
+  *    GROUPING SETS lattice whose finest set lies within a fresh MV's
+  *    grain rebuilds the analyzer's Expand over the MV scan;
+  *  - STALE ([[tryStaleJoinCandidate]]): an MV behind by appends on at
+  *    most two sides, with equality deletes on at most one of them, is
+  *    served as MV ⊎ γ(Δ ⋈ other sides) ⊖ γ(killed ⋈ other sides) over
+  *    segment-pinned delta scans.
   *
-  * FILTERED MVs (defined with `create_mv(..., where)`) add a predicate
-  * SUBSUMPTION gate before either shape: every MV-filter conjunct must
-  * appear norm-equal among the query's WHERE conjuncts (those are
-  * dropped as already applied inside the MV); the residual conjuncts
-  * then pass the usual group-column admissibility. Exact structural
-  * subsumption only — no implication reasoning. The stale-delta path
-  * serves filtered MVs too: the MV branch applies the residual, the
-  * delta branch applies the query's FULL predicate (delta rows are raw
-  * source rows, and the MV conjuncts are part of it by subsumption).
+  * FILTERED MVs (`create_mv(..., where)`) add a predicate SUBSUMPTION
+  * gate: every MV-filter conjunct must appear norm-equal among the
+  * query's WHERE conjuncts, where it is dropped as already applied
+  * inside the MV. The residual WHERE must reference MV group columns
+  * only — such a filter commutes with the pre-aggregation (the MV's
+  * rows partition exactly by those columns) and is remapped onto the
+  * MV scan, where it rides zone-map pruning. Exact structural
+  * subsumption only, no implication reasoning. A stale delta branch
+  * applies the query's FULL predicate: its rows are raw source rows.
   *
-  * Soundness gates (all must hold, else the plan is untouched):
-  *  - the aggregate's child is the source relation, either bare or
-  *    under ONE WHERE that references MV GROUP columns exclusively —
-  *    such a filter commutes with the pre-aggregation (the MV's rows
-  *    partition exactly by the group columns) and is remapped onto the
-  *    MV scan, where it rides zone-map pruning; any filter touching a
-  *    non-group column kills the match;
-  *  - every grouping expression is a plain column that is exactly the
-  *    MV's GROUP BY set;
-  *  - every aggregate output matches one of the MV's stored aggregate
-  *    expressions STRUCTURALLY (the MV's spec is parsed, its columns
-  *    bound against the same source relation, and both sides compared
-  *    by name-normalized canonical SQL — `count(*)` ≡ `count(1)`,
-  *    qualifiers and case are immaterial, `sum(a)` ≢ `sum(b)`);
-  *  - output types agree exactly;
-  *  - the MV is fresh AT ANALYSIS TIME (same consistency contract as
-  *    any compiled plan: a write racing query planning wins or loses
-  *    at the version lookup, exactly as it would at scan pinning).
+  * Soundness gates shared by every path: grouping expressions are
+  * plain columns; every aggregate output matches one of the MV's
+  * stored aggregate expressions STRUCTURALLY (the MV's specs are
+  * parsed, bound against the query's own relations, and compared by
+  * name-normalized canonical SQL — `count(*)` ≡ `count(1)`, qualifiers
+  * and case are immaterial, `sum(a)` ≢ `sum(b)`); output types agree
+  * exactly; freshness is judged AT ANALYSIS TIME (same consistency
+  * contract as any compiled plan: a write racing query planning wins
+  * or loses at the version lookup, exactly as it would at scan
+  * pinning); `VERSION/TIMESTAMP AS OF` scans and self-joins never
+  * match.
   *
   * The rewrite preserves the original output `ExprId`s through
   * aliases, so parent operators (sorts, filters above the aggregate,
@@ -98,7 +91,26 @@ object MvRewrite {
   * with `spark.graft.mvRewrite.enabled=false`.
   */
 case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
-  import MvRewrite.{EnabledKey, StaleEnabledKey}
+  import MvRewrite.EnabledKey
+
+  private type Candidate = (Identifier, Map[String, String])
+
+  /** The aggregate's input as the matcher reads it: the graft
+    * relations left to right, their ON conjuncts, and at most one
+    * WHERE above them. `names` are the relations' `ns.table` keys, the
+    * spelling an MV records its sides in.
+    */
+  private case class Query(
+      filter: Option[Expression], on: Seq[Expression], rels: Seq[DataSourceV2Relation]) {
+    val names: Seq[String] = rels.map { r =>
+      val id = r.identifier.get
+      s"${id.namespace()(0)}.${id.name()}"
+    }
+    val output: Seq[Attribute] = rels.flatMap(_.output)
+    def rel(name: String): DataSourceV2Relation = rels(names.indexOf(name))
+  }
+
+  private def resolver: (String, String) => Boolean = conf.resolver
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString(EnabledKey, "true").toBoolean) return plan
@@ -121,96 +133,47 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** The aggregate's child, as (optional WHERE condition, relation).
-    * One Filter directly below the aggregate is admissible — whether
-    * it commutes with the MV substitution is decided later, once the
-    * candidate's group columns are known. Pass-through projections
-    * (bare attributes, no aliasing — what a `SELECT *` VIEW expansion
-    * inserts) are transparent: they neither rename nor compute, so the
-    * aggregate's expressions still reference the relation's columns by
-    * their original names.
-    */
-  private def stripChild(
-      p: LogicalPlan): Option[(Option[Expression], DataSourceV2Relation)] =
-    p match {
-      case s: SubqueryAlias => stripChild(s.child)
-      case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        stripChild(pr.child)
-      case f: Filter =>
-        stripChild(f.child).flatMap {
-          // At most ONE filter on the path (two conjoin fine, but keep
-          // the shape simple and predictable).
-          case (None, r) => Some((Some(f.condition), r))
-          case _ => None
-        }
-      case r: DataSourceV2Relation => Some((None, r))
-      case _ => None
-    }
-
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
-    agg.child match {
-      // ROLLUP/CUBE/GROUPING SETS analyze to Aggregate-over-Expand;
-      // the single-relation/join matchers below never see through the
-      // Expand, so grouping-set navigation gets its own matcher.
-      case e: org.apache.spark.sql.catalyst.plans.logical.Expand =>
-        return rewriteGroupingSets(agg, e)
-      case _ =>
-    }
-    val (filterCond, relation) = stripChild(agg.child) match {
-      case Some((c, r))
-          if r.catalog.exists(_.isInstanceOf[GraftCatalog]) && r.identifier.isDefined =>
-        (c, r)
-      case _ => return rewriteJoin(agg) // not a single-relation shape
-    }
-    // A `VERSION/TIMESTAMP AS OF` scan resolves to the SAME relation
-    // shape but with a snapshot-pinned table; it asks about history and
-    // must never be answered from the (current) MV.
-    if (GraftCatalog.isPinnedTable(relation.table)) return None
-    val srcIdent = relation.identifier.get
-    if (srcIdent.namespace().length != 1) return None
-    val resolver = conf.resolver
-
-    // Grouping must be plain source columns.
-    val groupAttrs: Seq[Attribute] = agg.groupingExpressions.map {
-      case a: Attribute => a
-      case _ => return None
-    }
-
-    val fresh =
-      GraftCatalog.freshMvsFor(srcIdent.namespace()(0), srcIdent.name())
-    fresh.view.flatMap { case (mvIdent, props) =>
-      tryCandidate(agg, relation, groupAttrs, filterCond, mvIdent, props, resolver)
-    }.headOption.orElse {
-      if (!conf.getConfString(StaleEnabledKey, "true").toBoolean) None
-      else GraftCatalog.staleMvsFor(srcIdent.namespace()(0), srcIdent.name())
-        .view.flatMap { case (mvIdent, _) =>
-          tryStaleCandidate(agg, relation, groupAttrs, filterCond, mvIdent, resolver)
+  private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
+    // ROLLUP/CUBE/GROUPING SETS analyze to Aggregate-over-Expand; the
+    // plain matcher never sees through the Expand, so grouping-set
+    // navigation gets its own path.
+    case e: Expand => rewriteGroupingSets(agg, e)
+    case child =>
+      val q = queryOf(child).getOrElse(return None)
+      // Grouping must be plain source columns.
+      val groupAttrs: Seq[Attribute] = agg.groupingExpressions.map {
+        case a: Attribute => a
+        case _ => return None
+      }
+      if (groupAttrs.map(_.name.toLowerCase).distinct.length != groupAttrs.length) return None
+      val (fresh, stale) = candidates(q)
+      fresh.view.flatMap { case (mvIdent, props) =>
+        tryJoinCandidate(agg, groupAttrs, q, mvIdent, props)
+      }.headOption.orElse {
+        stale.view.flatMap { case (mvIdent, _) =>
+          tryStaleJoinCandidate(agg, groupAttrs, q, mvIdent)
         }.headOption
-    }
+      }
   }
 
   /** GROUPING-SETS NAVIGATION (rollup/cube/GROUPING SETS over the MV's
-    * base): the analyzer lowers `GROUP BY rollup(a, b)` to
+    * sides): the analyzer lowers `GROUP BY rollup(a, b)` to
     * `Aggregate(groupAttrs :+ gid, aggs, Expand(projections, output,
     * Project(child.output ++ groupByAliases, child)))` — every
     * grouping SET is a coarsening of the full grouping list, so when
-    * that list is contained in an MV's grain and every aggregate is
-    * rollup-derivable, the whole lattice is derivable from the MV: the
-    * rewrite rebuilds the SAME Expand structure (same grouping-set
+    * that list is contained in a fresh MV's grain and every aggregate
+    * is rollup-derivable, the whole lattice is derivable from the MV:
+    * the rewrite rebuilds the SAME Expand structure (same grouping-set
     * membership matrix, same gid literals, same grouping/gid
     * attribute ExprIds — parents stay oblivious) over the MV scan,
     * with the aggregate functions mapped to their merge forms
     * (sum→sum, count→sum-of-counts, min→min, max→max). One MV scan
     * replaces the base scan; the per-set duplication the Expand does
-    * now multiplies pre-aggregated rows instead of raw ones. Gates
-    * mirror [[tryCandidate]]: fresh single-source MV, plain-column
-    * groupings, WHERE references grouping columns only (it commutes
-    * with the pre-aggregation AND with Expand), structural aggregate
-    * match, exact types.
+    * now multiplies pre-aggregated rows instead of raw ones. A WHERE
+    * must reference grouping columns only: it commutes with the
+    * pre-aggregation AND with Expand.
     */
-  private def rewriteGroupingSets(
-      agg: Aggregate,
-      expand: org.apache.spark.sql.catalyst.plans.logical.Expand): Option[LogicalPlan] = {
+  private def rewriteGroupingSets(agg: Aggregate, expand: Expand): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.VirtualColumn
     if (agg.groupingExpressions.isEmpty) return None
     val gexprs: Seq[Attribute] = agg.groupingExpressions.map {
@@ -255,7 +218,6 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       }
     }
     val baseColFor: Seq[String] = aliasInfo.map(_._1)
-    val resolver = conf.resolver
     // Per-set membership matrix + metadata literals, read off the
     // original projections: slot baseLen+i is either the grouping attr
     // itself or a null literal; the metadata tail is all literals.
@@ -274,134 +236,28 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       }
       (present, meta)
     }
-
-    // Single relation under the Project → single-source MVs; a join
-    // tree under it → JOIN MVs (rollup over the star served from the
-    // star's rollup MV) — same Expand rebuild either way.
-    stripChild(proj.child) match {
-      case Some((filterCond, relation))
-          if relation.catalog.exists(_.isInstanceOf[GraftCatalog]) &&
-            relation.identifier.isDefined =>
-        if (GraftCatalog.isPinnedTable(relation.table)) return None
-        val srcIdent = relation.identifier.get
-        if (srcIdent.namespace().length != 1) return None
-        GraftCatalog.freshMvsFor(srcIdent.namespace()(0), srcIdent.name())
-          .view.flatMap { case (mvIdent, props) =>
-            tryGroupingSetsCandidate(agg, relation, filterCond, groupAttrs, metaAttrs,
-              baseColFor, sets, mvIdent, props, resolver)
-          }.headOption
-      case _ =>
-        val (filterCond, queryConjuncts, rels) =
-          stripJoin(proj.child).getOrElse(return None)
-        if (rels.exists(r => GraftCatalog.isPinnedTable(r.table))) return None
-        if (rels.exists(_.identifier.get.namespace().length != 1)) return None
-        val names = rels.map(r =>
-          s"${r.identifier.get.namespace()(0)}.${r.identifier.get.name()}")
-        if (names.distinct.length != names.length) return None
-        val combinedOutput = rels.flatMap(_.output)
-        rels.flatMap(r =>
-            GraftCatalog.freshMvsFor(r.identifier.get.namespace()(0), r.identifier.get.name()))
-          .filter(_._2.contains(GraftMvOps.JoinCondProp))
-          .view.flatMap { case (mvIdent, props) =>
-            tryGroupingSetsJoinCandidate(agg, filterCond, queryConjuncts,
-              combinedOutput, rels, names, groupAttrs, metaAttrs,
-              baseColFor, sets, mvIdent, props, resolver)
-          }.headOption
-    }
+    val q = queryOf(proj.child).getOrElse(return None)
+    candidates(q)._1.view.flatMap { case (mvIdent, props) =>
+      tryGroupingSetsJoinCandidate(agg, q, groupAttrs, metaAttrs, baseColFor, sets,
+        mvIdent, props)
+    }.headOption
   }
 
-  private def tryGroupingSetsCandidate(
-      agg: Aggregate, relation: DataSourceV2Relation,
-      filterCond: Option[Expression],
+  /** The Expand rebuild of [[rewriteGroupingSets]] over one fresh
+    * candidate.
+    */
+  private def tryGroupingSetsJoinCandidate(
+      agg: Aggregate, q: Query,
       groupAttrs: Seq[Attribute], metaAttrs: Seq[Attribute],
       baseColFor: Seq[String], sets: Seq[(Seq[Boolean], Seq[Expression])],
-      mvIdent: Identifier, props: Map[String, String],
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    if (props.contains(GraftMvOps.JoinCondProp)) return None
-    val mvGroupCols = props(GraftMvOps.GroupProp).split(',').toSeq
+      mvIdent: Identifier, props: Map[String, String]): Option[LogicalPlan] = {
+    val mvGroupCols =
+      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
     // The FULL grouping list (the lattice's finest set) must be
     // contained in the MV grain; every coarser set then is too.
     if (!baseColFor.forall(c => mvGroupCols.exists(resolver(_, c)))) return None
-    val residualCond: Option[Expression] =
-      residualAfterMvFilter(props, filterCond, relation).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    val specByKey = bindSpecs(props(GraftMvOps.AggsProp), relation.output)
-      .getOrElse(return None).map(t => t._1 -> t._2).toMap
-
-    val catalog = relation.catalog.get.asInstanceOf[TableCatalog]
-    val mvTable =
-      try catalog.loadTable(mvIdent)
-      catch { case NonFatal(_) => return None }
-    val mvRelation = DataSourceV2Relation.create(mvTable, relation.catalog, Some(mvIdent))
-    def mvAttr(col: String): Option[Attribute] =
-      mvRelation.output.find(a => resolver(a.name, col))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
-      .getOrElse(return None)
-    buildGroupingSetsPlan(agg, groupAttrs, metaAttrs, baseColFor, sets,
-      mvAttr, mvChild, specByKey)
-  }
-
-  /** Join-MV flavor of the grouping-sets candidate: the gate set of
-    * [[tryJoinCandidate]] (table-set equality, every side fresh at the
-    * recorded versions, ON conjunct-set match, filter subsumption
-    * against the joined output), then the shared Expand rebuild.
-    */
-  private def tryGroupingSetsJoinCandidate(
-      agg: Aggregate,
-      filterCond: Option[Expression], queryConjuncts: Seq[Expression],
-      combinedOutput: Seq[Attribute],
-      rels: Seq[DataSourceV2Relation], names: Seq[String],
-      groupAttrs: Seq[Attribute], metaAttrs: Seq[Attribute],
-      baseColFor: Seq[String], sets: Seq[(Seq[Boolean], Seq[Expression])],
-      mvIdent: Identifier, props: Map[String, String],
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    val fact = props.getOrElse(GraftMvOps.SourceProp, return None)
-    val (dims, vds) = joinDefMatching(props, names).getOrElse(return None)
-    if (!names.contains(fact)) return None
-    if (!GraftCatalog.currentVersion(
-        fact.split('.')(0), fact.split('.')(1))
-      .map(_.toString).contains(props.getOrElse(GraftMvOps.VersionProp, return None)))
-      return None
-    dims.zip(vds).foreach { case (d, v) =>
-      val (dns, dtbl) = d.split('.') match {
-        case Array(a, b) => (a, b)
-        case _ => return None
-      }
-      if (!GraftCatalog.currentVersion(dns, dtbl).map(_.toString).contains(v))
-        return None
-    }
-    val mvCond = resolveSpecAgainst(
-      props.getOrElse(GraftMvOps.JoinCondProp, return None), combinedOutput)
-      .getOrElse(return None)
-    if (conjuncts(mvCond).map(norm).toSet != queryConjuncts.map(norm).toSet) return None
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
-    if (!baseColFor.forall(c => mvGroupCols.exists(resolver(_, c)))) return None
-    val residualCond: Option[Expression] =
-      residualAfterMvFilterOn(props, filterCond, combinedOutput).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    val specByKey = bindSpecs(props.getOrElse(GraftMvOps.AggsProp, return None), combinedOutput)
-      .getOrElse(return None).map(t => t._1 -> t._2).toMap
-    val anyRel = rels.head
-    val catalog = anyRel.catalog.get.asInstanceOf[TableCatalog]
-    val mvTable =
-      try catalog.loadTable(mvIdent)
-      catch { case NonFatal(_) => return None }
-    val mvRelation = DataSourceV2Relation.create(mvTable, anyRel.catalog, Some(mvIdent))
-    def mvAttr(col: String): Option[Attribute] =
-      mvRelation.output.find(a => resolver(a.name, col))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
-      .getOrElse(return None)
-    buildGroupingSetsPlan(agg, groupAttrs, metaAttrs, baseColFor, sets,
-      mvAttr, mvChild, specByKey)
-  }
-
-  /** The shared Expand-rebuild tail of both grouping-sets candidates. */
-  private def buildGroupingSetsPlan(
-      agg: Aggregate, groupAttrs: Seq[Attribute], metaAttrs: Seq[Attribute],
-      baseColFor: Seq[String], sets: Seq[(Seq[Boolean], Seq[Expression])],
-      mvAttr: String => Option[Attribute], mvChild: LogicalPlan,
-      specByKey: Map[String, String]): Option[LogicalPlan] = {
+    val (specByKey, mvAttr, mvChild) =
+      freshMvInput(q, mvIdent, props, mvGroupCols).getOrElse(return None)
     // Grouping columns must exist on the MV with EXACT types (Expand's
     // null literals and the output attrs are typed by them).
     val mvGroupAttrs: Seq[Attribute] = baseColFor.zip(groupAttrs).map {
@@ -469,17 +325,30 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         case ((_, false), a) => Literal.create(null, a.dataType): Expression
       } ++ meta
     }
-    val newExpand = org.apache.spark.sql.catalyst.plans.logical.Expand(
-      newProjections, aggAttrs ++ groupAttrs ++ metaAttrs, mvChild)
+    val newExpand = Expand(newProjections, aggAttrs ++ groupAttrs ++ metaAttrs, mvChild)
     Some(Aggregate(agg.groupingExpressions, outputs, newExpand))
   }
 
-  /** The aggregate's child as (optional WHERE above the joins, the
-    * flattened ON conjuncts, the joined graft relations left-to-right)
-    * — the N-way JOIN-MV query shape. At most one Filter, and only
-    * ABOVE the joins: a filter under a join changes which rows joined,
-    * which the materialized join did not see.
+  /** The aggregate's child as a [[Query]]: graft relations under INNER
+    * joins, at most one Filter, and only ABOVE the joins — a filter
+    * under a join changes which rows joined, which the materialized
+    * join did not see. A single relation is the one-side case.
+    * Pass-through projections (bare attributes, no aliasing — what a
+    * `SELECT *` VIEW expansion inserts) are transparent: they neither
+    * rename nor compute, so the aggregate's expressions still reference
+    * the relations' columns by their original names. None for a
+    * `VERSION/TIMESTAMP AS OF` scan (it asks about history and must
+    * never be answered from the current MV), a namespace of more than
+    * one level, or a self-join.
     */
+  private def queryOf(p: LogicalPlan): Option[Query] = {
+    val (filter, on, rels) = stripJoin(p).getOrElse(return None)
+    if (rels.exists(r => GraftCatalog.isPinnedTable(r.table))) return None
+    if (rels.exists(_.identifier.get.namespace().length != 1)) return None
+    val q = Query(filter, on, rels)
+    if (q.names.distinct.length != q.names.length) None else Some(q)
+  }
+
   private def stripJoin(p: LogicalPlan): Option[
       (Option[Expression], Seq[Expression], Seq[DataSourceV2Relation])] =
     p match {
@@ -487,20 +356,17 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
         stripJoin(pr.child)
       case f: Filter =>
-        flattenJoins(f.child).collect {
-          case (rels, cs) if rels.length >= 2 => (Some(f.condition), cs, rels)
-        }
+        flattenJoins(f.child).map { case (rels, cs) => (Some(f.condition), cs, rels) }
       case other =>
-        flattenJoins(other).collect {
-          case (rels, cs) if rels.length >= 2 => (None, cs, rels)
-        }
+        flattenJoins(other).map { case (rels, cs) => (None, cs, rels) }
     }
 
   /** A tree of INNER joins over bare graft relations, flattened to
     * (relations left-to-right, all ON conjuncts) — any join SHAPE
     * (left-deep, right-deep, bushy) of the same tables with the same
     * condition set is the same join, which is how a star rollup MV
-    * serves every ordering the optimizer or the user may write.
+    * serves every ordering the optimizer or the user may write. One
+    * bare relation is a tree of one.
     */
   private def flattenJoins(
       p: LogicalPlan): Option[(Seq[DataSourceV2Relation], Seq[Expression])] =
@@ -519,143 +385,181 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** JOIN-MV rewrite (the N-way star/snowflake rollup): an aggregate
-    * over `fact INNER JOIN d1 ON c1 [JOIN d2 ON c2 …]` is served by a
-    * fresh join MV when
-    *  - the MV's {fact, dims} table set equals the query's relation
-    *    set (any join order or tree shape — inner joins commute and
-    *    associate),
-    *  - EVERY side is fresh at the MV's recorded versions (the fact
-    *    via source-keyed discovery, each dim checked here),
-    *  - the ON conjunct SET is norm-equal to the MV's recorded
-    *    conjunction's set (per-conjunct exact structural match —
-    *    `a = b` does not serve `b = a`, the same
-    *    no-implication-reasoning stance as predicate subsumption),
-    *  - grouping/aggregates match as in the single-source path (exact
-    *    or rollup-derivable), and any WHERE above the joins references
-    *    MV group columns only (remapped onto the MV scan).
+  /** The MVs keyed by any of the query's relations whose sides and ON
+    * conjuncts match the query ([[joinDefMatching]]), as (FRESH, STALE):
+    * fresh when every side's current version is the one the MV
+    * recorded, stale otherwise; each smallest first, as discovered.
     */
-  private def rewriteJoin(agg: Aggregate): Option[LogicalPlan] = {
-    val (filterCond, queryConjuncts, rels) =
-      stripJoin(agg.child).getOrElse(return None)
-    if (rels.exists(r => GraftCatalog.isPinnedTable(r.table))) return None
-    if (rels.exists(_.identifier.get.namespace().length != 1)) return None
-    val resolver = conf.resolver
-    val groupAttrs: Seq[Attribute] = agg.groupingExpressions.map {
-      case a: Attribute => a
-      case _ => return None
-    }
-    if (groupAttrs.map(_.name.toLowerCase).distinct.length != groupAttrs.length) return None
-    val names = rels.map(r =>
-      s"${r.identifier.get.namespace()(0)}.${r.identifier.get.name()}")
-    if (names.distinct.length != names.length) return None // self-joins never MV-match
-    val combinedOutput = rels.flatMap(_.output)
-    // Candidates: any join MV whose FACT is one of the query's
-    // relations and fresh (source-keyed discovery); table-set equality
-    // below rejects everything else.
-    val cands = rels.flatMap(r =>
-        GraftCatalog.freshMvsFor(r.identifier.get.namespace()(0), r.identifier.get.name()))
-      .filter(_._2.contains(GraftMvOps.JoinCondProp))
-    cands.view.flatMap { case (mvIdent, props) =>
-      tryJoinCandidate(agg, groupAttrs, filterCond, queryConjuncts, combinedOutput,
-        rels, names, mvIdent, props, resolver)
-    }.headOption.orElse {
-      if (!conf.getConfString(StaleEnabledKey, "true").toBoolean) None
-      else {
-        // Stale candidates by the FACT's recorded version — plus
-        // fact-FRESH join MVs, which a moved DIM leaves out of
-        // staleMvsFor (the staleness is on the dim side, invisible to
-        // fact-keyed discovery); the fresh matcher above already
-        // declined them for the dim drift, and tryStaleJoinCandidate
-        // re-derives per-side deltas itself.
-        val staleCands = rels.flatMap { r =>
-            val (rns, rtbl) = (r.identifier.get.namespace()(0), r.identifier.get.name())
-            GraftCatalog.staleMvsFor(rns, rtbl) ++ GraftCatalog.freshMvsFor(rns, rtbl)
-          }
-          .filter(_._2.contains(GraftMvOps.JoinCondProp))
-        staleCands.view.flatMap { case (mvIdent, _) =>
-          tryStaleJoinCandidate(agg, groupAttrs, filterCond, queryConjuncts,
-            combinedOutput, rels, names, mvIdent, resolver)
-        }.headOption
+  private def candidates(q: Query): (Seq[Candidate], Seq[Candidate]) = {
+    val matching = q.rels.flatMap { r =>
+      val id = r.identifier.get
+      GraftCatalog.mvsFor(id.namespace()(0), id.name())
+    }.flatMap { case c @ (_, props) => joinDefMatching(props, q).map(c -> _) }
+    val (fresh, stale) = matching.partition { case (_, sides) =>
+      sides.forall { case (n, v) =>
+        val id = q.rel(n).identifier.get
+        GraftCatalog.currentVersion(id.namespace()(0), id.name()).map(_.toString).contains(v)
       }
     }
+    (fresh.map(_._1), stale.map(_._1))
   }
 
-  /** MV-side join definition, defensively parsed and matched against
-    * the query's relation set: Some((dims, recorded dim versions))
-    * when the MV's {fact ∪ dims} equals `names` exactly (order-free),
-    * None otherwise. Shared by the fresh and stale join candidates.
+  /** The MV's side list — (`ns.table`, recorded version), its source
+    * first — when the side SET equals the query's relation set
+    * (order-free) and the ON conjunct SET is norm-equal to the
+    * query's (per-conjunct exact structural match — `a = b` does not
+    * serve `b = a`, the same no-implication-reasoning stance as
+    * predicate subsumption); None otherwise. A single-table MV has one
+    * side and no ON conjunction. A join MV records its dims, their
+    * versions and its conjunction together, so a half-present set of
+    * join props declines, as does any missing prop: an MV with
+    * hand-patched or cleared props must decline the rewrite, not throw
+    * from inside the analyzer rule (which would fail the user's query).
     */
   private def joinDefMatching(
-      props: Map[String, String], names: Seq[String]): Option[(Seq[String], Seq[String])] = {
-    val fact = props.getOrElse(GraftMvOps.SourceProp, return None)
-    val dims = props.getOrElse(GraftMvOps.JoinSourceProp, return None)
-      .split(',').toSeq.filter(_.nonEmpty)
-    val vds = props.getOrElse(GraftMvOps.JoinVersionProp, return None)
-      .split(',').toSeq.filter(_.nonEmpty)
-    if (dims.isEmpty || vds.length != dims.length) return None
-    val mvTables = fact +: dims
-    if (mvTables.distinct.length != mvTables.length) return None
-    if (mvTables.length != names.length || mvTables.toSet != names.toSet) return None
-    Some((dims, vds))
+      props: Map[String, String], q: Query): Option[Seq[(String, String)]] = {
+    val source = (props.getOrElse(GraftMvOps.SourceProp, return None),
+      props.getOrElse(GraftMvOps.VersionProp, return None))
+    val (sides, onSpec) = (props.get(GraftMvOps.JoinSourceProp),
+        props.get(GraftMvOps.JoinVersionProp), props.get(GraftMvOps.JoinCondProp)) match {
+      case (None, None, None) => (Seq(source), None)
+      case (Some(ds), Some(vs), Some(on)) =>
+        val dims = ds.split(',').toSeq.filter(_.nonEmpty)
+        val vds = vs.split(',').toSeq.filter(_.nonEmpty)
+        if (dims.isEmpty || vds.length != dims.length) return None
+        (source +: dims.zip(vds), Some(on))
+      case _ => return None
+    }
+    val names = sides.map(_._1)
+    if (names.distinct.length != names.length) return None
+    if (names.length != q.names.length || names.toSet != q.names.toSet) return None
+    val mvOn = onSpec.fold(Seq.empty[Expression]) { on =>
+      conjuncts(resolveSpecAgainst(on, q.output).getOrElse(return None))
+    }
+    if (mvOn.map(norm).toSet != q.on.map(norm).toSet) return None
+    Some(sides)
   }
 
-  /** STALE-TOLERANT rewrite for JOIN MVs — the delta-join
-    * specialization of [[tryStaleCandidate]]: an aggregate over
-    * `fact ⋈ dims` whose MV is behind by appends on AT MOST ONE side
-    * is served as MV ⊎ re-aggregate(ΔS ⋈ others), where ΔS is a
-    * SEGMENT-PINNED scan of exactly the segments appended to the moved
-    * side after the MV's recorded version for it. The algebra: with
-    * every other side data-identical since its recorded version,
-    * ⋈(S⃗₁) = ⋈(S⃗₀ with Sₖ₀ ∪ ΔSₖ) = ⋈(S⃗₀) ∪ (ΔSₖ ⋈ others), and the
-    * MV is precisely γ(⋈(S⃗₀)) — so the union re-merges exactly. TWO
-    * moved sides expand into cross terms (ΔSᵢ ⋈ ΔSⱼ appears twice)
-    * that only a refresh repairs → decline. At 100 TB this covers both
-    * steady-state star-schema reads: fact micro-batch appends join one
-    * batch against the dims (the fact table itself never scanned), and
-    * dim-append staleness (late-arriving dimension members) joins the
-    * dim delta against the fact — where the equi conjunct reaching the
-    * fact scan as a pushed filter prunes it to matched segments.
+  /** What both fresh paths read from a candidate: the MV's aggregate
+    * specs bound against the query's relations and keyed by
+    * normalized SQL, the MV's columns by name, and the MV scan under
+    * the query's residual WHERE — after filtered-MV subsumption —
+    * remapped onto MV group columns. None when any of it fails to
+    * bind (never rewrite on a guess).
+    */
+  private def freshMvInput(
+      q: Query, mvIdent: Identifier, props: Map[String, String], mvGroupCols: Seq[String])
+      : Option[(Map[String, String], String => Option[Attribute], LogicalPlan)] = {
+    val residualCond: Option[Expression] =
+      residualAfterMvFilterOn(props, q.filter, q.output).getOrElse(return None)
+    if (!admissibleResidual(residualCond, mvGroupCols)) return None
+    val specByKey = bindSpecs(props.getOrElse(GraftMvOps.AggsProp, return None), q.output)
+      .getOrElse(return None).map(t => t._1 -> t._2).toMap
+    val catalog = q.rels.head.catalog
+    val mvTable =
+      try catalog.get.asInstanceOf[TableCatalog].loadTable(mvIdent)
+      catch { case NonFatal(_) => return None }
+    val mvRelation = DataSourceV2Relation.create(mvTable, catalog, Some(mvIdent))
+    def mvAttr(col: String): Option[Attribute] =
+      mvRelation.output.find(a => resolver(a.name, col))
+    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation)
+      .getOrElse(return None)
+    Some((specByKey, mvAttr, mvChild))
+  }
+
+  /** FRESH serve: every side is at its recorded version, so the MV is
+    * exactly γ(⋈ sides) and answers at the EXACT grain or, re-
+    * aggregated, at any coarser one ([[serveFromMv]]).
+    */
+  private def tryJoinCandidate(
+      agg: Aggregate, groupAttrs: Seq[Attribute], q: Query,
+      mvIdent: Identifier, props: Map[String, String]): Option[LogicalPlan] = {
+    val mvGroupCols =
+      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
+    val exact = groupingMatch(groupAttrs, mvGroupCols).getOrElse(return None)
+    val (specByKey, mvAttr, mvChild) =
+      freshMvInput(q, mvIdent, props, mvGroupCols).getOrElse(return None)
+    def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
+    serveFromMv(agg, groupAttrs, exact, groupColFor, mvAttr, specByKey, mvChild)
+  }
+
+  /** STALE-TOLERANT rewrite (delta-union): an MV whose sides have only
+    * APPENDED data since their recorded versions can still answer, as
+    * MV ⊎ re-aggregate(ΔS ⋈ others), where ΔS is a SEGMENT-PINNED scan
+    * of exactly the segments appended to the moved side S after its
+    * recorded version (zone maps, blooms and column pruning apply).
+    * This is the incremental-query shape the freshness gate alone
+    * forfeits: at 100 TB the MV covers years of history and the delta
+    * is one day's appends, so the query costs MV-size + delta-size
+    * instead of a full base scan — WITHOUT requiring the user to
+    * refresh first. The algebra: with every other side data-identical
+    * since its recorded version, ⋈(S⃗₁) = ⋈(S⃗₀ with Sₖ₀ ∪ ΔSₖ) =
+    * ⋈(S⃗₀) ∪ (ΔSₖ ⋈ others), and the MV is precisely γ(⋈(S⃗₀)) — so
+    * the union re-merges exactly. For one side "others" is empty and
+    * the delta term is γ(ΔS). For a star it covers both steady-state
+    * reads: fact micro-batch appends join one batch against the dims
+    * (the fact table itself never scanned), and dim-append staleness
+    * (late-arriving dimension members) joins the dim delta against the
+    * fact — where the equi conjunct reaching the fact scan as a pushed
+    * filter prunes it to matched segments.
     *
-    * Gates beyond the single-source stale path:
-    *  - EVERY side must be append-only since its recorded version
-    *    (the single-source gate, via the same snapshot-chain walk),
-    *    and at most ONE side's delta may be non-empty;
-    *  - the ON conjunct set must match (order-free), and the delta
-    *    branch re-binds the conjunction (and the MV's aggregate specs)
-    *    against ΔS ⋈ others' own attribute set.
+    * Gates beyond the fresh path:
+    *  - every commit on every side since its recorded version must be
+    *    append-only (no segment removed, no deletion vector changed,
+    *    schema identical) with the snapshot chain fully retained; the
+    *    EQUALITY-DELETE-tolerant walk (the MoR-upsert shape) admits
+    *    registered deletes too, served with a negated RETRACTION
+    *    branch (sum/count/avg only; a liveness count drops vanished
+    *    groups);
+    *  - at most TWO sides may have moved data, and at most one of them
+    *    equality deletes (see the decomposition below);
+    *  - every QUERY aggregate must be merge-derivable (sum/count/min/
+    *    max/avg, no DISTINCT/FILTER): the MV's partial and the deltas'
+    *    partials are combined by a final merge aggregate, which rolls
+    *    up count via sum-of-counts exactly like the rollup path. This
+    *    holds even for an exact grouping match — a group can live in
+    *    several branches;
+    *  - consistency protocol against a concurrent refresh: ONE atomic
+    *    entry snapshot provides both the pinned MV segments and the
+    *    props (immutable `TableEntry` — data and recorded versions
+    *    cannot tear), and the refresh-in-flight flag
+    *    ([[GraftMvOps.RefreshingProp]], set before the refresh MERGE,
+    *    cleared atomically with its version bump) closes the
+    *    data@v1/props@v0 window. The deltas are then computed from the
+    *    snapshot's recorded versions to the sides' current versions —
+    *    the answer is the sources at that serialization point
+    *    regardless of what the live MV entry does meanwhile.
     */
   private def tryStaleJoinCandidate(
-      agg: Aggregate, groupAttrs: Seq[Attribute],
-      filterCond: Option[Expression], queryConjuncts: Seq[Expression],
-      combinedOutput: Seq[Attribute],
-      rels: Seq[DataSourceV2Relation], names: Seq[String],
-      mvIdent: Identifier,
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    // ONE atomic entry snapshot = pinned MV segments + matching props
-    // (data and recorded versions cannot tear); the refresh-in-flight
-    // flag closes the MERGE window exactly as in the single-source path.
+      agg: Aggregate, groupAttrs: Seq[Attribute], q: Query,
+      mvIdent: Identifier): Option[LogicalPlan] = {
     val (mvTable, props) = GraftCatalog.mvEntrySnapshot(mvIdent).getOrElse(return None)
     if (props.contains(GraftMvOps.RefreshingProp)) return None
-    val fact = props.getOrElse(GraftMvOps.SourceProp, return None)
-    val (dims, vds) = joinDefMatching(props, names).getOrElse(return None)
-    val vf0 = props.get(GraftMvOps.VersionProp).collect {
-      case v if v.nonEmpty && v.forall(_.isDigit) => v.toLong
-    }.getOrElse(return None)
-    // Per-side append-only deltas: side 0 = fact at vf0, then dims at
-    // their recorded versions. At most ONE side may have data moved.
-    val sideNames: Seq[String] = fact +: dims
-    val sideV0s: Seq[Long] = vf0 +: vds.map { v =>
+    val sides = joinDefMatching(props, q).getOrElse(return None)
+    val mvGroupCols =
+      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
+    // FILTERED MV under staleness: the MV branch applies only the
+    // residual (the MV's conjuncts were applied pre-aggregation inside
+    // it); the delta branches apply the query's FULL predicate — delta
+    // rows are raw source rows, and the MV's conjuncts are part of
+    // the query's own WHERE by the subsumption check.
+    val residualCond: Option[Expression] =
+      residualAfterMvFilterOn(props, q.filter, q.output).getOrElse(return None)
+    if (!admissibleResidual(residualCond, mvGroupCols)) return None
+    // Exact or coarser grouping both funnel into the one merge
+    // aggregate; finer grouping cannot be served.
+    if (groupingMatch(groupAttrs, mvGroupCols).isEmpty) return None
+    // Per-side deltas since each side's recorded version: pure-append
+    // staleness first (supports min/max), else the eq-delete-tolerant
+    // walk (appends plus registered deletes).
+    val sideIdents: Seq[Identifier] = sides.map { case (n, _) => q.rel(n).identifier.get }
+    val sideV0s: Seq[Long] = sides.map { case (_, v) =>
       if (v.isEmpty || !v.forall(_.isDigit)) return None
       v.toLong
     }
-    def nsTbl(s: String): Option[(String, String)] = s.split('.') match {
-      case Array(a, b) => Some((a, b))
-      case _ => None
-    }
     val sideDeltas: Seq[(Vector[GraftCatalog.Segment], Vector[GraftCatalog.EqDelete])] =
-      sideNames.zip(sideV0s).map { case (s, v) =>
-        val (tns, ttbl) = nsTbl(s).getOrElse(return None)
+      sideIdents.zip(sideV0s).map { case (id, v) =>
+        val (tns, ttbl) = (id.namespace()(0), id.name())
         GraftCatalog.appendOnlyDeltaSince(tns, ttbl, v) match {
           case Some(d) => (d, Vector.empty[GraftCatalog.EqDelete])
           case None => GraftCatalog.appendOnlyEqDeltaSince(tns, ttbl, v)
@@ -686,29 +590,16 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         withEq ++ movedSides.filterNot(withEq.contains)
       }
     // Upsert staleness on the first moved side (eq deletes in range):
-    // the same retraction algebra as the single-source path — the
-    // killed tuples' joined aggregates subtract (sum/count/avg
+    // the killed tuples' joined aggregates subtract (sum/count/avg
     // components only), vanished groups drop by the liveness count.
     val newEqs: Vector[GraftCatalog.EqDelete] =
       movedOrdered.headOption.map(m => sideDeltas(m)._2).getOrElse(Vector.empty)
     if (newEqs.nonEmpty && !retractionAdmissible(agg, newEqs)) return None
-    val mvCond = resolveSpecAgainst(
-      props.getOrElse(GraftMvOps.JoinCondProp, return None), combinedOutput)
-      .getOrElse(return None)
-    if (conjuncts(mvCond).map(norm).toSet != queryConjuncts.map(norm).toSet) return None
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
-    // FILTERED join MV under staleness: the MV branch applies only the
-    // residual (the MV's conjuncts were applied pre-aggregation inside
-    // it); the delta branch applies the query's FULL predicate — delta
-    // rows are raw joined tuples, and the MV's conjuncts are part of
-    // the query's own WHERE by the subsumption check.
-    val residualCond: Option[Expression] =
-      residualAfterMvFilterOn(props, filterCond, combinedOutput).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    if (groupingMatch(groupAttrs, mvGroupCols, resolver).isEmpty) return None
+    // The MV's aggregate specs keyed like the fresh path; each spec's
+    // raw text is remembered so every delta branch can RE-bind it
+    // against its own relations.
     val aggsProp = props.getOrElse(GraftMvOps.AggsProp, return None)
-    val specs = bindSpecs(aggsProp, combinedOutput).getOrElse(return None)
+    val specs = bindSpecs(aggsProp, q.output).getOrElse(return None)
     val specByKey: Map[String, String] = specs.map(t => t._1 -> t._2).toMap
     val itemByName: Map[String, String] = specs.map(t => t._2 -> t._3).toMap
     val liveCntCol: Option[String] =
@@ -730,37 +621,40 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         }
         case _ => Nil
       }
+    // Plan the output shape FIRST: which MV agg columns the query
+    // needs, and that every query aggregate is merge-derivable.
     val neededAggCols =
-      (neededMergeCols(agg, mvGroupCols, specByKey, resolver).getOrElse(return None) ++
+      (neededMergeCols(agg, mvGroupCols, specByKey).getOrElse(return None) ++
         liveCntCol ++ sumGuardCols).distinct
     val unionCols: Seq[String] = mvGroupCols ++ neededAggCols
 
     // MV branch: pinned entry-snapshot scan, query WHERE (group-column
     // references only, per admissibleResidual) remapped onto MV columns.
-    val anyCatalog = rels.head.catalog
+    val anyCatalog = q.rels.head.catalog
     val mvRelation =
       DataSourceV2Relation.create(mvTable, anyCatalog, Some(mvIdent))
     def mvAttr(col: String): Option[Attribute] =
       mvRelation.output.find(a => resolver(a.name, col))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
+    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation)
       .getOrElse(return None)
     val mvPart = Project(unionCols.map(c => mvAttr(c).getOrElse(return None)), mvChild)
 
-    def sideIdentOf(i: Int): Option[Identifier] =
-      nsTbl(sideNames(i)).map { case (ns, tbl) => Identifier.of(Array(ns), tbl) }
     val combined: LogicalPlan =
       if (movedSides.isEmpty) mvPart // metadata-only drift on every side
       else {
         // Branch builder shared by the delta and retraction parts: a
         // pinned scan of the moved side joined against the OTHER
         // sides (condition-free Inner joins under ONE Filter holding
-        // the conjunction: predicate pushdown turns each equi conjunct
-        // into its join condition before the cartesian check runs —
-        // the same conjunction form create/refresh plan through; for a
-        // moved DIM the equi conjunct also reaches the FACT scan as a
-        // pushed join-side filter, zone-map-pruning it to matched
-        // segments), the query's FULL predicate, aggregates optionally
-        // NEGATED for the retraction branch.
+        // the conjunction, none for a single side: predicate pushdown
+        // turns each equi conjunct into its join condition before the
+        // cartesian check runs — the same conjunction form
+        // create/refresh plan through; for a moved DIM the equi
+        // conjunct also reaches the FACT scan as a pushed join-side
+        // filter, zone-map-pruning it to matched segments), an extra
+        // branch predicate (the kill-key IN), the query's FULL
+        // predicate, specs re-bound, aggregates optionally NEGATED
+        // (the retraction branch contributes -count/-sum, exact for
+        // the sum/count-only retraction gate).
         def joinPart(
             sideIdent: Identifier,
             sideTable: org.apache.spark.sql.connector.catalog.Table,
@@ -771,15 +665,15 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
           val outAll = sideRel.output ++ others.flatMap(_.output)
           def at(col: String): Option[Attribute] =
             outAll.find(a => resolver(a.name, col))
-          val cond = resolveSpecAgainst(props(GraftMvOps.JoinCondProp), outAll)
-            .getOrElse(return None)
-          val joined: LogicalPlan = others.foldLeft(sideRel: LogicalPlan)(
+          var child: LogicalPlan = others.foldLeft(sideRel: LogicalPlan)(
             (l, r) => Join(l, r, Inner, None, JoinHint.NONE))
-          var child: LogicalPlan = Filter(cond, joined)
+          props.get(GraftMvOps.JoinCondProp).foreach { on =>
+            child = Filter(resolveSpecAgainst(on, outAll).getOrElse(return None), child)
+          }
           extraPred.foreach { f =>
             child = Filter(f(sideRel.output).getOrElse(return None), child)
           }
-          filterCond.foreach { c =>
+          q.filter.foreach { c =>
             var ok = true
             val mapped = c.transformUp {
               case a: AttributeReference => at(a.name) match {
@@ -809,19 +703,21 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         // UNMOVED sides equals the recorded state by the empty-delta
         // gate; for a SECOND moved side the current state is exactly
         // what the decomposition wants — ΔA⋈B₁ absorbs the ΔA⋈ΔB
-        // cross term).
+        // cross term). The delta scan applies the in-range deletes,
+        // so rows a LATER epoch killed never enter.
         val m = movedOrdered.head
-        val mIdent = sideIdentOf(m).getOrElse(return None)
+        val mIdent = sideIdents(m)
         val otherRels: Seq[DataSourceV2Relation] =
-          sideNames.zipWithIndex.collect {
-            case (n, i) if i != m => rels(names.indexOf(n))
-          }
+          sides.zipWithIndex.collect { case ((n, _), i) if i != m => q.rel(n) }
         val (segs, _) = sideDeltas(m)
         val deltaPart: Option[LogicalPlan] =
           if (segs.isEmpty) None
           else joinPart(mIdent,
             GraftCatalog.segmentPinnedTable(mIdent, segs, newEqs).getOrElse(return None),
             otherRels, None, negate = false).orElse(return None)
+        // Retraction term: the rows the in-range deletes killed out of
+        // the v0 snapshot (pinned v0 segments + v0's own deletes,
+        // restricted to the new deletes' keys), aggregated NEGATED.
         val killedPart: Option[LogicalPlan] =
           if (newEqs.isEmpty) None
           else {
@@ -835,7 +731,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
             joinPart(mIdent,
               GraftCatalog.segmentPinnedTable(mIdent, s0.segments, s0.eqDeletes)
                 .getOrElse(return None),
-              othersFresh, Some(eqKillPredicate(newEqs, resolver)), negate = true)
+              othersFresh, Some(eqKillPredicate(newEqs)), negate = true)
               .orElse(return None)
           }
         // Second moved side's term (append-only by the gate above):
@@ -844,7 +740,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         // sides. All relations here are freshly minted: the query's
         // ExprIds were spent by the first delta branch.
         val delta2Part: Option[LogicalPlan] = movedOrdered.drop(1).headOption.map { m2 =>
-          val m2Ident = sideIdentOf(m2).getOrElse(return None)
+          val m2Ident = sideIdents(m2)
           val s0m = GraftCatalog.snapshotByVersion(mIdent, sideV0s(m))
             .getOrElse(return None)
           val mV0Rel = DataSourceV2Relation.create(
@@ -852,9 +748,9 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
               .getOrElse(return None),
             anyCatalog, Some(mIdent))
           val othersFresh2: Seq[DataSourceV2Relation] =
-            sideNames.zipWithIndex.collect {
-              case (n, i) if i != m && i != m2 =>
-                val r = rels(names.indexOf(n))
+            sides.zipWithIndex.collect {
+              case ((n, _), i) if i != m && i != m2 =>
+                val r = q.rel(n)
                 DataSourceV2Relation.create(r.table, r.catalog, r.identifier)
             }
           joinPart(m2Ident,
@@ -864,135 +760,26 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         }
         val branches: Seq[LogicalPlan] =
           mvPart +: (deltaPart ++ killedPart ++ delta2Part).toSeq
+        // Union is positional: all branches emit unionCols in order and
+        // must agree on types exactly (no silent coercion).
         if (branches.exists(_.output.map(_.dataType) != mvPart.output.map(_.dataType)))
           return None
         if (branches.length == 1) mvPart else Union(branches)
       }
     val merged =
       mergedAggregate(agg, groupAttrs, mvGroupCols, unionCols, specByKey, combined,
-        resolver, guardDeadSums = sumGuardCols.nonEmpty)
+        guardDeadSums = sumGuardCols.nonEmpty)
         .getOrElse(return None)
     withLiveness(merged, liveCntCol, combined, unionCols)
   }
 
-  private def tryJoinCandidate(
-      agg: Aggregate, groupAttrs: Seq[Attribute],
-      filterCond: Option[Expression], queryConjuncts: Seq[Expression],
-      combinedOutput: Seq[Attribute],
-      rels: Seq[DataSourceV2Relation], names: Seq[String],
-      mvIdent: Identifier, props: Map[String, String],
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    // Defensive prop reads (the refresh path's discipline): a join MV
-    // with hand-patched or cleared props must DECLINE the rewrite, not
-    // throw from inside the analyzer rule (which would fail the user's
-    // query).
-    val fact = props.getOrElse(GraftMvOps.SourceProp, return None)
-    val (dims, vds) = joinDefMatching(props, names).getOrElse(return None)
-    // The discovering relation must be the FACT (freshMvsFor keyed the
-    // MV by its SourceProp and proved THAT side fresh); a dim-keyed
-    // discovery of the same MV would skip the fact freshness check.
-    if (!names.contains(fact)) return None
-    if (!GraftCatalog.currentVersion(
-        fact.split('.')(0), fact.split('.')(1))
-      .map(_.toString).contains(props.getOrElse(GraftMvOps.VersionProp, return None)))
-      return None
-    // Every dim fresh at its recorded version.
-    dims.zip(vds).foreach { case (d, v) =>
-      val (dns, dtbl) = d.split('.') match {
-        case Array(a, b) => (a, b)
-        case _ => return None
-      }
-      if (!GraftCatalog.currentVersion(dns, dtbl).map(_.toString).contains(v))
-        return None
-    }
-    // ON conjunct set: per-conjunct exact structural match, order-free.
-    val mvCond = resolveSpecAgainst(
-      props.getOrElse(GraftMvOps.JoinCondProp, return None), combinedOutput)
-      .getOrElse(return None)
-    if (conjuncts(mvCond).map(norm).toSet != queryConjuncts.map(norm).toSet) return None
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
-    // FILTERED join MV: same subsumption gate as the single-source
-    // path, the MV's WHERE bound against the joined output (it may
-    // reference any side); matched conjuncts drop as already applied
-    // inside the MV, the residual continues into admissibility.
-    val residualCond: Option[Expression] =
-      residualAfterMvFilterOn(props, filterCond, combinedOutput).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    val exact = groupingMatch(groupAttrs, mvGroupCols, resolver).getOrElse(return None)
-    val specByKey = bindSpecs(props.getOrElse(GraftMvOps.AggsProp, return None), combinedOutput)
-      .getOrElse(return None).map(t => t._1 -> t._2).toMap
-    val anyRel = rels.head
-    val catalog = anyRel.catalog.get.asInstanceOf[TableCatalog]
-    val mvTable =
-      try catalog.loadTable(mvIdent)
-      catch { case NonFatal(_) => return None }
-    val mvRelation = DataSourceV2Relation.create(mvTable, anyRel.catalog, Some(mvIdent))
-    def mvAttr(col: String): Option[Attribute] =
-      mvRelation.output.find(a => resolver(a.name, col))
-    def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
-      .getOrElse(return None)
-    serveFromMv(agg, groupAttrs, exact, groupColFor, mvAttr, specByKey, mvChild)
-  }
-
-  private def tryCandidate(
-      agg: Aggregate, relation: DataSourceV2Relation, groupAttrs: Seq[Attribute],
-      filterCond: Option[Expression],
-      mvIdent: Identifier, props: Map[String, String],
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    // A JOIN MV pre-aggregates fact ⋈ dim — it can never serve an
-    // aggregate over the bare fact (the join multiplies/filters rows);
-    // only the join-shaped matcher may consider it.
-    if (props.contains(GraftMvOps.JoinCondProp)) return None
-    val mvGroupCols = props(GraftMvOps.GroupProp).split(',').toSeq
-    if (groupAttrs.map(_.name.toLowerCase).distinct.length != groupAttrs.length) return None
-    // FILTERED MV (the MV was defined with a WHERE): the query can be
-    // served only when its own WHERE SUBSUMES the MV's — structurally:
-    // every MV-filter conjunct appears (norm-equal) among the query's
-    // conjuncts, so rows(query) ⊆ rows(MV input). Matched conjuncts
-    // were already applied pre-aggregation inside the MV and are
-    // DROPPED; only the residual continues into the group-column
-    // admissibility check below. No WHERE on the query, or a WHERE
-    // missing any MV conjunct → the MV's input is a strict subset of
-    // what the query needs → no match. Exact-equality subsumption
-    // only: `a > 5` does not serve `a > 6` (deliberate — implication
-    // checking beyond norm-equality is where rewrites go wrong).
-    val residualCond: Option[Expression] =
-      residualAfterMvFilter(props, filterCond, relation).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    val exact = groupingMatch(groupAttrs, mvGroupCols, resolver).getOrElse(return None)
-    // Bind each MV aggregate spec against the SAME source relation and
-    // key it by normalized canonical SQL. Any unresolvable spec kills
-    // the candidate (never rewrite on a guess).
-    val specByKey = bindSpecs(props(GraftMvOps.AggsProp), relation.output)
-      .getOrElse(return None).map(t => t._1 -> t._2).toMap
-
-    // Load the MV relation up front; both paths bind to its output.
-    val catalog = relation.catalog.get.asInstanceOf[TableCatalog]
-    val mvTable =
-      try catalog.loadTable(mvIdent)
-      catch { case NonFatal(_) => return None }
-    val mvRelation = DataSourceV2Relation.create(mvTable, relation.catalog, Some(mvIdent))
-    def mvAttr(col: String): Option[Attribute] =
-      mvRelation.output.find(a => resolver(a.name, col))
-    def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
-
-    // (MV-filter conjuncts never reach the remap — they were dropped as
-    // already-applied inside the MV.)
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
-      .getOrElse(return None)
-    serveFromMv(agg, groupAttrs, exact, groupColFor, mvAttr, specByKey, mvChild)
-  }
-
-  /** Residual-WHERE admissibility, shared by all three candidate paths:
+  /** Residual-WHERE admissibility, shared by every serve path:
     * deterministic, subquery-free, and referencing MV GROUP columns
     * exclusively (the MV's rows partition exactly by those, so slicing
     * before or after pre-aggregation is the same set of input rows).
     */
   private def admissibleResidual(
-      cond: Option[Expression], mvGroupCols: Seq[String],
-      resolver: (String, String) => Boolean): Boolean = cond.forall { c =>
+      cond: Option[Expression], mvGroupCols: Seq[String]): Boolean = cond.forall { c =>
     c.deterministic &&
       c.find(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])
         .isEmpty &&
@@ -1004,8 +791,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * None = finer grouping the MV cannot serve.
     */
   private def groupingMatch(
-      groupAttrs: Seq[Attribute], mvGroupCols: Seq[String],
-      resolver: (String, String) => Boolean): Option[Boolean] = {
+      groupAttrs: Seq[Attribute], mvGroupCols: Seq[String]): Option[Boolean] = {
     val exact = groupAttrs.length == mvGroupCols.length &&
       mvGroupCols.forall(c => groupAttrs.exists(a => resolver(a.name, c)))
     if (exact) Some(true)
@@ -1037,8 +823,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     */
   private def remapOntoMv(
       cond: Option[Expression], mvGroupCols: Seq[String],
-      mvAttr: String => Option[Attribute], mvRelation: LogicalPlan,
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = cond match {
+      mvAttr: String => Option[Attribute],
+      mvRelation: LogicalPlan): Option[LogicalPlan] = cond match {
     case None => Some(mvRelation)
     case Some(c) =>
       var ok = true
@@ -1052,9 +838,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       if (ok) Some(Filter(mapped, mvRelation)) else None
   }
 
-  /** Build the serving plan over a fresh MV — shared by the
-    * single-source and JOIN candidates: EXACT grouping projects the MV
-    * columns; ROLLUP re-aggregates them with derivable shapes only
+  /** Build the serving plan over a fresh MV: EXACT grouping projects
+    * the MV columns; ROLLUP re-aggregates them with derivable shapes only
     * (sum→sum, count→sum-of-counts, min→min, max→max; DISTINCT/FILTER
     * and non-distributive aggs kill the candidate). Output ExprIds are
     * preserved so parent operators are oblivious.
@@ -1158,204 +943,6 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** STALE-TOLERANT rewrite (delta-union): an MV whose source has only
-    * APPENDED segments since the MV's recorded version v0 can still
-    * answer — as MV ⊎ re-aggregate(delta), where the delta scan reads
-    * EXACTLY the segments appended after v0 (a pinned scan; zone maps,
-    * blooms and column pruning apply). This is the incremental-query
-    * shape the freshness gate alone forfeits: at 100 TB the MV covers
-    * years of history and the delta is one day's appends, so the query
-    * costs MV-size + delta-size instead of a full base scan — WITHOUT
-    * requiring the user to refresh first.
-    *
-    * Extra gates beyond the fresh path:
-    *  - every commit v0..current must be append-only (no segment
-    *    removed, no deletion vector changed, schema identical) and the
-    *    snapshot chain fully retained — else decline (base scan);
-    *  - every QUERY aggregate must be merge-derivable (sum/count/min/
-    *    max, no DISTINCT/FILTER): the MV's partial and the delta's
-    *    partial are combined by a final merge aggregate, which rolls up
-    *    count via sum-of-counts exactly like the rollup path. This
-    *    holds even for an exact grouping match — a group can live in
-    *    both branches;
-    *  - consistency protocol against a concurrent refresh: ONE atomic
-    *    entry snapshot provides both the pinned MV segments and the
-    *    props (immutable `TableEntry` — data and recorded version
-    *    cannot tear), and the refresh-in-flight flag
-    *    ([[GraftMvOps.RefreshingProp]], set before the refresh MERGE,
-    *    cleared atomically with its version bump) closes the
-    *    data@v1/props@v0 window. The delta is then computed from the
-    *    snapshot's v0 to the source's current version — the answer is
-    *    the source at that serialization point regardless of what the
-    *    live MV entry does meanwhile.
-    */
-  private def tryStaleCandidate(
-      agg: Aggregate, relation: DataSourceV2Relation, groupAttrs: Seq[Attribute],
-      filterCond: Option[Expression], mvIdent: Identifier,
-      resolver: (String, String) => Boolean): Option[LogicalPlan] = {
-    val (mvTable, props) = GraftCatalog.mvEntrySnapshot(mvIdent).getOrElse(return None)
-    if (props.contains(GraftMvOps.RefreshingProp)) return None
-    // Join MVs decline the stale path: the appended-delta algebra is
-    // single-source; a fact delta must be re-JOINED against the dim
-    // (and a dim delta re-joined against the whole fact), which is the
-    // full-refresh work this path exists to avoid.
-    if (props.contains(GraftMvOps.JoinCondProp)) return None
-    val v0 = props.get(GraftMvOps.VersionProp) match {
-      case Some(s) if s.nonEmpty && s.forall(_.isDigit) => s.toLong
-      case _ => return None
-    }
-    val mvGroupCols =
-      props.get(GraftMvOps.GroupProp).map(_.split(',').toSeq).getOrElse(return None)
-    if (groupAttrs.map(_.name.toLowerCase).distinct.length != groupAttrs.length) return None
-    // FILTERED MVs: same subsumption gate as the fresh path. The MV
-    // branch applies only the RESIDUAL (the MV's conjuncts were applied
-    // pre-aggregation inside it); the DELTA branch applies the query's
-    // FULL predicate — delta rows are raw source rows, so the MV-filter
-    // conjuncts must be re-applied there, and they are exactly part of
-    // the query's own WHERE by the subsumption check.
-    val residualCond: Option[Expression] =
-      residualAfterMvFilter(props, filterCond, relation).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols, resolver)) return None
-    // Exact or coarser grouping both funnel into the one merge
-    // aggregate; finer grouping cannot be served.
-    if (groupingMatch(groupAttrs, mvGroupCols, resolver).isEmpty) return None
-
-    val srcIdent = relation.identifier.get
-    // Pure-append staleness first (supports min/max); else the
-    // EQUALITY-DELETE-tolerant walk (the MoR-upsert shape): appends
-    // plus registered deletes, served below with a RETRACTION branch.
-    val (delta, newEqs) = GraftCatalog.appendOnlyDeltaSince(
-        srcIdent.namespace()(0), srcIdent.name(), v0) match {
-      case Some(d) => (d, Vector.empty[GraftCatalog.EqDelete])
-      case None => GraftCatalog.appendOnlyEqDeltaSince(
-        srcIdent.namespace()(0), srcIdent.name(), v0).getOrElse(return None)
-    }
-    // Retraction gates: negation is exact only for SUM/COUNT (min/max
-    // cannot un-see a killed extremum), the kill predicate must be an
-    // exact single-column IN (multi-column tuples would need OR-of-
-    // conjunctions — decline), and the key lists must stay
-    // metadata-sized. Vanished groups are filtered by a liveness count
-    // below, so the MV must expose a plain count(*) column.
-    if (newEqs.nonEmpty && !retractionAdmissible(agg, newEqs)) return None
-
-    // Bind the MV's aggregate specs against the source relation and key
-    // them like the fresh path; each spec's raw text is remembered so
-    // it can be RE-bound against the delta relation below.
-    val aggsProp = props.getOrElse(GraftMvOps.AggsProp, return None)
-    val specs = bindSpecs(aggsProp, relation.output).getOrElse(return None)
-    val specByKey: Map[String, String] = specs.map(t => t._1 -> t._2).toMap
-    val itemByName: Map[String, String] = specs.map(t => t._2 -> t._3).toMap
-    val liveCntCol: Option[String] =
-      if (newEqs.isEmpty || groupAttrs.isEmpty) None
-      else Some(specByKey.getOrElse(countStarKey, return None))
-    // GLOBAL retraction with SUM outputs needs dead-group guards too —
-    // not to filter (a global aggregate always emits its one row) but
-    // to restore sum-over-empty = NULL when every contributing row was
-    // killed (the branches net 0, not NULL). Each SUM is guarded by
-    // the net count of ITS OWN operand (sumGuardCntCol); any sum
-    // without a sound guard column → decline rather than serve a
-    // wrong 0.
-    val sumGuardCols: Seq[String] =
-      if (newEqs.isEmpty || groupAttrs.nonEmpty) Nil
-      else agg.aggregateExpressions.flatMap {
-        case Alias(ae: AggregateExpression, _) => ae.aggregateFunction match {
-          case s: Sum => Seq(sumGuardCntCol(s, specByKey).getOrElse(return None))
-          case _ => Nil
-        }
-        case _ => Nil
-      }
-
-    // Plan the output shape FIRST: which MV agg columns the query
-    // needs, and that every query aggregate is merge-derivable.
-    val neededAggCols: Seq[String] =
-      (neededMergeCols(agg, mvGroupCols, specByKey, resolver).getOrElse(return None) ++
-        liveCntCol ++ sumGuardCols).distinct
-    val unionCols: Seq[String] = mvGroupCols ++ neededAggCols
-
-    // MV branch: pinned scan of the snapshot's segments, WHERE remapped
-    // onto MV columns, projected to the union shape.
-    val mvRelation = DataSourceV2Relation.create(mvTable, relation.catalog, Some(mvIdent))
-    def mvAttr(col: String): Option[Attribute] =
-      mvRelation.output.find(a => resolver(a.name, col))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation, resolver)
-      .getOrElse(return None)
-    val mvPart = Project(unionCols.map(c => mvAttr(c).getOrElse(return None)), mvChild)
-
-    // Branch builder shared by the delta and retraction parts: a
-    // pinned relation, the query's FULL predicate remapped (delta and
-    // killed rows are raw source rows — for a filtered MV the MV's
-    // conjuncts are part of it by subsumption), an extra branch
-    // predicate (the kill-key IN), specs re-bound, aggregates
-    // optionally NEGATED (the retraction branch contributes
-    // -count/-sum, exact for the sum/count-only gate above).
-    def sidePart(
-        table: org.apache.spark.sql.connector.catalog.Table,
-        extraPred: Option[Seq[Attribute] => Option[Expression]],
-        negate: Boolean): Option[LogicalPlan] = {
-      val rel = DataSourceV2Relation.create(table, relation.catalog, Some(srcIdent))
-      def at(col: String): Option[Attribute] =
-        rel.output.find(a => resolver(a.name, col))
-      var child: LogicalPlan = rel
-      extraPred.foreach { f =>
-        child = Filter(f(rel.output).getOrElse(return None), child)
-      }
-      filterCond.foreach { c =>
-        var ok = true
-        val mapped = c.transformUp {
-          case a: AttributeReference => at(a.name) match {
-            case Some(d) => d
-            case None => ok = false; a
-          }
-        }
-        if (!ok) return None
-        child = Filter(mapped, child)
-      }
-      val groups: Seq[NamedExpression] =
-        mvGroupCols.map(c => at(c).getOrElse(return None))
-      val aggs: Seq[NamedExpression] = neededAggCols.map { n =>
-        resolveSpecAgainst(itemByName(n), rel.output) match {
-          case Some(al: Alias) if !negate => al
-          case Some(al: Alias) =>
-            Alias(org.apache.spark.sql.catalyst.expressions.UnaryMinus(al.child), n)()
-          case _ => return None
-        }
-      }
-      Some(Aggregate(groups, groups ++ aggs, child))
-    }
-
-    // Delta branch: the appended segments as a pinned scan of the
-    // SOURCE (with the in-range deletes applied, so rows a LATER epoch
-    // killed never enter), aggregated to the same shape by the MV's
-    // own specs. Retraction branch: rows the in-range deletes killed
-    // out of the v0 snapshot (pinned v0 segments + v0's own deletes,
-    // restricted to the new deletes' keys), aggregated NEGATED.
-    val deltaPart: Option[LogicalPlan] =
-      if (delta.isEmpty) None
-      else sidePart(
-        GraftCatalog.segmentPinnedTable(srcIdent, delta, newEqs).getOrElse(return None),
-        None, negate = false).orElse(return None)
-    val killedPart: Option[LogicalPlan] =
-      if (newEqs.isEmpty) None
-      else {
-        val s0 = GraftCatalog.snapshotByVersion(srcIdent, v0).getOrElse(return None)
-        sidePart(
-          GraftCatalog.segmentPinnedTable(srcIdent, s0.segments, s0.eqDeletes)
-            .getOrElse(return None),
-          Some(eqKillPredicate(newEqs, resolver)), negate = true).orElse(return None)
-      }
-    val branches: Seq[LogicalPlan] = mvPart +: (deltaPart ++ killedPart).toSeq
-    // Union is positional: all branches emit unionCols in order and
-    // must agree on types exactly (no silent coercion).
-    if (branches.exists(_.output.map(_.dataType) != mvPart.output.map(_.dataType)))
-      return None
-    val combined: LogicalPlan =
-      if (branches.length == 1) mvPart else Union(branches)
-    val merged =
-      mergedAggregate(agg, groupAttrs, mvGroupCols, unionCols, specByKey, combined,
-        resolver, guardDeadSums = sumGuardCols.nonEmpty)
-        .getOrElse(return None)
-    withLiveness(merged, liveCntCol, combined, unionCols)
-  }
 
   /** Exact kill predicate for the retraction branch: the rows of a
     * pinned snapshot a set of in-range equality deletes killed —
@@ -1364,8 +951,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * The returned builder binds against the branch's own output.
     */
   private def eqKillPredicate(
-      newEqs: Seq[GraftCatalog.EqDelete],
-      resolver: (String, String) => Boolean): Seq[Attribute] => Option[Expression] = {
+      newEqs: Seq[GraftCatalog.EqDelete]): Seq[Attribute] => Option[Expression] = {
     out =>
       val perDelete: Seq[Option[Expression]] =
         newEqs.groupBy(_.keyCols.head).toSeq.map { case (kc, ds) =>
@@ -1387,8 +973,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         .reduce(org.apache.spark.sql.catalyst.expressions.Or)).filter(_.resolved)
   }
 
-  /** Retraction gates shared by the single-source and join stale
-    * paths: negation is exact only for SUM/COUNT (and AVG, which
+  /** Retraction gates of the stale path: negation is exact only for SUM/COUNT (and AVG, which
     * merges through its sum+count components), the kill predicate
     * needs single-column keys, and the key lists must stay
     * metadata-sized — capped by the refresh side's
@@ -1452,8 +1037,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * can't merge and the delta-union shape is inadmissible.
     */
   private def neededMergeCols(
-      agg: Aggregate, mvGroupCols: Seq[String], specByKey: Map[String, String],
-      resolver: (String, String) => Boolean): Option[Seq[String]] = {
+      agg: Aggregate, mvGroupCols: Seq[String],
+      specByKey: Map[String, String]): Option[Seq[String]] = {
     val cols = agg.aggregateExpressions.flatMap {
       case a: Attribute if mvGroupCols.exists(resolver(_, a.name)) => None
       case Alias(child: Attribute, _) if mvGroupCols.exists(resolver(_, child.name)) => None
@@ -1543,15 +1128,12 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** Final merge aggregate at the QUERY's grain over `combined` (whose
     * output is positionally `unionCols`), output ExprIds preserved so
-    * parent operators are oblivious — shared by the single-source and
-    * join stale-delta paths.
+    * parent operators are oblivious.
     */
   private def mergedAggregate(
       agg: Aggregate, groupAttrs: Seq[Attribute], mvGroupCols: Seq[String],
       unionCols: Seq[String], specByKey: Map[String, String],
-      combined: LogicalPlan,
-      resolver: (String, String) => Boolean,
-      guardDeadSums: Boolean): Option[LogicalPlan] = {
+      combined: LogicalPlan, guardDeadSums: Boolean): Option[LogicalPlan] = {
     def unionAttr(col: String): Attribute = combined.output(unionCols.indexOf(col))
     def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
     val outputs: Seq[NamedExpression] = agg.aggregateExpressions.map {
@@ -1619,21 +1201,13 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** FILTERED-MV subsumption: the query's residual predicate after
-    * dropping the MV's own filter conjuncts. `None` = the candidate is
+    * dropping the MV's own filter conjuncts, the MV's WHERE bound
+    * against `output` — every side's columns, since a filtered join
+    * MV's predicate may reference any side. `None` = the candidate is
     * inadmissible (no query WHERE, a missing MV conjunct, or a
     * non-deterministic/unresolvable MV filter); `Some(residual)` = the
     * conjuncts still to apply on the MV's rows (possibly none). For an
     * unfiltered MV the query predicate passes through whole.
-    */
-  private def residualAfterMvFilter(
-      props: Map[String, String], filterCond: Option[Expression],
-      relation: DataSourceV2Relation): Option[Option[Expression]] =
-    residualAfterMvFilterOn(props, filterCond, relation.output)
-
-  /** Same subsumption against an explicit attribute set — join-MV
-    * candidates bind the MV's WHERE against the union of all joined
-    * sides' outputs (a filtered join MV's predicate may reference any
-    * side).
     */
   private def residualAfterMvFilterOn(
       props: Map[String, String], filterCond: Option[Expression],
@@ -1651,9 +1225,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
           .reduceOption(org.apache.spark.sql.catalyst.expressions.And))
     }
 
-  /** Minimal spec binder against an explicit attribute set (a source
-    * relation's output, or on the join-MV path the UNION of both sides'
-    * outputs): column references resolve against `output`, functions
+  /** Minimal spec binder against an explicit attribute set (the
+    * outputs of a query's relations, or of a delta branch's): column references resolve against `output`, functions
     * through the session registry (aggregates wrapped exactly as the
     * analyzer would), `count(*)` → `count(1)`, timezone-needing casts
     * stamped with the session zone. Anything it cannot bind returns
@@ -1663,7 +1236,6 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val parsed =
       try session.sessionState.sqlParser.parseExpression(spec)
       catch { case NonFatal(_) => return None }
-    val resolver = conf.resolver
     var failed = false
     val bound = parsed.transformUp {
       case u: UnresolvedAttribute if u.nameParts.length == 1 =>

@@ -1563,7 +1563,7 @@ object SourceQueries {
     * verified — the MV is built over the first batch, a second batch is
     * appended and NO refresh runs. The rewrite answers the aggregate as
     * MV ⊎ re-aggregate(appended segments only): `MvRewriteRule
-    * .tryStaleCandidate` pins the MV entry snapshot, proves the history
+    * .tryStaleJoinCandidate` pins the MV entry snapshot, proves the history
     * append-only via the snapshot-chain diff, and merges with
     * sum/sum-of-counts/min/max (delta-only scan plan-asserted in
     * `MaterializedViewSpec`). The DuckDB oracle recomputes from the raw

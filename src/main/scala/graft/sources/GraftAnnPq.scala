@@ -19,7 +19,7 @@ private[graft] object GraftAnnPq {
     */
   def loadPqRow(
       spark: SparkSession, catName: String, ns: String, index: String): DataFrame =
-    KMeansCodebook.packSubspaces(spark.table(s"$catName.$ns.${index}_pq"))
+    KMeansCodebook.packSubspaces(spark.table(GraftMvOps.fqn(catName, ns, s"${index}_pq")))
 
   /** `df` + the m stored-code columns, encoded against the PERSISTED
     * sub-books (broadcast one-row cross join — map-side only; the

@@ -1986,24 +1986,20 @@ object GraftCatalog {
     store.asScala.exists(_._2.props.contains(GraftMvOps.SourceProp))
   }
 
-  /** Materialized views of `sourceNs.sourceTbl` that are FRESH (their
-    * recorded source version is the source's current version) — the
-    * candidates the transparent MV rewrite may substitute for an
-    * aggregate over the source. Deterministic order (by identifier) so
-    * plan choice is stable across runs.
+  /** Materialized views whose source (a join MV's fact) is
+    * `sourceNs.sourceTbl`, fresh or stale — the transparent MV
+    * rewrite's candidates, which it matches and judges per side.
+    * Smallest MV first, identifier tiebreak, so plan choice is stable
+    * across runs: when several MVs can serve a query, the fewest
+    * pre-aggregated rows win.
     */
-  private[graft] def freshMvsFor(
+  private[graft] def mvsFor(
       sourceNs: String, sourceTbl: String): Seq[(Identifier, Map[String, String])] = {
     ensureLoaded()
-    val cur = currentVersion(sourceNs, sourceTbl)
     val src = s"$sourceNs.$sourceTbl"
     store.asScala.toSeq.collect {
-      case (id, e) if e.props.get(GraftMvOps.SourceProp).contains(src) &&
-          cur.exists(v => e.props.get(GraftMvOps.VersionProp).contains(v.toString)) =>
+      case (id, e) if e.props.get(GraftMvOps.SourceProp).contains(src) =>
         (id, e.props, e.segments.map(_.liveRows).sum)
-    // Smallest MV first (identifier tiebreak keeps plan choice stable):
-    // when several fresh MVs can serve a query, the fewest
-    // pre-aggregated rows win.
     }.sortBy { case (id, _, rows) => (rows, id.toString) }
       .map { case (id, props, _) => (id, props) }
   }
@@ -2019,26 +2015,6 @@ object GraftCatalog {
       case g: GraftCatalogTable => g.isPinned
       case _ => false
     }
-
-  /** Stale MVs of `sourceNs.sourceTbl` (recorded version strictly
-    * behind the source's current version) — delta-union rewrite
-    * candidates, smallest first like [[freshMvsFor]]. Discovery only:
-    * the per-candidate consistency protocol lives in `MvRewriteRule`
-    * (entry snapshot + refresh-in-flight check + version re-read).
-    */
-  private[graft] def staleMvsFor(
-      sourceNs: String, sourceTbl: String): Seq[(Identifier, Map[String, String])] = {
-    ensureLoaded()
-    val cur = currentVersion(sourceNs, sourceTbl).getOrElse(return Nil)
-    val src = s"$sourceNs.$sourceTbl"
-    store.asScala.toSeq.collect {
-      case (id, e) if e.props.get(GraftMvOps.SourceProp).contains(src) &&
-          e.props.get(GraftMvOps.VersionProp).exists(v =>
-            v.nonEmpty && v.forall(_.isDigit) && v.toLong < cur) =>
-        (id, e.props, e.segments.map(_.liveRows).sum)
-    }.sortBy { case (id, _, rows) => (rows, id.toString) }
-      .map { case (id, props, _) => (id, props) }
-  }
 
   /** One CONSISTENT view of an MV for the stale-delta rewrite: a
     * read-only table pinned to the entry's segment list plus the SAME
@@ -4034,25 +4010,6 @@ object GraftCatalog {
   private[sources] def entryExists(ident: Identifier): Boolean =
     store.containsKey(ident)
 
-  /** Split a comma list at paren depth 0 only — `bucket(16,k)` is one
-    * field, `days(ts),bucket(16,k)` is two.
-    */
-  private[sources] def splitTopLevel(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case '(' => depth += 1; cur += '('
-      case ')' => depth -= 1; cur += ')'
-      case ',' if depth == 0 =>
-        if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-        cur.clear()
-      case c => cur += c
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.result()
-  }
-
   /** Open WAP branches of `base`: (branch name, base version,
     * segments, live rows) — the `branches` metadata table's rows.
     */
@@ -4208,9 +4165,9 @@ object GraftCatalog {
   private[sources] def compactKeysFor(
       ident: Identifier, where: String): Option[Set[(Seq[String], IndexedSeq[Any])]] = {
     // TOP-LEVEL commas only: 'bucket(16,k)=3,d=2024-01-01' is two
-    // clauses and bucket's inner comma must not split it (same grammar
-    // as PARTITIONED BY / set_partitioning).
-    val clauses = splitTopLevel(where).map(_.trim).filter(_.nonEmpty)
+    // clauses and bucket's inner comma must not split it, nor a comma
+    // inside a quoted value (k='a,b'); same splitter as set_partitioning.
+    val clauses = GraftMvOps.splitTop(where)
     if (clauses.isEmpty) return None
     val entry = store.get(ident)
     if (entry == null) throw new NoSuchTableException(ident)

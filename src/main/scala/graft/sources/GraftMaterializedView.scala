@@ -216,7 +216,11 @@ private[graft] object GraftMvOps {
     Some((fact, dimsConds.map(_._1), dimsConds.map(_._2)))
   }
 
-  private def fqn(cat: String, ns: String, tbl: String): String =
+  /** `cat.ns.tbl` with every part backquoted, for SQL text and the
+    * DataFrame reader/writer: a namespace or table name that needs
+    * quoting (`my-ns`) must not fail to parse.
+    */
+  private[sources] def fqn(cat: String, ns: String, tbl: String): String =
     s"${q(cat)}.${q(ns)}.${q(tbl)}"
 
   /** DataFrame over EXACTLY `segs` of `ident` — the delta-scan

@@ -293,7 +293,7 @@ private[graft] object GraftCopyIntoProcedure extends GraftProcedure("copy_into",
     }.toMap
     val spark = org.apache.spark.sql.SparkSession.active
     val catName = GraftCatalog.sessionCatalogName(spark, name())
-    val tbl = s"$catName.$ns.$table"
+    val tbl = GraftMvOps.fqn(catName, ns, table)
     val targetSchema = spark.table(tbl).schema // throws NoSuchTable if absent
 
     // FS listing: a glob expands (dirs in the expansion list one
@@ -416,7 +416,7 @@ private[graft] object GraftSetPartitioningProcedure extends GraftProcedure("set_
     val ident = identAt(input, 0)
     // TOP-LEVEL commas only: 'days(ts),bucket(16,k)' is two fields,
     // and bucket's inner comma must not split it.
-    val cols = GraftCatalog.splitTopLevel(str(input, 2))
+    val cols = GraftMvOps.splitTop(str(input, 2))
     val (v, old) = GraftCatalog.setPartitioning(ident, cols)
     Seq((ident.toString, v, old.mkString(","), cols.mkString(",")))
   }
@@ -596,7 +596,7 @@ private[graft] object GraftAnalyzeProcedure extends GraftProcedure("analyze",
     val (ns, table) = (str(input, 0), str(input, 1))
     val spark = org.apache.spark.sql.SparkSession.active
     val catName = GraftCatalog.sessionCatalogName(spark, name())
-    val df = spark.table(s"$catName.$ns.$table") // throws NoSuchTable if absent
+    val df = spark.table(GraftMvOps.fqn(catName, ns, table)) // throws NoSuchTable if absent
     val cols = df.columns.toSeq
     val aggs = cols.flatMap { c =>
       Seq(approx_count_distinct(col(c)).as(s"ndv_$c"),
@@ -645,7 +645,7 @@ private[graft] object GraftTrainAnnProcedure extends GraftProcedure("train_ann",
       .train(spark.table(source), input.getInt(3), input.getInt(4))
       .select(explode(col("cents")).as("c"))
       .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-    cb.writeTo(s"$catName.$ns.$table").createOrReplace()
+    cb.writeTo(GraftMvOps.fqn(catName, ns, table)).createOrReplace()
     Seq((identAt(input, 1).toString, GraftCatalog.rowCount(ns, table)))
   }
 }
@@ -685,7 +685,7 @@ private[graft] object GraftTrainAnnPqProcedure extends GraftProcedure("train_ann
       .select(posexplode(col("pq")).as(Seq("s", "book")))
       .select(col("s"), explode(col("book")).as("c"))
       .select(col("s"), col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-    pqRows.writeTo(s"$catName.$ns.$table").createOrReplace()
+    pqRows.writeTo(GraftMvOps.fqn(catName, ns, table)).createOrReplace()
     Seq((identAt(input, 1).toString, m.toLong, GraftCatalog.rowCount(ns, table)))
   }
 }
@@ -743,7 +743,8 @@ private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_
     // delivers exactly what landed after v.
     val v = GraftCatalog.currentVersion(srcParts(0), srcParts(1)).getOrElse(
       throw new NoSuchTableException(Identifier.of(Array(srcParts(0)), srcParts(1))))
-    val src = spark.sql(s"SELECT * FROM $catName.$source VERSION AS OF $v")
+    val src = spark.sql(
+      s"SELECT * FROM ${GraftMvOps.fqn(catName, srcParts(0), srcParts(1))} VERSION AS OF $v")
     require(src.columns.contains("vec_id") && src.columns.contains("embedding"),
       s"build_ann_index source $source needs (vec_id, embedding) columns")
     // k <= 0: auto-size lists to ceil(sqrt(n)) (floor 16) — the IVF
@@ -761,7 +762,7 @@ private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_
     val cbRow = graft.operators.KMeansCodebook.train(src, k, iters)
     cbRow.select(explode(col("cents")).as("c"))
       .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-      .writeTo(s"$catName.$ns.${index}_cb").createOrReplace()
+      .writeTo(GraftMvOps.fqn(catName, ns, s"${index}_cb")).createOrReplace()
     // PQ-coded index (pq_m > 0): train the m sub-codebooks ONCE (one
     // extra pass via trainSubspaces), persist them as `<index>_pq`
     // (s, cid, cvec), and store the m PQ CODES on every posting row —
@@ -783,7 +784,7 @@ private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_
         pqRow.select(posexplode(col("pq")).as(Seq("s", "book")))
           .select(col("s"), explode(col("book")).as("c"))
           .select(col("s"), col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-          .writeTo(s"$catName.$ns.${index}_pq").createOrReplace()
+          .writeTo(GraftMvOps.fqn(catName, ns, s"${index}_pq")).createOrReplace()
         Some(sub)
       }
     val assigned0 = src.crossJoin(broadcast(cbRow))
@@ -792,13 +793,13 @@ private[graft] object GraftBuildAnnIndexProcedure extends GraftProcedure("build_
           .bestCentroid(spark, col("embedding"), col("cents")).as("list_id"): _*)
     val assigned = pqSub.fold(assigned0)(sub =>
       GraftAnnPq.withCodes(spark, assigned0, catName, ns, index, pqM, sub))
-    assigned.writeTo(s"$catName.$ns.$index")
+    assigned.writeTo(GraftMvOps.fqn(catName, ns, index))
       .partitionedBy(col("list_id")).createOrReplace()
     // Train-time mean assignment similarity — the drift BASELINE
     // refresh_ann compares each new batch against. One agg pass over
     // the freshly written index (build-time cost, never per query).
-    val cb = spark.table(s"$catName.$ns.${index}_cb")
-    val baseSim = spark.table(s"$catName.$ns.$index")
+    val cb = spark.table(GraftMvOps.fqn(catName, ns, s"${index}_cb"))
+    val baseSim = spark.table(GraftMvOps.fqn(catName, ns, index))
       .join(broadcast(cb), col("list_id") === col("cid"))
       .agg(avg(graft.functions.CosineSim(spark, col("embedding"), col("cvec"))))
       .head().getDouble(0)
@@ -873,16 +874,16 @@ private[graft] object GraftRefreshAnnProcedure extends GraftProcedure("refresh_a
         .select(col("vec_id"))
       val nDel = delIds.count()
       if (nDel > 0) {
-        val tmp = s"graft_refresh_ann_dels_${ns}_$index"
+        val tmp = s"graft_refresh_ann_dels_${ns}_$index".replaceAll("\\W", "_")
         delIds.createOrReplaceTempView(tmp)
         spark.sql(
-          s"DELETE FROM $catName.$ns.$index WHERE vec_id IN (SELECT vec_id FROM $tmp)")
+          s"DELETE FROM ${GraftMvOps.fqn(catName, ns, index)} WHERE vec_id IN (SELECT vec_id FROM $tmp)")
         spark.catalog.dropTempView(tmp)
       }
       // Index-only columns (the list partition + stored PQ codes) are
       // COMPUTED here, never read from the feed — the change feed
       // carries source columns only.
-      val idxCols = spark.table(s"$catName.$ns.$index").columns
+      val idxCols = spark.table(GraftMvOps.fqn(catName, ns, index)).columns
         .filterNot(c => c == "list_id" || c.startsWith("code_"))
       val adds = feed
         .filter(col("_change_type").isin("insert", "update_postimage"))
@@ -891,7 +892,7 @@ private[graft] object GraftRefreshAnnProcedure extends GraftProcedure("refresh_a
       // serving path uses, so assignment tie-breaks can never diverge
       // between build, refresh and serve.
       val cbRow = graft.operators.KMeansCodebook
-        .packCents(spark.table(s"$catName.$ns.${index}_cb"))
+        .packCents(spark.table(GraftMvOps.fqn(catName, ns, s"${index}_cb")))
       val assigned0 = adds.crossJoin(broadcast(cbRow))
         .select(idxCols.map(col).toIndexedSeq :+
           graft.operators.KMeansCodebook
@@ -908,11 +909,11 @@ private[graft] object GraftRefreshAnnProcedure extends GraftProcedure("refresh_a
         .persist() // consumed twice: append + drift aggregate
       try {
         val nAdd = assigned.count()
-        if (nAdd > 0) assigned.writeTo(s"$catName.$ns.$index").append()
+        if (nAdd > 0) assigned.writeTo(GraftMvOps.fqn(catName, ns, index)).append()
         val drift =
           if (nAdd == 0) 1.0
           else {
-            val cb = spark.table(s"$catName.$ns.${index}_cb")
+            val cb = spark.table(GraftMvOps.fqn(catName, ns, s"${index}_cb"))
             val newSim = assigned
               .join(broadcast(cb), col("list_id") === col("cid"))
               .agg(avg(graft.functions.CosineSim(spark, col("embedding"), col("cvec"))))
@@ -965,7 +966,7 @@ private[graft] object GraftVerifyConstraintsProcedure extends GraftProcedure(
     val ident = identAt(input, 0)
     val spark = org.apache.spark.sql.SparkSession.active
     val catName = GraftCatalog.sessionCatalogName(spark, name())
-    val df = spark.table(s"$catName.${str(input, 0)}.${str(input, 1)}")
+    val df = spark.table(GraftMvOps.fqn(catName, str(input, 0), str(input, 1)))
     val constraints = GraftCatalog.constraintsOf(ident)
 
     // ALL non-FK constraints fold into ONE scan + ONE shuffle: a table

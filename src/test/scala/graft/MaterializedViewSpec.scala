@@ -18,6 +18,12 @@ class MaterializedViewSpec extends AnyFunSuite {
     spark.sql(s"SELECT g, cnt, total FROM $tbl ORDER BY g")
       .as[(String, Long, Double)].collect().toSeq
 
+  /** `body` with the MV rewrite off: the direct answer that a
+    * rewritten one is compared with.
+    */
+  private def rewriteOff[T](body: => T): T =
+    SessionConf.withConfs(spark)(graft.plans.MvRewrite.EnabledKey -> "false")(body)
+
   private def call(sql: String): (String, Long, Long) = {
     val r = spark.sql(sql).select("mode", "groups", "source_version")
       .as[(String, Long, Long)].head()
@@ -339,8 +345,7 @@ class MaterializedViewSpec extends AnyFunSuite {
 
     // Key-cap fallback: past spark.graft.mvRefresh.eqKeyLimit the
     // refresh degrades to full RTAS — still correct.
-    spark.conf.set("spark.graft.mvRefresh.eqKeyLimit", "1")
-    try {
+    SessionConf.withConfs(spark)("spark.graft.mvRefresh.eqKeyLimit" -> "1") {
       upsert((1L, "f", 100L), (6L, "f", 200L))
       val (m5, _, _) = call("CALL graft.system.refresh_mv('mveq', 'agg')")
       assert(m5 == "full", s"eq keys past the cap must full-refresh, got $m5")
@@ -348,7 +353,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         "SELECT g, count(*) AS cnt, CAST(sum(v) AS BIGINT) FROM graft.mveq.base GROUP BY g ORDER BY g")
         .as[(String, Long, Long)].collect().toSeq
       assert(agg() == direct5)
-    } finally spark.conf.unset("spark.graft.mvRefresh.eqKeyLimit")
+    }
     spark.sql("DROP TABLE graft.mveq.agg")
     spark.sql("DROP TABLE graft.mveq.base")
   }
@@ -428,8 +433,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     // pass. With the delta's join keys pushed as a literal IN, the
     // fact scan must plan strictly fewer splits than the fact has.
     spark.sql("INSERT INTO graft.mvdp.dim VALUES (5, 'extra')")
-    spark.conf.set("spark.graft.mvRefresh.debug", "true")
-    try {
+    SessionConf.withConfs(spark)("spark.graft.mvRefresh.debug" -> "true") {
       val (mode, _, _) = call("CALL graft.system.refresh_mv('mvdp', 'agg')")
       assert(mode == "incremental", s"dim append must stay incremental, got $mode")
       val factSegs = graft.sources.GraftCatalog.segmentCount("mvdp", "fact")
@@ -440,7 +444,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         s"dim-delta term must plan strictly fewer fact splits than the $factSegs the table has (got $factScans)")
       assert(factScans.exists(_.planned == 1),
         s"a 1-key dim delta should plan exactly one fact split, got $factScans")
-    } finally spark.conf.unset("spark.graft.mvRefresh.debug")
+    }
     val direct = spark.sql(
       """SELECT seg, count(*) AS cnt, sum(amt) AS total
         |FROM graft.mvdp.fact JOIN graft.mvdp.dim ON ck = dk
@@ -553,10 +557,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     val q = """SELECT seg, count(*) AS c, sum(amt) AS s
               |FROM graft.mvda.fact JOIN graft.mvda.dim ON ck = dk
               |GROUP BY seg""".stripMargin
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
     val served = spark.sql(q)
     val s = scans(served)
     assert(s.contains("agg"), s"dim-append staleness must be MV-served, scans: $s")
@@ -642,10 +643,7 @@ class MaterializedViewSpec extends AnyFunSuite {
               |FROM graft.mvs2.fact JOIN graft.mvs2.cust ON ck = cck
               |JOIN graft.mvs2.nat ON cnk = nk
               |GROUP BY nname""".stripMargin
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
     val served = spark.sql(q)
     val sc = scans(served)
     assert(sc.contains("agg"),
@@ -696,10 +694,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         .option("graft.upsert.keys", "k").append()
     val q = "SELECT g, count(*) AS c, sum(v) AS s FROM graft.mvsq.base GROUP BY g"
     def check(expectServed: Boolean): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
       val served = spark.sql(q)
       val s = scans(served)
       assert(s.contains("agg") == expectServed,
@@ -771,10 +766,7 @@ class MaterializedViewSpec extends AnyFunSuite {
               |FROM graft.mvju.fact JOIN graft.mvju.dim ON ck = dk
               |GROUP BY seg""".stripMargin
     def check(expectServed: Boolean): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
       val served = spark.sql(q)
       assert(scans(served).contains("agg") == expectServed,
         s"MV-served=$expectServed expected, scans: ${scans(served)}")
@@ -852,10 +844,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         }.groupBy(_._1).values.map(_.last).toSeq // upserts are key-unique per batch
         rows.toDF("k", "g", "v").writeTo("graft.mvrs.base")
           .option("graft.upsert.keys", "k").append()
-        spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-        val direct =
-          try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-          finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+        val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
         val served = spark.sql(q)
         assert(scans(served).contains("agg"),
           s"seed $seed epoch $epoch: retraction path must serve, scans: ${scans(served)}")
@@ -863,20 +852,16 @@ class MaterializedViewSpec extends AnyFunSuite {
           s"seed $seed epoch $epoch: retraction answer diverged")
         // The global aggregate must track too (no liveness filter).
         val g0 = spark.sql("SELECT count(*) AS c, sum(v) AS s FROM graft.mvrs.base")
-        spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-        val g0d =
-          try spark.sql("SELECT count(*) AS c, sum(v) AS s FROM graft.mvrs.base").collect().toSeq
-          finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+        val g0d = rewriteOff {
+          spark.sql("SELECT count(*) AS c, sum(v) AS s FROM graft.mvrs.base").collect().toSeq
+        }
         assert(g0.collect().toSeq == g0d, s"seed $seed epoch $epoch: global diverged")
       }
       // A refresh mid-stream resets the baseline; the fresh path takes
       // over and the MV equals the from-scratch aggregate.
       val (mode, _, _) = call("CALL graft.system.refresh_mv('mvrs', 'agg')")
       assert(mode == "incremental", s"seed $seed: refresh mode $mode")
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
       assert(spark.sql("SELECT g, cnt AS c, total AS s FROM graft.mvrs.agg")
         .collect().toSeq.sortBy(_.getString(0)) == direct,
         s"seed $seed: refreshed MV diverged from the from-scratch aggregate")
@@ -903,10 +888,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       """CALL graft.system.create_mv('mvgs', 'agg', 'mvgs.base', 'a,b',
         |  'count(*) AS cnt, sum(v) AS total, min(v) AS lo, max(v) AS hi')""".stripMargin)
     def check(q: String): Unit = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq)
       val served = spark.sql(q)
       val s = scans(served)
       assert(s.contains("agg"), s"grouping-sets query must be MV-served, scans: $s ($q)")
@@ -960,10 +942,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         |FROM graft.mvgs.fact JOIN graft.mvgs.dim ON ck = dk
         |GROUP BY ROLLUP(seg, st)
         |ORDER BY seg NULLS FIRST, st NULLS FIRST""".stripMargin
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val jdirect =
-      try spark.sql(jq).collect().toSeq
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val jdirect = rewriteOff(spark.sql(jq).collect().toSeq)
     val jserved = spark.sql(jq)
     val js = scans(jserved)
     assert(js.contains("jagg") && !js.contains("fact") && !js.contains("dim"),
@@ -1021,10 +1000,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       """SELECT b, a, count(*) AS c
         |FROM graft.mvgd.base WHERE a IS NOT NULL GROUP BY CUBE(b, a)""".stripMargin)
     for (q <- lattice) {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().map(_.toString).sorted.toSeq
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().map(_.toString).sorted.toSeq)
       val served = spark.sql(q)
       val s = scans(served)
       assert(s.contains("agg") && !s.contains("base"),
@@ -1061,10 +1037,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     assert(!hasAgg(rewritten), "matching aggregate should be answered by the MV")
     assert(scannedTables(rewritten).exists(_.contains("agg")))
     // ...and returns exactly what the un-rewritten aggregate returns.
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(q).collect().toSeq
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val direct = rewriteOff(spark.sql(q).collect().toSeq)
     assert(rewritten.collect().toSeq.sortBy(_.getString(0)) == direct.sortBy(_.getString(0)))
     // count(*) ≡ count(1); column order and aliases immaterial.
     val variant = spark.sql(
@@ -1133,10 +1106,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     val rolled = spark.sql(q)
     assert(scans(rolled).exists(_.contains("agg")) && !scans(rolled).exists(_.contains("base")),
       s"rollup must read the MV, scanned: ${scans(rolled)}")
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
     assert(rolled.collect().toSeq.sortBy(_.getString(0)) == direct)
     assert(direct.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       == Seq(("eu", 3L, 13L, 1L, 10L), ("us", 2L, 12L, 5L, 7L)))
@@ -1224,13 +1194,8 @@ class MaterializedViewSpec extends AnyFunSuite {
     val deltaSegs = totalSegs - segsAtMv
     assert(deltaSegs > 0 && segsAtMv > 0)
     val q = "SELECT g, count(*) AS c, sum(v) AS s FROM graft.sd.base GROUP BY g"
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(q).collect().toSeq.sortBy(_.getString(0))
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    val direct = rewriteOff(spark.sql(q).collect().toSeq.sortBy(_.getString(0)))
+    SessionConf.withConfs(spark)("spark.sql.adaptive.enabled" -> "false") {
       val df = spark.sql(q)
       val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
       val mvScan = scans.filter(_.output.exists(_.name == "cnt"))
@@ -1283,7 +1248,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         "non-append history must not be stale-delta-served")
       assert(afterDml.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSeq.sortBy(_._1) == Seq(("a", 1L, 2L), ("b", 2L, 30L), ("c", 2L, 12L)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     spark.sql("DROP TABLE graft.sd.agg")
     spark.sql("DROP TABLE graft.sd.base")
   }
@@ -1338,12 +1303,11 @@ class MaterializedViewSpec extends AnyFunSuite {
     runs.foreach(Await.result(_, 120.seconds))
     // Rewrite OFF for the reference aggregate — otherwise it would be
     // served from the MV and the comparison would be circular.
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(
+    val direct = rewriteOff {
+      spark.sql(
         "SELECT g, count(*) AS cnt, sum(v) AS total FROM graft.mvc.base GROUP BY g ORDER BY g")
         .collect().toSeq
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    }
     // Compare through a rewrite-free read of the MV table itself.
     val mv = spark.sql("SELECT g, cnt, total FROM graft.mvc.agg ORDER BY g").collect().toSeq
     assert(mv == direct)
@@ -1525,9 +1489,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     // AQE wraps the plan and hides BatchScanExec until execution —
     // disable it for the plan-shape assertions (the sibling stale test's
     // discipline).
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    SessionConf.withConfs(spark)("spark.sql.adaptive.enabled" -> "false") {
       val df = spark.sql(q)
       val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
       assert(scans.exists(_.output.exists(_.name == "cnt")),
@@ -1545,7 +1507,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         "unfiltered query wrongly served by the stale filtered MV")
       assert(miss.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
         == Seq(("a", 2L), ("b", 2L), ("c", 1L)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     spark.sql("DROP TABLE graft.sdf.agg")
     spark.sql("DROP TABLE graft.sdf.base")
   }
@@ -1572,11 +1534,9 @@ class MaterializedViewSpec extends AnyFunSuite {
     val q = """SELECT seg, count(*) AS c, sum(v) AS s
               |FROM graft.mvj.fact JOIN graft.mvj.dim ON k = dk
               |GROUP BY seg""".stripMargin
-    def direct(): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      try spark.sql(q).collect().map(r =>
+    def direct(): Seq[(String, Long, Long)] = rewriteOff {
+      spark.sql(q).collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
     }
     // Fresh on both sides → MV-served, base tables untouched.
     val hit = spark.sql(q)
@@ -1663,14 +1623,12 @@ class MaterializedViewSpec extends AnyFunSuite {
     def mv(): Seq[(String, Long, Long)] =
       spark.sql("SELECT seg, cnt, total FROM graft.mvj2.agg ORDER BY seg")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    def direct(): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      try spark.sql(
+    def direct(): Seq[(String, Long, Long)] = rewriteOff {
+      spark.sql(
         """SELECT seg, count(*) AS c, sum(v) AS s
           |FROM graft.mvj2.fact JOIN graft.mvj2.dim ON k = dk
           |GROUP BY seg ORDER BY seg""".stripMargin)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
     }
 
     // THE load-bearing scale claim: the fact-side key-collection scan
@@ -1786,11 +1744,9 @@ class MaterializedViewSpec extends AnyFunSuite {
         |  'mvn.fact JOIN mvn.cust ON k = ck JOIN mvn.nat ON nk = nk2',
         |  'nname', 'count(*) AS cnt, sum(v) AS total')""".stripMargin)
     assert(mode == "full" && groups == 2, s"3-way create: $mode/$groups")
-    def direct(q: String): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      try spark.sql(q).collect().map(r =>
+    def direct(q: String): Seq[(String, Long, Long)] = rewriteOff {
+      spark.sql(q).collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
     }
     val q = """SELECT nname, count(*) AS c, sum(v) AS s
               |FROM graft.mvn.fact JOIN graft.mvn.cust ON k = ck
@@ -1882,15 +1838,11 @@ class MaterializedViewSpec extends AnyFunSuite {
     val q = """SELECT seg, count(*) AS c, sum(v) AS s
               |FROM graft.sj.fact JOIN graft.sj.dim ON k = dk
               |GROUP BY seg""".stripMargin
-    def direct(): Seq[(String, Long, Long)] = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      try spark.sql(q).collect().map(r =>
+    def direct(): Seq[(String, Long, Long)] = rewriteOff {
+      spark.sql(q).collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    SessionConf.withConfs(spark)("spark.sql.adaptive.enabled" -> "false") {
       val df = spark.sql(q)
       val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
       val mvScan = scans.filter(_.output.exists(_.name == "cnt"))
@@ -1952,7 +1904,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         "non-append fact history wrongly stale-join-served")
       assert(afterDml.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSeq.sortBy(_._1) == direct())
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     spark.sql("DROP TABLE graft.sj.agg")
     spark.sql("DROP TABLE graft.sj.fact")
     spark.sql("DROP TABLE graft.sj.dim")
@@ -2000,10 +1952,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         |  'count(*) AS cnt, sum(price) AS sp, count(price) AS cp,
         |   sum(v) AS sv, sum(coalesce(v, CAST(0 AS BIGINT))) AS svc')""".stripMargin)
     def compare(q: String, expectServed: Boolean, staleBranch: Boolean = false): Unit = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq)
       val served = spark.sql(q)
       val sc = scans(served)
       assert(sc.contains("agg") == expectServed,
@@ -2085,10 +2034,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     Seq((1L, "b", 5L), (2L, "b", 7L)).toDF("k", "g", "v")
       .writeTo("graft.mvgn.base").option("graft.upsert.keys", "k").append()
     def compare(q: String): Unit = {
-      spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-      val direct =
-        try spark.sql(q).collect().toSeq
-        finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+      val direct = rewriteOff(spark.sql(q).collect().toSeq)
       val served = spark.sql(q)
       assert(scans(served).contains("agg"), s"[$q] must be MV-served, scans: ${scans(served)}")
       assert(served.collect().toSeq == direct, s"global retraction diverged for [$q]")
@@ -2136,10 +2082,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     Seq((1L, "b", 5L)).toDF("k", "g", "v")
       .writeTo("graft.mvgo.base").option("graft.upsert.keys", "k").append()
     val gq = "SELECT sum(v) AS s FROM graft.mvgo.base WHERE g = 'a'"
-    spark.conf.set("spark.graft.mvRewrite.enabled", "false")
-    val direct =
-      try spark.sql(gq).collect().toSeq
-      finally spark.conf.set("spark.graft.mvRewrite.enabled", "true")
+    val direct = rewriteOff(spark.sql(gq).collect().toSeq)
     assert(direct.head.isNullAt(0), "fixture: direct answer must be NULL")
     val served = spark.sql(gq)
     assert(scans(served).contains("agg"), s"must be MV-served, scans: ${scans(served)}")

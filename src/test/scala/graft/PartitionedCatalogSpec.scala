@@ -199,6 +199,21 @@ class PartitionedCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.opt.w")
   }
 
+  test("compact where: a quoted string partition value may contain a comma") {
+    import graft.sources.GraftCatalog
+    spark.sql("DROP TABLE IF EXISTS graft.opt.q")
+    spark.sql("CREATE TABLE graft.opt.q (k STRING, v BIGINT) USING graft PARTITIONED BY (k)")
+    spark.sql("INSERT INTO graft.opt.q VALUES ('a,b', 1), ('c', 2)")
+    spark.sql("INSERT INTO graft.opt.q VALUES ('a,b', 3), ('c', 4)")
+    assert(GraftCatalog.segmentCount("opt", "q") == 4)
+    // The clause is k='a,b': one field, its comma inside the literal.
+    val r = spark.sql("CALL graft.system.compact('opt', 'q', 'k=''a,b''')").collect().head
+    assert(r.getAs[Int]("segments_before") == 4 && r.getAs[Int]("segments_after") == 3,
+      s"the quoted value must select the 'a,b' group alone: $r")
+    assert(spark.sql("SELECT sum(v) FROM graft.opt.q WHERE k = 'a,b'").as[Long].head() == 4L)
+    spark.sql("DROP TABLE graft.opt.q")
+  }
+
   test("compact where works on TRANSFORM partition fields (bucket's inner comma)") {
     import graft.sources.GraftCatalog
     spark.sql("DROP TABLE IF EXISTS graft.opt.b")

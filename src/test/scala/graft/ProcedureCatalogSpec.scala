@@ -87,6 +87,15 @@ class ProcedureCatalogSpec extends AnyFunSuite {
     assert(created == "`my-ns`.mv")
     assert(cell("compact('my-ns', 'mv')") == created)
     assert(cell("refresh_mv('my-ns', 'mv')") == created)
+    // Procedures that read or write the table by name quote each part.
+    val dir = java.nio.file.Files.createTempDirectory("graft_quoted_ns").toFile
+    try {
+      spark.range(3).selectExpr("id AS k", "id * 10 AS v").coalesce(1)
+        .write.mode("overwrite").parquet(dir.toString)
+      assert(cell(s"copy_into('my-ns', 't', '$dir', 'parquet', '')") == "`my-ns`.t")
+      assert(cell("analyze('my-ns', 't')") == "`my-ns`.t")
+      assert(spark.sql("CALL graft.system.verify_constraints('my-ns', 't')").collect().isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
     spark.sql("DROP TABLE graft.`my-ns`.mv PURGE")
     spark.sql("DROP TABLE graft.`my-ns`.t PURGE")
   }
