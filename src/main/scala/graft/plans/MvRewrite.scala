@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{DayTimeIntervalType, DecimalType, YearMonthIntervalType}
 
 import graft.sources.{GraftCatalog, GraftMvOps}
+import graft.sources.GraftMvOps.MvDef
 
 /** Session conf switch of [[MvRewriteRule]]; defaults to true. */
 object MvRewrite {
@@ -93,7 +94,7 @@ object MvRewrite {
 case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
   import MvRewrite.EnabledKey
 
-  private type Candidate = (Identifier, Map[String, String])
+  private type Candidate = (Identifier, MvDef)
 
   /** The aggregate's input as the matcher reads it: the graft
     * relations left to right, their ON conjuncts, and at most one
@@ -147,8 +148,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       }
       if (groupAttrs.map(_.name.toLowerCase).distinct.length != groupAttrs.length) return None
       val (fresh, stale) = candidates(q)
-      fresh.view.flatMap { case (mvIdent, props) =>
-        tryJoinCandidate(agg, groupAttrs, q, mvIdent, props)
+      fresh.view.flatMap { case (mvIdent, d) =>
+        tryJoinCandidate(agg, groupAttrs, q, mvIdent, d)
       }.headOption.orElse {
         stale.view.flatMap { case (mvIdent, _) =>
           tryStaleJoinCandidate(agg, groupAttrs, q, mvIdent)
@@ -237,9 +238,9 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       (present, meta)
     }
     val q = queryOf(proj.child).getOrElse(return None)
-    candidates(q)._1.view.flatMap { case (mvIdent, props) =>
+    candidates(q)._1.view.flatMap { case (mvIdent, d) =>
       tryGroupingSetsJoinCandidate(agg, q, groupAttrs, metaAttrs, baseColFor, sets,
-        mvIdent, props)
+        mvIdent, d)
     }.headOption
   }
 
@@ -250,14 +251,13 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       agg: Aggregate, q: Query,
       groupAttrs: Seq[Attribute], metaAttrs: Seq[Attribute],
       baseColFor: Seq[String], sets: Seq[(Seq[Boolean], Seq[Expression])],
-      mvIdent: Identifier, props: Map[String, String]): Option[LogicalPlan] = {
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
+      mvIdent: Identifier, d: MvDef): Option[LogicalPlan] = {
+    val mvGroupCols = d.group
     // The FULL grouping list (the lattice's finest set) must be
     // contained in the MV grain; every coarser set then is too.
     if (!baseColFor.forall(c => mvGroupCols.exists(resolver(_, c)))) return None
     val (specByKey, mvAttr, mvChild) =
-      freshMvInput(q, mvIdent, props, mvGroupCols).getOrElse(return None)
+      freshMvInput(q, mvIdent, d).getOrElse(return None)
     // Grouping columns must exist on the MV with EXACT types (Expand's
     // null literals and the output attrs are typed by them).
     val mvGroupAttrs: Seq[Attribute] = baseColFor.zip(groupAttrs).map {
@@ -394,50 +394,32 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val matching = q.rels.flatMap { r =>
       val id = r.identifier.get
       GraftCatalog.mvsFor(id.namespace()(0), id.name())
-    }.flatMap { case c @ (_, props) => joinDefMatching(props, q).map(c -> _) }
-    val (fresh, stale) = matching.partition { case (_, sides) =>
-      sides.forall { case (n, v) =>
-        val id = q.rel(n).identifier.get
-        GraftCatalog.currentVersion(id.namespace()(0), id.name()).map(_.toString).contains(v)
-      }
+    }.flatMap { case (id, props) => joinDefMatching(props, q).map(id -> _) }
+    matching.partition { case (_, d) =>
+      d.sides.forall(s => GraftCatalog.currentVersion(s.ns, s.table).contains(s.version))
     }
-    (fresh.map(_._1), stale.map(_._1))
   }
 
-  /** The MV's side list — (`ns.table`, recorded version), its source
-    * first — when the side SET equals the query's relation set
-    * (order-free) and the ON conjunct SET is norm-equal to the
+  /** The MV's definition ([[MvDef.read]], the one parser of the MV
+    * props) when its side SET equals the query's relation set
+    * (order-free) and its ON conjunct SET is norm-equal to the
     * query's (per-conjunct exact structural match — `a = b` does not
     * serve `b = a`, the same no-implication-reasoning stance as
     * predicate subsumption); None otherwise. A single-table MV has one
-    * side and no ON conjunction. A join MV records its dims, their
-    * versions and its conjunction together, so a half-present set of
-    * join props declines, as does any missing prop: an MV with
-    * hand-patched or cleared props must decline the rewrite, not throw
-    * from inside the analyzer rule (which would fail the user's query).
+    * side and no ON conjunction. An MV whose props do not read as a
+    * definition (hand-patched or cleared) declines the rewrite rather
+    * than throw from inside the analyzer rule, which would fail the
+    * user's query.
     */
-  private def joinDefMatching(
-      props: Map[String, String], q: Query): Option[Seq[(String, String)]] = {
-    val source = (props.getOrElse(GraftMvOps.SourceProp, return None),
-      props.getOrElse(GraftMvOps.VersionProp, return None))
-    val (sides, onSpec) = (props.get(GraftMvOps.JoinSourceProp),
-        props.get(GraftMvOps.JoinVersionProp), props.get(GraftMvOps.JoinCondProp)) match {
-      case (None, None, None) => (Seq(source), None)
-      case (Some(ds), Some(vs), Some(on)) =>
-        val dims = ds.split(',').toSeq.filter(_.nonEmpty)
-        val vds = vs.split(',').toSeq.filter(_.nonEmpty)
-        if (dims.isEmpty || vds.length != dims.length) return None
-        (source +: dims.zip(vds), Some(on))
-      case _ => return None
-    }
-    val names = sides.map(_._1)
-    if (names.distinct.length != names.length) return None
+  private def joinDefMatching(props: Map[String, String], q: Query): Option[MvDef] = {
+    val d = MvDef.read(props).toOption.getOrElse(return None)
+    val names = d.sides.map(_.name)
     if (names.length != q.names.length || names.toSet != q.names.toSet) return None
-    val mvOn = onSpec.fold(Seq.empty[Expression]) { on =>
+    val mvOn = d.on.fold(Seq.empty[Expression]) { on =>
       conjuncts(resolveSpecAgainst(on, q.output).getOrElse(return None))
     }
     if (mvOn.map(norm).toSet != q.on.map(norm).toSet) return None
-    Some(sides)
+    Some(d)
   }
 
   /** What both fresh paths read from a candidate: the MV's aggregate
@@ -447,13 +429,12 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * remapped onto MV group columns. None when any of it fails to
     * bind (never rewrite on a guess).
     */
-  private def freshMvInput(
-      q: Query, mvIdent: Identifier, props: Map[String, String], mvGroupCols: Seq[String])
+  private def freshMvInput(q: Query, mvIdent: Identifier, d: MvDef)
       : Option[(Map[String, String], String => Option[Attribute], LogicalPlan)] = {
     val residualCond: Option[Expression] =
-      residualAfterMvFilterOn(props, q.filter, q.output).getOrElse(return None)
-    if (!admissibleResidual(residualCond, mvGroupCols)) return None
-    val specByKey = bindSpecs(props.getOrElse(GraftMvOps.AggsProp, return None), q.output)
+      residualAfterMvFilterOn(d, q.filter, q.output).getOrElse(return None)
+    if (!admissibleResidual(residualCond, d.group)) return None
+    val specByKey = bindSpecs(d.aggList, q.output)
       .getOrElse(return None).map(t => t._1 -> t._2).toMap
     val catalog = q.rels.head.catalog
     val mvTable =
@@ -462,7 +443,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val mvRelation = DataSourceV2Relation.create(mvTable, catalog, Some(mvIdent))
     def mvAttr(col: String): Option[Attribute] =
       mvRelation.output.find(a => resolver(a.name, col))
-    val mvChild = remapOntoMv(residualCond, mvGroupCols, mvAttr, mvRelation)
+    val mvChild = remapOntoMv(residualCond, d.group, mvAttr, mvRelation)
       .getOrElse(return None)
     Some((specByKey, mvAttr, mvChild))
   }
@@ -473,12 +454,11 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     */
   private def tryJoinCandidate(
       agg: Aggregate, groupAttrs: Seq[Attribute], q: Query,
-      mvIdent: Identifier, props: Map[String, String]): Option[LogicalPlan] = {
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
+      mvIdent: Identifier, d: MvDef): Option[LogicalPlan] = {
+    val mvGroupCols = d.group
     val exact = groupingMatch(groupAttrs, mvGroupCols).getOrElse(return None)
     val (specByKey, mvAttr, mvChild) =
-      freshMvInput(q, mvIdent, props, mvGroupCols).getOrElse(return None)
+      freshMvInput(q, mvIdent, d).getOrElse(return None)
     def groupColFor(a: Attribute): Option[String] = mvGroupCols.find(resolver(_, a.name))
     serveFromMv(agg, groupAttrs, exact, groupColFor, mvAttr, specByKey, mvChild)
   }
@@ -535,16 +515,15 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       mvIdent: Identifier): Option[LogicalPlan] = {
     val (mvTable, props) = GraftCatalog.mvEntrySnapshot(mvIdent).getOrElse(return None)
     if (props.contains(GraftMvOps.RefreshingProp)) return None
-    val sides = joinDefMatching(props, q).getOrElse(return None)
-    val mvGroupCols =
-      props.getOrElse(GraftMvOps.GroupProp, return None).split(',').toSeq
+    val d = joinDefMatching(props, q).getOrElse(return None)
+    val mvGroupCols = d.group
     // FILTERED MV under staleness: the MV branch applies only the
     // residual (the MV's conjuncts were applied pre-aggregation inside
     // it); the delta branches apply the query's FULL predicate — delta
     // rows are raw source rows, and the MV's conjuncts are part of
     // the query's own WHERE by the subsumption check.
     val residualCond: Option[Expression] =
-      residualAfterMvFilterOn(props, q.filter, q.output).getOrElse(return None)
+      residualAfterMvFilterOn(d, q.filter, q.output).getOrElse(return None)
     if (!admissibleResidual(residualCond, mvGroupCols)) return None
     // Exact or coarser grouping both funnel into the one merge
     // aggregate; finer grouping cannot be served.
@@ -552,11 +531,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     // Per-side deltas since each side's recorded version: pure-append
     // staleness first (supports min/max), else the eq-delete-tolerant
     // walk (appends plus registered deletes).
-    val sideIdents: Seq[Identifier] = sides.map { case (n, _) => q.rel(n).identifier.get }
-    val sideV0s: Seq[Long] = sides.map { case (_, v) =>
-      if (v.isEmpty || !v.forall(_.isDigit)) return None
-      v.toLong
-    }
+    val sideIdents: Seq[Identifier] = d.sides.map(s => q.rel(s.name).identifier.get)
+    val sideV0s: Seq[Long] = d.sides.map(_.version)
     val sideDeltas: Seq[(Vector[GraftCatalog.Segment], Vector[GraftCatalog.EqDelete])] =
       sideIdents.zip(sideV0s).map { case (id, v) =>
         val (tns, ttbl) = (id.namespace()(0), id.name())
@@ -598,8 +574,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     // The MV's aggregate specs keyed like the fresh path; each spec's
     // raw text is remembered so every delta branch can RE-bind it
     // against its own relations.
-    val aggsProp = props.getOrElse(GraftMvOps.AggsProp, return None)
-    val specs = bindSpecs(aggsProp, q.output).getOrElse(return None)
+    val specs = bindSpecs(d.aggList, q.output).getOrElse(return None)
     val specByKey: Map[String, String] = specs.map(t => t._1 -> t._2).toMap
     val itemByName: Map[String, String] = specs.map(t => t._2 -> t._3).toMap
     val liveCntCol: Option[String] =
@@ -667,7 +642,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
             outAll.find(a => resolver(a.name, col))
           var child: LogicalPlan = others.foldLeft(sideRel: LogicalPlan)(
             (l, r) => Join(l, r, Inner, None, JoinHint.NONE))
-          props.get(GraftMvOps.JoinCondProp).foreach { on =>
+          d.on.foreach { on =>
             child = Filter(resolveSpecAgainst(on, outAll).getOrElse(return None), child)
           }
           extraPred.foreach { f =>
@@ -708,7 +683,7 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         val m = movedOrdered.head
         val mIdent = sideIdents(m)
         val otherRels: Seq[DataSourceV2Relation] =
-          sides.zipWithIndex.collect { case ((n, _), i) if i != m => q.rel(n) }
+          d.sides.zipWithIndex.collect { case (s, i) if i != m => q.rel(s.name) }
         val (segs, _) = sideDeltas(m)
         val deltaPart: Option[LogicalPlan] =
           if (segs.isEmpty) None
@@ -748,9 +723,9 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
               .getOrElse(return None),
             anyCatalog, Some(mIdent))
           val othersFresh2: Seq[DataSourceV2Relation] =
-            sides.zipWithIndex.collect {
-              case ((n, _), i) if i != m && i != m2 =>
-                val r = q.rel(n)
+            d.sides.zipWithIndex.collect {
+              case (s, i) if i != m && i != m2 =>
+                val r = q.rel(s.name)
                 DataSourceV2Relation.create(r.table, r.catalog, r.identifier)
             }
           joinPart(m2Ident,
@@ -806,8 +781,8 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * same key (never rewrite on a guess).
     */
   private def bindSpecs(
-      aggsProp: String, output: Seq[Attribute]): Option[Seq[(String, String, String)]] = {
-    val specs = GraftMvOps.splitTop(aggsProp).map { item =>
+      aggList: Seq[String], output: Seq[Attribute]): Option[Seq[(String, String, String)]] = {
+    val specs = aggList.map { item =>
       resolveSpecAgainst(item, output) match {
         case Some(al: Alias) => (norm(al.child), al.name, item)
         case _ => return None
@@ -1210,9 +1185,9 @@ case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * unfiltered MV the query predicate passes through whole.
     */
   private def residualAfterMvFilterOn(
-      props: Map[String, String], filterCond: Option[Expression],
+      d: MvDef, filterCond: Option[Expression],
       output: Seq[Attribute]): Option[Option[Expression]] =
-    props.get(GraftMvOps.FilterProp).map(_.trim).filter(_.nonEmpty) match {
+    d.where match {
       case None => Some(filterCond)
       case Some(fs) =>
         val mvCond = resolveSpecAgainst(fs, output).getOrElse(return None)

@@ -14,9 +14,12 @@ import GraftProcedure.in
   * `CALL graft.system.create_mv(...)` / `CALL graft.system.refresh_mv(...)`.
   *
   * An MV here is an ordinary catalog table (queryable, droppable,
-  * time-travelable like any other) whose definition — source table,
-  * GROUP BY columns, aggregate list — and last-refreshed source
-  * version live in its TBLPROPERTIES. Refresh is INCREMENTAL by
+  * time-travelable like any other) whose definition — its sides (one
+  * source table, or a fact and its dims with an ON conjunction), GROUP
+  * BY columns, aggregate list, optional WHERE — and each side's
+  * last-refreshed version live in its TBLPROPERTIES ([[MvDef]]). A
+  * single-table MV is a join MV with one side and no ON conjunction:
+  * create and refresh have one path each. Refresh is INCREMENTAL by
   * snapshot diff, the move that matters at 100 TB: a day's appends
   * touch a handful of group keys, so refresh cost should track the
   * CHANGED data, never the base table size.
@@ -27,30 +30,32 @@ import GraftProcedure.in
   * touched groups supports every aggregate Spark has, including
   * non-distributive ones like `count(distinct)` and `percentile`):
   *
-  *  1. Diff the base table's retained snapshots between the MV's
-  *     recorded version v0 and the current v1: segment ADDED, segment
-  *     REMOVED, deletion-vector CHANGED, equality-delete set CHANGED.
-  *     Pure metadata — no data read.
-  *  2. Collect the DISTINCT group keys present in the changed segments
-  *     only (`_segment` metadata-column filter; removed segments are
-  *     read through `VERSION AS OF v0`, which snapshot retention keeps
-  *     on disk), plus the keys of rows an in-range equality delete
-  *     killed (or a RESTORE resurrected) — key-filtered scans with
-  *     pushed per-column INs, so merge-on-read upsert epochs refresh
+  *  1. Diff each side's retained snapshots between the MV's recorded
+  *     version v0 and the current v1: segment ADDED, segment REMOVED,
+  *     deletion-vector CHANGED, equality-delete set CHANGED. Pure
+  *     metadata — no data read.
+  *  2. Collect the DISTINCT group keys of the changed rows: each
+  *     changed side's SEGMENT-PINNED Δ scan ([[segmentsDf]] — the plan
+  *     holds only the changed segments; removed ones are pinned with
+  *     their v0 deletion vectors, which snapshot retention keeps on
+  *     disk) joined with the other sides, none for a single-table MV,
+  *     plus the keys of rows an in-range equality delete killed (or a
+  *     RESTORE resurrected) — key-filtered scans with pushed
+  *     per-column INs, so merge-on-read upsert epochs refresh
   *     incrementally too ([[eqKeyMatchScan]]). Every group whose rows
-  *     changed is in this set; groups whose segments didn't change
-  *     CANNOT have changed — their MV rows are provably still correct.
-  *  3. Recompute those groups from the current base: a null-safe
-  *     left-semi join of base against the touched keys (which rides
-  *     zone-map/Bloom segment skipping on the base scan), then the
+  *     changed is in this set; groups whose rows didn't change CANNOT
+  *     have changed — their MV rows are provably still correct.
+  *  3. Recompute those groups from the current input: a null-safe
+  *     left-semi join of it against the touched keys (which rides
+  *     zone-map/Bloom segment skipping on the base scans), then the
   *     original GROUP BY. Cost ∝ segments holding touched groups.
   *  4. Apply in ONE atomic MERGE: touched keys outer-joined to the
   *     recomputed rows; matched+recomputed → UPDATE, unmatched-in-MV →
   *     INSERT, touched-but-vanished (last row of the group deleted) →
   *     DELETE.
   *
-  * Fallbacks keep refresh always-correct: if the v0 snapshot aged out
-  * of retention, or the base schema changed between v0 and v1, refresh
+  * Fallbacks keep refresh always-correct: if a v0 snapshot aged out
+  * of retention, or a side's schema changed between v0 and v1, refresh
   * degrades to a full recompute through the atomic REPLACE TABLE AS
   * SELECT path. A crash between MERGE and the version-property bump
   * re-runs the same diff on the next refresh — recomputing a touched
@@ -85,13 +90,12 @@ private[graft] object GraftMvOps {
     * list), the ON conditions as ONE conjunction (the rewrite compares
     * conjunct SETS, so join order is immaterial), and the dims'
     * recorded versions (comma list — at one dim identical to the
-    * historical single-value format). Join MVs refresh INCREMENTALLY
-    * by the per-side delta-join rule (see the refresh branch below):
+    * historical single-value format). All three are present together
+    * or absent together: absent, the MV has one side. Every MV
+    * refreshes by the per-side delta-join rule (see [[refresh]]):
     * touched group keys come from ⋃ₖ ΔSₖ ⋈ others, with segment-pinned
-    * Δ scans, then the shared group-restricted recompute + atomic
-    * MERGE tail applies. Churn above
-    * `spark.graft.mvRefresh.join.churnThreshold` (default 0.5) on any
-    * side degrades to the full RTAS.
+    * Δ scans — for one side just ΔS — then the group-restricted
+    * recompute + atomic MERGE tail applies.
     */
   val JoinSourceProp = "graft.mv.join.source"
   val JoinCondProp = "graft.mv.join.on"
@@ -109,12 +113,91 @@ private[graft] object GraftMvOps {
     * successful refresh clears it.
     */
   val RefreshingProp = "graft.mv.refreshing"
+
+  /** One MV definition: its sides, each with the version the MV data
+    * reflects (side 0 is the source — a join MV's fact — then the
+    * dims), the ON conjunction (None for one side), the GROUP BY
+    * columns, the aggregate list as written, and the optional WHERE.
+    * [[MvDef.read]] is the one parser of the MV table properties and
+    * [[props]] their one writer: create, the full RTAS and the
+    * refresh's version patch all write `props`, and the refresh and
+    * the transparent rewrite both read through `read`.
+    */
+  private[graft] case class MvDef(
+      sides: Seq[MvDef.Side], on: Option[String], group: Seq[String],
+      aggs: String, where: Option[String]) {
+    def aggList: Seq[String] = splitTop(aggs)
+
+    /** The same definition with every side at `versions`. */
+    def at(versions: Seq[Long]): MvDef =
+      copy(sides = sides.zip(versions).map { case (s, v) => s.copy(version = v) })
+
+    def props: Map[String, String] = {
+      val dims = sides.tail
+      Map(SourceProp -> sides.head.name, VersionProp -> sides.head.version.toString,
+        GroupProp -> group.mkString(","), AggsProp -> aggs) ++
+        on.toSeq.flatMap(c => Seq(JoinSourceProp -> dims.map(_.name).mkString(","),
+          JoinCondProp -> c, JoinVersionProp -> dims.map(_.version).mkString(","))) ++
+        where.map(FilterProp -> _)
+    }
+  }
+
+  private[graft] object MvDef {
+    case class Side(ns: String, table: String, version: Long) {
+      def name: String = s"$ns.$table"
+      def ident: Identifier = Identifier.of(Array(ns), table)
+    }
+
+    /** The definition `props` records, or why there is none: "not a
+      * materialized view (…)" without a source, "not a well-formed
+      * materialized view (…)" for a missing or unparsable key — a
+      * hand-patched or cleared property must read as a malformed MV,
+      * never as a raw key-not-found. A refresh throws the reason; the
+      * rewrite declines the candidate.
+      */
+    def read(props: Map[String, String]): Either[String, MvDef] = {
+      def malformed(why: String) = Left(s"not a well-formed materialized view ($why)")
+      def missing(key: String) = malformed(s"no $key table property")
+      val source = props.getOrElse(SourceProp,
+        return Left(s"not a materialized view (no $SourceProp table property)"))
+      val version = props.getOrElse(VersionProp, return missing(VersionProp))
+      val group = props.getOrElse(GroupProp, return missing(GroupProp))
+      val aggs = props.getOrElse(AggsProp, return missing(AggsProp))
+      val joinKeys = Seq(JoinSourceProp, JoinCondProp, JoinVersionProp)
+      val (dims, on, dimVersions) = joinKeys.map(props.get) match {
+        case Seq(None, None, None) => (Nil, None, Nil)
+        case Seq(Some(ds), Some(c), Some(vs)) =>
+          (ds.split(',').toSeq, Some(c), vs.split(',').toSeq)
+        case got => return missing(joinKeys(got.indexOf(None)))
+      }
+      if (dimVersions.length != dims.length)
+        return malformed(s"$JoinVersionProp records ${dimVersions.length} versions " +
+          s"for ${dims.length} tables")
+      val sides = (source +: dims).zip(version +: dimVersions).map { case (n, v) =>
+        (n.split('.'), v.toLongOption) match {
+          case (Array(ns, tbl), Some(ver)) if ns.nonEmpty && tbl.nonEmpty => Side(ns, tbl, ver)
+          case _ => return malformed(s"side '$n' at version '$v'")
+        }
+      }
+      if (sides.map(_.name).distinct.length != sides.length)
+        return malformed("its sides are not distinct tables")
+      Right(MvDef(sides, on, group.split(',').toSeq, aggs,
+        props.get(FilterProp).map(_.trim).filter(_.nonEmpty)))
+    }
+  }
+
   /** Marker column in the MERGE source: null ⇔ the touched group has no
     * surviving base rows (vanished) — an agg column can't serve as the
     * marker because `min(x)` of a live group is legitimately null.
     */
   private val Present = "__graft_mv_present"
-  private val SegAlias = "__graft_mv_seg"
+  /** Share of a side's rows a refresh may change before a join MV (two
+    * or more sides) degrades to the full RTAS: past it the incremental
+    * machinery recomputes most groups anyway, and a dim-side Δ term
+    * pays a pass over the other sides. A single-table MV has no other
+    * sides, so its refresh cost tracks the Δ alone and no gate applies.
+    */
+  private val ChurnThreshold = 0.5
   private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
   /** Driver-side probe bound shared by the touched-key inline INs and
     * the delta-key pruning of join-refresh "other" sides: past it the
@@ -246,64 +329,64 @@ private[graft] object GraftMvOps {
         .create(table, None, Some(ident)))
   }
 
-  private def aggregateAt(
-      spark: SparkSession, cat: String, sns: String, stbl: String,
-      version: Long, groupCols: Seq[String], aggList: Seq[String],
-      where: Option[String]): DataFrame = {
-    val base = spark.sql(s"SELECT * FROM ${fqn(cat, sns, stbl)} VERSION AS OF $version")
-    where.fold(base)(w => base.where(expr(w)))
-      .groupBy(groupCols.map(col): _*)
-      .agg(expr(aggList.head), aggList.tail.map(expr): _*)
-  }
+  /** `side`'s table at the version it records, as SQL text. */
+  private def pinnedRef(cat: String, side: MvDef.Side): String =
+    s"${fqn(cat, side.ns, side.table)} VERSION AS OF ${side.version}"
 
-  /** A filtered MV's WHERE must be DETERMINISTIC: the incremental
+  private def pinned(spark: SparkSession, cat: String, side: MvDef.Side): DataFrame =
+    spark.sql(s"SELECT * FROM ${pinnedRef(cat, side)}")
+
+  /** The MV's pre-aggregation input at the versions `d` records: every
+    * side version-pinned, joined with the ON conjunction applied as
+    * one WHERE — the optimizer pushes each equi conjunct into its join,
+    * so the plan is the same chain of equi joins the per-ON form would
+    * give, while the conjunction form keeps the stored condition
+    * ORDER-FREE (the rewrite compares conjunct SETS) — then the MV's
+    * WHERE, which may reference any side's columns. One side with no
+    * ON is the pinned source under the WHERE.
+    *
+    * A filtered MV's WHERE must be DETERMINISTIC: the incremental
     * refresh re-evaluates it on both diff sides (touched-key scans and
     * the recompute), so `rand() < 0.5` would silently leave the MV
     * internally inconsistent — different coin flips per pass — with no
-    * error anywhere. Validated at create AND refresh (the property
-    * could in principle change between them); determinism is read off
-    * the ANALYZED filter condition, since an unresolved parse tree
-    * can't answer it.
+    * error anywhere. Create and every refresh build this input, so both
+    * check it (the property could change between them); determinism is
+    * read off the ANALYZED filter condition, since an unresolved parse
+    * tree can't answer it.
     */
-  private def requireDeterministicWhere(
-      spark: SparkSession, cat: String, sns: String, stbl: String, w: String): Unit =
-    requireDeterministicWhereOn(
-      spark.sql(s"SELECT * FROM ${fqn(cat, sns, stbl)}"), w)
-
-  private def requireDeterministicWhereOn(df: DataFrame, w: String): Unit = {
-    val analyzed = df.where(expr(w)).queryExecution.analyzed
-    val ok = analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic
-    }.forall(identity)
-    require(ok, s"materialized-view where must be deterministic, got '$w'")
+  private def inputAt(spark: SparkSession, cat: String, d: MvDef): DataFrame = {
+    val from = d.sides.map(pinnedRef(cat, _)).mkString(" JOIN ")
+    val joined = spark.sql(s"SELECT * FROM $from" + d.on.fold("")(c => s" WHERE $c"))
+    d.where.fold(joined) { w =>
+      val filtered = joined.where(expr(w))
+      val ok = filtered.queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic
+      }.forall(identity)
+      require(ok, s"materialized-view where must be deterministic, got '$w'")
+      filtered
+    }
   }
 
-  /** CREATE (or replace) the MV: one full aggregate of the source
-    * PINNED at its current version (a concurrent append between read
-    * and commit lands in the NEXT refresh's diff instead of silently
-    * half-appearing), committed atomically with the definition props.
+  /** Write `d`'s full aggregate of `input` as the MV, committed
+    * atomically with `d`'s props: create's CREATE OR REPLACE, or with
+    * `replace` the refresh's REPLACE TABLE AS SELECT swap (readers
+    * never see a torn MV).
     */
-  /** The full N-way join aggregate, every side version-pinned: fact ⋈
-    * dims with the recorded conjunction applied as one WHERE — the
-    * optimizer pushes each equi conjunct into its join, so the plan is
-    * the same chain of equi joins the per-ON form would give, while
-    * the conjunction form keeps the stored condition ORDER-FREE (the
-    * rewrite compares conjunct SETS).
-    */
-  private def joinAggregateAt(
-      spark: SparkSession, cat: String,
-      fns: String, ftbl: String, vf: Long,
-      dims: Seq[(String, String)], vds: Seq[Long],
-      condConj: String, groupCols: Seq[String], aggList: Seq[String],
-      where: Option[String]): DataFrame = {
-    val from = (s"${fqn(cat, fns, ftbl)} VERSION AS OF $vf" +:
-      dims.zip(vds).map { case ((dns, dtbl), vd) =>
-        s"${fqn(cat, dns, dtbl)} VERSION AS OF $vd"
-      }).mkString(" JOIN ")
-    val joined = spark.sql(s"SELECT * FROM $from WHERE $condConj")
-    where.fold(joined)(w => joined.where(expr(w)))
-      .groupBy(groupCols.map(col): _*)
-      .agg(expr(aggList.head), aggList.tail.map(expr): _*)
+  private def writeFull(
+      spark: SparkSession, cat: String, ns: String, name: String,
+      input: DataFrame, d: MvDef, replace: Boolean): (String, Long, Long) = {
+    val df = input.groupBy(d.group.map(col): _*)
+      .agg(expr(d.aggList.head), d.aggList.tail.map(expr): _*)
+    // A group column or aggregate ALIAS named like the refresh marker
+    // (`max(x) AS __graft_mv_present`) would be replaced by the
+    // refresh's own marker column and break the MERGE.
+    require(!df.columns.contains(Present),
+      s"create_mv: a group column or aggregate alias may not be named $Present")
+    val writer = d.props.foldLeft(df.writeTo(fqn(cat, ns, name))) {
+      case (w, (k, v)) => w.tableProperty(k, v)
+    }
+    if (replace) writer.replace() else writer.createOrReplace()
+    ("full", GraftCatalog.rowCount(ns, name), d.sides.head.version)
   }
 
   /** Render per-ON conditions as the stored conjunction. */
@@ -325,7 +408,7 @@ private[graft] object GraftMvOps {
     (s1.eqDeletes.filterNot(s0.eqDeletes.contains),
       s0.eqDeletes.filterNot(s1.eqDeletes.contains))
 
-  /** Scan of the source AT `version`, restricted to rows whose key
+  /** Scan of `side` at its version, restricted to rows whose key
     * columns match any of `eqs`' key tuples — the Δ⁻ primitive that
     * makes refresh incremental under equality deletes (merge-on-read
     * upserts, x13/st17): rows newly killed by an in-range delete live
@@ -346,9 +429,9 @@ private[graft] object GraftMvOps {
     * layer already exempts them.
     */
   private def eqKeyMatchScan(
-      spark: SparkSession, cat: String, sns: String, stbl: String,
-      version: Long, eqs: Seq[GraftCatalog.EqDelete]): DataFrame = {
-    val base = spark.sql(s"SELECT * FROM ${fqn(cat, sns, stbl)} VERSION AS OF $version")
+      spark: SparkSession, cat: String, side: MvDef.Side,
+      eqs: Seq[GraftCatalog.EqDelete]): DataFrame = {
+    val base = pinned(spark, cat, side)
     // One filtered scan per distinct key-column set (epochs of one
     // upsert stream share keyCols, so this is almost always one scan).
     eqs.groupBy(_.keyCols).values.map { group =>
@@ -375,94 +458,34 @@ private[graft] object GraftMvOps {
   private def eqKeyLimit(spark: SparkSession): Long =
     spark.conf.get("spark.graft.mvRefresh.eqKeyLimit", "10000").toLong
 
-  /** CREATE a JOIN MV (N-way star/snowflake): one full aggregate of
-    * fact ⋈ dims, every side pinned at its current version, committed
-    * atomically with the definition props. Ambiguous column names
-    * across sides fail loudly at analysis (star schemas keep sides
-    * disjoint). Props encode N sides backward-compatibly: dim names
-    * and versions as comma lists, conditions as one conjunction — at
-    * N = 1 identical to the historical single-dim format (modulo the
-    * cosmetic parens around the condition).
+  /** CREATE (or replace) the MV: one full aggregate of its sides, each
+    * PINNED at its current version (a concurrent append between read
+    * and commit lands in the NEXT refresh's diff instead of silently
+    * half-appearing), committed atomically with the definition props.
+    * `source` is one `'<ns>.<table>'` or the N-way star/snowflake join
+    * ([[parseJoinSource]]); ambiguous column names across sides fail
+    * loudly at analysis (star schemas keep sides disjoint).
     */
-  private def createJoin(spark: SparkSession, ns: String, name: String,
-      factSrc: String, dimSrcs: Seq[String], conds: Seq[String],
-      group: String, aggs: String, where: String): (String, Long, Long) = {
-    val cat = catalogName(spark)
-    val (fns, ftbl) = parseSource(factSrc)
-    val dims = dimSrcs.map(parseSource)
-    require((s"$fns.$ftbl" +: dimSrcs).distinct.length == dimSrcs.length + 1,
-      "create_mv: join MV sides must be distinct tables")
-    val vf = GraftCatalog.currentVersion(fns, ftbl).getOrElse(
-      throw new NoSuchTableException(Identifier.of(Array(fns), ftbl)))
-    val vds = dims.map { case (dns, dtbl) =>
-      GraftCatalog.currentVersion(dns, dtbl).getOrElse(
-        throw new NoSuchTableException(Identifier.of(Array(dns), dtbl)))
-    }
-    val groupCols = group.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val aggList = splitTop(aggs)
-    require(groupCols.nonEmpty, "create_mv: group_cols must name at least one column")
-    require(aggList.nonEmpty, "create_mv: aggs must hold at least one aggregate")
-    // FILTERED join MV: the WHERE applies to the JOINED tuple before
-    // aggregation (it may reference any side's columns) — same
-    // determinism contract as the single-source filtered MV, validated
-    // against the joined relation so cross-side references resolve.
-    val mvWhere = Option(where).map(_.trim).filter(_.nonEmpty)
-    mvWhere.foreach { w =>
-      val from = (s"${fqn(cat, fns, ftbl)}" +:
-        dims.map { case (dns, dtbl) => fqn(cat, dns, dtbl) }).mkString(" JOIN ")
-      requireDeterministicWhereOn(
-        spark.sql(s"SELECT * FROM $from WHERE ${condConjOf(conds)}"), w)
-    }
-    val df = joinAggregateAt(
-      spark, cat, fns, ftbl, vf, dims, vds, condConjOf(conds), groupCols, aggList,
-      mvWhere)
-    require(!df.columns.exists(c => c == Present || c == SegAlias),
-      s"create_mv: column may not be named $Present / $SegAlias")
-    val writer = df.writeTo(fqn(cat, ns, name))
-      .tableProperty(SourceProp, s"$fns.$ftbl")
-      .tableProperty(JoinSourceProp, dims.map { case (a, b) => s"$a.$b" }.mkString(","))
-      .tableProperty(JoinCondProp, condConjOf(conds))
-      .tableProperty(GroupProp, groupCols.mkString(","))
-      .tableProperty(AggsProp, aggs)
-      .tableProperty(VersionProp, vf.toString)
-      .tableProperty(JoinVersionProp, vds.mkString(","))
-    mvWhere.fold(writer)(w => writer.tableProperty(FilterProp, w))
-      .createOrReplace()
-    ("full", GraftCatalog.rowCount(ns, name), vf)
-  }
-
   def create(spark: SparkSession, ns: String, name: String,
       source: String, group: String, aggs: String,
       where: String = ""): (String, Long, Long) = {
-    parseJoinSource(source).foreach { case (factSrc, dimSrcs, conds) =>
-      return createJoin(spark, ns, name, factSrc, dimSrcs, conds, group, aggs, where)
-    }
     val cat = catalogName(spark)
-    val (sns, stbl) = parseSource(source)
-    val v0 = GraftCatalog.currentVersion(sns, stbl).getOrElse(
-      throw new NoSuchTableException(Identifier.of(Array(sns), stbl)))
-    val groupCols = group.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val aggList = splitTop(aggs)
-    require(groupCols.nonEmpty, "create_mv: group_cols must name at least one column")
-    require(aggList.nonEmpty, "create_mv: aggs must hold at least one aggregate")
-    require(!groupCols.contains(Present) && !groupCols.contains(SegAlias),
-      s"create_mv: group column may not be named $Present / $SegAlias")
-    val mvWhere = Option(where).map(_.trim).filter(_.nonEmpty)
-    mvWhere.foreach(requireDeterministicWhere(spark, cat, sns, stbl, _))
-    val df = aggregateAt(spark, cat, sns, stbl, v0, groupCols, aggList, mvWhere)
-    // Aggregate ALIASES collide with the refresh markers just as group
-    // columns would: `max(x) AS __graft_mv_present` would be replaced
-    // by the refresh's own marker column and break the MERGE.
-    require(!df.columns.exists(c => c == Present || c == SegAlias),
-      s"create_mv: aggregate alias may not be named $Present / $SegAlias")
-    val writer = df.writeTo(fqn(cat, ns, name))
-      .tableProperty(SourceProp, s"$sns.$stbl")
-      .tableProperty(GroupProp, groupCols.mkString(","))
-      .tableProperty(AggsProp, aggs)
-      .tableProperty(VersionProp, v0.toString)
-    mvWhere.fold(writer)(w => writer.tableProperty(FilterProp, w))
-      .createOrReplace()
-    ("full", GraftCatalog.rowCount(ns, name), v0)
+    val (names, on) = parseJoinSource(source) match {
+      case Some((fact, dims, conds)) => (fact +: dims, Some(condConjOf(conds)))
+      case None => (Seq(source), None)
+    }
+    require(names.distinct.length == names.length,
+      "create_mv: join MV sides must be distinct tables")
+    val sides = names.map { n =>
+      val (sns, stbl) = parseSource(n)
+      MvDef.Side(sns, stbl, GraftCatalog.currentVersion(sns, stbl).getOrElse(
+        throw new NoSuchTableException(Identifier.of(Array(sns), stbl))))
+    }
+    val d = MvDef(sides, on, group.split(',').map(_.trim).filter(_.nonEmpty).toSeq, aggs,
+      Option(where).map(_.trim).filter(_.nonEmpty))
+    require(d.group.nonEmpty, "create_mv: group_cols must name at least one column")
+    require(d.aggList.nonEmpty, "create_mv: aggs must hold at least one aggregate")
+    writeFull(spark, cat, ns, name, inputAt(spark, cat, d), d, replace = false)
   }
 
   /** Per-MV refresh serialization: two interleaved refreshes of the
@@ -486,398 +509,246 @@ private[graft] object GraftMvOps {
     }
   }
 
+  /** One refresh for every MV, the per-side delta-join rule: noop
+    * when no side moved, a version patch when no side's DATA moved,
+    * the incremental group-restricted recompute for in-gate changes,
+    * the full RTAS otherwise. A single-table MV is the one-side case:
+    * its only Δ terms are ΔS itself, with no other sides to join or
+    * probe.
+    */
   private def refreshLocked(
       spark: SparkSession, ns: String, name: String): (String, Long, Long) = {
     val cat = catalogName(spark)
     val ident = Identifier.of(Array(ns), name)
-    val props = GraftCatalog.tablePropsJava(ident).asScala
+    val props = GraftCatalog.tablePropsJava(ident).asScala.toMap
     if (GraftCatalog.currentVersion(ns, name).isEmpty)
       throw new NoSuchTableException(ident)
-    val source = props.getOrElse(SourceProp, throw new IllegalArgumentException(
-      s"$ns.$name is not a materialized view (no $SourceProp table property)"))
-    // JOIN MV: noop when neither side moved, metadata-only patch when
-    // no side's DATA moved, per-side delta-join incremental
-    // refresh for in-gate changes, full RTAS otherwise.
-    props.get(JoinCondProp).foreach { condConj =>
-      // Defensive prop reads (the rewrite path's discipline): a join MV
-      // with hand-patched or cleared props must fail as "not a (join)
-      // materialized view", not as a raw key-not-found.
-      def jprop(key: String): String = props.getOrElse(key,
-        throw new IllegalArgumentException(
-          s"$ns.$name is not a well-formed join materialized view (no $key table property)"))
-      def jvers(key: String): Seq[Long] = {
-        val vs = jprop(key).split(',').toSeq
-        require(vs.nonEmpty && vs.forall(v => v.nonEmpty && v.forall(_.isDigit)),
-          s"$ns.$name: $key must be comma-separated version numbers, got '${jprop(key)}'")
-        vs.map(_.toLong)
-      }
-      // Uniform side list: side 0 = fact, sides 1..N = dims — the
-      // delta-join rule below treats every side the same way.
-      val dims = jprop(JoinSourceProp).split(',').toSeq.map(parseSource)
-      val sides: Seq[(String, String)] = parseSource(source) +: dims
-      val v0s: Seq[Long] = jvers(VersionProp) ++ jvers(JoinVersionProp)
-      require(v0s.length == sides.length,
-        s"$ns.$name: recorded join versions (${v0s.length}) do not match sides (${sides.length})")
-      val v1s: Seq[Long] = sides.map { case (tns, tbl) =>
-        GraftCatalog.currentVersion(tns, tbl).getOrElse(
-          throw new NoSuchTableException(Identifier.of(Array(tns), tbl)))
-      }
-      if (v0s == v1s) return ("noop", 0L, v0s.head)
-      val jGroupCols = jprop(GroupProp).split(',').toSeq
-      val jAggList = splitTop(jprop(AggsProp))
-      val jWhere = props.get(FilterProp).map(_.trim).filter(_.nonEmpty)
-      val idents = sides.map { case (tns, tbl) => Identifier.of(Array(tns), tbl) }
-
-      def fullJoinRefresh(): (String, Long, Long) = {
-        val writer = joinAggregateAt(
-          spark, cat, sides.head._1, sides.head._2, v1s.head,
-          dims, v1s.tail, condConj, jGroupCols, jAggList, jWhere)
-          .writeTo(fqn(cat, ns, name))
-          .tableProperty(SourceProp, source)
-          .tableProperty(JoinSourceProp, jprop(JoinSourceProp))
-          .tableProperty(JoinCondProp, condConj)
-          .tableProperty(GroupProp, jprop(GroupProp))
-          .tableProperty(AggsProp, jprop(AggsProp))
-          .tableProperty(VersionProp, v1s.head.toString)
-          .tableProperty(JoinVersionProp, v1s.tail.mkString(","))
-        jWhere.fold(writer)(w => writer.tableProperty(FilterProp, w))
-          .replace() // atomic RTAS swap — readers never see a torn MV
-        ("full", GraftCatalog.rowCount(ns, name), v1s.head)
-      }
-
-      // N-WAY incremental refresh (the delta-join rule). A group's
-      // aggregate can change only through a joined TUPLE that was
-      // added or removed, and every changed tuple contains a changed
-      // row on at least one side:
-      //   ⨝(S¹ᵢ) Δ ⨝(S⁰ᵢ) ⊆ ⋃ₖ (ΔSₖ⁺ ⨝ others@v1) ∪ (ΔSₖ⁻ ⨝ others@v0)
-      // so the union of those 2N terms' group keys is a conservative
-      // superset of the touched groups — then the shared tail
-      // recomputes ONLY those groups from the current join and applies
-      // one atomic MERGE. Each Δ scan is SEGMENT-PINNED (plans exactly
-      // the changed segments); the "others" scans in a dim-side term
-      // pay full passes, which is why churn above the threshold on any
-      // side degrades to the always-correct one-pass full RTAS.
-      // Fact-side-only change — the star-schema steady state — leaves
-      // ONLY the ΔF ⨝ dims@v1 term: refresh cost tracks the appended
-      // fact data, never the fact table.
-      val snaps0 = idents.zip(v0s).map { case (id, v) =>
-        GraftCatalog.snapshotByVersion(id, v) }
-      val snaps1 = idents.zip(v1s).map { case (id, v) =>
-        GraftCatalog.snapshotByVersion(id, v) }
-      // Same incremental gate as the single-source path, per side:
-      // both snapshots retained, schema unchanged. Outstanding
-      // equality deletes may differ — each side's eq-delete Δ gets its
-      // own key term below, like the single-source path.
-      val inGate = snaps0.zip(snaps1).forall {
-        case (Some(s0), Some(s1)) => s0.schema == s1.schema
-        case _ => false
-      }
-      if (!inGate) return fullJoinRefresh()
-      // Per-side eq-delete Δ: (new in range → rows killed, visible at
-      // v0; gone in range → rows resurrected by RESTORE, visible at v1).
-      val eqDiffs: Seq[(Vector[GraftCatalog.EqDelete], Vector[GraftCatalog.EqDelete])] =
-        snaps0.zip(snaps1).map {
-          case (Some(s0), Some(s1)) => eqDiff(s0, s1)
-          case _ => throw new IllegalStateException("unreachable: gate checked")
-        }
-      if (eqDiffs.map { case (nw, gn) => eqKeyCount(nw ++ gn) }.sum > eqKeyLimit(spark))
-        return fullJoinRefresh()
-      // Per-side (segments live at v1 only, at v0 only): a dv-changed
-      // segment appears on BOTH sides — all its keys join in as a
-      // conservative superset, avoiding bitmap diffs.
-      val diffs: Seq[(Vector[GraftCatalog.Segment], Vector[GraftCatalog.Segment])] =
-        snaps0.zip(snaps1).map { case (Some(s0), Some(s1)) =>
-          val m0 = s0.segments.map(x => x.path -> x).toMap
-          val m1 = s1.segments.map(x => x.path -> x).toMap
-          val dv = (m0.keySet & m1.keySet).filter(px => m0(px).dv != m1(px).dv)
-          (s1.segments.filter(x => !m0.contains(x.path) || dv(x.path)),
-            s0.segments.filter(x => !m1.contains(x.path) || dv(x.path)))
-        case _ => throw new IllegalStateException("unreachable: gate checked")
-        }
-      if (diffs.forall { case (a, b) => a.isEmpty && b.isEmpty } &&
-          eqDiffs.forall { case (a, b) => a.isEmpty && b.isEmpty }) {
-        // Metadata-only drift (property churn moved versions without
-        // touching data): patch the recorded versions — at 100 TB the
-        // difference between an ALTER and a full star-join recompute.
-        GraftCatalog.patchTableProps(ident,
-          Map(VersionProp -> v1s.head.toString,
-            JoinVersionProp -> v1s.tail.mkString(",")),
-          unset = Set(RefreshingProp))
-        return ("noop", 0L, v1s.head)
-      }
-      // Churn gate, EVERY side: past the threshold the incremental
-      // machinery recomputes most groups anyway (and non-fact delta
-      // terms already pay full passes over the other sides).
-      val thresh = spark.conf
-        .get("spark.graft.mvRefresh.join.churnThreshold", "0.5").toDouble
-      val churny = diffs.zip(snaps1).exists { case ((nw, od), Some(s1)) =>
-        (nw ++ od).map(_.rows).sum.toDouble >
-          thresh * math.max(1L, s1.segments.map(_.rows).sum).toDouble
-      case _ => false
-      }
-      if (churny) return fullJoinRefresh()
-      def at(k: Int, vs: Seq[Long]): DataFrame = {
-        val (tns, tbl) = sides(k)
-        spark.sql(s"SELECT * FROM ${fqn(cat, tns, tbl)} VERSION AS OF ${vs(k)}")
-      }
-      val keyCols = jGroupCols.map(col)
-      // Equi-join column pairs parsed from the stored conjunction —
-      // (side, column) ↔ (side, column). They drive DELTA-KEY PRUNING
-      // of the "others" scans below: a dim-side term used to pay a
-      // full pass over every other side (the fact above all); with the
-      // delta's join-key values pushed as literal INs onto the linked
-      // columns, zone maps/Blooms prune the fact to the segments
-      // actually holding matched keys — a 1-row dim update plans a
-      // handful of fact splits, never the fact table. Columns resolve
-      // against the sides' schemas (unique across sides by the create
-      // analysis); anything unresolvable simply yields no pruning.
-      val sideSchemas: Seq[StructType] = snaps1.map(_.get.schema)
-      val equiPairs: Seq[((Int, String), (Int, String))] = {
-        import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-        val parsed =
-          try Some(spark.sessionState.sqlParser.parseExpression(condConj))
-          catch { case scala.util.control.NonFatal(_) => None }
-        def conj(e: Expression): Seq[Expression] = e match {
-          case And(l, r) => conj(l) ++ conj(r)
-          case o => Seq(o)
-        }
-        val resolver = spark.sessionState.conf.resolver
-        def owner(n: String): Option[(Int, String)] = {
-          val hits = sideSchemas.zipWithIndex.flatMap { case (sc, i) =>
-            sc.fields.find(f => resolver(f.name, n)).map(f => (i, f.name))
-          }
-          if (hits.length == 1) Some(hits.head) else None
-        }
-        parsed.toSeq.flatMap(conj).flatMap {
-          case EqualTo(
-              a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute,
-              b: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute)
-              if a.nameParts.length == 1 && b.nameParts.length == 1 =>
-            (owner(a.nameParts.head), owner(b.nameParts.head)) match {
-              case (Some(x), Some(y)) if x._1 != y._1 => Some((x, y))
-              case _ => None
-            }
-          case _ => None
-        }
-      }
-      val termDebug =
-        if (spark.conf.get("spark.graft.mvRefresh.debug", "false").toBoolean)
-          Some(Seq.newBuilder[OtherScanPlan])
-        else None
-      // One key term per (changed side, diff end): the changed side's
-      // pinned delta crossed with every OTHER side at the matching
-      // versions, the conjunction applied once (the optimizer pushes
-      // each conjunct into its equi join — never a surviving cartesian
-      // for the equi conditions star schemas use). A filtered join
-      // MV's WHERE applies to the joined tuple exactly as at create —
-      // a changed tuple failing it cannot have changed the MV.
-      // Probe superset per changed side: ONE driver probe job per
-      // (side, equi column) per refresh, computed over the UNION of
-      // that side's delta frames (both structural diff ends + both
-      // eq-delete scans) — a side changed at several ends used to pay
-      // a probe job per TERM, serializing small driver jobs before
-      // the real refresh. A superset of any single term's keys prunes
-      // the other sides less tightly but never wrongly (pruning is an
-      // optimization; the join condition still decides membership).
-      def sideDeltaFrames(k: Int): Seq[DataFrame] = {
-        val (nw, od) = diffs(k)
-        val (enw, egn) = eqDiffs(k)
-        val (tns, tbl) = sides(k)
-        (if (nw.nonEmpty) Seq(segmentsDf(spark, idents(k), nw)) else Nil) ++
-          (if (od.nonEmpty) Seq(segmentsDf(spark, idents(k), od)) else Nil) ++
-          (if (enw.nonEmpty)
-            Seq(eqKeyMatchScan(spark, cat, tns, tbl, v0s(k), enw)) else Nil) ++
-          (if (egn.nonEmpty)
-            Seq(eqKeyMatchScan(spark, cat, tns, tbl, v1s(k), egn)) else Nil)
-      }
-      val probeCache = scala.collection.mutable.Map[(Int, String), Option[Seq[Any]]]()
-      def deltaVals(k: Int, ck: String): Option[Seq[Any]] =
-        probeCache.getOrElseUpdate((k, ck), {
-          val frames = sideDeltaFrames(k).map(_.select(col(ck)))
-          if (frames.isEmpty) Some(Nil)
-          else {
-            val rows = frames.reduce(_ unionAll _).distinct()
-              .limit(MaxInlineProbe + 1).collect()
-            if (rows.length > MaxInlineProbe) None
-            else Some(rows.map(_.get(0)).filterNot(_ == null).toSeq)
-          }
-        })
-      def term(k: Int, deltaK: DataFrame, vs: Seq[Long]): DataFrame = {
-        val others = sides.indices.filter(_ != k).map { j =>
-          val base = at(j, vs)
-          // The probe job runs only for DIM-side terms: pruning the
-          // fact there is the whole point, while the fact-side term —
-          // the per-micro-batch steady state — would pay a driver
-          // collect per epoch to prune already-small dims.
-          val pruned = (if (k == 0) Nil else equiPairs.flatMap {
-            case ((ks, ck), (js, cj)) if ks == k && js == j => Some((ck, cj))
-            case ((js, cj), (ks, ck)) if ks == k && js == j => Some((ck, cj))
-            case _ => None
-          }).foldLeft(base) { case (df, (ck, cj)) =>
-            deltaVals(k, ck) match {
-              case Some(vals) =>
-                df.where(if (vals.isEmpty) lit(false) else col(cj).isin(vals: _*))
-              case None => df // probe overflow: no pruning, still correct
-            }
-          }
-          termDebug.foreach { b =>
-            val planned = pruned.queryExecution.executedPlan.collect {
-              case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-                s.inputPartitions.length
-            }.sum
-            b += OtherScanPlan(k, j, planned,
-              GraftCatalog.snapshotByVersion(idents(j), vs(j))
-                .map(_.segments.length).getOrElse(-1))
-          }
-          pruned
-        }
-        val joined = others.foldLeft(deltaK)(_ crossJoin _)
-          .where(expr(condConj))
-        jWhere.fold(joined)(w => joined.where(expr(w)))
-          .select(keyCols: _*)
-      }
-      val terms = diffs.zipWithIndex.flatMap { case ((nw, od), k) =>
-        (if (nw.nonEmpty) Seq(term(k, segmentsDf(spark, idents(k), nw), v1s)) else Nil) ++
-          (if (od.nonEmpty) Seq(term(k, segmentsDf(spark, idents(k), od), v0s)) else Nil)
-      } ++ eqDiffs.zipWithIndex.flatMap { case ((nw, gn), k) =>
-        // Eq-delete Δ terms, one per (changed side, diff end) exactly
-        // like the structural terms: killed rows join others at v0,
-        // resurrected rows at v1. The delta side is a key-filtered
-        // full-history scan instead of a segment-pinned one — the
-        // pushed per-column INs keep it metadata-cheap.
-        val (tns, tbl) = sides(k)
-        (if (nw.nonEmpty)
-          Seq(term(k, eqKeyMatchScan(spark, cat, tns, tbl, v0s(k), nw), v0s)) else Nil) ++
-          (if (gn.nonEmpty)
-            Seq(term(k, eqKeyMatchScan(spark, cat, tns, tbl, v1s(k), gn), v1s)) else Nil)
-      }
-      val touchedPlan = terms.reduce(_ unionAll _).distinct()
-      termDebug.foreach(b => lastJoinTermScans = b.result())
-      val curAll0 = sides.indices.tail.map(at(_, v1s))
-        .foldLeft(at(0, v1s))(_ crossJoin _)
-        .where(expr(condConj))
-      val curAll = jWhere.fold(curAll0)(w => curAll0.where(expr(w)))
-      return applyTouchedGroups(spark, cat, ns, name, touchedPlan, curAll,
-        jGroupCols, jAggList,
-        Map(VersionProp -> v1s.head.toString,
-          JoinVersionProp -> v1s.tail.mkString(",")))
-    }
-    val (sns, stbl) = parseSource(source)
-    val sIdent = Identifier.of(Array(sns), stbl)
-    val groupCols = props(GroupProp).split(',').toSeq
-    val aggList = splitTop(props(AggsProp))
-    val mvWhere = props.get(FilterProp).map(_.trim).filter(_.nonEmpty)
-    mvWhere.foreach(requireDeterministicWhere(spark, cat, sns, stbl, _))
-    val v0 = props(VersionProp).toLong
-    val v1 = GraftCatalog.currentVersion(sns, stbl).getOrElse(
-      throw new NoSuchTableException(sIdent))
-    if (v1 == v0) {
+    val d0 = MvDef.read(props).fold(
+      why => throw new IllegalArgumentException(s"$ns.$name is $why"), identity)
+    val sides = d0.sides
+    val idents = sides.map(_.ident)
+    val d1 = d0.at(sides.map(s => GraftCatalog.currentVersion(s.ns, s.table)
+      .getOrElse(throw new NoSuchTableException(s.ident))))
+    val (v0s, v1s) = (sides.map(_.version), d1.sides.map(_.version))
+    // The current pre-aggregation input; building it re-checks that the
+    // WHERE is deterministic, before any path may return.
+    val curAll = inputAt(spark, cat, d1)
+    if (v0s == v1s) {
       // A previously-failed MERGE can leave RefreshingProp up with the
-      // MV still consistent at VersionProp (the MERGE is one atomic
-      // commit — it either landed with the version bump or not at
-      // all). A verified noop is the proof of consistency, so clear
+      // MV still consistent at its recorded versions (the MERGE is one
+      // atomic commit — it either landed with the version bump or not
+      // at all). A verified noop is the proof of consistency, so clear
       // the flag here or the stale-delta rewrite stays disabled until
       // a data-changing refresh happens to run.
       if (props.contains(RefreshingProp))
         GraftCatalog.patchTableProps(ident, Map.empty, unset = Set(RefreshingProp))
-      return ("noop", 0L, v0)
+      return ("noop", 0L, v1s.head)
     }
+    def fullRefresh(): (String, Long, Long) =
+      writeFull(spark, cat, ns, name, curAll, d1, replace = true)
 
-    def fullRefresh(): (String, Long, Long) = {
-      val writer = aggregateAt(spark, cat, sns, stbl, v1, groupCols, aggList, mvWhere)
-        .writeTo(fqn(cat, ns, name))
-        .tableProperty(SourceProp, source)
-        .tableProperty(GroupProp, props(GroupProp))
-        .tableProperty(AggsProp, props(AggsProp))
-        .tableProperty(VersionProp, v1.toString)
-      mvWhere.fold(writer)(w => writer.tableProperty(FilterProp, w))
-        .replace() // atomic RTAS swap — readers never see a torn MV
-      ("full", GraftCatalog.rowCount(ns, name), v1)
+    // The delta-join rule. A group's aggregate can change only through
+    // a joined TUPLE that was added or removed, and every changed tuple
+    // contains a changed row on at least one side:
+    //   ⨝(S¹ᵢ) Δ ⨝(S⁰ᵢ) ⊆ ⋃ₖ (ΔSₖ⁺ ⨝ others@v1) ∪ (ΔSₖ⁻ ⨝ others@v0)
+    // so the union of those 2N terms' group keys is a conservative
+    // superset of the touched groups — then [[applyTouchedGroups]]
+    // recomputes ONLY those groups from the current input and applies
+    // one atomic MERGE. Each Δ scan is SEGMENT-PINNED (plans exactly
+    // the changed segments); the "others" scans in a dim-side term
+    // pay full passes, which is why churn above ChurnThreshold on any
+    // side of a join MV degrades to the always-correct one-pass full
+    // RTAS. Fact-side-only change — the star-schema steady state, and
+    // every change to a single-table MV — leaves ONLY the ΔF ⨝ dims@v1
+    // term: refresh cost tracks the appended data, never the table.
+    val snaps0 = idents.zip(v0s).map { case (id, v) =>
+      GraftCatalog.snapshotByVersion(id, v) }
+    val snaps1 = idents.zip(v1s).map { case (id, v) =>
+      GraftCatalog.snapshotByVersion(id, v) }
+    // Incremental gate, per side: both snapshots retained, schema
+    // unchanged (an ALTER between refreshes invalidates per-column
+    // reasoning — rare, and full recompute is always correct).
+    // Outstanding equality deletes may differ — each side's eq-delete
+    // Δ gets its own key term below.
+    val inGate = snaps0.zip(snaps1).forall {
+      case (Some(s0), Some(s1)) => s0.schema == s1.schema
+      case _ => false
     }
-
-    (GraftCatalog.snapshotByVersion(sIdent, v0),
-        GraftCatalog.snapshotByVersion(sIdent, v1)) match {
-      // Incremental path needs BOTH snapshots retained and the schema
-      // unchanged (an ALTER between refreshes invalidates per-column
-      // reasoning — rare, and full recompute is always correct).
-      // Outstanding EQUALITY DELETES may differ: a delete new in range
-      // kills rows of segments the structural diff calls "unchanged"
-      // (the merge-on-read upsert steady state — x13/st17), so those
-      // rows' group keys join the touched union through a dedicated
-      // Δ⁻ term ([[eqKeyMatchScan]]) instead of forcing full RTAS.
-      case (Some(s0), Some(s1)) if s0.schema == s1.schema =>
-        val m0 = s0.segments.map(s => s.path -> s).toMap
-        val m1 = s1.segments.map(s => s.path -> s).toMap
-        val added = m1.keySet -- m0.keySet
-        val removed = m0.keySet -- m1.keySet
-        val dvChanged = (m0.keySet & m1.keySet).filter(p => m0(p).dv != m1(p).dv)
-        val (newEqs, goneEqs) = eqDiff(s0, s1)
-        if (added.isEmpty && removed.isEmpty && dvChanged.isEmpty &&
-            newEqs.isEmpty && goneEqs.isEmpty) {
-          // Metadata-only commits (e.g. property churn) moved the
-          // version without touching data. Clears a stuck
-          // RefreshingProp too — same consistency proof as the
-          // version-equal noop above.
-          GraftCatalog.patchTableProps(ident, Map(VersionProp -> v1.toString),
-            unset = Set(RefreshingProp))
-          ("noop", 0L, v1)
-        } else if (eqKeyCount(newEqs ++ goneEqs) > eqKeyLimit(spark)) {
-          fullRefresh()
-        } else {
-          // Group keys living in changed segments only. A dv-changed
-          // segment contributes ALL its physical rows' keys — a
-          // conservative superset (recomputing an unchanged group is
-          // correct, merely unnecessary) that avoids diffing bitmaps.
-          def keysAt(version: Long, paths: Set[String]): DataFrame = {
-            // `SELECT *` (not just the group columns) so a filtered
-            // MV's WHERE can reference any source column here.
-            val base = spark.sql(
-              s"SELECT *, ${q("_segment")} AS ${q(SegAlias)} " +
-                s"FROM ${fqn(cat, sns, stbl)} VERSION AS OF $version")
-              .where(col(SegAlias).isin(paths.toSeq: _*))
-            mvWhere.fold(base)(w => base.where(expr(w)))
-              .select(groupCols.map(col): _*)
-          }
-          // Eq-delete Δ terms: keys of rows newly killed in range
-          // (visible at v0) and of rows a RESTORE resurrected (visible
-          // at v1). A filtered MV's WHERE applies here exactly as in
-          // keysAt — a killed row failing it cannot have changed the MV.
-          def eqKeys(version: Long, eqs: Vector[GraftCatalog.EqDelete]): Seq[DataFrame] =
-            if (eqs.isEmpty) Nil
-            else {
-              val scan = eqKeyMatchScan(spark, cat, sns, stbl, version, eqs)
-              Seq(mvWhere.fold(scan)(w => scan.where(expr(w)))
-                .select(groupCols.map(col): _*))
-            }
-          val touchedPlan = (Seq(
-            keysAt(v1, added ++ dvChanged),
-            keysAt(v0, removed ++ dvChanged)) ++
-            eqKeys(v0, newEqs) ++ eqKeys(v1, goneEqs))
-            .reduce(_ unionAll _)
-            .distinct()
-          val curAll0 = spark.sql(
-            s"SELECT * FROM ${fqn(cat, sns, stbl)} VERSION AS OF $v1")
-          val curAll = mvWhere.fold(curAll0)(w => curAll0.where(expr(w)))
-          applyTouchedGroups(spark, cat, ns, name, touchedPlan, curAll,
-            groupCols, aggList, Map(VersionProp -> v1.toString))
+    if (!inGate) return fullRefresh()
+    // Per-side eq-delete Δ: (new in range → rows killed, visible at
+    // v0; gone in range → rows resurrected by RESTORE, visible at v1).
+    // A delete new in range kills rows of segments the structural diff
+    // calls unchanged (the merge-on-read upsert steady state, x13/st17).
+    val eqDiffs: Seq[(Vector[GraftCatalog.EqDelete], Vector[GraftCatalog.EqDelete])] =
+      snaps0.zip(snaps1).map {
+        case (Some(s0), Some(s1)) => eqDiff(s0, s1)
+        case _ => throw new IllegalStateException("unreachable: gate checked")
+      }
+    if (eqDiffs.map { case (nw, gn) => eqKeyCount(nw ++ gn) }.sum > eqKeyLimit(spark))
+      return fullRefresh()
+    // Per-side (segments live at v1 only, at v0 only): a dv-changed
+    // segment appears on BOTH sides — all its keys join in as a
+    // conservative superset, avoiding bitmap diffs.
+    val diffs: Seq[(Vector[GraftCatalog.Segment], Vector[GraftCatalog.Segment])] =
+      snaps0.zip(snaps1).map { case (Some(s0), Some(s1)) =>
+        val m0 = s0.segments.map(x => x.path -> x).toMap
+        val m1 = s1.segments.map(x => x.path -> x).toMap
+        val dv = (m0.keySet & m1.keySet).filter(px => m0(px).dv != m1(px).dv)
+        (s1.segments.filter(x => !m0.contains(x.path) || dv(x.path)),
+          s0.segments.filter(x => !m1.contains(x.path) || dv(x.path)))
+      case _ => throw new IllegalStateException("unreachable: gate checked")
+      }
+    if (diffs.forall { case (a, b) => a.isEmpty && b.isEmpty } &&
+        eqDiffs.forall { case (a, b) => a.isEmpty && b.isEmpty }) {
+      // Metadata-only drift (property churn moved versions without
+      // touching data): patch the recorded versions — at 100 TB the
+      // difference between an ALTER and a full recompute. Clears a
+      // stuck RefreshingProp too, by the same proof as the noop above.
+      GraftCatalog.patchTableProps(ident, d1.props, unset = Set(RefreshingProp))
+      return ("noop", 0L, v1s.head)
+    }
+    val churny = sides.length > 1 && diffs.zip(snaps1).exists {
+      case ((nw, od), Some(s1)) =>
+        (nw ++ od).map(_.rows).sum.toDouble >
+          ChurnThreshold * math.max(1L, s1.segments.map(_.rows).sum).toDouble
+      case _ => false
+    }
+    if (churny) return fullRefresh()
+    val keyCols = d0.group.map(col)
+    // Equi-join column pairs parsed from the stored conjunction —
+    // (side, column) ↔ (side, column). They drive DELTA-KEY PRUNING
+    // of the "others" scans below: a dim-side term used to pay a
+    // full pass over every other side (the fact above all); with the
+    // delta's join-key values pushed as literal INs onto the linked
+    // columns, zone maps/Blooms prune the fact to the segments
+    // actually holding matched keys — a 1-row dim update plans a
+    // handful of fact splits, never the fact table. Columns resolve
+    // against the sides' schemas (unique across sides by the create
+    // analysis); anything unresolvable simply yields no pruning.
+    val sideSchemas: Seq[StructType] = snaps1.map(_.get.schema)
+    val equiPairs: Seq[((Int, String), (Int, String))] = {
+      import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+      val parsed = d0.on.flatMap { c =>
+        try Some(spark.sessionState.sqlParser.parseExpression(c))
+        catch { case scala.util.control.NonFatal(_) => None }
+      }
+      def conj(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => conj(l) ++ conj(r)
+        case o => Seq(o)
+      }
+      val resolver = spark.sessionState.conf.resolver
+      def owner(n: String): Option[(Int, String)] = {
+        val hits = sideSchemas.zipWithIndex.flatMap { case (sc, i) =>
+          sc.fields.find(f => resolver(f.name, n)).map(f => (i, f.name))
         }
-      case _ => fullRefresh()
+        if (hits.length == 1) Some(hits.head) else None
+      }
+      parsed.toSeq.flatMap(conj).flatMap {
+        case EqualTo(
+            a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute,
+            b: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute)
+            if a.nameParts.length == 1 && b.nameParts.length == 1 =>
+          (owner(a.nameParts.head), owner(b.nameParts.head)) match {
+            case (Some(x), Some(y)) if x._1 != y._1 => Some((x, y))
+            case _ => None
+          }
+        case _ => None
+      }
     }
+    val termDebug =
+      if (spark.conf.get("spark.graft.mvRefresh.debug", "false").toBoolean)
+        Some(Seq.newBuilder[OtherScanPlan])
+      else None
+    // Side k's Δ frames, each with the definition (versions) its term
+    // joins the other sides at: the pinned changed segments at v1
+    // (added) and v0 (removed), then the eq-delete Δ — killed rows
+    // scanned at v0, resurrected rows at v1, each a key-filtered scan
+    // whose pushed per-column INs keep it metadata-cheap.
+    def deltas(k: Int): Seq[(DataFrame, MvDef)] = {
+      val ((nw, od), (enw, egn)) = (diffs(k), eqDiffs(k))
+      Seq(nw -> d1, od -> d0).collect { case (segs, d) if segs.nonEmpty =>
+        (segmentsDf(spark, idents(k), segs), d)
+      } ++ Seq(enw -> d0, egn -> d1).collect { case (eqs, d) if eqs.nonEmpty =>
+        (eqKeyMatchScan(spark, cat, d.sides(k), eqs), d)
+      }
+    }
+    // Probe superset per changed side: ONE driver probe job per
+    // (side, equi column) per refresh, computed over the UNION of
+    // that side's Δ frames — a side changed at several ends used to
+    // pay a probe job per TERM, serializing small driver jobs before
+    // the real refresh. A superset of any single term's keys prunes
+    // the other sides less tightly but never wrongly (pruning is an
+    // optimization; the join condition still decides membership).
+    val probeCache = scala.collection.mutable.Map[(Int, String), Option[Seq[Any]]]()
+    def deltaVals(k: Int, ck: String): Option[Seq[Any]] =
+      probeCache.getOrElseUpdate((k, ck), {
+        val frames = deltas(k).map(_._1.select(col(ck)))
+        if (frames.isEmpty) Some(Nil)
+        else {
+          val rows = frames.reduce(_ unionAll _).distinct()
+            .limit(MaxInlineProbe + 1).collect()
+          if (rows.length > MaxInlineProbe) None
+          else Some(rows.map(_.get(0)).filterNot(_ == null).toSeq)
+        }
+      })
+    // One key term per Δ frame: the changed side's delta crossed with
+    // every OTHER side at the term's versions, the conjunction applied
+    // once (the optimizer pushes each conjunct into its equi join —
+    // never a surviving cartesian for the equi conditions star schemas
+    // use). A filtered MV's WHERE applies to the joined tuple exactly
+    // as at create — a changed tuple failing it cannot have changed
+    // the MV.
+    def term(k: Int, deltaK: DataFrame, d: MvDef): DataFrame = {
+      val others = sides.indices.filter(_ != k).map { j =>
+        val base = pinned(spark, cat, d.sides(j))
+        // The probe job runs only for DIM-side terms: pruning the
+        // fact there is the whole point, while the fact-side term —
+        // the per-micro-batch steady state — would pay a driver
+        // collect per epoch to prune already-small dims.
+        val pruned = (if (k == 0) Nil else equiPairs.flatMap {
+          case ((ks, ck), (js, cj)) if ks == k && js == j => Some((ck, cj))
+          case ((js, cj), (ks, ck)) if ks == k && js == j => Some((ck, cj))
+          case _ => None
+        }).foldLeft(base) { case (df, (ck, cj)) =>
+          deltaVals(k, ck) match {
+            case Some(vals) =>
+              df.where(if (vals.isEmpty) lit(false) else col(cj).isin(vals: _*))
+            case None => df // probe overflow: no pruning, still correct
+          }
+        }
+        termDebug.foreach { b =>
+          val planned = pruned.queryExecution.executedPlan.collect {
+            case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+              s.inputPartitions.length
+          }.sum
+          b += OtherScanPlan(k, j, planned,
+            GraftCatalog.snapshotByVersion(idents(j), d.sides(j).version)
+              .map(_.segments.length).getOrElse(-1))
+        }
+        pruned
+      }
+      val crossed = others.foldLeft(deltaK)(_ crossJoin _)
+      val joined = d.on.fold(crossed)(c => crossed.where(expr(c)))
+      d.where.fold(joined)(w => joined.where(expr(w))).select(keyCols: _*)
+    }
+    val touchedPlan = sides.indices.flatMap(k =>
+      deltas(k).map { case (deltaK, d) => term(k, deltaK, d) })
+      .reduce(_ unionAll _).distinct()
+    termDebug.foreach(b => lastJoinTermScans = b.result())
+    applyTouchedGroups(spark, cat, ns, name, touchedPlan, curAll, d1)
   }
 
-  /** The shared incremental-refresh tail (single-source AND join MVs):
-    * collect the touched group keys, recompute ONLY those groups from
-    * `curAll` — the CURRENT pre-aggregation input (filtered source for
-    * a single-source MV; fact ⋈ dim for a join MV), version-pinned by
-    * the caller — and apply in one atomic MERGE, then bump the recorded
-    * version props atomically with clearing the refresh-in-flight flag.
+  /** The incremental-refresh tail: collect the touched group keys,
+    * recompute ONLY those groups from `curAll` — the CURRENT
+    * pre-aggregation input, [[inputAt]] of `d` — and apply in one
+    * atomic MERGE, then write `d`'s props (its versions) atomically
+    * with clearing the refresh-in-flight flag.
     */
   private def applyTouchedGroups(
       spark: SparkSession, cat: String, ns: String, name: String,
-      touchedPlan: DataFrame, curAll: DataFrame,
-      groupCols: Seq[String], aggList: Seq[String],
-      versionPatch: Map[String, String]): (String, Long, Long) = {
+      touchedPlan: DataFrame, curAll: DataFrame, d: MvDef): (String, Long, Long) = {
     val ident = Identifier.of(Array(ns), name)
+    val (groupCols, aggList) = (d.group, d.aggList)
     // Inline the touched keys as PER-COLUMN literal IN filters on
     // the recompute scan when they fit a driver-side probe: a
     // multi-column key otherwise reaches the source only as a
@@ -963,8 +834,8 @@ private[graft] object GraftMvOps {
       spark.catalog.dropTempView(view)
       if (!smallProbe) touched.unpersist()
     }
-    GraftCatalog.patchTableProps(ident, versionPatch, unset = Set(RefreshingProp))
-    ("incremental", touchedCount, versionPatch(VersionProp).toLong)
+    GraftCatalog.patchTableProps(ident, d.props, unset = Set(RefreshingProp))
+    ("incremental", touchedCount, d.sides.head.version)
   }
 }
 

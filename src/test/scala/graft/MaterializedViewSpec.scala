@@ -2110,6 +2110,66 @@ class MaterializedViewSpec extends AnyFunSuite {
     val e = intercept[Exception](spark.sql("CALL graft.system.refresh_mv('mv7', 'plain')").collect())
     assert(e.getMessage.contains("not a materialized view"))
     intercept[Exception](spark.sql("CALL graft.system.refresh_mv('mv7', 'nope')").collect())
+    // A single-table MV with a cleared definition property reads as a
+    // malformed MV, the way a join MV does — not as a raw missing key.
+    for (key <- Seq("graft.mv.group", "graft.mv.aggs")) {
+      call("CALL graft.system.create_mv('mv7', 'agg', 'mv7.plain', 'k', 'count(*) AS cnt')")
+      spark.sql(s"ALTER TABLE graft.mv7.agg UNSET TBLPROPERTIES ('$key')")
+      val m = intercept[Exception](
+        spark.sql("CALL graft.system.refresh_mv('mv7', 'agg')").collect())
+      assert(m.getMessage.contains(
+        s"not a well-formed materialized view (no $key table property)"), m.getMessage)
+    }
+    spark.sql("DROP TABLE graft.mv7.agg")
     spark.sql("DROP TABLE graft.mv7.plain")
+  }
+
+  /** A one-side MV and a join MV over the same fact, for the tests that
+    * hold both shapes to one refresh contract: `body` gets the MV names.
+    */
+  private def withBothShapes(ns: String, where: String)(body: Seq[String] => Unit): Unit = {
+    Seq("one", "two", "fact", "dim").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft.$ns.$t"))
+    spark.sql(s"CREATE TABLE graft.$ns.fact (k BIGINT, v BIGINT) USING graft")
+    spark.sql(s"CREATE TABLE graft.$ns.dim (dk BIGINT, seg STRING) USING graft")
+    spark.sql(s"INSERT INTO graft.$ns.fact VALUES (1, 10), (2, 5)")
+    spark.sql(s"INSERT INTO graft.$ns.dim VALUES (1, 'a'), (2, 'b')")
+    call(s"""CALL graft.system.create_mv('$ns', 'one', '$ns.fact', 'k',
+            |  'count(*) AS cnt', '$where')""".stripMargin)
+    call(s"""CALL graft.system.create_mv('$ns', 'two', '$ns.fact JOIN $ns.dim ON k = dk',
+            |  'seg', 'count(*) AS cnt', '$where')""".stripMargin)
+    try body(Seq("one", "two"))
+    finally Seq("one", "two", "fact", "dim").foreach(t => spark.sql(s"DROP TABLE graft.$ns.$t"))
+  }
+
+  test("a noop refresh clears a stuck refresh-in-flight flag, one side or a join") {
+    withBothShapes("mvnf", "") { mvs =>
+      for (mv <- mvs) {
+        def flagged: Boolean = spark.sql(s"SHOW TBLPROPERTIES graft.mvnf.$mv")
+          .as[(String, String)].collect().toMap.contains("graft.mv.refreshing")
+        graft.sources.GraftCatalog.patchTablePropsForTest(
+          "mvnf", mv, Map("graft.mv.refreshing" -> "true"))
+        assert(flagged)
+        val (mode, _, _) = call(s"CALL graft.system.refresh_mv('mvnf', '$mv')")
+        assert(mode == "noop", mv)
+        assert(!flagged, s"$mv: a verified noop must clear the refresh-in-flight flag")
+      }
+    }
+  }
+
+  test("refresh refuses a non-deterministic WHERE patched in after create, one side or a join") {
+    withBothShapes("mvrd", "v > 0") { mvs =>
+      mvs.foreach(mv => graft.sources.GraftCatalog.patchTablePropsForTest(
+        "mvrd", mv, Map("graft.mv.filter" -> "rand() < 0.5")))
+      // Refused with no source change (before the noop return) and with
+      // one, before the refresh writes anything.
+      for (change <- Seq(false, true); mv <- mvs) {
+        if (change && mv == mvs.head) spark.sql("INSERT INTO graft.mvrd.fact VALUES (1, 3)")
+        val e = intercept[Exception](
+          spark.sql(s"CALL graft.system.refresh_mv('mvrd', '$mv')").collect())
+        assert(e.getMessage.contains("deterministic"), s"$mv: ${e.getMessage}")
+        assert(!spark.sql(s"SHOW TBLPROPERTIES graft.mvrd.$mv").as[(String, String)]
+          .collect().toMap.contains("graft.mv.refreshing"), mv)
+      }
+    }
   }
 }

@@ -184,18 +184,16 @@ class ViewConstraintSpec extends AnyFunSuite {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
+    // Listener events post asynchronously: drain the bus before
+    // registering, so no late event of an earlier query counts as an
+    // action of the CALL, and again after it, so all of its own have
+    // been delivered before the count is read.
+    org.apache.spark.sql.GraftTestBridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val rep = spark.sql("CALL graft.system.verify_constraints('cn', 'fold')")
         .collect().map(x => x.getString(0) -> x.getLong(2)).toMap
-      // Listener events post asynchronously: wait for the count to
-      // settle (two consecutive identical reads) before asserting.
-      var prev = -1
-      var settles = 0
-      while (settles < 2) {
-        Thread.sleep(100)
-        if (actions.get() == prev) settles += 1 else { settles = 0; prev = actions.get() }
-      }
+      org.apache.spark.sql.GraftTestBridge.drainListenerBus(spark.sparkContext)
       assert(rep == Map("f_pk" -> 2L, "f_uq1" -> 2L, "f_uq2" -> 2L,
         "f_ck1" -> 0L, "f_ck2" -> 0L, "f_fk" -> 1L), s"wrong counts: $rep")
       assert(actions.get() <= 3,
